@@ -46,4 +46,4 @@ __all__ = [
     "route_monoid_sql",
 ]
 
-__version__ = "0.1.0"
+__version__ = "0.4.0"

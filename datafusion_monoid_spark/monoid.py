@@ -1,38 +1,46 @@
 """The monoid algebra: identity element + associative binary combine.
 
 Mirror of the reference's ``MonoidOp`` trait (``src/monoid.rs:23-32``) and
-the 4-ops x primitive-types macro block (``src/monoid.rs:52-221``), expressed
-three ways so every execution form agrees:
+the 4-ops x primitive-types macro block (``src/monoid.rs:52-221``).  Each
+:class:`Monoid` is defined ONCE, in :func:`_build`, as Spark SQL
+expression text, and every Spark form renders from that text with
+``F.expr``/``selectExpr`` (one parse per step instead of one Py4J call
+per Column operation):
 
-* ``combine(a, b) -> Column``   — for ``F.aggregate`` / ``F.zip_with``
-  expression folds (pure Catalyst, whole-stage codegen).
-* ``agg(col) -> Column``        — a built-in partial-aggregation-capable
-  aggregate for the posexplode two-phase form (SURVEY.md §2.1a).
-* ``np_combine(a, b) -> ndarray`` — for the pandas-UDAF oracle form.
+* the fold (``array_reduce``, per position of a group's arrays):
+  ``lift`` (``{x}``: element -> accumulator of ``acc_type``),
+  ``combine`` (``{a}``, ``{b}``: accumulators) and ``finish``
+  (``{x}``: accumulator -> element);
+* the per-(group, pos) cells (``array_reduce_exploded``, the routed SQL
+  form and the stream): ``aggs``, partial-aggregation-capable built-in
+  aggregates over one element ``{e}``, and ``cell``, the element value
+  from their outputs (plus ``gray`` for the exact 64-bit product pass).
+
+The NumPy oracle form keeps Python callables (``np_combine``,
+``np_finish``).
 
 Semantics decisions (documented deviations, see SURVEY.md §2.1 / §7):
 
 * **Saturating integer arithmetic** (reference ``src/monoid.rs:85-138``):
-  Spark ints wrap (ANSI off), so integer sum/product are computed in a
-  wider type and clamped to the element type's range.  **Integer SUM is
-  exact-then-clamp in ALL THREE forms** (the expression form folds in
-  DECIMAL(38,0) via ``wide_combine`` and clamps once in ``finish``; the
-  NumPy form folds exact Python ints and clamps once in ``np_finish``;
-  the posexplode form sums in DECIMAL(38,0)) — deterministic and
-  consistent, unlike the reference's per-pair saturation which is
-  order-dependent for mixed-sign overflow.  **Integer PRODUCT** uses
-  per-pair saturation in the expression/NumPy forms (the accumulator must
-  stay bounded; an exact wide fold can exceed DECIMAL(38,0) after just
-  three int64 factors) and sign/zero/log-magnitude decomposition in the
-  posexplode form — EXACT at all magnitudes: 8..32-bit carriers are
-  double-mantissa-exact in range, and 64-bit carriers route the
-  (2^52.5, 2^(bits+0.5)] band through a bounded DECIMAL(38,0) second
-  pass (array_reduce.py:_exact_product_per_pos).  Known cross-form divergence, by construction: once a
-  product overflows, a later factor of magnitude <= 1 distinguishes the
-  schemes (per-pair: ``sat(2^62 * 2) * -1 = -(2^63-1)``; exact-then-
-  clamp: ``clamp(-2^63) = -2^63``).  All forms agree whenever no
-  intermediate product leaves the element range — which covers every
-  asserted reference output.
+  Spark ints wrap (ANSI off), so integer sums and products are computed
+  exactly and clamped to the element type's range.  **Integer SUM is
+  exact-then-clamp in every form**: the Spark forms add two BIGINT limbs
+  (``x = h * 2^32 + l``, ``0 <= l < 2^32``; exact below 2^31 rows per
+  cell, and a cell past that raises) and clamp once in DECIMAL(38,0)
+  (``uint64``, whose carrier does not fit a limb, sums in DECIMAL(38,0));
+  the NumPy form folds exact Python ints and clamps once in
+  ``np_finish`` -- deterministic, unlike the reference's per-pair
+  saturation, which is order-dependent for mixed-sign overflow.
+  **Integer PRODUCT** saturates per pair in the fold and NumPy forms (the
+  accumulator must stay bounded) and is exact-then-clamp in the cell
+  forms: sign from the parity of negative factors, a zero short-circuit,
+  overflow from ``sum(log2|x|)``, the magnitude from a double product
+  (exact below 2^53) and, for 64-bit carriers, an exact DECIMAL(38,0)
+  pass over the ``gray`` cells in (2^52.5, 2^(bits+0.5)].  Once a
+  product leaves the element range, a later factor of magnitude <= 1
+  tells the two schemes apart (per-pair: ``sat(2^62 * 2) * -1 =
+  -(2^63-1)``; exact-then-clamp: ``clamp(-2^63) = -2^63``); all forms
+  agree whenever no intermediate product leaves the element range.
 * **Unsigned types**: Spark has none.  ``uint8/16/32`` map to the next
   wider signed type; ``uint64`` maps to ``DECIMAL(20,0)`` clamped to
   ``[0, 2^64-1]``.
@@ -42,6 +50,7 @@ Semantics decisions (documented deviations, see SURVEY.md §2.1 / §7):
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -68,7 +77,7 @@ INT_BOUNDS: dict[str, tuple[int, int]] = {
     "uint64": (0, 2**64 - 1),
 }
 
-#: type-name -> (Spark carrier type, is_float)
+#: type-name -> Spark carrier type
 ELEMENT_TYPES: dict[str, T.DataType] = {
     "tinyint": T.ByteType(),
     "smallint": T.ShortType(),
@@ -83,39 +92,14 @@ ELEMENT_TYPES: dict[str, T.DataType] = {
     "uint64": T.DecimalType(20, 0),
 }
 
-_FLOAT_TYPES = {"float", "double"}
-
 # wide type used for exact integer arithmetic before clamping
-_WIDE_DECIMAL = "decimal(38,0)"
+_WIDE = "decimal(38,0)"
 
 
-def _is_float(elem: str) -> bool:
-    return elem in _FLOAT_TYPES
-
-
-def _clamp(col: Column, lo: int, hi: int) -> Column:
-    # bounds as string literals: F.lit() rejects ints beyond int64 (u64 max)
-    return F.least(F.greatest(col, F.lit(str(lo)).cast(_WIDE_DECIMAL)),
-                   F.lit(str(hi)).cast(_WIDE_DECIMAL))
-
-
-def _sat_int_binop(op: Callable[[Column, Column], Column], elem: str
-                   ) -> Callable[[Column, Column], Column]:
-    """Saturating integer binop: compute in DECIMAL(38,0), clamp, cast back.
-
-    DECIMAL(38,0) holds any sum / product of two int64 values exactly
-    (|a*b| <= 2^126 does NOT fit -- but inputs are always in the element
-    type's range after the previous clamp, so |a*b| <= (2^63)^2 ~ 8.5e37
-    < 1e38, which fits).
-    """
-    lo, hi = INT_BOUNDS[elem]
-    carrier = ELEMENT_TYPES[elem].simpleString()
-
-    def combine(a: Column, b: Column) -> Column:
-        wide = op(a.cast(_WIDE_DECIMAL), b.cast(_WIDE_DECIMAL))
-        return _clamp(wide, lo, hi).cast(carrier)
-
-    return combine
+def _literal(v: float | int, type_: str) -> str:
+    """``v`` as a typed SQL literal; a string cast covers u64 bounds and
+    the float infinities alike."""
+    return f"CAST('{v}' AS {type_})"
 
 
 # ---------------------------------------------------------------------------
@@ -124,7 +108,7 @@ def _sat_int_binop(op: Callable[[Column, Column], Column], elem: str
 
 @dataclass(frozen=True)
 class Monoid:
-    """identity + associative combine, in all three execution dialects.
+    """identity + associative combine, defined once as SQL text.
 
     Mirror of ``MonoidOp`` (reference ``src/monoid.rs:23-32``).
     """
@@ -132,20 +116,16 @@ class Monoid:
     op: str                       # "sum" | "product" | "max" | "min"
     elem: str                     # key into ELEMENT_TYPES
     identity: float | int        # python literal identity element
-    combine: Callable[[Column, Column], Column] = field(repr=False)
-    #: built-in aggregate over an exploded element column, already
-    #: saturation-corrected; None => no single built-in exists (never the
-    #: case for our four ops).
-    agg: Callable[[Column], Column] = field(repr=False)
+    acc_type: str                 # SQL type of the fold accumulator
+    lift: str                     # over {x}: element -> accumulator
+    combine: str                  # over {a}, {b}: accumulators
+    finish: str                   # over {x}: accumulator -> element
+    #: (alias, aggregate over the element {e}) per (group, pos) cell
+    aggs: tuple[tuple[str, str], ...]
+    cell: str                     # over the aggs aliases -> element
+    #: condition on the aggs under which a cell needs the exact pass
+    gray: str | None
     np_combine: Callable[[np.ndarray, np.ndarray], np.ndarray] = field(repr=False)
-    #: expression-form wide fold (exact-then-clamp): when ``acc_cast`` is
-    #: set, the ``F.aggregate`` fold accumulates in that type using
-    #: ``wide_combine`` (no per-pair clamp) and ``finish`` maps each final
-    #: accumulator element back to the carrier type (clamp + cast).
-    acc_cast: str | None = None
-    wide_combine: Callable[[Column, Column], Column] | None = field(
-        default=None, repr=False)
-    finish: Callable[[Column], Column] | None = field(default=None, repr=False)
     #: NumPy-form one-shot finalizer (clamp once after an exact fold)
     np_finish: Callable[[np.ndarray], np.ndarray] | None = field(
         default=None, repr=False)
@@ -158,18 +138,27 @@ class Monoid:
     def spark_type(self) -> T.DataType:
         return ELEMENT_TYPES[self.elem]
 
-    def identity_lit(self) -> Column:
-        v = self.identity
-        if isinstance(v, int) and not (-(2**63) <= v < 2**63):
-            return F.lit(str(v)).cast(self.spark_type)  # u64 identities
-        return F.lit(v).cast(self.spark_type)
+    @property
+    def carrier(self) -> str:
+        return self.spark_type.simpleString()
 
+    @property
+    def identity_sql(self) -> str:
+        return _literal(self.identity, self.carrier)
 
-def _make_finish(lo: int, hi: int, carrier: str) -> Callable[[Column], Column]:
-    """One-arg clamp+cast closure safe for use as an HOF lambda."""
-    def finish(c: Column) -> Column:
-        return _clamp(c, lo, hi).cast(carrier)
-    return finish
+    def agg_columns(self, e: str) -> list[Column]:
+        """The per-cell aggregates over element text ``e``, as Columns."""
+        out = []
+        for alias, agg in self.aggs:
+            agg = agg.format(e=e)
+            if agg.startswith("product("):
+                # Spark SQL has no `product` routine; only the DataFrame
+                # API reaches the aggregate
+                out.append(F.product(F.expr(agg[len("product("):-1]))
+                           .alias(alias))
+            else:
+                out.append(F.expr(agg).alias(alias))
+        return out
 
 
 def _np_clamp(arr: np.ndarray, elem: str) -> np.ndarray:
@@ -177,109 +166,120 @@ def _np_clamp(arr: np.ndarray, elem: str) -> np.ndarray:
     return np.clip(arr, lo, hi)
 
 
+#: rows one (group, pos) cell may hold before the two-limb integer sum
+#: could overflow its low limb: each low limb is < 2^32
+_SUM_MAX_ROWS = 2**31
+
+
 def _build(op: str, elem: str) -> Monoid:
-    is_f = _is_float(elem)
-    carrier = ELEMENT_TYPES[elem].simpleString()
-    lo_hi = INT_BOUNDS.get(elem)
-    acc_cast = None
-    wide_combine = None
-    finish = None
+    c = ELEMENT_TYPES[elem].simpleString()
+    is_f = elem not in INT_BOUNDS
+    if not is_f:
+        lo, hi = (_literal(b, _WIDE) for b in INT_BOUNDS[elem])
+        clamp = f"CAST(least(greatest({{x}}, {lo}), {hi}) AS {c})"
+    acc_type, lift, finish = c, "{x}", "{x}"
+    aggs = (("__a", f"{op}({{e}})"),)
+    # sum/product aggregates widen (float -> double): cast back
+    cell = f"CAST(`__a` AS {c})"
+    gray = None
     np_finish = None
 
     if op == "sum":
         identity: float | int = 0.0 if is_f else 0
-        if is_f:
-            combine = lambda a, b: a + b
-            # F.sum over FLOAT accumulates and returns DOUBLE; cast back so
-            # every form returns the element type.  Residual (documented)
-            # deviation: f64 accumulation then one rounding to f32, vs the
-            # expression/NumPy forms' per-step f32/f64 accumulation.
-            agg = lambda c: F.sum(c).cast(carrier)
-            np_combine = lambda a, b: a + b
-        else:
-            lo, hi = lo_hi
-            # exact-then-clamp in every form (deterministic; see module doc);
-            # `combine` stays per-pair-saturating for standalone zip_with use
-            combine = _sat_int_binop(lambda a, b: a + b, elem)
-            acc_cast = _WIDE_DECIMAL
-            wide_combine = lambda a, b: a + b
-            # NOTE: used as an F.transform lambda — exactly ONE formal
-            # param, no defaults (HOF arity sniffing binds extras)
-            finish = _make_finish(lo, hi, carrier)
-            agg = lambda c: _clamp(F.sum(c.cast(_WIDE_DECIMAL)), lo, hi).cast(carrier)
+        combine = "{a} + {b}"
+        np_combine = lambda a, b: a + b
+        if not is_f:
+            # exact-then-clamp in every form (see module doc)
             np_combine = lambda a, b: a.astype(object) + b.astype(object)
             np_finish = lambda a: _np_clamp(a, elem)
+        if elem == "uint64":
+            # the DECIMAL(20,0) carrier does not fit a BIGINT limb
+            acc_type, lift, finish = _WIDE, f"CAST({{x}} AS {_WIDE})", clamp
+            aggs = (("__a", f"sum(CAST({{e}} AS {_WIDE}))"),)
+            cell = clamp.format(x="`__a`")
+        elif not is_f:
+            # exact-then-clamp in two BIGINT limbs, x = h * 2^32 + l with
+            # 0 <= l < 2^32: both limb sums are exact below 2^31 rows,
+            # and long sums run far faster than DECIMAL(38,0) ones
+            v = "CAST({x} AS BIGINT)"
+            acc_type = "struct<h:bigint,l:bigint>"
+            lift = (f"named_struct('h', shiftright({v}, 32), "
+                    f"'l', {v} & 4294967295)")
+            combine = "named_struct('h', {a}.h + {b}.h, 'l', {a}.l + {b}.l)"
+            limbs = "CAST({h} AS decimal(38,0)) * 4294967296 + {l}"
+            finish = clamp.format(x=limbs.format(h="{x}.h", l="{x}.l"))
+            aggs = (("__h", "sum(shiftright(CAST({e} AS BIGINT), 32))"),
+                    ("__l", "sum(CAST({e} AS BIGINT) & 4294967295)"),
+                    ("__n", "count(1)"))
+            cell = (f"IF(`__n` < {_SUM_MAX_ROWS}, "
+                    + clamp.format(x=limbs.format(h="`__h`", l="`__l`"))
+                    + f", raise_error('array_reduce_sum: a (group, position) "
+                    f"cell of {_SUM_MAX_ROWS} or more rows is beyond the "
+                    f"exact {elem} sum'))")
     elif op == "product":
         identity = 1.0 if is_f else 1
-        if is_f:
-            combine = lambda a, b: a * b
-            agg = lambda c: F.product(c).cast(carrier)
-            np_combine = lambda a, b: a * b
-        else:
-            combine = _sat_int_binop(lambda a, b: a * b, elem)
-            lo, hi = lo_hi
-            # No exact built-in integer product aggregate exists; see
-            # array_reduce.py:_int_product_agg for the distributed form.
-            agg = None  # type: ignore[assignment]
+        combine = "{a} * {b}"
+        np_combine = lambda a, b: a * b
+        if not is_f:
+            # per-pair saturation keeps the fold accumulator bounded
+            combine = clamp.format(
+                x=f"CAST({{a}} AS {_WIDE}) * CAST({{b}} AS {_WIDE})")
             np_combine = lambda a, b: _np_clamp(
                 a.astype(object) * b.astype(object), elem)
     elif op == "max":
         # identity = type MIN / -inf (reference src/monoid.rs:157-188)
-        identity = float("-inf") if is_f else lo_hi[0]
-        combine = lambda a, b: F.greatest(a, b)
-        agg = lambda c: F.max(c)
-        np_combine = np.maximum
+        identity = float("-inf") if is_f else INT_BOUNDS[elem][0]
+        combine, np_combine = "greatest({a}, {b})", np.maximum
     elif op == "min":
         # identity = type MAX / +inf (reference src/monoid.rs:190-221)
-        identity = float("inf") if is_f else lo_hi[1]
-        combine = lambda a, b: F.least(a, b)
-        agg = lambda c: F.min(c)
-        np_combine = np.minimum
+        identity = float("inf") if is_f else INT_BOUNDS[elem][1]
+        combine, np_combine = "least({a}, {b})", np.minimum
     else:  # pragma: no cover
         raise ValueError(f"unknown op {op!r}")
 
-    return Monoid(op=op, elem=elem, identity=identity, combine=combine,
-                  agg=agg, np_combine=np_combine, acc_cast=acc_cast,
-                  wide_combine=wide_combine, finish=finish, np_finish=np_finish)
+    if op == "product" and not is_f:
+        # No exact integer product aggregate exists: sign from the parity
+        # of negative factors, zero short-circuit, overflow from
+        # sum(log2|x|) (all terms >= 0, so its float error stays ~1e-5
+        # even at 10^9 rows, far inside the 0.5-bit guard bands), and the
+        # magnitude from the double product, exact below 2^53.
+        bits = math.log2(INT_BOUNDS[elem][1] + 1)
+        aggs = (
+            ("__zero", "max(CAST({e} = 0 AS INT))"),
+            ("__negpar", "sum(IF({e} < 0, 1, 0)) % 2"),
+            ("__logmag", "sum(IF({e} <> 0, log2(abs(CAST({e} AS DOUBLE))), 0D))"),
+            ("__prodd", "product(CAST({e} AS DOUBLE))"),
+        )
+        signed = "IF(`__negpar` = 1, {m}, {p})"
+        exact = ""
+        if bits > 53:
+            # 64-bit carriers: in-range magnitudes above 2^53 exist, so
+            # cells in the band the double mantissa cannot carry take the
+            # exact DECIMAL(38,0) product of their factors (`__mag`)
+            gray = ("`__zero` = 0 AND `__logmag` >= 52.5 "
+                    f"AND `__logmag` <= {bits + 0.5}")
+            exact = ("WHEN `__mag` IS NOT NULL THEN "
+                     + clamp.format(x=signed.format(m="-`__mag`", p="`__mag`"))
+                     + " ")
+        cell = (f"CASE WHEN `__zero` = 1 THEN CAST(0 AS {c}) {exact}"
+                f"WHEN `__logmag` > {bits + 0.5} THEN "
+                + clamp.format(x=signed.format(m=lo, p=hi))
+                + " ELSE "
+                + clamp.format(x=f"CAST(round(`__prodd`) AS {_WIDE})")
+                + " END")
+
+    return Monoid(op=op, elem=elem, identity=identity, acc_type=acc_type,
+                  lift=lift, combine=combine, finish=finish, aggs=aggs,
+                  cell=cell, gray=gray, np_combine=np_combine,
+                  np_finish=np_finish)
 
 
 OPS = ("sum", "product", "max", "min")
 
 #: (op, elem) -> Monoid, the 4 x 10 matrix (src/monoid.rs:52-221)
 MONOIDS: dict[tuple[str, str], Monoid] = {
-    (op, elem): _build(op, elem)
-    for op in OPS
-    for elem in ELEMENT_TYPES
-    if not (op in ("sum", "product") and elem == "uint64")  # decimal carrier: sum/product handled via clamp too
+    (op, elem): _build(op, elem) for op in OPS for elem in ELEMENT_TYPES
 }
-
-# uint64 sum/product on the DECIMAL(20,0) carrier
-for _op in ("sum", "product"):
-    _lo, _hi = INT_BOUNDS["uint64"]
-
-    def _u64_combine(a: Column, b: Column, __op=_op) -> Column:
-        wide = (a.cast(_WIDE_DECIMAL) + b.cast(_WIDE_DECIMAL)) if __op == "sum" \
-            else (a.cast(_WIDE_DECIMAL) * b.cast(_WIDE_DECIMAL))
-        return _clamp(wide, _lo, _hi).cast("decimal(20,0)")
-
-    def _u64_agg(c: Column, __op=_op) -> Column:
-        if __op == "sum":
-            return _clamp(F.sum(c.cast(_WIDE_DECIMAL)), _lo, _hi).cast("decimal(20,0)")
-        return None  # product: custom path
-
-    MONOIDS[(_op, "uint64")] = Monoid(
-        op=_op, elem="uint64", identity=0 if _op == "sum" else 1,
-        combine=_u64_combine,
-        agg=_u64_agg if _op == "sum" else None,  # type: ignore[arg-type]
-        np_combine=(lambda a, b: a.astype(object) + b.astype(object))
-        if _op == "sum"
-        else (lambda a, b: np.clip(a.astype(object) * b.astype(object), _lo, _hi)),
-        acc_cast=_WIDE_DECIMAL if _op == "sum" else None,
-        wide_combine=(lambda a, b: a + b) if _op == "sum" else None,
-        finish=(lambda c: _clamp(c, _lo, _hi).cast("decimal(20,0)"))
-        if _op == "sum" else None,
-        np_finish=(lambda a: _np_clamp(a, "uint64")) if _op == "sum" else None,
-    )
 
 
 def get_monoid(op: str, elem: str = "int") -> Monoid:

@@ -18,18 +18,20 @@ reference's asserted behavior):
 * NULL elements contribute the identity       (``src/monoid.rs:371-373``)
 * zero qualifying rows => result is NULL, not ``[]`` (``src/monoid.rs:387-393``)
 
-Three execution forms (all must agree; cross-checked in tests):
+Three execution forms (all must agree; cross-checked in tests).  The two
+Spark forms render the monoid's SQL text (``monoid.py``) and only build:
+no job, ``persist`` or session-conf change before the caller's action.
 
-1. :func:`array_reduce` — **pure Catalyst expression**:
-   ``aggregate(collect_list(col), NULL, fold)``.  No Python workers, fully
-   whole-stage-codegen'd.  ``collect_list`` materializes each group's
-   arrays on one executor, so use for moderate group cardinality.
+1. :func:`array_reduce` — **pure Catalyst expression**: one ``F.expr``
+   folding each position of the group's ``collect_list`` of arrays.  No
+   Python workers.  ``collect_list`` materializes each group's arrays on
+   one executor, so use for moderate group cardinality.
 2. :func:`array_reduce_exploded` — **the scale form** (SURVEY.md §2.1a):
    posexplode -> per-(group, pos) built-in aggregate (Catalyst does
    partial+final map-side combine, the Spark analogue of the reference's
    ``state``/``merge_batch`` split, ``src/monoid.rs:387-403, 445-465``) ->
-   rebuild array.  Handles unbounded group sizes; this is what you run on
-   100 TB.
+   truncate + rebuild array.  Handles unbounded group sizes; this is what
+   you run on 100 TB.
 3. :func:`array_reduce_pandas` — **oracle form**: per-group NumPy fold via
    ``applyInPandas``.  Complete-mode only (no partial agg); used to
    cross-validate the other two.
@@ -42,24 +44,17 @@ fold produce the same result.
 
 from __future__ import annotations
 
-import math
 import os
 from decimal import Decimal
 from typing import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datafusion_monoid_spark.monoid import (
-    ELEMENT_TYPES,
-    INT_BOUNDS,
-    MONOIDS,
-    Monoid,
-    get_monoid,
-)
+from datafusion_monoid_spark.monoid import Monoid, get_monoid
 
 __all__ = [
     "array_reduce",
@@ -74,6 +69,11 @@ __all__ = [
 # Form 1: pure Catalyst expression
 # ---------------------------------------------------------------------------
 
+def quote(name: str) -> str:
+    """``name`` as a backticked SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def array_reduce(col: Column | str, monoid: Monoid | str,
                  elem: str = "int") -> Column:
     """Aggregate ``Column`` expression: monoid-reduce an array column.
@@ -82,178 +82,62 @@ def array_reduce(col: Column | str, monoid: Monoid | str,
 
         df.groupBy("g").agg(array_reduce("arrays", "sum").alias("result"))
 
-    Entirely built-in higher-order functions — Catalyst optimizes and
-    codegens the whole fold; no Python worker involved.
+    One ``F.expr`` over the monoid's SQL text: collect the group's valid
+    arrays, then per position below their minimum length
+    ``aggregate(arrays, lift(identity), combine, finish)``.  Built-in
+    higher-order functions only; no Python worker involved.
     """
     m = monoid if isinstance(monoid, Monoid) else get_monoid(monoid, elem)
-    c = F.col(col) if isinstance(col, str) else col
-    arr_t = T.ArrayType(m.spark_type, True)
+    c = quote(col) if isinstance(col, str) else col._jc.node().sql()
 
-    # exact-then-clamp monoids (integer sum) fold in a wide accumulator
-    # type and clamp ONCE at the end — deterministic under any fold order
-    wide = m.acc_cast is not None
-    fold_t = f"array<{m.acc_cast}>" if wide else arr_t
-    comb = m.wide_combine if wide else m.combine
-
-    # collect only non-null, non-empty arrays (collect_list drops nulls)
-    valid = F.when(F.size(c) > 0,
-                   c.cast(arr_t).cast(fold_t) if wide else c.cast(arr_t))
-    collected = F.collect_list(valid)
-
-    ident = m.identity_lit().cast(m.acc_cast) if wide else m.identity_lit()
-
-    def merge(acc: Column, x: Column) -> Column:
-        # min-length truncation: slice both sides to the shorter length
-        n = F.least(F.size(acc), F.size(x))
-        return (
-            F.when(acc.isNull(), F.transform(x, lambda e: F.coalesce(e, ident)))
-            .otherwise(
-                F.zip_with(
-                    F.slice(acc, 1, n),
-                    F.slice(x, 1, n),
-                    lambda a, b: comb(a, F.coalesce(b, ident)),
-                )
-            )
-        )
-
-    # seed NULL => empty input folds to NULL (src/monoid.rs:387-393)
-    folded = F.aggregate(collected, F.lit(None).cast(fold_t), merge)
-    # transform(NULL) is NULL, so the empty-input contract survives finish
-    return F.transform(folded, m.finish) if wide else folded
+    ident = m.identity_sql
+    valid = (f"collect_list(IF(size({c}) > 0, "
+             f"CAST({c} AS array<{m.carrier}>), NULL))")
+    step = m.combine.format(
+        a="s", b=m.lift.format(x=f"coalesce(a[i], {ident})"))
+    finish = "" if m.finish == "{x}" else f", s -> {m.finish.format(x='s')}"
+    # per position i below the minimum length, fold that element of every
+    # collected array into the lifted identity.  collect_list drops the
+    # NULL (skipped) rows; with none left array_min is NULL, and so is
+    # the result (src/monoid.rs:387-393)
+    fold = (f"transform(sequence(0, array_min(transform({valid}, "
+            f"a -> size(a))) - 1), i -> aggregate({valid}, "
+            f"{m.lift.format(x=ident)}, (s, a) -> {step}{finish}))")
+    return F.expr(fold)
 
 
 # ---------------------------------------------------------------------------
 # Form 2: posexplode two-phase (the 100 TB form)
 # ---------------------------------------------------------------------------
 
-def _int_product_agg(m: Monoid, e: Column) -> Column:
-    """Distributed saturating integer product per (group, pos) — the
-    single-aggregation form for element types whose full range fits the
-    double mantissa (``hi + 1 <= 2^53``: every int8..int32/uint8..uint32
-    in-range product is exact in ``F.product``).
+def _with_exact_magnitudes(base: DataFrame, cells: DataFrame,
+                           keys: list[str], m: Monoid, e: str) -> DataFrame:
+    """Add ``__mag``, the exact |product| of each ``m.gray`` cell, to
+    ``cells`` (NULL elsewhere): 64-bit products in (2^52.5,
+    2^(bits+0.5)] that the double product cannot carry exactly
+    (reference exact saturating mul, ``src/monoid.rs:105-138``).
 
-    No exact built-in integer product aggregate exists in Spark, so:
-    sign from the parity of negative factors, zero short-circuit, overflow
-    detection from sum(log2|x|), magnitude from the double-typed
-    ``F.product``.  All components are partial-aggregation-capable
-    built-ins.  64-bit carriers (where in-range magnitudes above 2^53
-    exist) go through :func:`_exact_product_per_pos` instead.
+    A gray cell has at most ~bits+1 factors of magnitude >= 2, so a
+    bounded ``collect_list`` of just those factors, folded in
+    DECIMAL(38,0) (max ~2^65 << 10^38), gives the exact magnitude; the
+    ``cell`` text then clamps once -- exact in-range values AND the
+    exact saturation boundary (-2^63 stays -2^63).
+
+    Scan accounting: nothing runs before the caller's action -- no probe
+    job, no ``persist``.  The plan reads the exploded rows for ``cells``,
+    again for the gray-cell test (the same aggregate, pruned to the
+    columns ``m.gray`` reads; both run in the first wave of stages), and
+    a third time for the left-semi join, which AQE drops when no cell is
+    gray -- the common case.
     """
-    lo, hi = INT_BOUNDS[m.elem]
-    carrier = m.spark_type.simpleString()
-    # bounds as STRING literals cast to decimal: F.lit() on a python int
-    # beyond int64 (uint64's 2^64-1) raises NumberFormatException JVM-side
-    lo_d = F.lit(str(lo)).cast("decimal(38,0)")
-    hi_d = F.lit(str(hi)).cast("decimal(38,0)")
-    # overflow threshold is the carrier's magnitude: log2(hi+1) (63 for
-    # int64, 64 for uint64, 7 for int8) minus a guard band
-    overflow_bits = math.log2(hi + 1) - 0.001
-    d = e.cast("double")
-    any_zero = F.max((e == 0).cast("int"))
-    neg_parity = F.sum(F.when(e < 0, 1).otherwise(0)) % 2
-    log_mag = F.sum(F.when(e != 0, F.log2(F.abs(d))).otherwise(F.lit(0.0)))
-    prod_d = F.product(d)
-    saturated = F.when(neg_parity == 1, lo_d).otherwise(hi_d)
-    in_range = F.least(
-        F.greatest(F.round(prod_d).cast("decimal(38,0)"), lo_d), hi_d
-    ).cast(carrier)
-    return (
-        F.when(any_zero == 1, F.lit(0).cast(carrier))
-        .when(log_mag > F.lit(overflow_bits), saturated.cast(carrier))
-        .otherwise(in_range)
+    mag = f"abs(CAST({e} AS decimal(38,0)))"
+    mags = (
+        base.join(cells.where(m.gray), keys, "left_semi")
+        .groupBy(*map(quote, keys))
+        .agg(F.expr(f"aggregate(collect_list(IF({mag} >= 2, {mag}, NULL)), "
+                    "CAST(1 AS decimal(38,0)), (a, b) -> a * b) AS `__mag`"))
     )
-
-
-def _exact_product_per_pos(base: DataFrame, groups: list[str],
-                           m: Monoid, e: Column) -> DataFrame:
-    """Exact distributed saturating product for 64-bit carriers
-    (``bigint``/``uint64``), matching the reference's exact saturating
-    mul at ALL magnitudes (``src/monoid.rs:105-138``) — including the
-    (2^53, 2^63] band the double mantissa cannot carry.
-
-    Three magnitude zones per (group, pos) cell, decided by the
-    partial-agg-safe ``sum(log2|x|)`` detector (all terms >= 0, so the
-    float error stays ~1e-5 even at 10^9 rows — far inside the 0.5-bit
-    guard bands):
-
-    * **low** (< 2^52.5): ``F.product`` over doubles is exact — with the
-      zero short-circuit taken, every factor and every subset product has
-      magnitude <= the total < 2^53.
-    * **gray** ([2^52.5, 2^(bits+0.5)]): the cell has at most ~bits+1
-      factors of magnitude >= 2, so a second bounded pass collects JUST
-      those factors for the cell and folds them exactly in DECIMAL(38,0)
-      (max ~2^65 << 10^38), then clamps once — exact in-range values AND
-      the exact saturation boundary (e.g. -2^63 stays -2^63).
-    * **high** (> 2^(bits+0.5)): saturated; sign from negative-count
-      parity.
-
-    The gray pass is a left-semi join of the exploded rows against the
-    gray CELLS (vanishingly few in real data) followed by a bounded
-    ``collect_list`` (<= ~65 elements by construction) — scale-safe.
-
-    Scan accounting (ADVICE r3 — the old docstring claimed "zero extra
-    scans" while the uncached ``stats``/``base`` lineage re-scanned the
-    source up to 4x): ``stats`` (one row per (group, pos) cell — tiny)
-    is **persisted**, and a driver-side probe of the persisted ``stats``
-    decides whether any gray cell exists.  In the common all-low/high
-    case the gray pass is skipped entirely and the source is scanned
-    EXACTLY ONCE; when gray cells exist the semi-join probe pays one
-    additional scan of ``base`` — bounded, and only for corpora that
-    actually contain (2^52.5, 2^(bits+0.5)] products.
-    """
-    lo, hi = INT_BOUNDS[m.elem]
-    carrier = m.spark_type.simpleString()
-    lo_d = F.lit(str(lo)).cast("decimal(38,0)")
-    hi_d = F.lit(str(hi)).cast("decimal(38,0)")
-    bits = math.log2(hi + 1)
-    d = e.cast("double")
-    dec_abs = F.abs(e.cast("decimal(38,0)"))
-
-    keys = [*groups, "__pos"]
-    stats = base.groupBy(*keys).agg(
-        F.max((e == 0).cast("int")).alias("__zero"),
-        (F.sum(F.when(e < 0, 1).otherwise(0)) % 2).alias("__negpar"),
-        F.sum(F.when(e != 0, F.log2(F.abs(d))).otherwise(F.lit(0.0)))
-        .alias("__logmag"),
-        F.product(d).alias("__prodd"),
-        F.count(F.lit(1)).alias("__cnt"),
-    )
-    stats = stats.persist()
-    gray_cells = stats.where(
-        (F.col("__zero") == 0)
-        & (F.col("__logmag") >= 52.5)
-        & (F.col("__logmag") <= bits + 0.5)
-    ).select(*keys)
-    # driver-side probe over the PERSISTED per-cell stats: no gray cell
-    # -> skip the second scan of base entirely (the common case)
-    if gray_cells.limit(1).count() == 0:
-        joined = stats.withColumn("__mag",
-                                  F.lit(None).cast("decimal(38,0)"))
-    else:
-        exact = (
-            base.join(gray_cells, keys, "left_semi")
-            .where(dec_abs >= 2)
-            .groupBy(*keys)
-            .agg(F.collect_list(dec_abs).alias("__fs"))
-            .select(*keys,
-                    F.aggregate("__fs", F.lit(1).cast("decimal(38,0)"),
-                                lambda a, b: a * b).alias("__mag"))
-        )
-        joined = stats.join(exact, keys, "left")
-
-    signed_mag = F.when(F.col("__negpar") == 1, -F.col("__mag")) \
-        .otherwise(F.col("__mag"))
-    saturated = F.when(F.col("__negpar") == 1, lo_d).otherwise(hi_d)
-    val = (
-        F.when(F.col("__zero") == 1, F.lit(0).cast(carrier))
-        .when(F.col("__mag").isNotNull(),
-              F.least(F.greatest(signed_mag, lo_d), hi_d).cast(carrier))
-        .when(F.col("__logmag") > bits + 0.5, saturated.cast(carrier))
-        .otherwise(
-            F.least(F.greatest(F.round(F.col("__prodd")).cast("decimal(38,0)"),
-                               lo_d), hi_d).cast(carrier))
-    )
-    return joined.select(*keys, val.alias("__v"), "__cnt")
+    return cells.join(mags, keys, "left")
 
 
 def array_reduce_exploded(df: DataFrame, group_cols: Sequence[str],
@@ -264,62 +148,42 @@ def array_reduce_exploded(df: DataFrame, group_cols: Sequence[str],
 
     Plan shape::
 
-        scan -> filter(valid) -> posexplode
-             -> HashAggregate(group, pos)      # partial+final, map-side combine
-             -> window max(cnt) over group     # min-length truncation w/o a join
-             -> HashAggregate(group)           # rebuild array, sorted by pos
+        scan -> posexplode                 # NULL and [] arrays emit no rows
+             -> HashAggregate(group, pos)  # partial+final, map-side combine
+             -> HashAggregate(group)       # truncate + rebuild, sorted by pos
 
-    The (group, pos) aggregation carries the monoid across partitions the
-    same way the reference's ``merge_batch`` does (``src/monoid.rs:445-465``)
-    — associativity makes the shuffle-split safe.  Min-length truncation
-    exploits that every valid array covers position 0, so the number of
-    arrays in a group equals ``max(cnt)``; a position belongs to the
-    result iff **all** arrays cover it (``cnt == max(cnt)``).  The window
-    and the rebuild aggregate share the group hash-partitioning, so AQE
-    reuses the exchange instead of shuffling twice.
+    Three DataFrame steps, each a ``selectExpr``/``F.expr`` over the
+    monoid's SQL text; building runs no job.  The (group, pos)
+    aggregation carries the monoid across partitions the same way the
+    reference's ``merge_batch`` does (``src/monoid.rs:445-465``) --
+    associativity makes the shuffle-split safe.  Min-length truncation
+    happens inside the rebuild aggregate: every valid array covers
+    position 0, so the number of arrays in a group is ``max(cnt)``, and a
+    position belongs to the result iff **all** arrays cover it
+    (``cnt == max(cnt)``).  Two hash exchanges, no window.  64-bit integer
+    products add the exact pass of :func:`_with_exact_magnitudes`.
+
+    With no ``group_cols`` the result is one row, NULL when no array
+    qualifies -- like :func:`array_reduce`.
     """
     m = monoid if isinstance(monoid, Monoid) else get_monoid(monoid, elem)
-    ident = m.identity_lit()
-
-    groups = list(group_cols)
-    dummy = not groups
-    if dummy:
-        df = df.withColumn("__g", F.lit(1))
-        groups = ["__g"]
-
-    arr = F.col(array_col).cast(T.ArrayType(m.spark_type, True))
-    base = (
-        df.where(F.col(array_col).isNotNull() & (F.size(array_col) > 0))
-        .select(*groups, F.posexplode(arr).alias("__pos", "__elem"))
-    )
-    e = F.coalesce(F.col("__elem"), ident)
-
-    if m.op == "product" and m.agg is None:
-        if math.log2(INT_BOUNDS[m.elem][1] + 1) > 53:
-            # 64-bit carrier: in-range magnitudes above 2^53 exist, so
-            # the double-product form is lossy there — take the exact
-            # gray-zone two-pass instead
-            per_pos = _exact_product_per_pos(base, groups, m, e)
-        else:
-            per_pos = base.groupBy(*groups, "__pos").agg(
-                _int_product_agg(m, e).alias("__v"),
-                F.count(F.lit(1)).alias("__cnt"))
-    else:
-        per_pos = base.groupBy(*groups, "__pos").agg(
-            m.agg(e).alias("__v"), F.count(F.lit(1)).alias("__cnt"))
-
-    w = Window.partitionBy(*groups)
-    kept = (
-        per_pos.withColumn("__n", F.max("__cnt").over(w))
-        .where(F.col("__cnt") == F.col("__n"))
-    )
-    out = kept.groupBy(*groups).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("__pos", "__v"))),
-            lambda s: s["__v"],
-        ).alias(result_col)
-    )
-    return out.drop("__g") if dummy else out
+    groups = [quote(g) for g in group_cols]
+    base = df.selectExpr(
+        *groups, f"posexplode(CAST({quote(array_col)} AS array<{m.carrier}>))"
+                 " AS (`__pos`, `__e`)")
+    e = f"coalesce(`__e`, {m.identity_sql})"
+    cells = base.groupBy(*groups, "`__pos`").agg(
+        *m.agg_columns(e), F.expr("count(1) AS `__cnt`"))
+    if m.gray:
+        cells = _with_exact_magnitudes(base, cells, [*group_cols, "__pos"],
+                                       m, e)
+    rebuilt = ("transform(filter(array_sort(collect_list(struct(`__pos`, "
+               f"`__cnt`, {m.cell} AS `__v`))), "
+               "s -> s.`__cnt` = max(`__cnt`)), s -> s.`__v`)")
+    if not groups:
+        rebuilt = f"IF(count(1) = 0, NULL, {rebuilt})"
+    return cells.groupBy(*groups).agg(
+        F.expr(f"{rebuilt} AS {quote(result_col)}"))
 
 
 # ---------------------------------------------------------------------------
@@ -391,25 +255,24 @@ def array_reduce_pandas(df: DataFrame, group_cols: Sequence[str],
     groups — that's :func:`array_reduce_exploded`.
     """
     m = monoid if isinstance(monoid, Monoid) else get_monoid(monoid, elem)
-    groups = list(group_cols)
-    dummy = not groups
-    if dummy:
-        df = df.withColumn("__g", F.lit(1))
-        groups = ["__g"]
-
-    gfields = [df.schema[g] for g in groups]
+    # positional key names: applyInPandas resolves column names as paths,
+    # so a dotted group column name would not survive it
+    keys = ([f"{quote(g)} AS `__k{i}`" for i, g in enumerate(group_cols)]
+            or ["1 AS `__k0`"])
+    src = df.selectExpr(*keys, f"{quote(array_col)} AS `__arr`")
+    kfields = src.schema.fields[:-1]
     schema = T.StructType(
-        [T.StructField(f.name, f.dataType, f.nullable) for f in gfields]
-        + [T.StructField(result_col, T.ArrayType(m.spark_type, True), True)]
-    )
+        [*kfields, T.StructField("__r", T.ArrayType(m.spark_type, True), True)])
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {g: [pdf[g].iloc[0]] for g in groups}
-        row[result_col] = [_np_fold(pdf[array_col], m)]
+        row = {f.name: [pdf[f.name].iloc[0]] for f in kfields}
+        row["__r"] = [_np_fold(pdf["__arr"], m)]
         return pd.DataFrame(row)
 
-    out = df.select(*groups, array_col).groupBy(*groups).applyInPandas(fold, schema)
-    return out.drop("__g") if dummy else out
+    out = src.groupBy(*(f.name for f in kfields)).applyInPandas(fold, schema)
+    return out.selectExpr(
+        *(f"`__k{i}` AS {quote(g)}" for i, g in enumerate(group_cols)),
+        f"`__r` AS {quote(result_col)}")
 
 
 # ---------------------------------------------------------------------------

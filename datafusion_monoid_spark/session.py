@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads);
-the same configs are what we would set on a real cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: every CPU
+of the machine) with a driver heap of ``$SPARK_GRAFT_DRIVER_MEM``
+(default: half its physical memory); the other configs are what we would
+set on a real cluster:
 
 * AQE on (runtime re-planning, skew-join handling, partition coalescing)
 * Arrow on (vectorized pandas-UDF exchange)
@@ -18,7 +20,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def _half_of_ram() -> str:
+    """Half the machine's physical memory, in whole GiB (at least 1)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
 
 
 def get_spark(app_name: str = "datafusion-monoid-spark",
@@ -37,10 +45,10 @@ def get_spark(app_name: str = "datafusion-monoid-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = one JVM doing driver AND executor work: size the
-        # heap to the box (this container: 128 GiB).  8g survived sf1 but
-        # OOMed the sf10 dedup tier (25M candidate pairs carrying 64-long
-        # signatures); on a real cluster this is spark.executor.memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # heap to the box, leaving the rest to Python workers and the OS;
+        # on a real cluster this is spark.executor.memory
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_of_ram())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
         .getOrCreate()

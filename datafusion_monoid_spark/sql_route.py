@@ -28,8 +28,11 @@ Supported grammar (deliberately the reference's surface, no more)::
     [GROUP BY g1, g2, ...]
 
 * exactly one ``array_reduce_*`` call in the select list;
-* every other select item is a plain column reference and must match
-  the GROUP BY list (the reference only ever issues this shape);
+* every other select item is a plain column reference (backticks
+  allowed) and must match the GROUP BY list (the reference only ever
+  issues this shape);
+* string literals, comments and backticked names are lexed first, so a
+  ``)`` or a keyword inside them does not move a clause boundary;
 * everything between ``FROM`` and ``GROUP BY`` passes through verbatim,
   so filters keep their pushdown.
 
@@ -49,12 +52,38 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_monoid_spark.operators.array_reduce import array_reduce_exploded
+from datafusion_monoid_spark.operators.array_reduce import (
+    array_reduce_exploded, quote)
 from datafusion_monoid_spark.monoid import ELEMENT_TYPES
 
 _CALL_RE = re.compile(
     r"array_reduce_(sum|product|max|min)(?:_([a-z0-9]+))?\s*\(",
     re.IGNORECASE)
+
+
+def _lex(sql: str) -> tuple[str, str]:
+    """``(text, mask)``: ``sql`` with its comments blanked, and the same
+    with the inside of every string literal and backticked identifier
+    blanked too.  Both keep ``sql``'s length, so the depth-0 scans below
+    run on ``mask`` and slice ``text``."""
+    text, mask, i, n = list(sql), list(sql), 0, len(sql)
+    while i < n:
+        c = sql[i]
+        if c in "'\"`":
+            j = i + 1
+            while j < n and sql[j] != c:
+                j += 2 if sql[j] == "\\" and c != "`" else 1
+            j = min(j, n)
+            mask[i + 1:j] = "_" * (j - i - 1)
+            i = j + 1
+        elif sql.startswith(("--", "/*"), i):
+            j = sql.find("\n" if c == "-" else "*/", i)
+            j = n if j < 0 else j + (c == "/") * 2
+            text[i:j] = mask[i:j] = " " * (j - i)
+            i = j
+        else:
+            i += 1
+    return "".join(text), "".join(mask)
 
 
 def _depth0_find(s: str, token: str, start: int = 0) -> int:
@@ -80,20 +109,19 @@ def _depth0_find(s: str, token: str, start: int = 0) -> int:
     return -1
 
 
-def _depth0_split(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren depth 0."""
-    out, depth, cur = [], 0, []
-    for c in s:
-        if c == "(":
+def _depth0_split(s: str, start: int, end: int) -> list[tuple[int, int]]:
+    """``(start, end)`` spans of ``s[start:end]`` split on ``,`` at
+    paren depth 0."""
+    out, depth = [], 0
+    for i in range(start, end):
+        if s[i] == "(":
             depth += 1
-        elif c == ")":
+        elif s[i] == ")":
             depth -= 1
-        if c == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    out.append("".join(cur))
+        elif s[i] == "," and depth == 0:
+            out.append((start, i))
+            start = i + 1
+    out.append((start, end))
     return out
 
 
@@ -109,51 +137,58 @@ def _matching_paren(s: str, open_idx: int) -> int:
     raise ValueError(f"unbalanced parentheses in: {s!r}")
 
 
-_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_IDENT_RE = re.compile(r"^(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)$")
+
+
+def _unquote(ident: str) -> str:
+    return ident[1:-1].replace("``", "`") if ident.startswith("`") else ident
 
 
 def parse_monoid_sql(sql: str) -> dict:
     """Parse the supported grammar; raise ``ValueError`` outside it.
 
-    Returns ``{op, elem, arg, alias, group_cols, from_sql}``.
+    String literals, comments and backticked identifiers are lexed
+    first, so neither a ``)`` nor a keyword inside them moves a clause
+    boundary.  Returns ``{op, elem, arg, alias, group_cols, from_sql}``;
+    group columns come back unquoted.
     """
-    stmt = sql.strip().rstrip(";").strip()
-    if not stmt.lower().startswith("select"):
+    text, mask = _lex(sql.strip())
+    n = len(mask.rstrip().rstrip(";").rstrip())
+    text, mask = text[:n], mask[:n]
+    if not mask.lower().startswith("select"):
         raise ValueError("route_monoid_sql: statement must start with SELECT")
-    body = stmt[len("select"):]
 
-    from_idx = _depth0_find(body, "from")
+    from_idx = _depth0_find(mask, "from", len("select"))
     if from_idx < 0:
         raise ValueError("route_monoid_sql: no top-level FROM clause")
-    select_list, tail = body[:from_idx], body[from_idx + len("from"):]
+    tail = from_idx + len("from")
 
-    gb_idx = _depth0_find(tail, "group")
+    gb_idx = _depth0_find(mask, "group", tail)
     group_cols: list[str] = []
     if gb_idx >= 0:
-        gb = tail[gb_idx:]
-        from_sql = tail[:gb_idx].strip()
-        m = re.match(r"group\s+by\s+(.*)$", gb.strip(),
-                     re.IGNORECASE | re.DOTALL)
+        from_sql = text[tail:gb_idx].strip()
+        m = re.match(r"group\s+by\s+", mask[gb_idx:], re.IGNORECASE)
         if not m:
             raise ValueError("route_monoid_sql: malformed GROUP BY clause")
-        group_cols = [c.strip() for c in _depth0_split(m.group(1))]
+        group_cols = [_unquote(text[a:b].strip())
+                      for a, b in _depth0_split(mask, gb_idx + m.end(), n)]
     else:
-        from_sql = tail.strip()
+        from_sql = text[tail:].strip()
     if not from_sql:
         raise ValueError("route_monoid_sql: empty FROM clause")
 
     call = None
     plain: list[str] = []
-    for item in _depth0_split(select_list):
-        item = item.strip()
-        m = _CALL_RE.match(item)
+    for a, b in _depth0_split(mask, len("select"), from_idx):
+        item, item_mask = text[a:b].strip(), mask[a:b].strip()
+        m = _CALL_RE.match(item_mask)
         if m:
             if call is not None:
                 raise ValueError(
                     "route_monoid_sql: exactly one array_reduce_* call "
                     "is supported per statement")
-            open_idx = item.index("(", m.start())
-            close_idx = _matching_paren(item, open_idx)
+            open_idx = item_mask.index("(", m.start())
+            close_idx = _matching_paren(item_mask, open_idx)
             arg = item[open_idx + 1:close_idx].strip()
             rest = item[close_idx + 1:].strip()
             alias = "result"
@@ -177,7 +212,7 @@ def parse_monoid_sql(sql: str) -> dict:
                 raise ValueError(
                     f"route_monoid_sql: select item {item!r} is neither an "
                     f"array_reduce_* call nor a plain group column")
-            plain.append(item)
+            plain.append(_unquote(item))
     if call is None:
         raise ValueError("route_monoid_sql: no array_reduce_* call found "
                          "in the select list")
@@ -204,10 +239,7 @@ def route_monoid_sql(spark: SparkSession, sql: str,
     DataFrame twin, now reachable from the SQL entry point.
     """
     p = parse_monoid_sql(sql)
-    cols = ", ".join(p["group_cols"])
-    inner = (f"SELECT {cols + ', ' if cols else ''}({p['arg']}) AS __arr "
-             f"FROM {p['from_sql']}")
-    df = spark.sql(inner)
-    red = array_reduce_exploded(df, p["group_cols"], "__arr", p["op"],
-                                p["elem"] or default_elem)
-    return red.withColumnRenamed("result", p["alias"])
+    cols = "".join(f"{quote(c)}, " for c in p["group_cols"])
+    df = spark.sql(f"SELECT {cols}({p['arg']}) AS __arr FROM {p['from_sql']}")
+    return array_reduce_exploded(df, p["group_cols"], "__arr", p["op"],
+                                 p["elem"] or default_elem, p["alias"])

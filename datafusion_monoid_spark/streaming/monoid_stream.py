@@ -82,7 +82,11 @@ def streaming_monoid_reduce(events: DataFrame,
     different per-event vector.  Output: (window_start, event_type, pos,
     val)."""
     m = monoid if isinstance(monoid, Monoid) else get_monoid(monoid, elem)
-    ident = m.identity_lit()
+    if m.gray:
+        raise ValueError(
+            f"streaming_monoid_reduce: an exact {m.elem} product needs a "
+            f"second aggregation pass, which Structured Streaming forbids; "
+            f"reduce each batch with array_reduce_exploded instead")
     if vec is None:
         vec = F.array(F.col("value"), F.col("value") * F.col("value"),
                       F.lit(1.0))
@@ -92,9 +96,9 @@ def streaming_monoid_reduce(events: DataFrame,
     )
     return (
         exploded.groupBy(F.window("event_time", window), "event_type", "pos")
-        .agg(m.agg(F.coalesce(F.col("elem"), ident)).alias("val"))
-        .select(F.col("window").start.alias("window_start"),
-                "event_type", "pos", "val")
+        .agg(*m.agg_columns(f"coalesce(elem, {m.identity_sql})"))
+        .selectExpr("window.start AS window_start", "event_type", "pos",
+                    f"{m.cell} AS val")
     )
 
 

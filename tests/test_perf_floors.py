@@ -12,7 +12,8 @@ throwaway run, then take the best of 3 noop-sink materializations —
 still run this fast", which the fastest quiet run answers and ambient
 load cannot fake.
 
-Opt out with ``SPARK_GRAFT_PERF=0`` (e.g. on a loaded CI box).
+Opt in with ``SPARK_GRAFT_PERF=1``; the ceilings are skipped otherwise
+(e.g. on a loaded CI box).
 """
 
 from __future__ import annotations

@@ -23,7 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_monoid_spark.operators.array_reduce import (
-    make_pandas_udaf, register_all)
+    array_reduce_exploded, make_pandas_udaf, register_all)
 from datafusion_monoid_spark.monoid import get_monoid
 from datafusion_monoid_spark.sql_route import parse_monoid_sql, route_monoid_sql
 
@@ -62,6 +62,15 @@ def test_parse_subquery_from_tail_passthrough():
     # the GROUP BY inside the parenthesized subquery must NOT be split on
     assert p["from_sql"] == "(SELECT arr FROM u GROUP BY arr) s"
     assert p["group_cols"] == []
+
+
+def test_parse_lexes_strings_comments_and_backticks():
+    p = parse_monoid_sql(
+        "SELECT `group`, `a b`, array_reduce_sum(arr) AS r FROM t "
+        "WHERE s = 'x) group by y' -- group by z\n"
+        "GROUP BY `a b`, /* ) */ `group`")
+    assert p["group_cols"] == ["group", "a b"]
+    assert p["from_sql"] == "t WHERE s = 'x) group by y'"
 
 
 @pytest.mark.parametrize("bad, msg", [
@@ -123,6 +132,19 @@ def test_routed_plan_is_partial_agg(spark):
     assert "partial_sum" in p            # map-side combine
     assert "AggregateInPandas" not in p  # NOT the Complete-mode path
     assert p.count("Exchange hashpartitioning") == 2
+
+
+def test_exploded_sum_plan_is_one_pass(spark):
+    """The DataFrame twin builds one partial-aggregation plan: two hash
+    exchanges, truncation inside the rebuild aggregate (no window) and
+    nothing cached."""
+    _ragged_view(spark)
+    df = array_reduce_exploded(spark.table("__route_t"), ["grp"], "arr", "sum")
+    p = _explain(df, "extended")
+    assert "partial_sum" in p
+    assert p.count("Exchange hashpartitioning") == 2
+    assert "Window" not in p
+    assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p
 
 
 # ---------------------------------------------------------------------------

@@ -421,3 +421,23 @@ def test_streaming_rollup_maintenance_equals_batch_recompute(spark):
         (r["event_type"], r["hour_bucket"], r["n"], r["v_milli"])
         for r in rows)
     assert key(streamed) == key(full)
+
+
+def test_stream_integer_product_renders_the_cell_text(spark):
+    """The stream renders the same per-cell aggregates as the batch
+    posexplode form: a 32-bit product saturates exactly, and a 64-bit
+    product, whose exact pass needs a second aggregation, is refused
+    with the batch route named."""
+    ev = spark.createDataFrame(
+        [("2024-01-01 00:10:00", "a", 2**20), ("2024-01-01 00:20:00", "a", 2**20),
+         ("2024-01-01 00:30:00", "b", -3)],
+        "ts string, event_type string, v int",
+    ).select(F.col("ts").cast("timestamp").alias("event_time"),
+             "event_type", "v")
+    got = streaming_monoid_reduce(ev, "product", "int",
+                                  vec=F.array("v", F.lit(1))).collect()
+    assert {(r["event_type"], r["pos"]): r["val"] for r in got} == {
+        ("a", 0): 2**31 - 1, ("a", 1): 1, ("b", 0): -3, ("b", 1): 1}
+    with pytest.raises(ValueError, match="array_reduce_exploded"):
+        streaming_monoid_reduce(ev, "product", "bigint",
+                                vec=F.array(F.col("v").cast("bigint")))
