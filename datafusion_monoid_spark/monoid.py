@@ -16,8 +16,8 @@ per Column operation):
   aggregates over one element ``{e}``, and ``cell``, the element value
   from their outputs (plus ``gray`` for the exact 64-bit product pass).
 
-The NumPy oracle form keeps Python callables (``np_combine``,
-``np_finish``).
+The Python fold (the registered SQL names) reads ``op``, ``elem`` and
+``identity`` and mirrors the same semantics in NumPy.
 
 Semantics decisions (documented deviations, see SURVEY.md §2.1 / §7):
 
@@ -28,10 +28,10 @@ Semantics decisions (documented deviations, see SURVEY.md §2.1 / §7):
   (``x = h * 2^32 + l``, ``0 <= l < 2^32``; exact below 2^31 rows per
   cell, and a cell past that raises) and clamp once in DECIMAL(38,0)
   (``uint64``, whose carrier does not fit a limb, sums in DECIMAL(38,0));
-  the NumPy form folds exact Python ints and clamps once in
-  ``np_finish`` -- deterministic, unlike the reference's per-pair
-  saturation, which is order-dependent for mixed-sign overflow.
-  **Integer PRODUCT** saturates per pair in the fold and NumPy forms (the
+  the Python fold adds exact ints and clamps once -- deterministic,
+  unlike the reference's per-pair saturation, which is order-dependent
+  for mixed-sign overflow.
+  **Integer PRODUCT** saturates per pair in the fold and Python forms (the
   accumulator must stay bounded) and is exact-then-clamp in the cell
   forms: sign from the parity of negative factors, a zero short-circuit,
   overflow from ``sum(log2|x|)``, the magnitude from a double product
@@ -51,10 +51,8 @@ Semantics decisions (documented deviations, see SURVEY.md §2.1 / §7):
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
-from typing import Callable
+from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -125,10 +123,6 @@ class Monoid:
     cell: str                     # over the aggs aliases -> element
     #: condition on the aggs under which a cell needs the exact pass
     gray: str | None
-    np_combine: Callable[[np.ndarray, np.ndarray], np.ndarray] = field(repr=False)
-    #: NumPy-form one-shot finalizer (clamp once after an exact fold)
-    np_finish: Callable[[np.ndarray], np.ndarray] | None = field(
-        default=None, repr=False)
 
     @property
     def name(self) -> str:
@@ -161,11 +155,6 @@ class Monoid:
         return out
 
 
-def _np_clamp(arr: np.ndarray, elem: str) -> np.ndarray:
-    lo, hi = INT_BOUNDS[elem]
-    return np.clip(arr, lo, hi)
-
-
 #: rows one (group, pos) cell may hold before the two-limb integer sum
 #: could overflow its low limb: each low limb is < 2^32
 _SUM_MAX_ROWS = 2**31
@@ -182,16 +171,10 @@ def _build(op: str, elem: str) -> Monoid:
     # sum/product aggregates widen (float -> double): cast back
     cell = f"CAST(`__a` AS {c})"
     gray = None
-    np_finish = None
 
     if op == "sum":
         identity: float | int = 0.0 if is_f else 0
         combine = "{a} + {b}"
-        np_combine = lambda a, b: a + b
-        if not is_f:
-            # exact-then-clamp in every form (see module doc)
-            np_combine = lambda a, b: a.astype(object) + b.astype(object)
-            np_finish = lambda a: _np_clamp(a, elem)
         if elem == "uint64":
             # the DECIMAL(20,0) carrier does not fit a BIGINT limb
             acc_type, lift, finish = _WIDE, f"CAST({{x}} AS {_WIDE})", clamp
@@ -219,21 +202,18 @@ def _build(op: str, elem: str) -> Monoid:
     elif op == "product":
         identity = 1.0 if is_f else 1
         combine = "{a} * {b}"
-        np_combine = lambda a, b: a * b
         if not is_f:
             # per-pair saturation keeps the fold accumulator bounded
             combine = clamp.format(
                 x=f"CAST({{a}} AS {_WIDE}) * CAST({{b}} AS {_WIDE})")
-            np_combine = lambda a, b: _np_clamp(
-                a.astype(object) * b.astype(object), elem)
     elif op == "max":
         # identity = type MIN / -inf (reference src/monoid.rs:157-188)
         identity = float("-inf") if is_f else INT_BOUNDS[elem][0]
-        combine, np_combine = "greatest({a}, {b})", np.maximum
+        combine = "greatest({a}, {b})"
     elif op == "min":
         # identity = type MAX / +inf (reference src/monoid.rs:190-221)
         identity = float("inf") if is_f else INT_BOUNDS[elem][1]
-        combine, np_combine = "least({a}, {b})", np.minimum
+        combine = "least({a}, {b})"
     else:  # pragma: no cover
         raise ValueError(f"unknown op {op!r}")
 
@@ -270,8 +250,7 @@ def _build(op: str, elem: str) -> Monoid:
 
     return Monoid(op=op, elem=elem, identity=identity, acc_type=acc_type,
                   lift=lift, combine=combine, finish=finish, aggs=aggs,
-                  cell=cell, gray=gray, np_combine=np_combine,
-                  np_finish=np_finish)
+                  cell=cell, gray=gray)
 
 
 OPS = ("sum", "product", "max", "min")

@@ -2,7 +2,7 @@
 
 The reference's literal entry point is a SQL aggregate call
 (``SELECT array_reduce_sum(arrays) FROM t``, ``src/monoid.rs:568-571``).
-In Spark that name can only bind to a GROUPED_AGG pandas UDAF, and
+In Spark that name can only bind to a GROUPED_AGG (Arrow) UDAF, and
 GROUPED_AGG runs in **Complete mode**: every group is materialized on
 one executor — correct, but O(group size) memory, the one plan shape in
 this repo that does not survive unbounded groups (VERDICT r4, the single
@@ -39,8 +39,9 @@ Supported grammar (deliberately the reference's surface, no more)::
 Anything outside the grammar raises ``ValueError`` with the exact
 reason — a loud error beats a silent Complete-mode fallback.
 
-The registered SQL names themselves stay available for in-executor-sized
-groups, now behind an explicit group-size guard
+The registered SQL names themselves -- one Arrow GROUPED_AGG UDAF each,
+folding a whole group in one Python worker -- stay available for
+in-executor-sized groups, behind an explicit group-size guard
 (:func:`~datafusion_monoid_spark.operators.array_reduce.make_pandas_udaf`
 ``max_group_rows``): past the threshold the UDAF raises and points here
 instead of OOMing an executor at hour three of a 100 TB job.

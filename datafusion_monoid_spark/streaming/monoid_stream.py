@@ -19,6 +19,7 @@ stream and batch sides so stream==batch comparisons are layout-proof.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,7 +32,15 @@ _EVENTS_SCHEMA_TMPL = ("event_id long, ts {ts}, user_id long, "
 
 def _ts_dtype(spark: SparkSession, events_dir: str) -> T.DataType:
     """Probe the stored ``ts`` type (LONG = legacy nanos-as-long layout,
-    else a timestamp type) from one batch schema inference."""
+    else a timestamp type) from one batch schema inference.
+
+    The session is left as it is unless ``ts`` is TIMESTAMP(NANOS), which
+    Spark reads only under ``nanosAsLong``; only then is that conf set."""
+    try:
+        return spark.read.parquet(events_dir).schema["ts"].dataType
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL" or "NANOS" not in str(e):
+            raise
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(events_dir).schema["ts"].dataType
 

@@ -37,8 +37,9 @@ def main() -> None:
     spark.sql("SELECT array_reduce_sum(arrays) AS result FROM test").show()
 
     # 1b. The same SQL on an UNBOUNDED group: route it (the registered
-    # name is Complete-mode and guarded past 1M rows per group; the
-    # router executes the identical statement as a partial-agg plan)
+    # name is a Complete-mode Arrow UDAF that folds each whole group in
+    # one Python worker, guarded past 1M rows per group; the router
+    # executes the identical statement as a partial-agg plan)
     from datafusion_monoid_spark.sql_route import route_monoid_sql
     print("routed form (same SQL text, partial-agg plan):")
     route_monoid_sql(

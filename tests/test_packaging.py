@@ -22,7 +22,7 @@ def test_pyproject_parses_and_declares_the_package():
         meta = tomllib.load(f)
     proj = meta["project"]
     assert proj["name"] == "datafusion-monoid-spark"
-    assert "pyspark>=3.5" in proj["optional-dependencies"]["spark"]
+    assert "pyspark>=4.1" in proj["optional-dependencies"]["spark"]
     assert proj["scripts"]["dms-bench"] == "datafusion_monoid_spark.bench:main"
 
 

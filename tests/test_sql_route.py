@@ -129,9 +129,19 @@ def test_routed_plan_is_partial_agg(spark):
         spark, "SELECT grp, array_reduce_sum(arr) AS result "
                "FROM __route_t GROUP BY grp")
     p = _explain(df)
-    assert "partial_sum" in p            # map-side combine
-    assert "AggregateInPandas" not in p  # NOT the Complete-mode path
+    assert "partial_sum" in p                # map-side combine
+    assert "ArrowAggregatePython" not in p   # NOT the Complete-mode path
     assert p.count("Exchange hashpartitioning") == 2
+
+
+def test_registered_name_plan_is_the_arrow_udaf(spark):
+    """The registered name runs as one Arrow GROUPED_AGG UDAF (eval type
+    252), the Complete-mode node the routed plan must not contain."""
+    _ragged_view(spark)
+    p = _explain(spark.sql("SELECT grp, array_reduce_sum(arr) AS result "
+                           "FROM __route_t GROUP BY grp"))
+    [node] = [ln for ln in p.splitlines() if "ArrowAggregatePython" in ln]
+    assert node.rstrip().endswith(", 252")
 
 
 def test_exploded_sum_plan_is_one_pass(spark):
@@ -187,7 +197,7 @@ def test_routed_hugegroup_at_sf1(spark):
     fn, _ = qcat.catalog()["monoid_sql_routed_hugegroup"]
     df = fn(spark, SF1)
     p = _explain(df)
-    assert "partial_sum" in p and "AggregateInPandas" not in p
+    assert "partial_sum" in p and "ArrowAggregatePython" not in p
     t0 = time.perf_counter()
     rows = {r["pos"]: r["val"] for r in df.collect()}
     wall = time.perf_counter() - t0

@@ -441,3 +441,34 @@ def test_stream_integer_product_renders_the_cell_text(spark):
     with pytest.raises(ValueError, match="array_reduce_exploded"):
         streaming_monoid_reduce(ev, "product", "bigint",
                                 vec=F.array(F.col("v").cast("bigint")))
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.mark.parametrize("unit, conf_after, ts_type", [
+    ("us", "false", "timestamp"),   # micros: the session is left alone
+    ("ns", "true", "bigint"),       # nanos: readable only as LONG
+])
+def test_events_reader_sets_nanos_conf_only_for_nanos(spark, tmp_path, unit,
+                                                      conf_after, ts_type):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / f"events_{unit}"
+    d.mkdir()
+    pq.write_table(pa.table({
+        "event_id": [1, 2], "ts": pa.array([0, 1], pa.timestamp("s"))
+                            .cast(pa.timestamp(unit, "UTC")),
+        "user_id": [1, 1], "event_type": ["a", "a"], "value": [1.0, 2.0],
+        "props": ["", ""]}), str(d / "part-0.parquet"), version="2.6")
+    before = spark.conf.get(_NANOS_AS_LONG)
+    spark.conf.set(_NANOS_AS_LONG, "false")
+    try:
+        ev = read_events_batch(spark, str(d))
+        assert spark.conf.get(_NANOS_AS_LONG) == conf_after
+        assert ev.schema["ts"].dataType.simpleString() == ts_type
+        assert [r["event_time"].second for r in ev.orderBy("event_id")
+                .collect()] == [0, 1]
+    finally:
+        spark.conf.set(_NANOS_AS_LONG, before)
