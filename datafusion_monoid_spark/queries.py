@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType as T_LongType
 
 from datafusion_monoid_spark.operators.array_reduce import array_reduce_exploded
+from datafusion_monoid_spark.streaming.monoid_stream import _ts_dtype
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -423,14 +424,15 @@ def setop_fulfilled_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events table with a ``sec`` epoch-seconds column.
 
-    The driver's parquet stores ``ts`` as TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; ``nanosAsLong`` (runtime-settable) reads it
-    as raw int64 nanoseconds, normalized here to whole seconds — matching
+    Some layouts store ``ts`` as TIMESTAMP(NANOS), which Spark's
+    vectorized reader rejects; the streaming reader's probe then sets
+    ``nanosAsLong`` (and leaves the session alone otherwise), and the raw
+    int64 nanoseconds are normalized here to whole seconds — matching
     DuckDB's ``floor(epoch(ts))``.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts = _ts_dtype(spark, f"{sf_dir}/events.parquet")
     e = _t(spark, sf_dir, "events")
-    if isinstance(e.schema["ts"].dataType, T_LongType):
+    if isinstance(ts, T_LongType):
         sec = F.floor(F.col("ts") / F.lit(1_000_000_000)).cast("bigint")
     else:
         sec = F.unix_timestamp("ts").cast("bigint")

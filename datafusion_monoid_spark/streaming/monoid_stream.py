@@ -5,9 +5,9 @@ The monoid algebra is what makes the reference's aggregate streamable
 updates are incremental-merge-safe — exactly Spark's streaming-agg state
 contract.  The streaming form keeps the output EXPLODED
 (window, group, pos, val): one aggregation pass (streaming-legal —
-the batch posexplode form's window-function truncation and array rebuild
-need a second aggregation, which Structured Streaming forbids), and the
-consumer reassembles arrays if needed.
+the batch posexplode form's min-length truncation and array rebuild
+happen in a second aggregation, which Structured Streaming forbids), and
+the consumer reassembles arrays if needed.
 
 Events quirk: driver-generated parquet has stored ``ts`` as
 TIMESTAMP(NANOS) in some rounds (Spark's vectorized reader rejects it
@@ -19,8 +19,11 @@ stream and batch sides so stream==batch comparisons are layout-proof.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -132,30 +135,50 @@ def foreach_batch_upsert(target_dir: str, key_cols: list[str]):
 
     Update-mode streaming aggregation emits the CURRENT value per
     changed key each epoch (the engine's state already did the monoid
-    merge), so the sink is anti-join + union (replace-by-key), written
-    to a temp dir and atomically swapped — the read side never sees a
-    half-written table, and re-running an epoch (failure replay)
-    converges to the same state (idempotent upsert).  At cluster scale
-    the swap becomes a Delta/Iceberg MERGE; the handler shape is
-    identical."""
-    import os
-    import shutil
+    merge), so the sink is anti-join + union (replace-by-key).  The
+    merged table is written to ``<target>.__epoch<N>`` and swapped in by
+    renaming the target to ``<target>.__old``, the new table to the
+    target, then deleting ``.__old``; all three stay siblings.
+
+    Contract:
+
+    * readers see the old table or the new one, or briefly none between
+      the two renames — never a half-written one;
+    * a crash at any step is recovered by the next epoch on entry (a
+      missing target with a ``.__old`` beside it is renamed back, and a
+      leftover ``.__old`` is deleted), so no step loses a row;
+    * an epoch with no rows (the no-data batch that follows a watermark
+      advance) runs only the micro-batch itself and writes nothing;
+    * a replayed epoch converges to the same table (idempotent upsert).
+
+    At cluster scale the swap becomes a Delta/Iceberg MERGE; the handler
+    shape is identical."""
+    old = f"{target_dir}.__old"
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
+        if not os.path.exists(target_dir) and os.path.exists(old):
+            os.rename(old, target_dir)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+        # one job: the micro-batch's own execution, with its row count
+        obs = Observation()
+        batch = (batch_df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                 .localCheckpoint(eager=True))
+        if obs.get["rows"] == 0:
+            return
+        merged = batch
         if os.path.exists(target_dir):
-            cur = spark.read.parquet(target_dir)
-            merged = (cur.join(batch_df.select(*key_cols).distinct(),
-                               key_cols, "left_anti")
-                      .unionByName(batch_df))
-        else:
-            merged = batch_df
+            cur = batch.sparkSession.read.schema(batch.schema).parquet(
+                target_dir)
+            merged = (cur.join(batch.select(*key_cols), key_cols, "left_anti")
+                      .unionByName(batch))
         tmp = f"{target_dir}.__epoch{epoch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         if os.path.exists(target_dir):
-            shutil.rmtree(target_dir)
+            os.rename(target_dir, old)
         os.rename(tmp, target_dir)
+        if os.path.exists(old):
+            shutil.rmtree(old)
 
     return handle
 

@@ -2,7 +2,9 @@
 equal the batch computation of the same monoid reduce (the merge-safety
 property the reference is named for, src/monoid.rs:13-21)."""
 
+import os
 import shutil
+from datetime import timedelta
 from pathlib import Path
 
 import pytest
@@ -472,3 +474,176 @@ def test_events_reader_sets_nanos_conf_only_for_nanos(spark, tmp_path, unit,
                 .collect()] == [0, 1]
     finally:
         spark.conf.set(_NANOS_AS_LONG, before)
+
+
+def test_catalog_events_leave_the_nanos_conf_alone_on_micros(spark):
+    """The catalog's events reader probes the stored ``ts`` like the
+    streaming reader: on a TIMESTAMP(MICROS) layout it sets no conf."""
+    from datafusion_monoid_spark import queries as qcat
+
+    before = spark.conf.get(_NANOS_AS_LONG)
+    spark.conf.set(_NANOS_AS_LONG, "false")
+    try:
+        e = qcat._events(spark, SF)
+        assert spark.conf.get(_NANOS_AS_LONG) == "false"
+        assert e.schema["sec"].dataType.simpleString() == "bigint"
+    finally:
+        spark.conf.set(_NANOS_AS_LONG, before)
+
+
+_UPSERT_KEYS = ["window_start", "event_type", "pos"]
+
+
+@pytest.fixture()
+def two_epoch_events(tmp_path):
+    """The SF events in a watched directory, plus a copy shifted 31 days
+    later held back for a second data epoch: every shifted event falls
+    in an hour after the first file's last one, so the second data epoch
+    re-emits none of the first one's keys."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    watched, held = tmp_path / "events", tmp_path / "held"
+    watched.mkdir()
+    held.mkdir()
+    shutil.copy(f"{SF}/events.parquet", watched / "part-0.parquet")
+    t = pq.read_table(f"{SF}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    later = pc.add(t["ts"], pa.scalar(timedelta(days=31)))
+    pq.write_table(t.set_column(i, "ts", later), held / "part-1.parquet")
+    return watched, held / "part-1.parquet"
+
+
+def _upsert_oracle(spark, events_dir):
+    """The batch computation that the upsert target must equal."""
+    batch = (
+        read_events_batch(spark, events_dir)
+        .select("event_time", "event_type",
+                F.posexplode(F.array("value", F.col("value") * F.col("value"),
+                                     F.lit(1.0))).alias("pos", "elem"))
+        .groupBy(F.window("event_time", "1 hour"), "event_type", "pos")
+        .agg(F.sum("elem").alias("val"))
+        .select(F.col("window").start.alias("ws"), "event_type", "pos", "val")
+    )
+    return {(r["ws"], r["event_type"], r["pos"]): round(r["val"], 6)
+            for r in batch.collect()}
+
+
+def _upsert_target(spark, target):
+    return {(r["window_start"], r["event_type"], r["pos"]): round(r["val"], 6)
+            for r in spark.read.parquet(target).collect()}
+
+
+def _drain(agg, handler, checkpoint):
+    """Run an update-mode ``foreachBatch`` query over all available input,
+    stop it, and return its progress reports."""
+    q = (agg.writeStream.outputMode("update").foreachBatch(handler)
+         .option("checkpointLocation", checkpoint).start())
+    try:
+        q.processAllAvailable()
+        return q.recentProgress
+    finally:
+        q.stop()
+
+
+@pytest.mark.parametrize("steps_done", [0, 1, 2, 3], ids=[
+    "after_tmp_write", "after_target_to_old", "after_tmp_to_target",
+    "after_old_delete"])
+def test_foreach_batch_upsert_recovers_from_a_crash_at_every_step(
+        spark, tmp_path, monkeypatch, two_epoch_events, steps_done):
+    """Stop the sink after each filesystem step of the second data epoch,
+    restart the query on the same checkpoint and drain it: the replayed
+    epoch must leave the batch answer over both files, and no
+    ``.__old`` sibling."""
+    from pyspark.errors import StreamingQueryException
+
+    from datafusion_monoid_spark.streaming.monoid_stream import (
+        foreach_batch_upsert)
+
+    watched, held = two_epoch_events
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+    agg = streaming_monoid_reduce(
+        read_events_stream(spark, str(watched), maxFilesPerTrigger="1"),
+        "sum", window="1 hour")
+    _drain(agg, foreach_batch_upsert(target, _UPSERT_KEYS), ckpt)
+    os.rename(held, watched / held.name)
+
+    done = []
+
+    def crashing(real):
+        def step(path, *args, **kwargs):
+            if not str(path).startswith(target):
+                return real(path, *args, **kwargs)
+            if len(done) < steps_done:
+                real(path, *args, **kwargs)
+                done.append(path)
+            if len(done) == steps_done:
+                raise RuntimeError(f"crash after {steps_done} steps")
+        return step
+
+    # the sink looks up os.rename and shutil.rmtree at call time
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crashing(os.rename))
+        m.setattr(shutil, "rmtree", crashing(shutil.rmtree))
+        with pytest.raises(StreamingQueryException, match="crash after"):
+            _drain(agg, foreach_batch_upsert(target, _UPSERT_KEYS), ckpt)
+    assert len(done) == steps_done
+
+    _drain(agg, foreach_batch_upsert(target, _UPSERT_KEYS), ckpt)
+    assert _upsert_target(spark, target) == _upsert_oracle(spark,
+                                                           str(watched))
+    assert sorted(p.name for p in tmp_path.iterdir()
+                  if p.name.startswith("target")) == ["target"]
+
+
+def test_foreach_batch_upsert_writes_nothing_on_an_empty_epoch(
+        spark, tmp_path, two_epoch_events):
+    """The no-data batch after a watermark advance runs only its own
+    job and leaves the target untouched; a data epoch against an existing
+    target runs at most three jobs."""
+    from datafusion_monoid_spark.streaming.monoid_stream import (
+        foreach_batch_upsert)
+
+    watched, held = two_epoch_events
+    target = str(tmp_path / "target")
+    sc = spark.sparkContext
+    handle = foreach_batch_upsert(target, _UPSERT_KEYS)
+    seen = {}
+
+    def listing():
+        if not os.path.exists(target):
+            return None
+        return {f.name: f.stat().st_mtime_ns for f in os.scandir(target)}
+
+    def counted(batch_df, epoch_id):
+        group = f"{tmp_path.name}-epoch{epoch_id}"
+        saved = {k: sc.getLocalProperty(k) for k in (
+            "spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")}
+        sc.setJobGroup(group, group, interruptOnCancel=True)
+        before = listing()
+        try:
+            handle(batch_df, epoch_id)
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        seen[epoch_id] = (len(jobs), before, listing())
+
+    agg = streaming_monoid_reduce(
+        read_events_stream(spark, str(watched), maxFilesPerTrigger="1"),
+        "sum", window="1 hour")
+    ckpt = str(tmp_path / "ckpt")
+    progress = _drain(agg, counted, ckpt)
+    os.rename(held, watched / held.name)
+    progress += _drain(agg, counted, ckpt)
+
+    rows = {p["batchId"]: p["numInputRows"] for p in progress}
+    assert rows[0] > 0 and rows[1] == 0 and rows[2] > 0
+    jobs, before, after = seen[1]
+    assert jobs == 1
+    assert before is not None and after == before
+    assert seen[2][0] <= 3 and seen[2][1] is not None
+    assert _upsert_target(spark, target) == _upsert_oracle(spark,
+                                                           str(watched))
