@@ -8,14 +8,21 @@ over columns of numeric arrays (reference: ``src/monoid.rs:226-332``),
 hosted on Spark SQL / Catalyst, plus large-scale training-data pipeline
 operators (dedup, similarity search, multimodal columns, text analysis).
 
-Layout:
+Layout (the core is monoid.py, session.py, sql_route.py,
+operators/array_reduce.py and streaming/monoid_stream.py; it imports
+nothing else from the package):
     monoid.py      — the Monoid algebra (identity + associative combine)
     session.py     — SparkSession factory tuned for this engine
-    operators/     — array_reduce (3 forms), dedup, similarity, text, multimodal
+    sql_route.py   — route_monoid_sql: registered-name SQL text through
+                     the partial-aggregation form
+    operators/     — array_reduce (3 forms + registered names); dedup,
+                     similarity, text, multimodal, ... for the catalog
+    streaming/     — monoid_stream.py: streaming monoid reduce + upsert
+                     sink; stream_queries.py: streaming catalog entries
+    queries.py     — the query catalog (Spark callable, DuckDB oracle)
     functions/     — reusable column-expression helpers
     sources/       — test-data loaders (TPC-H-ish parquet star schema)
     plans/         — plan-inspection utilities (pushdown / codegen checks)
-    streaming/     — Structured Streaming monoid aggregation
 """
 
 from datafusion_monoid_spark.monoid import (

@@ -258,7 +258,8 @@ def _fold(arr: pa.Array | pa.ChunkedArray, m: Monoid) -> list | None:
 #: default per-group row cap for the Complete-mode Python fold -- past
 #: this the group's arrays no longer plausibly fit one executor's Arrow
 #: batch budget, and the fold raises instead of OOMing mid-job.
-#: Override per-registration (``register_all(max_group_rows=...)``).
+#: The registered names and :func:`array_reduce_pandas` use it;
+#: :func:`make_pandas_udaf` takes another ``max_group_rows``.
 DEFAULT_MAX_GROUP_ROWS = 1_000_000
 
 
@@ -312,8 +313,7 @@ def array_reduce_pandas(df: DataFrame, group_cols: Sequence[str],
 
 
 def register_all(spark: SparkSession, default_elem: str = "int",
-                 suffix_types: Sequence[str] = (),
-                 max_group_rows: int | None = None) -> None:
+                 suffix_types: Sequence[str] = ()) -> None:
     """Register the UDAF family into the session SQL registry.
 
     ``array_reduce_{sum,product,max,min}`` bind to ONE element type
@@ -330,8 +330,8 @@ def register_all(spark: SparkSession, default_elem: str = "int",
     for op in ("sum", "product", "max", "min"):
         spark.udf.register(
             f"array_reduce_{op}",
-            make_pandas_udaf(get_monoid(op, default_elem), max_group_rows))
+            make_pandas_udaf(get_monoid(op, default_elem)))
         for elem in suffix_types:
             spark.udf.register(
                 f"array_reduce_{op}_{elem}",
-                make_pandas_udaf(get_monoid(op, elem), max_group_rows))
+                make_pandas_udaf(get_monoid(op, elem)))

@@ -12073,13 +12073,10 @@ def tokenizer_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-10 tail additions (post-window breadth): near-dup-aware split,
-# retrieval quality evaluation, perplexity-bucket curation.  Registered
-# AFTER the committed r10 window head — the driver gate covers the first
-# 50 catalog entries, and the r10 window (sentinels + all 38 r6-stale
-# backlog entries) is frozen; these three are oracle-pinned in-suite at
-# sf0.01 (tests/test_pipeline_r10b.py, the driver's exact hash protocol)
-# and lead the r11 sentinel head.
+# Curation tail: near-dup-aware split, retrieval quality evaluation,
+# perplexity-bucket curation.  Each is pinned against its DuckDB oracle
+# at sf0.01 with the oracle checker's hash protocol
+# (tests/test_pipeline_r10b.py).
 # ---------------------------------------------------------------------------
 
 
@@ -13085,472 +13082,7 @@ register("streaming_containment_admit_serve",
     sq.streaming_containment_admit_serve)
 
 
-#: The COMMITTED driver-window manifest for this round — the first 50
-#: ``catalog()`` entries, i.e. exactly what the driver's correctness
-#: gate covers.  Frozen per round (regenerate with
-#: ``python tools/gen_driver_window.py``) so catalog order is
-#: deterministic across checkouts: the same checkout always presents
-#: the same window, instead of depending on which CORRECTNESS_r*.json
-#: artifacts happen to exist at call time.
-#:
-#: Composition: a SENTINEL head (this round's NEW entries, every query
-#: whose code or oracle changed this round, and the headliners) followed
-#: by the least-recently-driver-checked rotation (all 14 remaining
-#: r2-checked entries are in-window, so no query's last check predates
-#: r3 after this round — VERDICT r4 item 5; the tail rotation is
-#: r3-checked, registration order).  Exactly 50 names — the documented
-#: driver gate size (ADVICE r4: the r4 list had 53, silently dropping 3).
-_DRIVER_WINDOW_R5 = [
-    "monoid_sql_routed_hugegroup", "sim_ivf_fit_centroids", "sim_topk_ivf_pretrained",
-    "dedup_simhash_bucket_stats", "dedup_lsh_bucket_stats", "skew_aqe_join_deviation",
-    "pipeline_dedup_cascade", "streaming_ann_serve", "curation_token_budget_mix",
-    "dedup_cluster_keep_best", "dedup_incremental_newbatch",
-    # second-session additions (new entries -> sentinels)
-    "semdedup_prune_pretrained", "dq_integrity_report",
-    "events_gapfill_ffill", "cdc_scd2_customer", "events_anomaly_mad",
-    "gdpr_delete_cascade", "pagerank_neardup_graph",
-    "incremental_rollup_merge", "basket_pair_lift",
-    "events_transition_matrix", "pagerank_dedup_survivors",
-    "orders_rfm_segments", "streaming_rollup_maintenance",
-    "schema_evolution_read", "embedding_drift_by_label",
-    "dpp_partition_pruning", "events_user_gap_stats",
-    "sim_topk_ivf_kmeans", "dedup_simhash_hamming", "dedup_minhash_lsh_pairs",
-    "bm25_rank_topk", "dedup_clusters", "monoid_sql_udaf",
-    "tpch_q1", "monoid_sum_double", "q4_semi_join",
-    "q5_local_supplier_volume", "q10_returned_items", "anti_join_silent_customers",
-    "left_join_customer_orders", "full_outer_join_activity", "cube_order_stats",
-    "pivot_status_by_priority", "events_multi_rollup", "pipeline_clean_corpus",
-    "percentile_prices", "scalar_functions_smoke", "events_json_extract",
-    "hll_distinct_tokens",
-    # (17 r3-checked rotation names dropped to make room for the 17
-    # second-session sentinels — their latest check stays r3, so the
-    # "no query staler than r3 after this round" property holds)
-]
-
-#: Round-6 window: the 8 new round-6 entries as sentinels, then the
-#: least-recently-driver-checked rotation.  CORRECTNESS_r05.json had
-#: not been written back into the checkout when this was generated, so
-#: the r5 manifest above stands in as "checked in r5" for the rotation
-#: ordering (the driver gate did run it); the rotation therefore lands
-#: on the 42 stalest r3-checked entries — after this round no query's
-#: latest check predates r4's window except entries still r3-current
-#: outside the 50-gate, which rotate next.  Exactly 50 names.
-_DRIVER_WINDOW_R6 = [
-    "dedup_substring_spans", "lm_bigram_score", "bloom_join_prefilter",
-    "pq_fit_codebooks", "pq_adc_topk", "pq_adc_pretrained",
-    "pq_ivfadc_topk", "bucketed_join_zero_shuffle",
-    "graph_triangle_stats", "streaming_lm_score_serve",
-    "embedding_pca_power", "curation_dsir_weights",
-    "hardneg_mining_topk", "kmv_source_overlap", "embedding_abtt_whiten",
-    "hardneg_mining_topk_np", "kmv_incremental_merge",
-    "streaming_kmv_distinct", "priority_sample_tokens",
-    "dq_column_profile", "graph_kcore_sizes",
-    # third-session sentinels (BPE tier)
-    "bpe_train_merges", "bpe_encode_stats", "bpe_encode_newbatch",
-    "streaming_bpe_encode_serve",
-    # fourth-session sentinels (funnel/drift + the new operator batch)
-    "curation_filter_funnel", "vocab_drift_topk",
-    "session_overlap_topk", "mg_heavy_hitter_tokens",
-    "exact_percentiles_price", "pareto_parts_frontier",
-    "trend_monthly_revenue", "embedding_jl_distortion",
-    # least-recently-checked rotation (r3-era)
-    "hll_registers", "bloom_token_bits", "bloom_token_membership",
-    "train_test_split_sizes", "pack_sequences_stats", "stratified_sample_mix",
-    "doc_chunk_windows", "decontam_ngram_overlap", "quality_repetition_filters",
-    "tfidf_top_terms", "q6_forecast_revenue",
-    "q14_promo_revenue", "q18_large_volume_customer", "q19_disjunctive_revenue",
-    "embedding_quantize_int8", "zorder_layout_stats", "fuzzy_customer_matches",
-    # (streaming_cms_cells / streaming_dedup_redelivery /
-    # q22_global_sales_opportunity / q20_excess_supply /
-    # q16_supplier_part_counts / q15_top_supplier /
-    # q13_customer_distribution / q11_important_stock /
-    # q9_product_profit / q2_min_cost_supplier / q12_late_shipments /
-    # kmeans_quantized_centroids dropped to fit the 12 late sentinels,
-    # and q8_market_share / boilerplate_spans / group_quantile_tokens
-    # / q7_volume_shipping for the 4 BPE sentinels, and
-    # unpivot_lineitem_measures / pipeline_curation_full for the 2
-    # funnel/drift sentinels, and per_group_sample /
-    # hist_quantile_prices / bpe_top_merges / funnel_view_click_purchase
-    # / retention_cohorts / vocab_topk_coverage for the
-    # fourth-session operator batch;
-    # all stay r3-current and rotate next round)
-]
-
-
-#: Round-7 window — the VERIFICATION-BACKLOG round (VERDICT r6 item 1).
-#: CORRECTNESS_r05.json was never written back into the checkout, so
-#: the entire round-5 batch (28 entries) has no driver check on
-#: record, and 14 entries' latest check is still r2.  This window is
-#: exactly that backlog — 28 never-checked + 14 r2-stale = 42 — plus
-#: 8 sentinels: the three NEW round-7 entries (residual IVFADC fused
-#: + pretrained, multi-resolution span dedup) and five r6-checked
-#: entries whose code or oracle changed this round (seed-rule change
-#: in the k-means/PQ fits, k-core rewrite, percentile width fix,
-#: skyline batch prune; bpe_train_merges also changed but only its
-#: behavior-neutral checkpoint release — see the in-list note).
-#: Credit RULE (the r6
-#: failure mode): a round with no CORRECTNESS_r*.json file in the
-#: checkout contributes NOTHING to the staleness ordering — never
-#: trust a manifest as if it had been checked (enforced by
-#: tests/test_packaging.py::test_driver_window_covers_backlog).
-_DRIVER_WINDOW_R7 = [
-    # new round-7 entries
-    "pq_ivfadc_residual_topk", "dedup_substring_multires",
-    "pq_ivfadc_residual_pretrained",
-    # r6-checked entries whose code/oracle changed this round
-    # (bpe_train_merges also changed, but only its checkpoint-release
-    # discipline — behavior-neutral, oracle unchanged, r6 check valid,
-    # and the BPE pytest suite covers it; its slot goes to the new
-    # serve entry so the 42-entry verification backlog stays whole)
-    "pq_ivfadc_topk", "pq_fit_codebooks",
-    "graph_kcore_sizes", "exact_percentiles_price",
-    "pareto_parts_frontier",
-    # the 28 round-5 entries with NO driver check on record
-    "monoid_sql_routed_hugegroup", "sim_ivf_fit_centroids",
-    "sim_topk_ivf_pretrained", "semdedup_prune_pretrained",
-    "skew_aqe_join_deviation", "pipeline_dedup_cascade",
-    "dedup_cluster_keep_best", "dedup_incremental_newbatch",
-    "dedup_lsh_bucket_stats", "dedup_simhash_bucket_stats",
-    "pagerank_neardup_graph", "pagerank_dedup_survivors",
-    "basket_pair_lift", "events_transition_matrix",
-    "orders_rfm_segments", "curation_token_budget_mix",
-    "dq_integrity_report", "events_gapfill_ffill",
-    "cdc_scd2_customer", "events_anomaly_mad",
-    "gdpr_delete_cascade", "incremental_rollup_merge",
-    "streaming_rollup_maintenance", "streaming_ann_serve",
-    "schema_evolution_read", "embedding_drift_by_label",
-    "dpp_partition_pruning", "events_user_gap_stats",
-    # the 14 entries whose latest driver check is still round 2
-    "monoid_sql_udaf", "q4_semi_join", "q5_local_supplier_volume",
-    "q10_returned_items", "pivot_status_by_priority",
-    "cube_order_stats", "left_join_customer_orders",
-    "full_outer_join_activity", "anti_join_silent_customers",
-    "percentile_prices", "events_json_extract",
-    "events_multi_rollup", "pipeline_clean_corpus",
-    "scalar_functions_smoke",
-]
-
-_DRIVER_WINDOW_R8 = [
-    # new round-8 entries (never driver-checked)
-    "decontam_prod_13gram", "multimodal_neardup_lsh",
-    "pq_opq_ivfadc_topk", "pq_opq_ivfadc_pretrained",
-    "unigram_train_pieces", "unigram_encode_stats",
-    # entries whose code changed this round (single-agg profile;
-    # literal-Lloyd fits; micro-hook search; modality-blind minhash)
-    "dq_column_profile", "pq_ivfadc_residual_topk", "pq_ivfadc_topk",
-    "pq_ivfadc_residual_pretrained", "dedup_minhash_lsh_pairs",
-    # the 28 entries whose latest driver check is round 3, in
-    # staleness-then-registration order (gen_driver_window.py), plus
-    # the 12 oldest round-4 entries — after this round no entry's
-    # latest check is older than r4 (VERDICT r7 item 2)
-    "hll_distinct_tokens", "vocab_topk_coverage", "per_group_sample",
-    "hist_quantile_prices", "bpe_top_merges",
-    "funnel_view_click_purchase", "retention_cohorts",
-    "pipeline_curation_full", "unpivot_lineitem_measures",
-    "q7_volume_shipping", "q8_market_share", "boilerplate_spans",
-    "group_quantile_tokens", "kmeans_quantized_centroids",
-    "q12_late_shipments", "q2_min_cost_supplier", "q9_product_profit",
-    "q11_important_stock", "q13_customer_distribution",
-    "q15_top_supplier", "q16_supplier_part_counts", "q20_excess_supply",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "streaming_cms_cells", "streaming_dedup_redelivery",
-    "streaming_purchase_click_join", "streaming_decontam_alerts",
-    "monoid_sum_double", "monoid_min_double", "monoid_max_double",
-    "monoid_product_double", "monoid_embedding_sum",
-    "monoid_sum_ragged_int", "monoid_sum_nullelems_double", "tpch_q1",
-    "join_revenue_by_nation", "window_topk_orders", "rollup_revenue",
-]
-
-
-#: Round-9 window (gen_driver_window.py): the five NEW entries (exact
-#: Viterbi segmentation, KMV A-not-B, the corpus novelty curve, the
-#: BPE/unigram agreement report, shingle containment) plus the three
-#: entries whose CODE changed this round (pq_adc_topk now serves the
-#: shared persisted codebook; streaming_lm_score_serve hoists the
-#: model join and gained commit metrics; pq_opq_ivfadc_pretrained
-#: serves the persisted ROTATED corpus), then the 38 entries whose
-#: latest driver check is round 4 and the 4 oldest round-6 entries
-#: (VERDICT r9 item 2 wanted the 12 oldest r6; 50 slots minus 8
-#: sentinels leaves 4, and two more of those r6 slots are covered by
-#: the pq_adc_topk / streaming_lm_score_serve sentinels, themselves
-#: r6-stale — the remainder leads the r10 backlog by construction).  Behavior-neutral
-#: r9 changes NOT re-windowed (the r7 bpe_train_merges convention):
-#: unigram_train_pieces (checkpoint release on the defaulted-ckpt
-#: path only — the catalog entry passes ckpt=_ckpt) and
-#: unigram_encode_stats (a new serve-side assert that cannot fire on
-#: the training corpus); both are r8-checked and pytest-pinned.  Also
-#: behavior-neutral: kmv_source_overlap's r9 change is a pure
-#: extract-method refactor (the pair-sketch prologue is now shared
-#: with kmv_anotb_novelty) — its oracle SQL is byte-identical to r6's
-#: (asserted at refactor time) and the entry re-verified green at
-#: sf0.01 locally.
-_DRIVER_WINDOW_R9 = [
-    # new + changed this round
-    "unigram_encode_viterbi", "kmv_anotb_novelty",
-    "ngram_novelty_curve", "tokenizer_agreement",
-    "dedup_containment_pairs", "pq_adc_topk",
-    "streaming_lm_score_serve", "pq_opq_ivfadc_pretrained",
-    # the 38 r4-stale entries, staleness-then-registration order
-    "distinct_types_per_brand", "sort_limit_top_orders",
-    "setop_fulfilled_customers", "events_hourly", "events_moving_avg",
-    "events_sessionize", "dedup_exact_stats",
-    "dedup_ngram_jaccard_pairs", "dedup_simhash_hamming",
-    "dedup_embedding_neardup", "sim_topk_bruteforce", "sim_topk_numpy",
-    "sim_topk_lsh", "sim_topk_ivf", "text_lang_id", "text_quality",
-    "text_token_stats", "text_fingerprint", "multimodal_meta",
-    "multimodal_features", "events_vector_stats",
-    "asof_purchase_click", "range_join_price_tiers",
-    "q3_shipping_priority", "cms_token_sketch", "cms_heavy_hitters",
-    "window_functions_smoke", "q17_small_quantity_revenue",
-    "dedup_clusters", "sample_token_stats", "skew_salted_event_stats",
-    "skew_salted_join_deviation", "sim_topk_ivf_kmeans",
-    "streaming_windowed_monoid", "streaming_sessionize",
-    "text_pii_scan", "bm25_rank_topk", "semdedup_prune",
-    # the 4 oldest r6-stale entries
-    "hll_registers", "bloom_token_bits", "bloom_token_membership",
-    "train_test_split_sizes",
-]
-
-
-_DRIVER_WINDOW_R10 = [
-    # ALL 17 never-driver-checked entries lead (the committed
-    # no-entry-ships-outside-the-gate invariant,
-    # test_driver_window_covers_backlog): the containment/RRF/
-    # quality-classifier wave, then the post-freeze wave (leakage-safe
-    # split, ANN eval, the perplexity-bucket fit/serve/streaming
-    # triple + temperature mix, IVF postings build/append)
-    "dedup_containment_lsh", "hybrid_rrf_fusion", "quality_clf_fit",
-    "quality_clf_score", "streaming_quality_clf_serve",
-    "containment_index_build", "dedup_containment_screen",
-    "streaming_containment_screen_serve",
-    "leakage_safe_split", "ann_eval_recall_mrr",
-    "lm_perplexity_buckets", "lm_bucket_thresholds",
-    "lm_bucket_screen_newbatch", "bucket_temperature_mix",
-    "streaming_bucket_route_serve", "ivf_postings_build",
-    "ivf_postings_append",
-    # changed this round (containment/bm25 rework + the OPQ artifact
-    # lifecycle fix).  Output-identical changes (assertion/cache/
-    # checkpoint-discipline only: unigram_encode_viterbi,
-    # sim_topk_ivf_pretrained, streaming_lm_score_serve) stay
-    # oracle-pinned in-suite and are not re-sentineled.
-    "bm25_rank_topk", "dedup_containment_pairs",
-    "pq_opq_ivfadc_pretrained",
-    # 30 of the 38 r6-stale entries (VERDICT r9 item 2), staleness-
-    # then-registration order.  The 17 never-checked entries outrank
-    # completing the rotation, so the 8 LOWEST-RISK r6-stale entries —
-    # pure built-in Catalyst compositions with pinned plans and no
-    # code touched since their last green check (q6/q14/q18/q19,
-    # trend_monthly_revenue, zorder_layout_stats,
-    # bucketed_join_zero_shuffle, session_overlap_topk) — defer to
-    # lead the r11 rotation together with dedup_simhash_bucket_stats
-    # (r7-stale).
-    "pack_sequences_stats", "stratified_sample_mix",
-    "doc_chunk_windows", "decontam_ngram_overlap",
-    "quality_repetition_filters", "tfidf_top_terms",
-    "embedding_quantize_int8",
-    "fuzzy_customer_matches", "dedup_substring_spans",
-    "lm_bigram_score", "bloom_join_prefilter", "pq_adc_pretrained",
-    "graph_triangle_stats", "curation_dsir_weights",
-    "embedding_pca_power",
-    "hardneg_mining_topk", "hardneg_mining_topk_np",
-    "kmv_source_overlap", "kmv_incremental_merge",
-    "streaming_kmv_distinct", "priority_sample_tokens",
-    "embedding_abtt_whiten", "bpe_train_merges", "bpe_encode_stats",
-    "bpe_encode_newbatch", "streaming_bpe_encode_serve",
-    "curation_filter_funnel", "vocab_drift_topk",
-    "mg_heavy_hitter_tokens", "embedding_jl_distortion",
-]
-
-
-#: the 8 entries whose driver check slipped to r6 when the 17 r10
-#: sentinels took the window head — VERDICT r10 item 1 / ADVICE r10
-#: item 3 pin this deferral: they MUST lead the r11 rotation (asserted
-#: in tests/test_packaging.py::test_r11_window_leads_with_deferred)
-_R11_DEFERRED_HEAD = [
-    "bucketed_join_zero_shuffle", "q6_forecast_revenue",
-    "q14_promo_revenue", "q18_large_volume_customer",
-    "q19_disjunctive_revenue", "session_overlap_topk",
-    "trend_monthly_revenue", "zorder_layout_stats",
-]
-
-
-_DRIVER_WINDOW_R11 = [
-    # the deferred r6-stale head (judge-reverified green in r10; the
-    # committed rotation debt)
-    *_R11_DEFERRED_HEAD,
-    # the 5 never-driver-checked r11 entries (cascade-composed screen,
-    # postings compaction, curation capstone, capped probe index,
-    # training-shard export)
-    "pipeline_containment_screen", "ivf_postings_compact",
-    "pipeline_curation_capstone", "dedup_containment_lsh_capped",
-    "export_training_shards",
-    # changed this round: pq_ivfadc_topk's OUTPUT changed (nprobe 6->7
-    # recall lift, oracle in lockstep); lm_bucket_thresholds' oracle
-    # gained the degenerate-corpus n_docs coalesce; the containment
-    # screen pair share the refactored parameterized oracle chain; the
-    # postings pair share the refactored append helper + upstream
-    # freshness gate; the 7 serve loops' sinks coalesce to one writer
-    "pq_ivfadc_topk", "lm_bucket_thresholds",
-    "dedup_containment_screen", "streaming_containment_screen_serve",
-    "ivf_postings_build", "ivf_postings_append",
-    "streaming_lm_score_serve", "streaming_bucket_route_serve",
-    "streaming_quality_clf_serve", "streaming_bpe_encode_serve",
-    "streaming_kmv_distinct", "streaming_rollup_maintenance",
-    "streaming_ann_serve",
-    # oldest-stale rotation (r7-checked, registration order) to fill 50
-    "dedup_simhash_bucket_stats", "dedup_lsh_bucket_stats",
-    "pipeline_dedup_cascade", "q4_semi_join",
-    "q5_local_supplier_volume", "q10_returned_items",
-    "anti_join_silent_customers", "left_join_customer_orders",
-    "full_outer_join_activity", "cube_order_stats",
-    "pivot_status_by_priority", "events_multi_rollup",
-    "monoid_sql_udaf", "monoid_sql_routed_hugegroup",
-    "pipeline_clean_corpus", "percentile_prices",
-    "scalar_functions_smoke", "events_json_extract",
-    "dedup_cluster_keep_best", "curation_token_budget_mix",
-    "dedup_incremental_newbatch", "skew_aqe_join_deviation",
-    "sim_ivf_fit_centroids", "sim_topk_ivf_pretrained",
-]
-
-
-# VERDICT r11 item 2: the r12 window leads with the 21 entries whose
-# latest driver check is r07 (the oldest cohort; judge re-verified all
-# 21 green at sf0.01 in the r11 session), in registration order.
-_R12_STALE_HEAD = [
-    "semdedup_prune_pretrained", "dq_integrity_report",
-    "events_gapfill_ffill", "cdc_scd2_customer", "events_anomaly_mad",
-    "gdpr_delete_cascade", "pagerank_neardup_graph",
-    "pagerank_dedup_survivors", "incremental_rollup_merge",
-    "schema_evolution_read", "basket_pair_lift",
-    "events_transition_matrix", "orders_rfm_segments",
-    "embedding_drift_by_label", "dpp_partition_pruning",
-    "events_user_gap_stats", "dedup_substring_multires",
-    "pq_fit_codebooks", "graph_kcore_sizes",
-    "exact_percentiles_price", "pareto_parts_frontier",
-]
-
-
-_DRIVER_WINDOW_R12 = [
-    # oldest-stale cohort first (the committed rotation debt)
-    *_R12_STALE_HEAD,
-    # r12 sentinels: new entries (containment-index append/compact —
-    # the lifecycle pair VERDICT item 4 prescribes; the streaming
-    # curation capstone — item 6; the token-balanced shard export —
-    # item 7b) plus entries whose code/oracle changed this round (the
-    # capped probe join's df definition unified to count distinct
-    # docs, ADVICE r11)
-    "containment_postings_append", "containment_postings_compact",
-    "streaming_curation_capstone", "export_training_shards_balanced",
-    "dedup_containment_lsh_capped", "export_training_shards",
-    # second-session sentinels: the LSH index lifecycle triple + the
-    # streaming admit loop
-    "lsh_postings_build", "lsh_postings_append", "lsh_postings_compact",
-    "streaming_containment_admit_serve", "containment_compact_cascade",
-    # oldest-r8-stale rotation (registration order) to fill 50
-    "monoid_sum_double", "monoid_min_double", "monoid_max_double",
-    "monoid_product_double", "monoid_embedding_sum",
-    "monoid_sum_ragged_int", "monoid_sum_nullelems_double",
-    "tpch_q1", "join_revenue_by_nation", "window_topk_orders",
-    "rollup_revenue", "dedup_minhash_lsh_pairs",
-    "multimodal_neardup_lsh", "hll_distinct_tokens",
-    "decontam_prod_13gram", "vocab_topk_coverage", "per_group_sample",
-    "hist_quantile_prices",
-]
-
-
-# VERDICT r12 item 4: the r13 window leads with the 30 entries whose
-# latest driver check is r08 (the oldest cohort in the rotation, as of
-# the r01-r12 artifact set), in registration order.
-_R13_STALE_HEAD = [
-    "bpe_top_merges", "funnel_view_click_purchase", "retention_cohorts",
-    "pipeline_curation_full", "unpivot_lineitem_measures",
-    "q7_volume_shipping", "q8_market_share", "boilerplate_spans",
-    "group_quantile_tokens", "kmeans_quantized_centroids",
-    "q12_late_shipments", "q2_min_cost_supplier", "q9_product_profit",
-    "q11_important_stock", "q13_customer_distribution",
-    "q15_top_supplier", "q16_supplier_part_counts", "q20_excess_supply",
-    "q21_waiting_suppliers", "q22_global_sales_opportunity",
-    "streaming_cms_cells", "streaming_dedup_redelivery",
-    "streaming_purchase_click_join", "streaming_decontam_alerts",
-    "pq_ivfadc_residual_topk", "pq_opq_ivfadc_topk",
-    "pq_ivfadc_residual_pretrained", "dq_column_profile",
-    "unigram_train_pieces", "unigram_encode_stats",
-]
-
-
-_DRIVER_WINDOW_R13 = [
-    # oldest-stale cohort first (the committed rotation debt: after
-    # this window runs, no entry's latest check is older than r9)
-    *_R13_STALE_HEAD,
-    # r13 sentinels: new entries (the exact-key index lifecycle pair —
-    # VERDICT r12 item 2) plus entries whose code/oracle changed this
-    # round (the capped probe gained the duplication pre-probe guard,
-    # item 1; the admit loop gained the within-stream exact-key gate
-    # with the min-arrival-batch oracle, item 2)
-    "exactkey_postings_append", "exactkey_postings_compact",
-    "dedup_containment_lsh_capped", "streaming_containment_admit_serve",
-    "ivf_refit_on_drift", "dedup_lsh_occupancy_capped",
-    "streaming_curation_capstone",
-    "bm25_postings_append", "bm25_postings_compact",
-    "bm25_serve_from_postings",
-    # oldest-r9-stale rotation (registration order) to fill 50
-    "distinct_types_per_brand", "sort_limit_top_orders",
-    "setop_fulfilled_customers", "events_hourly", "events_moving_avg",
-    "events_sessionize", "dedup_exact_stats",
-    "dedup_ngram_jaccard_pairs", "dedup_simhash_hamming",
-    "dedup_embedding_neardup",
-]
-
-
-#: entries whose latest driver check (as of the r01-r13 artifact set,
-#: when this window was cut) is r09 — the oldest cohort in the
-#: rotation, in registration order (VERDICT r13 item 10).
-_R14_STALE_HEAD = [
-    "sim_topk_bruteforce", "sim_topk_numpy", "sim_topk_lsh",
-    "sim_topk_ivf", "text_lang_id", "text_quality", "text_token_stats",
-    "text_fingerprint", "multimodal_meta", "multimodal_features",
-    "events_vector_stats", "asof_purchase_click",
-    "range_join_price_tiers", "q3_shipping_priority",
-    "cms_token_sketch", "cms_heavy_hitters", "hll_registers",
-    "bloom_token_bits", "bloom_token_membership",
-    "window_functions_smoke", "q17_small_quantity_revenue",
-    "dedup_clusters", "sample_token_stats", "train_test_split_sizes",
-    "skew_salted_event_stats", "skew_salted_join_deviation",
-    "sim_topk_ivf_kmeans", "streaming_windowed_monoid",
-    "streaming_sessionize", "text_pii_scan", "semdedup_prune",
-    "pq_adc_topk", "unigram_encode_viterbi", "kmv_anotb_novelty",
-    "ngram_novelty_curve", "tokenizer_agreement",
-]
-
-
-_DRIVER_WINDOW_R14 = [
-    # oldest-stale cohort first (after this window runs, no entry's
-    # latest check is older than r10) — dedup_clusters and
-    # cms_heavy_hitters double as r14 sentinels (connected-components
-    # lazy-checkpoint fold; the CMS tier is a neighbour of the
-    # rewritten Misra-Gries candidates)
-    *_R14_STALE_HEAD,
-    # r14 sentinels: entries whose code changed this optimization
-    # round (streaming union-write commits, OPQ rotation kernel,
-    # vectorized group fold, MG batch candidates, CC/kcore job fold,
-    # relational occupancy cap, compact error-path)
-    "streaming_containment_admit_serve", "streaming_curation_capstone",
-    "pq_opq_ivfadc_topk", "pq_opq_ivfadc_pretrained",
-    "monoid_sql_udaf", "mg_heavy_hitter_tokens",
-    "dedup_cluster_keep_best", "leakage_safe_split",
-    "pipeline_curation_capstone", "graph_kcore_sizes",
-    "dedup_lsh_occupancy_capped", "lsh_postings_compact",
-    # oldest-r10-stale rotation (registration order) to fill 50
-    "dedup_containment_pairs", "dedup_containment_lsh",
-]
-
-
 def catalog() -> dict[str, tuple[QueryFn, str | None]]:
-    """Registered queries — committed driver-window manifest first,
-    the remainder in registration order.  Fully deterministic: no
-    filesystem state is consulted (ADVICE r3 — artifact-dependent
-    ordering was non-reproducible across checkouts)."""
-    head = [n for n in _DRIVER_WINDOW_R14 if n in _CATALOG]
-    in_head = set(head)
-    tail = [n for n in _CATALOG if n not in in_head]
-    return {n: _CATALOG[n] for n in (*head, *tail)}
+    """Registered queries in registration order (``monoid_sum_double``,
+    the flagship, first)."""
+    return dict(_CATALOG)

@@ -15,6 +15,10 @@ same finite input).
 Scale posture: every query here keeps bounded state (windowed or
 watermarked), the same plans tested at 100 TB-rates in production
 streaming; the memory sink is only the harness's collection surface.
+
+The non-monoid stream operators these entries drive (session windows,
+watermark dedup, the interval join, stream-static decontamination and
+the windowed CMS) live here too; the monoid path is ``monoid_stream``.
 """
 
 from __future__ import annotations
@@ -34,12 +38,7 @@ from datafusion_monoid_spark.streaming.monoid_stream import (
     _EVENTS_SCHEMA_TMPL,
     _ts_dtype,
     event_time_col,
-    streaming_cms,
-    streaming_contamination_alerts,
-    streaming_dedup,
-    streaming_interval_join,
     streaming_monoid_reduce,
-    streaming_session_windows,
 )
 
 
@@ -168,6 +167,128 @@ def _drain_to_df(agg: DataFrame, name: str, mode: str = "complete",
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return out
+
+
+def streaming_session_windows(events: DataFrame, gap: str = "30 minutes",
+                              watermark: str = "2 hours") -> DataFrame:
+    """Per-user session windows (gap-based), the streaming twin of the
+    batch lag+cumsum sessionization in queries.py — but here the engine
+    maintains session state natively (merging adjacent windows as events
+    arrive, monoid-style).
+
+    The session total is summed in exact integer MILLI-units
+    (``round(value*1000)`` as bigint), not doubles: float summation
+    order differs between the incremental stream state merge and any
+    batch oracle, so a double sum can flip a rounding boundary — the
+    oracle hash never rides a float."""
+    mv = F.round(F.col("value") * 1000).cast("bigint")
+    return (
+        events.withWatermark("event_time", watermark)
+        .groupBy(F.session_window("event_time", gap), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"),
+             F.sum(mv).alias("total_milli"))
+        .select(F.col("session_window").start.alias("session_start"),
+                F.col("session_window").end.alias("session_end"),
+                "user_id", "n_events", "total_milli")
+    )
+
+
+def streaming_dedup(events: DataFrame, key_cols: list[str] | None = None,
+                    watermark: str = "2 hours") -> DataFrame:
+    """Exactly-once event stream: drop re-deliveries by key with bounded
+    state — the watermark lets the engine EVICT keys older than the
+    lateness bound, so dedup state stays O(window), not O(stream).
+    An unbounded ``dropDuplicates`` would grow state forever at 100 TB/day;
+    this is the at-least-once -> exactly-once repair step in front of
+    any downstream aggregation."""
+    return (events.withWatermark("event_time", watermark)
+            .dropDuplicatesWithinWatermark(key_cols or ["event_id"]))
+
+
+def streaming_interval_join(purchases: DataFrame, clicks: DataFrame,
+                            key: str = "user_id",
+                            within: str = "1 hour",
+                            watermark: str = "2 hours") -> DataFrame:
+    """Stream-stream inner join: purchase matched to the same user's
+    clicks in the preceding ``within`` interval.  BOTH sides carry
+    watermarks and the join predicate carries the time bound — that pair
+    is what lets the engine drop buffered rows once they can no longer
+    match (bounded join state; an unconstrained stream-stream join
+    buffers forever)."""
+    p = purchases.withWatermark("event_time", watermark).alias("p")
+    c = clicks.withWatermark("event_time", watermark).alias("c")
+    return (
+        p.join(c, F.expr(f"""
+            p.{key} = c.{key} AND
+            c.event_time BETWEEN p.event_time - INTERVAL {within}
+                             AND p.event_time"""))
+        .select(F.col(f"p.{key}").alias(key),
+                F.col("p.event_id").alias("purchase_id"),
+                F.col("c.event_id").alias("click_id"),
+                F.col("p.event_time").alias("purchase_time"),
+                F.col("c.event_time").alias("click_time"))
+    )
+
+
+def streaming_contamination_alerts(doc_stream: DataFrame,
+                                   eval_grams: DataFrame,
+                                   id_col: str = "doc_id",
+                                   text_col: str = "text",
+                                   n: int = 4) -> DataFrame:
+    """STREAM-STATIC decontamination: the streaming corpus's n-gram
+    hashes LEFT SEMI join the static benchmark gram set (broadcast —
+    eval suites are MB-scale), and distinct contaminated doc ids
+    stream out for quarantine.
+
+    The stream side is never shuffled for the JOIN (broadcast semi),
+    exactly like the batch operator (operators/curation.py); the only
+    stateful step is the id-level dropDuplicates.  In production add
+    a watermark on an arrival-time column to bound that state; the
+    eval set being STATIC (reloaded per restart) is what keeps this a
+    supported streaming join shape.
+
+    The stream IS repartitioned once before tokenization: a streaming
+    file source splits by FILE, so a single-file micro-batch would run
+    the n-gram explode (the expensive stage) on one core — the
+    streaming twin of the `_docs` single-row-group guard.  Measured at
+    sf1 (50k docs, one parquet file): 43 s -> ~7 s engine time.  On a
+    production bus (Kafka) source partitions already exist and this
+    shuffle moves each doc once — cheap relative to the explode it
+    parallelizes."""
+    from datafusion_monoid_spark.operators.curation import ngram_hashes
+
+    g = ngram_hashes(doc_stream.repartition(id_col), id_col, text_col, n)
+    hits = g.join(
+        F.broadcast(eval_grams.select("gram_hash").distinct()),
+        "gram_hash", "left_semi")
+    return hits.select(id_col).dropDuplicates([id_col])
+
+
+def streaming_cms(events: DataFrame, key_col: str = "event_type",
+                  depth: int = 4, width: int = 256,
+                  window: str = "1 hour",
+                  watermark: str = "2 hours") -> DataFrame:
+    """Windowed Count-Min Sketch — the CMS count-matrix monoid
+    (operators/sketch.py) in streaming form: per-(window, depth,
+    bucket) counts, bounded state of window x depth x width cells no
+    matter the key cardinality.  The per-window sketch answers
+    frequency point-queries for THAT window and merges with any other
+    window's sketch by cell-wise addition — the pre-aggregated
+    rollup a streaming frequency dashboard keeps."""
+    from datafusion_monoid_spark.operators.sketch import _cms_hash
+
+    keyed = (events.withWatermark("event_time", watermark)
+             .select("event_time", F.col(key_col).alias("__k")))
+    exploded = keyed.select(
+        "event_time",
+        F.posexplode(F.array(*[
+            _cms_hash(F.col("__k"), i, width) for i in range(depth)
+        ])).alias("depth", "bucket"))
+    return (exploded.groupBy(F.window("event_time", window),
+                             "depth", "bucket")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .select(F.col("window").start.alias("window_start"),
+                    "depth", "bucket", "cnt"))
 
 
 def streaming_windowed_monoid(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,11 +1,9 @@
-"""Round-10 tail entries (registered AFTER the frozen r10 driver
-window): leakage_safe_split, ann_eval_recall_mrr, lm_perplexity_buckets.
+"""Curation tail entries: leakage_safe_split, ann_eval_recall_mrr,
+lm_perplexity_buckets and the bucket/postings entries built on them.
 
-Because the driver gate covers only the first 50 catalog entries and
-the r10 window is frozen (sentinels + the full 38-entry r6-stale
-backlog), these three are pinned IN-SUITE against DuckDB at sf0.01 with
-the driver's exact protocol (row count + column names + sorted value
-hash) — they enter the r11 window as sentinels for the driver check.
+Each is pinned against its DuckDB oracle at sf0.01 with the oracle
+checker's protocol (row count + column names + sorted value hash), and
+its semantics are checked on constructed corpora.
 """
 
 import hashlib

@@ -58,7 +58,7 @@ def test_stream_matches_batch(spark, events_dir, tmp_path):
 
 
 def test_session_windows_match_batch(spark, events_dir, tmp_path):
-    from datafusion_monoid_spark.streaming.monoid_stream import (
+    from datafusion_monoid_spark.streaming.stream_queries import (
         streaming_session_windows)
     stream = read_events_stream(spark, events_dir)
     agg = streaming_session_windows(stream, gap="30 minutes")
@@ -79,46 +79,6 @@ def test_session_windows_match_batch(spark, events_dir, tmp_path):
     want = {(r["user_id"], r["ss"]): (r["n"], round(r["t"], 4))
             for r in batch.collect()}
     assert got == want and len(got) > 50
-
-
-def test_stateful_monoid_accumulator_merges_across_batches(spark, events_dir, tmp_path):
-    """Two micro-batches; final state must equal the single-pass batch
-    computation — the accumulator merge contract (src/monoid.rs:445-465)."""
-    from datafusion_monoid_spark.streaming.monoid_stream import (
-        stateful_monoid_accumulator)
-    d = Path(events_dir)
-
-    stream = read_events_stream(spark, events_dir)
-    acc = stateful_monoid_accumulator(stream)
-    q = run_stream_to_memory(acc, "acc1", str(tmp_path / "ckpt_a"),
-                             output_mode="update")
-    try:
-        # feed a second identical file -> a second micro-batch
-        shutil.copy(f"{SF}/events.parquet", d / "part-1.parquet")
-        q.processAllAvailable()
-        rows = spark.sql("""
-            SELECT event_type, acc_sum, acc_count, batches FROM acc1
-        """).collect()
-    finally:
-        q.stop()
-    # memory sink in update mode appends updated rows; keep the latest
-    # (max batches) per event_type
-    latest = {}
-    for r in rows:
-        if r["event_type"] not in latest or r["batches"] > latest[r["event_type"]]["batches"]:
-            latest[r["event_type"]] = r
-
-    batch = {r["event_type"]: (r["s"], r["c"]) for r in
-             read_events_batch(spark, events_dir)
-             .groupBy("event_type")
-             .agg(F.sum("value").alias("s"), F.count(F.lit(1)).alias("c"))
-             .collect()}
-    assert set(latest) == set(batch)
-    for et, r in latest.items():
-        s, c = batch[et]
-        assert r["acc_count"] == float(c)
-        assert abs(r["acc_sum"] - s) < 1e-6 * max(1.0, abs(s))
-        assert r["batches"] >= 2          # state really spanned micro-batches
 
 
 def test_stream_is_incremental(spark, events_dir, tmp_path):
@@ -182,10 +142,8 @@ def test_foreach_batch_upsert_matches_batch(spark, tmp_path):
 def test_streaming_dedup_drops_redelivery(spark, tmp_path):
     """The same events file delivered twice (at-least-once) dedups back
     to exactly the distinct event_ids, with watermark-bounded state."""
-    from datafusion_monoid_spark.streaming.monoid_stream import (
-        read_events_stream,
-        streaming_dedup,
-    )
+    from datafusion_monoid_spark.streaming.stream_queries import (
+        streaming_dedup)
 
     d = tmp_path / "events_dup"
     d.mkdir()
@@ -212,10 +170,8 @@ def test_streaming_dedup_drops_redelivery(spark, tmp_path):
 def test_stream_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
     """Purchase><click interval join streamed == the identical batch
     join (state-bounded by watermark + time-bound predicate)."""
-    from datafusion_monoid_spark.streaming.monoid_stream import (
-        read_events_stream,
-        streaming_interval_join,
-    )
+    from datafusion_monoid_spark.streaming.stream_queries import (
+        streaming_interval_join)
 
     stream = read_events_stream(spark, events_dir)
     p = stream.where(F.col("event_type") == "purchase")
@@ -247,55 +203,12 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
     assert len(got) > 50
 
 
-def test_streaming_histogram_matches_batch_and_quantiles(spark, events_dir, tmp_path):
-    """The histogram sketch built by the stream equals the batch build
-    per window, and its quantiles match sketch.hist_quantiles on the
-    batch side — the mergeable-sketch streaming contract."""
-    from datafusion_monoid_spark.operators import sketch as sk
-    from datafusion_monoid_spark.streaming.monoid_stream import (
-        read_events_stream, streaming_histogram)
-
-    stream = read_events_stream(spark, events_dir)
-    agg = streaming_histogram(stream, "value", 0.0, 500.0, 64,
-                              window="1 hour")
-    q = run_stream_to_memory(agg, "hstream", str(tmp_path / "ckpt_h"))
-    try:
-        got = {(r["window_start"], r["bin"]): r["cnt"]
-               for r in spark.sql("SELECT * FROM hstream").collect()}
-    finally:
-        q.stop()
-
-    batch = read_events_batch(spark, events_dir)
-    want_rows = (batch.where(F.col("value").isNotNull())
-                 .groupBy(F.window("event_time", "1 hour"),
-                          sk.hist_bin(F.col("value"), 0.0, 500.0, 64).alias("bin"))
-                 .agg(F.count(F.lit(1)).alias("cnt"))
-                 .select(F.col("window").start.alias("ws"), "bin", "cnt")
-                 .collect())
-    want = {(r["ws"], r["bin"]): r["cnt"] for r in want_rows}
-    assert got == want and len(got) > 0
-
-    # quantiles of one streamed window == quantiles of the batch sketch
-    ws = max(w for w, _ in got)
-    one = spark.createDataFrame(
-        [(b, c) for (w, b), c in got.items() if w == ws], "bin long, cnt long")
-    stream_q = {r["q_micro"]: r["bin"]
-                for r in sk.hist_quantiles(one, [500000, 900000],
-                                           0.0, 500.0, 64).collect()}
-    batch_hist = spark.createDataFrame(
-        [(b, c) for (w, b), c in want.items() if w == ws], "bin long, cnt long")
-    batch_q = {r["q_micro"]: r["bin"]
-               for r in sk.hist_quantiles(batch_hist, [500000, 900000],
-                                          0.0, 500.0, 64).collect()}
-    assert stream_q == batch_q
-
-
 def test_streaming_contamination_matches_batch(spark, tmp_path):
     """Stream-static semi join: the contaminated-id stream equals the
     batch decontamination verdict on the same corpus file."""
     import shutil
     from datafusion_monoid_spark.operators import curation as cu
-    from datafusion_monoid_spark.streaming.monoid_stream import (
+    from datafusion_monoid_spark.streaming.stream_queries import (
         streaming_contamination_alerts)
 
     d = tmp_path / "docs_stream"
@@ -330,8 +243,8 @@ def test_streaming_cms_matches_batch_sketch(spark, events_dir, tmp_path):
     """Per-window streamed CMS cells equal the batch sketch built on
     each window's slice — the count-matrix monoid streaming contract."""
     from datafusion_monoid_spark.operators import sketch as sk
-    from datafusion_monoid_spark.streaming.monoid_stream import (
-        read_events_stream, streaming_cms)
+    from datafusion_monoid_spark.streaming.stream_queries import (
+        streaming_cms)
 
     stream = read_events_stream(spark, events_dir)
     agg = streaming_cms(stream, "event_type", window="1 hour")
