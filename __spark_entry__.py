@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query (posexplode monoid reduce over real
-parquet); ``queries()`` / ``oracle_sql()`` — the SURVEY.md §2 operator
-inventory with DuckDB oracles (see ``datafusion_monoid_spark/queries.py``).
+parquet); ``queries()`` / ``oracle_sql()`` — the monoid catalog's entries
+and their DuckDB oracles (see ``datafusion_monoid_spark/queries.py``).
 """
 
 from __future__ import annotations

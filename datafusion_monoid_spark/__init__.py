@@ -1,12 +1,11 @@
-"""datafusion_monoid_spark — a PySpark-native analytics engine.
+"""datafusion_monoid_spark — the datafusion-monoid array-reduce UDAFs on Spark.
 
-Re-implements (Spark-first, not a port) the capabilities of the
-``friendlymatthew/datafusion-monoid`` reference crate: an element-wise
-array **monoid-reduce** aggregate family (``array_reduce_sum``,
+Re-implements (Spark-first, not a port) the ``friendlymatthew/
+datafusion-monoid`` reference crate: an element-wise array
+**monoid-reduce** aggregate family (``array_reduce_sum``,
 ``array_reduce_product``, ``array_reduce_max``, ``array_reduce_min``)
 over columns of numeric arrays (reference: ``src/monoid.rs:226-332``),
-hosted on Spark SQL / Catalyst, plus large-scale training-data pipeline
-operators (dedup, similarity search, multimodal columns, text analysis).
+hosted on Spark SQL / Catalyst.
 
 Layout (the core is monoid.py, session.py, sql_route.py,
 operators/array_reduce.py and streaming/monoid_stream.py; it imports
@@ -15,14 +14,12 @@ nothing else from the package):
     session.py     — SparkSession factory tuned for this engine
     sql_route.py   — route_monoid_sql: registered-name SQL text through
                      the partial-aggregation form
-    operators/     — array_reduce (3 forms + registered names); dedup,
-                     similarity, text, multimodal, ... for the catalog
+    operators/     — array_reduce.py: the three forms + registered names
     streaming/     — monoid_stream.py: streaming monoid reduce + upsert
-                     sink; stream_queries.py: streaming catalog entries
+                     sink
     queries.py     — the query catalog (Spark callable, DuckDB oracle)
-    functions/     — reusable column-expression helpers
-    sources/       — test-data loaders (TPC-H-ish parquet star schema)
-    plans/         — plan-inspection utilities (pushdown / codegen checks)
+                     over the core's entry points
+    bench.py       — times the catalog against its DuckDB oracles
 """
 
 from datafusion_monoid_spark.monoid import (

@@ -5,16 +5,14 @@ Runs the query catalog at ``$SPARK_GRAFT_SF_DIR`` (default
 compact JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"tpch_q1": sec, ...}, "recall": {"sim_topk_lsh": r, ...},
-     "stream_processing_sec": {"streaming_sessionize": sec, ...},
+     "queries": {"monoid_sum_double": sec, ...},
      "duckdb": {"value": total, "queries": {...}}, "ratio": spark/duckdb,
      "sf": 0.1}
 
 The FULL record is written to ``bench_result.json`` (``out_path``
 argument / ``$SPARK_GRAFT_BENCH_OUT`` / cwd); stdout gets a COMPACT
-summary line (totals, ratio, recalls, the 10 slowest queries) because
-the driver keeps only a ~2000-char tail of captured output — the full
-per-query map overflowed it every round (VERDICT r7 item 4).
+summary line (totals, ratio, the 10 slowest queries), sized for log
+captures that keep only the last ~2000 characters.
 
 Timing protocol: each query is forced end-to-end with the noop writer
 (full materialization, no driver collect); the reported number is the
@@ -23,20 +21,8 @@ robust to ambient-load outliers.
 
 The DuckDB column times each catalog entry's ``oracle_sql`` on the SAME
 parquet tables in the same run (threads = $SPARK_GRAFT_CPUS,
-``fetchall`` to force materialization) so the "Spark within 2x of the
-single-node baseline" gate is checkable in-round.  Disable with
-``SPARK_GRAFT_BENCH_DUCKDB=0``.
-
-``stream_processing_sec`` is the engine-side micro-batch execution time
-of each streaming query (summed triggerExecution durations from query
-progress): the gap between it and the wall-clock number is checkpoint
-setup + query start/stop — harness cost that a long-lived production
-stream amortizes to nothing.
-
-ANN quality: recall@5 of each approximate top-k query against the exact
-brute-force result is measured on the same session and reported under
-``recall`` — parameter drift in the LSH/IVF tiers shows up here before
-it shows up as a silent quality regression.
+``fetchall`` to force materialization), a single-node baseline measured
+beside the Spark numbers.  Disable with ``SPARK_GRAFT_BENCH_DUCKDB=0``.
 """
 
 from __future__ import annotations
@@ -53,106 +39,39 @@ from datafusion_monoid_spark import queries as qcat
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 RUN_DUCKDB = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB", "1") != "0"
-#: DuckDB repeats — 1 by default: the column is a same-round sanity
-#: baseline, not a tuning target; one pass keeps total bench time sane.
+#: DuckDB repeats — 1 by default: the column is a sanity baseline, not
+#: a tuning target.
 DUCKDB_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_REPEATS", "1"))
-#: per-query DuckDB wall cap — some oracle SQL (the unnest-heavy LSH
-#: rebuilds) is 10-100x slower than the Spark plan at sf>=0.1; the cap
-#: keeps one runaway baseline query from eating the whole bench budget.
-#: Interrupted queries are reported under duckdb.timeout, excluded from
-#: the comparable-ratio set.
-DUCKDB_TIMEOUT = float(os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_TIMEOUT",
-                                      "180"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: comma-separated subset of catalog names to run (empty = whole
-#: catalog) — for scale tiers where a full 106-query sweep is overkill
+#: catalog)
 ONLY = {n for n in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
         if n}
-
-#: approximate top-k queries measured against this exact baseline
-_ANN_BASELINE = "sim_topk_bruteforce"
-_ANN_QUERIES = ("sim_topk_lsh", "sim_topk_ivf", "sim_topk_ivf_kmeans",
-                "sim_topk_ivf_pretrained",
-                # PQ tier (round 6): q_id/vec_id column names
-                "pq_adc_topk", "pq_adc_pretrained", "pq_ivfadc_topk",
-                "pq_ivfadc_residual_topk", "pq_ivfadc_residual_pretrained",
-                "pq_opq_ivfadc_topk", "pq_opq_ivfadc_pretrained")
 
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _topk_sets(df) -> dict:
-    """query_id -> set of returned cand_ids (PQ tier: q_id/vec_id)."""
-    cols = set(df.columns)
-    qc, cc = (("q_id", "vec_id") if "q_id" in cols
-              else ("query_id", "cand_id"))
-    out: dict = {}
-    for row in df.select(qc, cc).collect():
-        out.setdefault(row[qc], set()).add(row[cc])
-    return out
-
-
-def _recall(spark, catalog) -> dict[str, float]:
-    """Mean recall@k of each ANN tier vs the exact brute-force top-k."""
-    try:
-        truth = _topk_sets(catalog[_ANN_BASELINE][0](spark, SF_DIR))
-    except Exception:
-        return {}
-    recalls: dict[str, float] = {}
-    for name in _ANN_QUERIES:
-        if name not in catalog:
-            continue
-        try:
-            approx = _topk_sets(catalog[name][0](spark, SF_DIR))
-        except Exception:
-            continue
-        per_q = [len(approx.get(q, set()) & hits) / len(hits)
-                 for q, hits in truth.items() if hits]
-        if per_q:
-            recalls[name] = round(sum(per_q) / len(per_q), 3)
-    return recalls
-
-
-def _duckdb_times(catalog) -> tuple[dict[str, float], list[str]]:
+def _duckdb_times(catalog) -> dict[str, float]:
     """Time each oracle_sql in DuckDB on the same parquet tables —
-    the single-node baseline column, measured in the SAME round.
-    Returns (times, timed_out_names)."""
-    import threading
-
+    the single-node baseline column, measured in the same run."""
     import duckdb
-
-    from datafusion_monoid_spark.sources import TABLES
 
     con = duckdb.connect()
     con.execute(f"SET threads={CPUS}")
-    for t in TABLES:
+    for t in qcat.TABLES:
         con.sql(f"CREATE VIEW {t} AS FROM '{SF_DIR}/{t}.parquet'")
     out: dict[str, float] = {}
-    timed_out: list[str] = []
     for name, (_, oracle) in catalog.items():
-        if not oracle:
-            continue
         runs = []
         for _ in range(DUCKDB_REPEATS):
-            timer = threading.Timer(DUCKDB_TIMEOUT, con.interrupt)
-            timer.start()
             t0 = time.perf_counter()
-            try:
-                con.sql(oracle).fetchall()
-            except Exception:
-                runs = []
-                if time.perf_counter() - t0 >= DUCKDB_TIMEOUT - 1:
-                    timed_out.append(name)
-                break
-            finally:
-                timer.cancel()
+            con.sql(oracle).fetchall()
             runs.append(time.perf_counter() - t0)
-        if runs:
-            out[name] = round(statistics.median(runs), 3)
+        out[name] = round(statistics.median(runs), 3)
     con.close()
-    return out, timed_out
+    return out
 
 
 def main(out_path: str | None = None) -> None:
@@ -169,35 +88,9 @@ def main(out_path: str | None = None) -> None:
 
     times: dict[str, float] = {}
     # warm-up: JVM + codegen + parquet footer caches
-    _force(qcat.catalog()["tpch_q1"][0](spark, SF_DIR))
+    _force(qcat.catalog()["monoid_sum_double"][0](spark, SF_DIR))
 
     errors: dict[str, str] = {}
-
-    # Session-shared builds, materialized + timed as their OWN labeled
-    # lines BEFORE the catalog loop (VERDICT r11 item 3b): the MinHash
-    # signature/candidate build and the containment shingle-hash
-    # relation are computed once per session and consumed by many
-    # entries — un-attributed, their cost lands on whichever consumer
-    # the catalog order puts first, which swung the capstone's graded
-    # reading 11.8/21.4/31.7 s across same-HEAD sweeps.  Skipped for
-    # SPARK_GRAFT_BENCH_ONLY subsets (scale tiers pick their own
-    # attribution).
-    shared_builds: dict[str, float] = {}
-    if not ONLY:
-        for label, thunk in (
-            ("minhash_candidates",
-             lambda: [df.count()
-                      for df in qcat._minhash_shared(spark, SF_DIR)]),
-            ("containment_probe_hashes",
-             lambda: qcat._probe_hashes_shared(spark, SF_DIR).count()),
-        ):
-            t0 = time.perf_counter()
-            try:
-                thunk()
-            except Exception as e:
-                errors[f"shared:{label}"] = str(e).splitlines()[-1][:300]
-                continue
-            shared_builds[label] = round(time.perf_counter() - t0, 3)
     for name, (fn, _) in catalog.items():
         runs = []
         for _ in range(REPEATS):
@@ -206,56 +99,30 @@ def main(out_path: str | None = None) -> None:
                 _force(fn(spark, SF_DIR))
             except Exception as e:
                 # one failing query must not zero the whole bench (e.g.
-                # the Complete-mode group-size guard firing at a scale
-                # tier) — record and move on
+                # the registered names' group-size guard firing at a
+                # scale tier) — record and move on
                 errors[name] = str(e).splitlines()[-1][:300]
                 runs = []
                 break
             runs.append(time.perf_counter() - t0)
         if runs:
             times[name] = round(statistics.median(runs), 3)
-        # free localCheckpoint blocks the entry created while building
-        # (bm25 base, AQE dim) — otherwise a 100+-query loop holds every
-        # checkpoint until the ContextCleaner gets around to it
-        qcat.release_pending_checkpoints()
 
-    recall = _recall(spark, catalog)
-
-    from datafusion_monoid_spark.streaming import stream_queries as sq
-    # full per-stream decomposition (engine time, batch count, sink
-    # commit count/durations) — so a parquet-fsync regression in a
-    # serve loop is attributable from this artifact alone (r9 item 6);
-    # the legacy processing_sec map is DERIVED from it (one source of
-    # truth, r9 review finding)
-    stream_metrics = dict(sorted(sq.LAST_STREAM_METRICS.items()))
-    stream_proc = {name: met["processing_sec"]
-                   for name, met in stream_metrics.items()}
     spark.stop()
 
     result = {
         "metric": "catalog wall-clock (median of %d, noop sink)" % REPEATS,
-        # total = per-query medians + the labeled shared builds: the
-        # same work previous rounds counted inside the first consumer,
-        # so the headline number stays comparable across rounds
-        "value": round(sum(times.values())
-                       + sum(shared_builds.values()), 3),
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
-        "recall": recall,
-        "stream_processing_sec": stream_proc,
-        "stream_metrics": stream_metrics,
-        "shared_builds": shared_builds,
         "sf": sf,
     }
     if errors:
         result["errors"] = errors
     if RUN_DUCKDB:
-        duck, timed_out = _duckdb_times(catalog)
+        duck = _duckdb_times(catalog)
         result["duckdb"] = {"value": round(sum(duck.values()), 3),
                             "queries": duck}
-        if timed_out:
-            result["duckdb"]["timeout"] = timed_out
-            result["duckdb"]["timeout_sec"] = DUCKDB_TIMEOUT
         comparable = [n for n in times if n in duck]
         sp = sum(times[n] for n in comparable)
         du = sum(duck[n] for n in comparable)
@@ -265,11 +132,10 @@ def main(out_path: str | None = None) -> None:
     line = json.dumps(result, separators=(",", ":"))
     with open(out_path, "w") as f:
         f.write(line + "\n")
-    # stdout gets a COMPACT summary line: the driver's log capture keeps
-    # only a ~2000-char tail, so the full 173-entry per-query map turned
-    # every BENCH_r*.json into an unparseable fragment (VERDICT r7 item
-    # 4).  Totals/ratio/recalls plus the 10 slowest queries fit the
-    # capture; the complete record lives in ``bench_result.json``.
+    # stdout gets a COMPACT summary line: log captures that keep only a
+    # ~2000-char tail cut a long per-query map into an unparseable
+    # fragment.  Totals/ratio plus the 10 slowest queries fit; the
+    # complete record lives in ``bench_result.json``.
     slowest = dict(sorted(times.items(), key=lambda kv: -kv[1])[:10])
     compact = {
         "metric": result["metric"],
@@ -280,13 +146,9 @@ def main(out_path: str | None = None) -> None:
         "queries": slowest,
         "queries_truncated": len(times) > len(slowest),
         "full_result": os.path.basename(out_path),
-        "recall": recall,
-        "shared_builds": shared_builds,
     }
     if "duckdb" in result:
         compact["duckdb_value"] = result["duckdb"]["value"]
-        if "timeout" in result["duckdb"]:
-            compact["duckdb_timeout"] = result["duckdb"]["timeout"]
     if "ratio" in result:
         compact["ratio"] = result["ratio"]
     if errors:

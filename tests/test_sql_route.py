@@ -1,5 +1,5 @@
 """route_monoid_sql — the scale-safe route for the registered SQL
-names (VERDICT r4 item 1).
+names.
 
 Three contracts:
 
@@ -188,9 +188,8 @@ def test_udaf_under_cap_still_works(spark):
 @pytest.mark.skipif(not os.path.isdir(SF1),
                     reason="scale/sf1 tier not generated")
 def test_routed_hugegroup_at_sf1(spark):
-    """VERDICT r4 item 1 'done' condition: the SQL entry point on a
-    >=10^6-array single group, partial-agg plan, completing in bounded
-    time.  6,001,210 arrays in one group at sf1 — the shape that OOMs
+    """The SQL entry point on a >=10^6-array single group: partial-agg
+    plan, completing in bounded time.  6,001,210 arrays in one group at sf1 — the shape that OOMs
     or stalls the Complete-mode UDAF by construction."""
     from datafusion_monoid_spark import queries as qcat
 

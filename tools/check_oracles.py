@@ -1,6 +1,6 @@
-"""Local mirror of the driver's correctness gate: run every queries()
-entry on Spark AND its oracle_sql() on DuckDB at sf0.01, compare
-row-count + column names + order-insensitive value hash.
+"""Run every queries() entry on Spark AND its oracle_sql() on DuckDB
+(sf0.01 by default), and compare row count + column names +
+order-insensitive value hash.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
@@ -8,15 +8,16 @@ Usage: python tools/check_oracles.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from datafusion_monoid_spark.queries import TABLES
 from datafusion_monoid_spark.session import get_spark
-from datafusion_monoid_spark.sources import TABLES
 
 import __spark_entry__ as entrymod
 

@@ -3,8 +3,8 @@
 relationship, so the catalog runs unmodified at sf1 (x10) or beyond.
 
 The driver provides sf0.001/0.01/0.1 only; sub-second sf0.1 numbers are
-scheduling-overhead-bound and say nothing about scan-bound behavior
-(VERDICT r3 item 1).  This produces the missing scale tier:
+scheduling-overhead-bound and say nothing about scan-bound behavior.
+This produces the missing scale tier:
 
 * fact/dim tables replicate with per-replica key offsets
   (``key + i * (max_key + 1)``) — orders still join their customers,

@@ -1,7 +1,6 @@
 #!/bin/sh
 # Run the opt-in wall-clock perf ceilings (tests/test_perf_floors.py).
-# These are excluded from the default `pytest tests/` pass since r14 so
-# the functional suite fits the round driver's pytest budget; run them
-# here on a quiet host (they take ~15-20 min at 8 cores).
+# They skip in the default `pytest tests/` pass unless SPARK_GRAFT_PERF=1;
+# run them here on a quiet host.
 cd "$(dirname "$0")/.." || exit 1
 SPARK_GRAFT_PERF=1 exec python -m pytest tests/test_perf_floors.py -q "$@"
