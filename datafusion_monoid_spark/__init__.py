@@ -20,6 +20,12 @@ nothing else from the package):
     queries.py     — the query catalog (Spark callable, DuckDB oracle)
                      over the core's entry points
     bench.py       — times the catalog against its DuckDB oracles
+
+The pipeline tier sits outside the core and the catalog, and nothing
+above imports it: pipeline_queries.py (its catalog: the monoid entries
+plus the pipeline entries), the other operators/ modules (dedup,
+similarity, pq, sketch, text, curation, ...), streaming/stream_queries.py,
+functions/, plans/ and sources/.
 """
 
 from datafusion_monoid_spark.monoid import (

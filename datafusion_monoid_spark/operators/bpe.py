@@ -101,13 +101,13 @@ def train(vocab: DataFrame,
     per-iteration materialization discipline as the k-means fit;
     without it each round's two references to the previous round
     double the lineage) and the PREVIOUS round's checkpoint blocks are
-    released immediately (ADVICE/VERDICT r6: at 100 TB each leaked
+    released immediately (at 100 TB each leaked
     round is a vocabulary-scale block set, and a bench sweep holds
     them all until the ContextCleaner gets around to it).  Training
     stops early once no adjacent pair remains (every token is a single
     symbol): the vocabulary is at its fixed point, and the merge table
     simply ends — the previous form's crossJoin against an EMPTY top-1
-    silently wiped the vocabulary instead (ADVICE r6)."""
+    silently wiped the vocabulary instead."""
     spark = vocab.sparkSession
     merge_rows: list[tuple[int, str, str, int]] = []
     cur = vocab.localCheckpoint(eager=True)

@@ -66,7 +66,7 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
         parent = merged.select(F.col("node").alias("p_node"),
                                F.col("label").alias("p_label"))
         # LAZY localCheckpoint + fingerprint agg = ONE job per round
-        # (VERDICT r13 item 8: the eager form ran a checkpoint job AND
+        # (the eager form ran a checkpoint job AND
         # a fingerprint job every round): the agg action materializes
         # the checkpoint blocks as its side effect — the documented
         # eager=False contract — and computes the convergence sum in
@@ -81,7 +81,7 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
         # the PREVIOUS round's checkpoint blocks are dead once the new
         # round is materialized — release them instead of letting 20
         # rounds of label tables pile up until the ContextCleaner GCs
-        # (ADVICE r4; at scale each round's table is corpus-sized)
+        # (at scale each round's table is corpus-sized)
         if labels is not new_labels:
             release_local_checkpoint(labels)
         labels = new_labels
@@ -177,7 +177,7 @@ def kcore_stats(edges: DataFrame, ks: tuple[int, ...] = (2, 3),
     reuse point for the node/edge counts and the base of the next
     chain), not every round.  Each k's checkpoint is released the
     moment its successor is materialized and the LAST one as soon as
-    its two scalar counts are read (VERDICT r6 item 3: the per-k
+    its two scalar counts are read (the per-k
     blocks are candidate-graph sized and a sweep leaks them per
     entry), so the function exits with ZERO dangling storage blocks —
     the scalar (k, nodes, edges) rows travel as driver literals, the
@@ -202,7 +202,7 @@ def kcore_stats(edges: DataFrame, ks: tuple[int, ...] = (2, 3),
                      .join(keep.withColumnRenamed("v", "b"), "b",
                            "left_semi"))
         # LAZY checkpoint: the counts action below materializes the
-        # blocks in the same job (VERDICT r13 item 8 — one job per k
+        # blocks in the same job (one job per k
         # instead of checkpoint + counts).  The PREVIOUS k's blocks
         # are released only AFTER that action: this k's peel lineage
         # reads them, and a local checkpoint is unrecoverable once

@@ -246,7 +246,7 @@ def rotate_signs_np(quant: DataFrame, signs: list[list[int]],
     of 64 interpreted ``aggregate(zip_with(...))`` folds per row
     (guide §4.2; the rotation was the expression-side leg that kept
     ``pq_opq_ivfadc_topk`` flat while its siblings gained from the
-    kernels, VERDICT r13 item 4).
+    kernels).
 
     Exactness: y_i = sum_j signs[i][j] * q_j is a sum of int64 terms
     with |y_i| <= dim * 2e6 — integer addition is associative and

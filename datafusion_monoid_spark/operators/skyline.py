@@ -48,7 +48,7 @@ def skyline_2d(pts: DataFrame, x: str, y: str) -> DataFrame:
         # prune each Arrow batch to its OWN skyline first — the reduce
         # is idempotent (skyline(A∪B) = skyline(skyline(A)∪skyline(B))),
         # so peak memory is one batch + the accumulated ~O(log n)-point
-        # batch skylines, not the whole partition (ADVICE r6: a whole-
+        # batch skylines, not the whole partition (a whole-
         # partition concat broke the bounded map-side contract)
         chunks = [prune_one(pdf[[x, y]]) for pdf in batches]
         chunks = [c for c in chunks if len(c)]

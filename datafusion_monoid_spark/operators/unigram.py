@@ -120,15 +120,15 @@ def _assert_token_bound(vocab: DataFrame) -> None:
 
 def _assert_encodable(vocab: DataFrame, table: PieceTable) -> None:
     """Serve-side twin of :func:`_assert_token_bound` that ALSO refuses
-    tokens containing characters absent from the trained alphabet
-    (ADVICE r8): ``segment_expr``'s unconditional single-char fallback
+    tokens containing characters absent from the trained alphabet:
+    ``segment_expr``'s unconditional single-char fallback
     would emit an out-of-table piece whose likelihood lookup is NULL —
     ``F.sum`` silently drops it while the SQL oracle's inner join drops
     the whole token, a silent cross-engine divergence that can only
     surface on encode-on-NEW-data (the training corpus covers its own
     alphabet by construction); the Viterbi DP NULLs the whole score the
     same way.  One vocabulary-bounded aggregation checks both bounds
-    plus non-emptiness (ADVICE r9: a zero-length token passes both
+    plus non-emptiness (a zero-length token passes both
     aggregate bounds, yet the Spark Viterbi emits a (score=VIT_BASE,
     n=0) row for it while the SQL oracle's ``vfin`` unions only
     lengths 1..MAX_TOK and drops it — a latent cross-engine
@@ -214,7 +214,7 @@ def train_literal(vocab: DataFrame, rounds: int = ROUNDS,
     AND every round's segmentation — unmaterialized, each reference
     re-runs the corpus tokenize (measured 7 s of a 13 s fit at
     sf0.1).  When ``ckpt`` is defaulted, the two internal checkpoints
-    are RELEASED before returning (ADVICE r8: they used to leak their
+    are RELEASED before returning (they used to leak their
     storage blocks for the life of the session); a caller-supplied
     ``ckpt`` owns its blocks' lifecycle."""
     from datafusion_monoid_spark.plans.inspect import (
@@ -255,7 +255,7 @@ def train_literal(vocab: DataFrame, rounds: int = ROUNDS,
 
 
 # ---------------------------------------------------------------------------
-# Exact Viterbi segmentation (VERDICT r9 item 4)
+# Exact Viterbi segmentation
 # ---------------------------------------------------------------------------
 #
 # The greedy longest-match fold above is the documented cheap tier; the

@@ -15,6 +15,9 @@ TIMESTAMP(NANOS) (Spark's vectorized reader rejects it without
 the batch-inferred schema and the event-time column (whole seconds, for
 watermarking) is derived the same way on the stream and batch sides so
 stream==batch comparisons are layout-proof.
+
+The pipeline tier's stream operators (sessions, dedup, joins, sketches)
+live in ``stream_queries.py``; this module holds only the monoid path.
 """
 
 from __future__ import annotations

@@ -78,7 +78,7 @@ def test_encode_stats_conservation(spark):
     """Per-source symbol totals are bounded by char totals (merging
     only shrinks) and >= token totals (a token is >= 1 symbol); the
     mean is consistent with the totals."""
-    from datafusion_monoid_spark import queries as q
+    from datafusion_monoid_spark import pipeline_queries as q
 
     fn, _ = q.catalog()["bpe_encode_stats"][0], None
     rows = q.catalog()["bpe_encode_stats"][0](spark, SF001).collect()
@@ -94,7 +94,7 @@ def test_encode_serve_plan_is_broadcast_map_side(spark):
     """The serve half must join the vocabulary model BROADCAST (the
     model is vocabulary-bounded by construction) — a shuffle join here
     would move the corpus token stream for a model-sized side."""
-    from datafusion_monoid_spark import queries as q
+    from datafusion_monoid_spark import pipeline_queries as q
 
     df = q.catalog()["bpe_encode_stats"][0](spark, SF001)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -107,7 +107,7 @@ def test_segmentation_reconstructs_every_token(spark):
     """Lossless-ness: after any number of merge rounds, the symbols of
     every vocabulary entry concatenate back to the original token —
     merging only moves boundaries, never characters."""
-    from datafusion_monoid_spark import queries as q
+    from datafusion_monoid_spark import pipeline_queries as q
 
     vocab = q._bpe_vocab(spark, SF001)
     _, fin = bpe.train(vocab, rounds=3)
@@ -122,7 +122,7 @@ def test_newbatch_oov_accounting(spark):
     """Incremental encode: OOV counts bounded by token counts, and a
     token is always at least one symbol (the char fallback makes OOV
     tokens encodable, never dropped)."""
-    from datafusion_monoid_spark import queries as q
+    from datafusion_monoid_spark import pipeline_queries as q
 
     rows = q.catalog()["bpe_encode_newbatch"][0](spark, SF001).collect()
     assert rows
@@ -134,7 +134,7 @@ def test_newbatch_oov_accounting(spark):
 def test_trainer_matches_catalog_top_merge(spark):
     """Round 1 of the real trainer must agree with bpe_top_merges'
     rank-1 candidate (same corpus, same weighting)."""
-    from datafusion_monoid_spark import queries as q
+    from datafusion_monoid_spark import pipeline_queries as q
 
     top = q.catalog()["bpe_top_merges"][0](spark, SF001) \
         .where(F.col("rk") == 1).collect()[0]

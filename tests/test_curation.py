@@ -141,13 +141,13 @@ def test_vocab_coverage_cumulative(spark, corpus):
 
 
 def test_vocab_topk_plan_uses_take_ordered(spark):
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     df = qcat.catalog()["vocab_topk_coverage"][0](spark, SF)
     assert "TakeOrderedAndProject" in _explain(df)
 
 
 def test_tfidf_window_is_partitioned(spark):
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     df = qcat.catalog()["tfidf_top_terms"][0](spark, SF)
     p = _explain(df)
     # per-source ranking: every window spec must carry a partition key
@@ -157,7 +157,7 @@ def test_tfidf_window_is_partitioned(spark):
 
 
 def test_q18_no_sort_merge_join(spark):
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     df = qcat.catalog()["q18_large_volume_customer"][0](spark, SF)
     p = _explain(df)
     assert "SortMergeJoin" not in p
@@ -168,7 +168,7 @@ def test_multi_ngram_hashes_matches_single_n(spark):
     """The shared-tokenize multi-n gram pass must emit exactly the
     union of the per-n passes (round 8: the 4+13-gram decontamination
     shares one corpus scan)."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     from datafusion_monoid_spark.operators import curation as cu
 
     docs = qcat._docs(spark, SF).limit(40)
@@ -184,7 +184,7 @@ def test_multi_ngram_hashes_matches_single_n(spark):
 def test_decontam_prod_13gram_stricter_than_4(spark):
     """13-gram contamination is a subset of 4-gram contamination by
     construction (any shared 13-gram contains shared 4-grams)."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     rows = qcat.catalog()["decontam_prod_13gram"][0](spark, SF).collect()
     assert rows, "empty decontamination report"
     for r in rows:

@@ -34,7 +34,7 @@ def test_keep_best_plan_is_partial_argmax(spark):
     """The per-cluster representative selection must plan as a
     partial-aggregation max_by (map-side combine), not a window
     sort — the shape that survives clusters of any size."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     df = qcat.catalog()["dedup_cluster_keep_best"][0](
         spark, "/root/testdata/sf0.001")
@@ -49,7 +49,7 @@ def test_kcore_two_rounds_reaches_true_fixpoint(spark, sf):
     """The catalog pins 2 peel rounds per k (each k peeling from the
     previous core); prove that is >= the convergence depth at EVERY
     shipped SF by re-peeling driver-side to TRUE fixpoint."""
-    from datafusion_monoid_spark.queries import _cascade_edges
+    from datafusion_monoid_spark.pipeline_queries import _cascade_edges
     from datafusion_monoid_spark.operators.graph import kcore_stats
     edges = _cascade_edges(spark, f"/root/testdata/sf{sf}")
     got = {r["k"]: (r["n_core_nodes"], r["n_core_edges"])
@@ -74,7 +74,7 @@ def test_kcore_two_rounds_reaches_true_fixpoint(spark, sf):
 
 def test_kcore_is_monotone_in_k(spark):
     """Core sizes must be non-increasing in k (3-core within 2-core)."""
-    from datafusion_monoid_spark.queries import graph_kcore_sizes
+    from datafusion_monoid_spark.pipeline_queries import graph_kcore_sizes
     rows = {r["k"]: r for r in
             graph_kcore_sizes(spark, "/root/testdata/sf0.001").collect()}
     assert rows[3]["n_core_nodes"] <= rows[2]["n_core_nodes"]

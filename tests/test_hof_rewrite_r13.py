@@ -88,7 +88,7 @@ def test_bigram_zip_with_matches_sequence_form(spark):
 def test_lm_doc_bigrams_occurrences(spark):
     """The production `_lm_doc_bigrams` emits one row per bigram
     occurrence, in order, after the zip_with rewrite."""
-    from datafusion_monoid_spark.queries import _lm_doc_bigrams
+    from datafusion_monoid_spark.pipeline_queries import _lm_doc_bigrams
     df = spark.createDataFrame(
         [(1, "s", "a b b a"), (2, "s", "solo"), (3, "s", "")],
         ["doc_id", "source", "text"])

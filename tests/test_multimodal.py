@@ -69,7 +69,7 @@ def test_multimodal_neardup_finds_shared_frame_payloads(spark):
     """Frame-structured payloads of near-dup texts share byte regions;
     the byte-shingle MinHash+LSH tier must surface them without ever
     shuffling the media column."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     rows = qcat.catalog()["multimodal_neardup_lsh"][0](
         spark, "/root/testdata/sf0.01").collect()
     assert len(rows) > 0, "no near-dup media pairs found"

@@ -13,7 +13,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.sources import TABLES
 
 SF001 = "/root/testdata/sf0.001"

@@ -4,7 +4,7 @@ census, LM scoring, PQ fit/serve equivalence, streaming LM serve."""
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as q
+from datafusion_monoid_spark import pipeline_queries as q
 
 SF = "/root/testdata/sf0.001"
 

@@ -1,4 +1,4 @@
-"""Round-7 semantics fixtures: the ADVICE r6 drift degenerate-label
+"""Round-7 semantics fixtures: the drift degenerate-label
 contract and the multi-resolution span tiers on hand-built corpora.
 
 These pin BEHAVIOR the sf-testdata oracle checks cannot reach: the
@@ -9,7 +9,7 @@ tier's threshold semantics would otherwise ride along untested.
 
 from __future__ import annotations
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,7 +20,7 @@ def _run(spark, name, sf=SF):
 
 # ---------------------------------------------------------------------------
 # embedding drift: labels with vectors in only one half are DROPPED
-# (ADVICE r6 medium: the conditional-aggregate rewrite must keep the
+# (the conditional-aggregate rewrite must keep the
 # oracle's old/new inner-join semantics, not emit NULL/div-zero rows)
 # ---------------------------------------------------------------------------
 

@@ -13,7 +13,7 @@ from hashlib import md5
 import numpy as np
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.operators import dedup as dd
 
 RNG = random.Random(0xA10A)

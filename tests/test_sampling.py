@@ -124,7 +124,7 @@ def test_priority_sample_estimator_close_at_sf001(spark):
     corpus-wide HT estimate must land within 15% of the exact total
     (DLT variance at this rate is far tighter; the band allows for the
     fixed hash draw)."""
-    from datafusion_monoid_spark.queries import priority_sample_tokens
+    from datafusion_monoid_spark.pipeline_queries import priority_sample_tokens
     rows = priority_sample_tokens(spark, "/root/testdata/sf0.01").collect()
     est = sum(r["est_total_tokens"] for r in rows)
     exact = sum(r["exact_total_tokens"] for r in rows)

@@ -97,7 +97,7 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     raised 4 -> 6 -> 7 as BENCH measured recall@5 0.8 -> 0.93 -> 0.97 at
     sf0.1) must keep a recall@5 floor of 0.95 vs the exact brute-force
     result — the pinned gate that keeps parameter drift from silently
-    degrading quality (VERDICT r4 item 4 lifted it from 0.9)."""
+    degrading quality (lifted from 0.9)."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.where(F.col("vec_id") < 10)
     exact = {(r.query_id, r.cand_id)
@@ -115,11 +115,11 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
 
 
 def test_pretrained_serve_replays_fused_entry(spark):
-    """Fit/serve split (VERDICT r4 item 3): the serve path against
+    """Fit/serve split: the serve path against
     persisted centroids must replay the fused fit+search entry
     bit-for-bit — persisted == refit (deterministic quantized fit) and
     the literal-centroid plan reproduces every tie-break."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     cat = qcat.catalog()
     fused = cat["sim_topk_ivf_kmeans"][0](spark, SF).collect()
@@ -135,7 +135,7 @@ def test_pretrained_serve_plan_is_map_only_assignment(spark):
     projection against literal centroids (no crossJoin, no assignment
     shuffle); the ONLY hash exchange is the per-query top-k window, and
     the probe side broadcasts."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     cat = qcat.catalog()
     cat["sim_ivf_fit_centroids"][0](spark, SF).collect()
@@ -174,15 +174,15 @@ def test_pq_adc_rerank_recall(spark, emb, brute):
 def test_pq_ivfadc_recall(spark, emb, brute):
     """IVFADC (nprobe 7 of 8 + ADC shortlist + exact re-rank) must
     hold recall@5 >= 0.93 vs exact brute force — measured 0.99 here /
-    0.95 at sf0.1 after the nprobe 6 -> 7 lift (VERDICT r10 item 4;
-    raw codes at nprobe 6 measured 0.90/0.91, the family's floor two
-    rounds running).  On these structureless near-uniform vectors a
-    query's true neighbors spread across coarse cells (the same effect
+    0.95 at sf0.1 after the nprobe 6 -> 7 lift (raw codes at nprobe 6
+    measured 0.90/0.91, the family's floor two rounds running).  On
+    these structureless near-uniform vectors a query's true neighbors
+    spread across coarse cells (the same effect
     that pushed the plain-IVF tier to nprobe 7/8), and the extra probe
     — not finer codes — is what buys the recall back: the scored
     candidate set grows ~17% for no measurable wall change because the
     driver-literal fits dominate the entry."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     got = {}
     fn, _ = qcat.catalog()["pq_ivfadc_topk"]
@@ -206,7 +206,7 @@ def test_pq_ivfadc_residual_recall(spark, emb, brute):
     neighbors in unprobed cells), which is the raw variant's
     documented trade — clustered production embeddings see larger
     gains at equal probes."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     got = {}
     fn, _ = qcat.catalog()["pq_ivfadc_residual_topk"]
@@ -229,7 +229,7 @@ def test_pq_opq_ivfadc_recall_and_isometry(spark, emb, brute):
     isometry up to the uniform scale 64, so recall can never degrade
     through the rotation itself — only through fit differences in
     rotated space."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     got = {}
     fn, _ = qcat.catalog()["pq_opq_ivfadc_topk"]
@@ -247,7 +247,7 @@ def test_opq_rotation_kernel_matches_expression(spark):
     the r13 interpreted aggregate(zip_with) fold it replaced — integer
     addition is associative, so any evaluation order agrees exactly;
     this pin catches a quantization or sign-matrix drift."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     e = qcat._emb(spark, SF).where(F.col("vec_id") < 40)
     got = {r["vec_id"]: list(r["embedding"])
@@ -261,7 +261,7 @@ def test_opq_rotation_is_exact_isometry(spark):
     """||Rx - Ry||^2 == 64 * ||x - y||^2 exactly, in integers — the
     property that lets the rotated chain share the residual oracle
     with only the vecs CTE swapped."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     from datafusion_monoid_spark.operators.similarity import (
         _sqdist_micro,
         quantize_micro,
@@ -296,7 +296,7 @@ def test_abtt_removes_variance_every_label(spark):
     the mean squared norm for every label (the direction carries
     positive variance), and the removal must be material corpus-wide —
     the projection magnitude is nonzero."""
-    from datafusion_monoid_spark.queries import embedding_abtt_whiten
+    from datafusion_monoid_spark.pipeline_queries import embedding_abtt_whiten
     rows = embedding_abtt_whiten(spark, SF).collect()
     assert len(rows) > 0
     assert all(r["avg_sq_after_milli2"] < r["avg_sq_before_milli2"]
@@ -305,7 +305,7 @@ def test_abtt_removes_variance_every_label(spark):
 
 
 def test_hardneg_negatives_never_share_the_anchor_label(spark):
-    from datafusion_monoid_spark.queries import hardneg_mining_topk
+    from datafusion_monoid_spark.pipeline_queries import hardneg_mining_topk
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     labels = {r["vec_id"]: r["label"] for r in
               e.select("vec_id", "label").collect()}
@@ -319,7 +319,7 @@ def test_hardneg_negatives_never_share_the_anchor_label(spark):
 def test_hardneg_margin_excludes_near_positives(spark):
     """Every mined negative must sit strictly below 95% of its
     anchor's best same-label similarity."""
-    from datafusion_monoid_spark.queries import hardneg_mining_topk
+    from datafusion_monoid_spark.pipeline_queries import hardneg_mining_topk
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     full = sim.brute_force_topk(e, e.where(F.col("vec_id") < 20),
                                 k=10**6)
@@ -336,7 +336,7 @@ def test_hardneg_margin_excludes_near_positives(spark):
 
 
 def test_hardneg_np_tier_matches_expression_tier(spark):
-    from datafusion_monoid_spark.queries import (hardneg_mining_topk,
+    from datafusion_monoid_spark.pipeline_queries import (hardneg_mining_topk,
                                                  hardneg_mining_topk_np)
     a = {tuple(r) for r in hardneg_mining_topk(spark, SF).collect()}
     b = {tuple(r) for r in hardneg_mining_topk_np(spark, SF).collect()}

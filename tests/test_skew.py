@@ -119,20 +119,20 @@ def test_salted_join_matches_plain_and_spreads_hot_keys(spark):
 def test_salted_join_catalog_plan(spark):
     """The catalog entry's executed plan joins on (event_type, salt) via
     ShuffledHashJoin — every hot event_type spreads over 16 reducers."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
     df = qcat.catalog()["skew_salted_join_deviation"][0](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "__salt" in plan and "ShuffledHashJoin" in plan
 
 
 def test_aqe_skew_catalog_entry_splits_and_matches_salted(spark):
-    """VERDICT r4 item 8: the CATALOG hot-key join (skew_aqe_join_
+    """The CATALOG hot-key join (skew_aqe_join_
     deviation) must show the skew split on the SMJ node in the FINAL
     adaptive plan and return exactly the plain-join results.  The entry
     is self-contained: it runs in its own newSession() with thresholds
     sized to the corpus (no conf juggling here, no leakage to other
     entries) — this test just executes it and inspects the plan."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     cat = qcat.catalog()
     # sf0.01: the hot partition must clear the corpus-scaled threshold

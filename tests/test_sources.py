@@ -69,7 +69,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
 
 def test_lake_format_gate_is_honest(spark, tmp_path):
-    """VERDICT r4 item 7: the lake-format gate, verified end to end.
+    """The lake-format gate, verified end to end.
     (a) every lake format is gated on BOTH surfaces with an actionable
     message; (b) the gate's CLAIM is true in this environment — going
     around it, Spark itself cannot resolve the DataSource (so the gate

@@ -189,8 +189,9 @@ def test_udaf_under_cap_still_works(spark):
                     reason="scale/sf1 tier not generated")
 def test_routed_hugegroup_at_sf1(spark):
     """The SQL entry point on a >=10^6-array single group: partial-agg
-    plan, completing in bounded time.  6,001,210 arrays in one group at sf1 — the shape that OOMs
-    or stalls the Complete-mode UDAF by construction."""
+    plan, completing in bounded time.  6,001,210 arrays in one group at
+    sf1 — the shape that OOMs or stalls the Complete-mode UDAF by
+    construction."""
     from datafusion_monoid_spark import queries as qcat
 
     fn, _ = qcat.catalog()["monoid_sql_routed_hugegroup"]

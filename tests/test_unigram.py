@@ -60,7 +60,7 @@ def test_train_prunes_and_smooths(spark, toy_vocab):
 def test_catalog_entries_consistent(spark):
     """Fit output ranked and integer; serve stats satisfy the
     arithmetic invariants (1 <= pieces/token <= MAX_TOK)."""
-    from datafusion_monoid_spark import queries as qcat
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     cat = qcat.catalog()
     fit = cat["unigram_train_pieces"][0](spark, SF).collect()
@@ -172,7 +172,7 @@ def test_pieces_with_quotes_and_token_bound(spark):
 
 
 def test_encode_refuses_out_of_alphabet_tokens(spark):
-    """ADVICE r8: encoding NEW data containing characters the table
+    """Encoding NEW data containing characters the table
     never saw must fail loudly — the single-char fallback would emit
     out-of-table pieces that this engine (NULL likelihood dropped by
     F.sum) and the SQL oracle (whole token dropped by the inner join)
