@@ -53,9 +53,11 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _duckdb_times(catalog) -> dict[str, float]:
+def _duckdb_times(catalog) -> tuple[dict[str, float], dict[str, str]]:
     """Time each oracle_sql in DuckDB on the same parquet tables —
-    the single-node baseline column, measured in the same run."""
+    the single-node baseline column, measured in the same run.
+    Returns (times, errors): a failing oracle (e.g. out of memory at a
+    scale tier) is recorded and skipped, like a failing Spark query."""
     import duckdb
 
     con = duckdb.connect()
@@ -63,15 +65,23 @@ def _duckdb_times(catalog) -> dict[str, float]:
     for t in qcat.TABLES:
         con.sql(f"CREATE VIEW {t} AS FROM '{SF_DIR}/{t}.parquet'")
     out: dict[str, float] = {}
+    errors: dict[str, str] = {}
     for name, (_, oracle) in catalog.items():
         runs = []
         for _ in range(DUCKDB_REPEATS):
             t0 = time.perf_counter()
-            con.sql(oracle).fetchall()
+            try:
+                con.sql(oracle).fetchall()
+            except Exception as e:
+                # DuckDB states the error on its first line
+                errors[name] = str(e).splitlines()[0][:300]
+                runs = []
+                break
             runs.append(time.perf_counter() - t0)
-        out[name] = round(statistics.median(runs), 3)
+        if runs:
+            out[name] = round(statistics.median(runs), 3)
     con.close()
-    return out
+    return out, errors
 
 
 def main(out_path: str | None = None) -> None:
@@ -120,9 +130,11 @@ def main(out_path: str | None = None) -> None:
     if errors:
         result["errors"] = errors
     if RUN_DUCKDB:
-        duck = _duckdb_times(catalog)
+        duck, duck_errors = _duckdb_times(catalog)
         result["duckdb"] = {"value": round(sum(duck.values()), 3),
                             "queries": duck}
+        if duck_errors:
+            result["duckdb"]["errors"] = duck_errors
         comparable = [n for n in times if n in duck]
         sp = sum(times[n] for n in comparable)
         du = sum(duck[n] for n in comparable)

@@ -55,9 +55,6 @@ def micro_ratio(num: Column, den: Column) -> Column:
     return ((a - a % den) / den).cast("bigint")
 
 
-MICRO_RATIO_SQL = "(({num}) * 1000000) // ({den})"
-
-
 # ---------------------------------------------------------------------------
 # benchmark decontamination
 # ---------------------------------------------------------------------------

@@ -241,7 +241,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
     ``max_bucket`` (optional): drop (band_idx, band_hash) buckets
     larger than this from BOTH sides of the self-join — the hot-bucket
     guard ``simhash_hamming_pairs`` already carries, wired here for the
-    banded join (VERDICT r12 item 7).  A pair found ONLY through
+    banded join.  A pair found ONLY through
     dropped buckets is lost (documented recall trade, accounted by
     ``dedup_lsh_occupancy_capped``).  The broadcast side is the DROP
     list, anti-joined — hot buckets are few by definition (rows/cap at
@@ -254,7 +254,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
     ``(cap BIGINT)`` relation instead of a driver scalar — the capped
     entry derives its cap from occupancy telemetry, and passing it
     relationally keeps the whole derive-cap -> drop -> join chain in
-    ONE job with no driver collect on the path (VERDICT r13 item 5)."""
+    ONE job with no driver collect on the path."""
     banded = minhash_band_buckets(sigs, id_col, bands, rows)
     if max_bucket is not None or max_bucket_rel is not None:
         sizes = banded.groupBy("band_idx", "band_hash").count()
@@ -326,7 +326,7 @@ CONTAIN_MIN_HITS = 5
 
 
 #: Pre-agg candidate-row budget for the capped containment probe —
-#: the structural bound VERDICT r12 item 1 prescribes.  The probe
+#: the structural bound on the duplication pre-probe.  The probe
 #: join's pre-aggregation candidate mass is >= n_docs x CONTAIN_PROBES
 #: x (per-probe fan-out), and the corpus's exact-duplication factor is
 #: a LOWER BOUND on every probe's fan-out (each of a doc's c exact
@@ -473,7 +473,7 @@ def containment_probe_candidates(hashed: DataFrame, id_col: str,
         # the cap means the same thing whether the caller passes the
         # occurrence-level relation (as here) or a distinct set (as
         # the persisted-index build does): intra-doc repeats and
-        # non-distinct inputs no longer inflate the count (ADVICE r11)
+        # non-distinct inputs no longer inflate the count
         keep = (hashed.groupBy("h")
                 .agg(F.countDistinct(id_col).alias("__df"))
                 .where(F.col("__df") <= max_df)
@@ -612,7 +612,7 @@ def simhash_hamming_pairs(sh: DataFrame, id_col: str,
     recall trade: a pair survives iff SOME chunk index has their chunks
     within Hamming 1 and both buckets kept — asserted exactly in
     tests/test_dedup.py); at 100 TB set it from measured occupancy
-    (the ``dedup_simhash_bucket_stats`` telemetry entry), e.g. a small
+    (:func:`bucket_occupancy_stats`), e.g. a small
     multiple of p99."""
     build = simhash_chunk_buckets(sh, id_col)
     if max_bucket is not None:

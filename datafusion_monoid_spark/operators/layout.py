@@ -39,22 +39,10 @@ def spread_bits(x: Column) -> Column:
     return v
 
 
-def spread_bits_sql(x: str) -> str:
-    """DuckDB twin of :func:`spread_bits` as a nested expression."""
-    v = f"(({x}) & 65535)"
-    for shift, mask in _SPREAD_STEPS:
-        v = f"(({v} | ({v} << {shift})) & {mask})"
-    return v
-
-
 def morton_code(x: Column, y: Column) -> Column:
     """64-bit Morton (Z-order) code of two 16-bit coordinates: x in
     the even bits, y in the odd bits."""
     return spread_bits(x).bitwiseOR(F.shiftleft(spread_bits(y), 1))
-
-
-def morton_code_sql(x: str, y: str) -> str:
-    return f"({spread_bits_sql(x)} | ({spread_bits_sql(y)} << 1))"
 
 
 def zorder_repartition(df: DataFrame, x: Column, y: Column,

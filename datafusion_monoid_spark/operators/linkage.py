@@ -31,27 +31,6 @@ from pyspark.sql import functions as F
 from datafusion_monoid_spark.operators.dedup import md5_long
 
 
-def deletion_variants(s: Column) -> Column:
-    """Array of the string itself plus every one-character-deletion
-    variant: position i removed for i in 0..len-1.  Including the
-    undeleted string makes the variant join cover pure insertions
-    (shorter string's own form == longer string's deletion)."""
-    return F.concat(
-        F.array(s),
-        F.transform(
-            F.sequence(F.lit(1), F.length(s)),
-            lambda i: F.concat(s.substr(F.lit(1), i - 1),
-                               s.substr(i + 1, F.length(s))),
-        ),
-    )
-
-
-DELETION_VARIANTS_SQL = (
-    "list_concat([{s}], list_transform(range(1, len({s}) + 1), "
-    "i -> substr({s}, 1, i - 1) || substr({s}, i + 1, len({s}))))"
-)
-
-
 def _deletions_of(u: Column) -> Column:
     """One-character-deletion variants of a (possibly lambda-bound)
     string column; empty-safe (Spark's sequence DESCENDS for an empty

@@ -92,8 +92,8 @@ def pq_fit(sub: DataFrame, k: int = PQ_K, iters: int = PQ_ITERS,
     Lloyd rounds, seeded from the ``k`` LOWEST vector ids (cid = the
     seed's vec_id — on a dense 0..n-1 corpus identical to the old
     ``vec_id < k`` predicate, but correct on sparse/offset id spaces
-    where that predicate silently under-seeded the codebook, ADVICE
-    r6).  One chained plan: per round, assignment joins the subvector
+    where that predicate silently under-seeded the codebook).  One
+    chained plan: per round, assignment joins the subvector
     relation with the BROADCAST codebook on the subspace id (argmin
     exact squared-L2, ties to the lower cid), and the update is a
     posexplode partial-agg floor-division mean per (s, cid, pos) —
@@ -113,7 +113,7 @@ def pq_fit(sub: DataFrame, k: int = PQ_K, iters: int = PQ_ITERS,
     round-7 ``pq_ivfadc_residual_topk`` cold sweep: 293 s fused vs
     ~15 s materialized at sf0.1).
 
-    NOTE (ADVICE r8): on the fused ``ckpt=None`` path the seed-id
+    NOTE: on the fused ``ckpt=None`` path the seed-id
     collect below makes this an EAGER call — it runs one Spark job
     over ``sub`` at plan-construction time even if the returned
     DataFrame is never executed.  That is the deliberate price of the
@@ -130,7 +130,7 @@ def pq_fit(sub: DataFrame, k: int = PQ_K, iters: int = PQ_ITERS,
         # fused (tests-only) path: the whole chain replays O(2^iters)
         # times, so seed from a LITERAL id list (one driver collect of
         # k ids) instead of embedding a distinct+sort+limit+join that
-        # would pay a shuffle per replay (ADVICE r7)
+        # would pay a shuffle per replay
         ids = [r[0] for r in (sub.select("vec_id").distinct()
                               .orderBy("vec_id").limit(k).collect())]
         cents = (sub.where(F.col("vec_id").isin(ids))
@@ -170,7 +170,7 @@ def pq_fit(sub: DataFrame, k: int = PQ_K, iters: int = PQ_ITERS,
                    else nxt.localCheckpoint(eager=True))
             # releasing the predecessor is only safe once the
             # successor is MATERIALIZED — a lazy ckpt hook would hand
-            # back a plan still referencing these blocks (ADVICE r7);
+            # back a plan still referencing these blocks;
             # leak-safe beats silently recomputing through freed
             # lineage, so skip the release when the contract is broken
             if is_checkpoint_scan(nxt):
@@ -261,7 +261,7 @@ def pq_adc_rerank_topk(corpus: DataFrame, sub: DataFrame,
     This is the shape a 100 TB store runs: scans touch the
     32x-compressed code relation; full-precision vectors are only ever
     point-looked-up.  ``m``/``subdim`` must describe the geometry of
-    ``sub``/``cents`` (the query side re-slices with them — ADVICE r7:
+    ``sub``/``cents`` (the query side re-slices with them:
     a caller with non-default geometry previously got default-sliced
     query subvectors)."""
     # query subvectors straight from the bounded queries relation (not
@@ -375,7 +375,7 @@ def wholestage_off(spark):
     driver-literal fits do NOT need it — their HOF argmin trees are
     tiny by design (see the literal-fit section note).
 
-    CAVEAT (ADVICE r8): this mutates the SESSION-global
+    CAVEAT: this mutates the SESSION-global
     ``spark.sql.codegen.wholeStage`` conf — a query submitted
     concurrently on the same SparkSession during the block runs (or
     restores) the wrong codegen mode.  The repo's drivers are
@@ -465,7 +465,7 @@ def pq_ivfadc_topk(corpus: DataFrame, sub: DataFrame, cents: DataFrame,
     re-rank as in :func:`pq_adc_topk`.
 
     ``m``/``subdim`` must describe the geometry of ``sub``/``cents``
-    (the query side re-slices with them — ADVICE r7).  ``codes``: a
+    (the query side re-slices with them).  ``codes``: a
     prebuilt (vec_id, s, cid) code relation (e.g. a materialized
     :func:`pq_codes_literal`); when given, ``sub`` may be None and no
     assignment join runs — the literal-fit entries pass their encoded
@@ -513,11 +513,11 @@ def pq_ivfadc_topk(corpus: DataFrame, sub: DataFrame, cents: DataFrame,
     # occupancy — SUB-corpus (occupancy = corpus / k_coarse, and
     # production sizes k_coarse ~ sqrt(corpus)) but NOT constant in
     # corpus size; the broadcast keeps the 32x-compressed code
-    # relation map-side (VERDICT r6 plan audit) and is right while
+    # relation map-side and is right while
     # queries x nprobe x occupancy fits the broadcast budget — at a
     # scale where it does not, pass broadcast_candidates=False to let
     # the planner shuffle codes and candidates on vec_id instead
-    # (ADVICE r7: a flag, not a code edit)
+    # (a flag, not a code edit)
     cj = F.broadcast(cands) if broadcast_candidates else cands
     adc = (codes.join(cj, "vec_id")
            .join(F.broadcast(dt), ["q_id", "s", "cid"])
@@ -672,7 +672,7 @@ def ivfadc_residual_search(corpus: DataFrame, coarse_cents: DataFrame,
              .select("q_id", "ccid", "vec_id"))
     # candidate broadcast bound: |queries| x nprobe x cell occupancy —
     # sub-corpus, NOT constant; past the broadcast budget pass
-    # broadcast_candidates=False and shuffle on vec_id (ADVICE r7)
+    # broadcast_candidates=False and shuffle on vec_id
     cj = F.broadcast(cands) if broadcast_candidates else cands
     adc = (codes.join(cj, "vec_id")
            .join(F.broadcast(dt), ["q_id", "ccid", "s", "cid"])
@@ -723,37 +723,6 @@ def _truncdiv(s: int, n: int) -> int:
     sign, so the subtraction truncates toward zero; Python's ``//``
     floors, differing on negative sums)."""
     return s // n if s >= 0 else -((-s) // n)
-
-
-def _cents_lit_sql(entries: list[tuple[int, list[int]]],
-                   idx_field: bool = False) -> str:
-    """One literal SQL array of ``named_struct('cid', ..., 'cv', ...)``
-    (plus the list position ``'i'`` when ``idx_field`` — for literal
-    2D-array lookups).  Foldable: Catalyst collapses it to a single
-    Literal, so referencing it costs nothing per row."""
-    parts = []
-    for i, (cid, cv) in enumerate(entries):
-        arr = ", ".join(f"{int(x)}L" for x in cv)
-        idx = f", 'i', {i}" if idx_field else ""
-        parts.append(f"named_struct('cid', {int(cid)}L, "
-                     f"'cv', array({arr}){idx})")
-    return f"array({', '.join(parts)})"
-
-
-_SQDIST_LAMBDA = ("aggregate(zip_with({x}, {c}, (a, b) -> (a-b)*(a-b)), "
-                  "0L, (acc, t) -> acc + t)")
-
-
-def _argmin_hof_sql(entries: list[tuple[int, list[int]]], x_col: str,
-                    idx_field: bool = False) -> str:
-    """``array_min(transform(<literal codebook>, c -> struct(d, cid
-    [, i])))`` — exact squared-L2 argmin against literal centroids with
-    the (d, cid) tie-break of :func:`_assign`, as a TINY expression
-    tree (see module note on per-plan codegen cost)."""
-    d = _SQDIST_LAMBDA.format(x=x_col, c="c.cv")
-    idx = ", 'i', c.i" if idx_field else ""
-    return (f"array_min(transform({_cents_lit_sql(entries, idx_field)}, "
-            f"c -> named_struct('d', {d}, 'cid', c.cid{idx})))")
 
 
 def kmeans_fit_literal(df: DataFrame, k: int = 8, iters: int = 3,
@@ -820,25 +789,6 @@ def residual_vectors_literal(corpus: DataFrame,
     q = corpus.select(F.col(id_col).alias("vec_id"),
                       micro(vec_col).alias("__xv"))
     return npk.residuals_np(q, cent_list)
-
-
-def _books_lit_sql(codebooks: dict[int, list[tuple[int, list[int]]]]) -> str:
-    """Literal array-of-arrays: element s+1 is subspace s's codebook as
-    an array of (cid, cv) structs — one foldable Literal."""
-    assert sorted(codebooks) == list(range(len(codebooks)))
-    return "array(" + ", ".join(_cents_lit_sql(codebooks[s])
-                                for s in sorted(codebooks)) + ")"
-
-
-def _codes_case_expr(codebooks: dict[int, list[tuple[int, list[int]]]],
-                     s_col: str = "s", sv_col: str = "sv") -> F.Column:
-    """cid of the nearest codebook entry for an EXPLODED (s, sv) row —
-    per-subspace literal argmin via one indexed literal codebook
-    array."""
-    d = _SQDIST_LAMBDA.format(x=sv_col, c="c.cv")
-    return F.expr(
-        f"array_min(transform(element_at({_books_lit_sql(codebooks)}, "
-        f"{s_col} + 1), c -> named_struct('d', {d}, 'cid', c.cid))).cid")
 
 
 def pq_fit_literal(resid: DataFrame, k: int = PQ_K, iters: int = PQ_ITERS,

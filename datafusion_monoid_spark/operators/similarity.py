@@ -249,26 +249,8 @@ def plane_weights(n_planes: int, dim: int = DEFAULT_DIM,
     return out
 
 
-def _projection(v: F.Column, weights: list[float]) -> F.Column:
-    """Sequential-fold dot of a vector column with literal plane weights
-    (order-stable so oracles can replay the identical fold).
-
-    Measured alternative: unrolling to a ``v[0]*w0 + v[1]*w1 + ...``
-    chain (32 planes x 64 terms) blows up generated-code size and is
-    ~6x SLOWER end-to-end than the HOF fold at catalog scale — the
-    fold's per-element interpretation is cheap next to the codegen
-    compile cost of 2048-term expressions."""
-    # one array Literal node (not 64 scalar lits wrapped in array()):
-    # the driver-side analyzer/optimizer cost of the 32-plane tree is
-    # dominated by node count, and plan build runs per query execution
-    w_arr = F.lit(weights)
-    return F.aggregate(
-        F.zip_with(v, w_arr, lambda x, w: x * w),
-        F.lit(0.0), lambda acc, t: acc + t)
-
-
 def _projection_sql(v_sql: str, weights: list[float]) -> str:
-    """SQL-string twin of :func:`_projection` — the identical
+    """Projection of a vector onto literal plane weights as an
     aggregate/zip_with fold, built as ONE parser call instead of
     thousands of py4j Column constructions.  Plan build runs on the
     driver per query execution; for the 32-plane LSH tree the py4j
@@ -287,18 +269,6 @@ def _bucket_sql(v_sql: str, ws: list[list[float]]) -> str:
         for p, w in enumerate(ws)
     ]
     return "cast((" + " + ".join(bits) + ") as bigint)"
-
-
-def lsh_signatures(df: DataFrame, n_planes: int = 8,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   dim: int = DEFAULT_DIM, seed: str = "") -> DataFrame:
-    """(id, vec, bucket BIGINT): sign bits of projections onto n_planes
-    deterministic hyperplanes (literal weights, see :func:`plane_weights`)."""
-    v_sql = f"cast({vec_col} as array<double>)"
-    ws = plane_weights(n_planes, dim, seed)
-    return df.select(F.col(id_col).alias("vec_id"),
-                     F.expr(v_sql).alias("vec"),
-                     F.expr(_bucket_sql(v_sql, ws)).alias("bucket"))
 
 
 def lsh_band_buckets(df: DataFrame, n_tables: int = 8,
@@ -459,11 +429,6 @@ def _dot_sql(a: str, b: str) -> str:
     bit-identical doubles."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * "
             f"cast(y as double)), cast(0.0 as double), (acc, v) -> acc + v)")
-
-
-def _cos_expr_sql(a: str, b: str) -> str:
-    return (f"({_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * "
-            f"sqrt({_dot_sql(b, b)})))")
 
 
 def ivf_assign_pretrained(corpus: DataFrame,

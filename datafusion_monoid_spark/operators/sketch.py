@@ -100,16 +100,6 @@ def _hll_idx_rho(key: Column) -> tuple[Column, Column]:
     return idx, rho
 
 
-def hll_idx_rho_sql(expr: str) -> tuple[str, str]:
-    """DuckDB twins of :func:`_hll_idx_rho`."""
-    h = md5_long_sql(expr)
-    idx = f"CAST(({h} & {HLL_M - 1}) AS INTEGER)"
-    w = f"({h} >> {HLL_IDX_BITS})"
-    rho = (f"CASE WHEN {w} = 0 THEN {HLL_W_BITS + 1} "
-           f"ELSE CAST(log2({w} & (-{w})) AS INTEGER) + 1 END")
-    return idx, rho
-
-
 def hll_build(df: DataFrame, key_col: str) -> DataFrame:
     """(idx, rho): the register table — groupBy idx, MAX rank.
 
@@ -227,12 +217,6 @@ def hist_bin(v: Column, lo: float, hi: float, bins: int) -> Column:
     streaming builders)."""
     b = F.floor((v.cast("double") - F.lit(lo)) * bins / F.lit(hi - lo))
     return F.least(F.greatest(b, F.lit(0)), F.lit(bins - 1)).cast("bigint")
-
-
-def hist_bin_sql(expr: str, lo: float, hi: float, bins: int) -> str:
-    """DuckDB twin of the bin expression in :func:`hist_build`."""
-    return (f"least(greatest(CAST(floor((({expr}) - {lo!r}) * {bins} "
-            f"/ {hi - lo!r}) AS BIGINT), 0), {bins - 1})")
 
 
 def hist_quantiles(hist: DataFrame, q_micros: list[int], lo: float,

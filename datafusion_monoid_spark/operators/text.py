@@ -9,7 +9,7 @@ queries.py are line-for-line twins).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from datafusion_monoid_spark.operators.dedup import md5_long, normalize_text, tokens

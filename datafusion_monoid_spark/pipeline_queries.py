@@ -166,59 +166,6 @@ def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("window_topk_orders", """
-SELECT o_custkey, o_orderkey, rk FROM (
-  SELECT o_custkey, o_orderkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rk
-  FROM orders
-) WHERE rk <= 3
-""")
-def window_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 orders per customer — deterministic tie-break on orderkey."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        o.select("o_custkey", "o_orderkey", F.row_number().over(w).alias("rk"))
-        .where(F.col("rk") <= 3)
-    )
-
-
-@register("rollup_revenue", """
-SELECT r_name, n_name, round(sum(o_totalprice), 2) AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-GROUP BY ROLLUP (r_name, n_name)
-""")
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = F.broadcast(_t(spark, sf_dir, "customer"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region"))
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(n, c.c_nationkey == n.n_nationkey)
-        .join(r, n.n_regionkey == r.r_regionkey)
-        .rollup("r_name", "n_name")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-    )
-
-
-@register("distinct_types_per_brand", """
-SELECT p_brand, count(DISTINCT p_type) AS n_types, count(*) AS n_parts
-FROM part GROUP BY p_brand
-""")
-def distinct_types_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
-    return p.groupBy("p_brand").agg(
-        F.countDistinct("p_type").alias("n_types"),
-        F.count(F.lit(1)).alias("n_parts"),
-    )
-
-
 @register("sort_limit_top_orders", """
 SELECT o_orderkey, round(o_totalprice, 2) AS price
 FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
@@ -232,18 +179,6 @@ def sort_limit_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(100)
         .select("o_orderkey", F.round("o_totalprice", 2).alias("price"))
     )
-
-
-@register("setop_fulfilled_customers", """
-SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-EXCEPT
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""")
-def setop_fulfilled_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    open_c = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
-    done_c = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    return open_c.subtract(done_c)  # distinct set-difference, SQL EXCEPT
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,106 +199,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.withColumn("sec", sec)
 
 
-@register("events_hourly", """
-SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket, event_type,
-       count(*) AS n, round(sum(value), 2) AS total
-FROM events GROUP BY hour_bucket, event_type
-""")
-def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-hour aggregation, batch twin of the streaming pipeline."""
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy(
-            F.floor(F.col("sec") / 3600).cast("bigint").alias("hour_bucket"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total"))
-    )
-
-
-@register("events_moving_avg", """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS epoch_day,
-         CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT) AS mv
-  FROM events GROUP BY event_type, epoch_day
-),
-win AS (
-  SELECT event_type, epoch_day,
-         CAST(sum(mv) OVER w AS BIGINT) AS win_sum,
-         CAST(count(*) OVER w AS BIGINT) AS n_days
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY epoch_day
-               RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-)
-SELECT event_type, epoch_day, n_days,
-       CAST(floor((CAST(win_sum AS DOUBLE) * 1000.0) / CAST(n_days AS DOUBLE))
-            AS BIGINT) AS avg_daily_micro
-FROM win
-""")
-def events_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day moving average of daily event value per type — a RANGE
-    window frame (value-based, skips missing days correctly where a
-    ROWS frame would not).  Daily totals are exact integer milli-units
-    so the windowed sum is exact; the average is emitted in micro-units
-    via ``floor`` of one bit-identical double division — ``round`` would
-    flip at a ``.xxx5`` tie (Spark HALF_UP vs DuckDB's tie rule; one
-    such tie exists at sf0.1), while ``floor`` of the same double has no
-    tie ambiguity."""
-    e = _events(spark, sf_dir)
-    daily = (
-        e.groupBy("event_type",
-                  F.floor(F.col("sec") / 86400).cast("bigint").alias("epoch_day"))
-        .agg(F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("mv"))
-    )
-    w = (Window.partitionBy("event_type").orderBy("epoch_day")
-         .rangeBetween(-6, Window.currentRow))
-    return (
-        daily.select(
-            "event_type", "epoch_day",
-            F.sum("mv").over(w).cast("bigint").alias("win_sum"),
-            F.count(F.lit(1)).over(w).cast("bigint").alias("n_days"))
-        .select("event_type", "epoch_day", "n_days",
-                F.floor((F.col("win_sum").cast("double") * 1000.0)
-                        / F.col("n_days").cast("double"))
-                 .cast("bigint").alias("avg_daily_micro"))
-    )
-
-
-@register("events_sessionize", """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
-                   - CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT)
-                   > 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-),
-sess AS (
-  SELECT user_id,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events
-FROM sess GROUP BY user_id, session_id
-""")
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30 min): lag + running sum windows."""
-    e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_sec = F.lag("sec").over(w)
-    new_s = F.when(prev_sec.isNull() | ((F.col("sec") - prev_sec) > 1800), 1).otherwise(0)
-    wsum = Window.partitionBy("user_id").orderBy("ts", "event_id") \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (
-        e.select("user_id", "ts", "event_id", "sec", new_s.alias("new_s"))
-        .select("user_id", F.sum("new_s").over(wsum).cast("bigint").alias("session_id"))
-        .groupBy("user_id", "session_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Deduplication (training-data pipeline operators; no reference analogue —
 # designed with the same partial-agg-safe discipline, SURVEY.md §7 phase 5)
@@ -371,20 +206,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from datafusion_monoid_spark.operators import dedup as dd
 from datafusion_monoid_spark.functions.vector import cosine_similarity
-
-
-@register("dedup_exact_stats", f"""
-SELECT source, count(*) AS n_docs,
-       count(DISTINCT md5({dd.NORMALIZE_SQL.format(expr='text')})) AS n_unique
-FROM documents GROUP BY source
-""")
-def dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: one shuffle on the normalized-content hash."""
-    d = dd.exact_dedup_keys(_docs(spark, sf_dir), "text")
-    return d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("dup_key").alias("n_unique"),
-    )
 
 
 #: (applicationId, sf_dir) -> (persisted signatures, persisted candidates).
@@ -403,51 +224,6 @@ def _minhash_shared(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         cand = dd.lsh_candidate_pairs(sigs, "doc_id").persist()
         _MINHASH_SHARED[key] = (sigs, cand)
     return _MINHASH_SHARED[key]
-
-
-def _jaccard_on_lsh_oracle_sql() -> str:
-    # the minhash candidate CTEs, then EXACT jaccard verification on the
-    # candidates only
-    cand_sql = _minhash_candidates_cte()
-    return f"""
-{cand_sql},
-sh AS (SELECT doc_id, {dd.shingles_sql('text')} AS shg FROM documents),
-j AS (
-  SELECT c.id_a, c.id_b,
-         len(list_intersect(a.shg, b.shg))::DOUBLE
-         / len(list_distinct(list_concat(a.shg, b.shg))) AS jv
-  FROM cand c JOIN sh a ON c.id_a = a.doc_id JOIN sh b ON c.id_b = b.doc_id
-)
-SELECT id_a, id_b, round(jv, 3) AS jacc FROM j WHERE round(jv, 3) >= 0.2
-"""
-
-
-def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard VERIFICATION over MinHash-LSH candidate
-    pairs — the scale shape: candidate generation is subquadratic
-    (banded buckets), the expensive exact measure touches only
-    candidates.  (An all-pairs form at sf0.1 costs ~170 s; this costs
-    ~3 s for identical high-similarity output.)"""
-    docs = _docs(spark, sf_dir)
-    _, cand_full = _minhash_shared(spark, sf_dir)
-    cand = cand_full.select("id_a", "id_b")
-    # shingle ONLY the docs that appear in some candidate pair (semi-join
-    # prune): candidates are a vanishing fraction of the corpus at scale,
-    # so the expensive shingle stage must not touch the rest
-    cand_ids = (cand.select(F.col("id_a").alias("doc_id"))
-                .unionByName(cand.select(F.col("id_b").alias("doc_id")))
-                .distinct())
-    sh = (docs.join(cand_ids, "doc_id", "left_semi")
-          .select("doc_id", dd.word_shingles("text").alias("shg")))
-    # round BEFORE thresholding so a pair at the boundary quantizes the
-    # same way in Spark and the DuckDB oracle (last-ulp robustness)
-    j = F.round(dd.jaccard(F.col("a.shg"), F.col("b.shg")), 3)
-    return (
-        cand.join(sh.alias("a"), F.col("id_a") == F.col("a.doc_id"))
-        .join(sh.alias("b"), F.col("id_b") == F.col("b.doc_id"))
-        .where(j >= 0.2)
-        .select("id_a", "id_b", j.alias("jacc"))
-    )
 
 
 def _lsh_sql_exprs() -> tuple[str, str, str, str]:
@@ -496,35 +272,6 @@ cand AS (
   FROM banded a JOIN banded b
     ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
 )"""
-
-
-def _minhash_oracle_sql() -> str:
-    return f"""
-{_minhash_candidates_cte()}
-SELECT id_a, id_b,
-       round(len(list_filter(range(1, {dd.MINHASH_NUM + 1}),
-                             i -> sig_a[i] = sig_b[i]))::DOUBLE / {dd.MINHASH_NUM}, 3) AS est_jacc
-FROM cand
-WHERE len(list_filter(range(1, {dd.MINHASH_NUM + 1}),
-                      i -> sig_a[i] = sig_b[i]))::DOUBLE / {dd.MINHASH_NUM} >= 0.35
-"""
-
-
-@register("dedup_minhash_lsh_pairs", _minhash_oracle_sql())
-def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64) + LSH(16 bands x 4): near-dup candidates without an
-    all-pairs product; estimated Jaccard from signature agreement."""
-    _, cand = _minhash_shared(spark, sf_dir)
-    est = dd.estimated_jaccard_count("n_agree")
-    return (
-        cand.where(est >= 0.35)
-        .select("id_a", "id_b", F.round(est, 3).alias("est_jacc"))
-    )
-
-
-# registered here so its oracle can reuse the minhash candidate CTEs above
-register("dedup_ngram_jaccard_pairs", _jaccard_on_lsh_oracle_sql())(
-    dedup_ngram_jaccard_pairs)
 
 
 #: Exact-containment verify tail over a ``cand (id_a, id_b)`` CTE —
@@ -608,8 +355,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distinct-shingle counts, floor division), both directions
     reported, pairs kept when either direction >= 0.6.
 
-    Scale: identical posture to `dedup_ngram_jaccard_pairs` — the
-    candidate stage is the SHARED persisted MinHash/LSH build
+    Scale: the candidate stage is the SHARED persisted MinHash/LSH build
     (subquadratic banded buckets, computed once per session for the
     whole dedup family), and the exact set arithmetic touches
     candidates only, with the shingle stage semi-join-pruned to docs
@@ -1737,27 +1483,6 @@ def _lsh_digest(spark: SparkSession, spath: str, bpath: str,
     return d
 
 
-@register("lsh_postings_build", f"""
-WITH {_lsh_index_ctes('o', 'doc_id % 11 <> 0')}
-{_lsh_digest_sql('osigs', 'obanded')}
-""")
-def lsh_postings_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BUILD the persisted banded-LSH index (signatures + band-bucket
-    postings of the existing corpus) and return the per-document
-    digest of the ON-DISK pair — the artifact
-    `dedup_incremental_newbatch` treats as "the persisted, bucketed
-    index table a production pipeline maintains", now actually
-    maintained.  Completes the third index family's lifecycle
-    (IVF postings r10/r11, containment probe index r12).
-
-    Scale: signatures are one shuffle (64 map-side-combined mins) —
-    here sliced off the session-shared build by per-doc independence;
-    banding is a map-only projection; both artifacts are narrow
-    (ids + 64 ints / ids + 16 hashes), text never persists."""
-    spath, bpath = _build_lsh_index(spark, sf_dir, overwrite=True)
-    return _lsh_digest(spark, spath, bpath)
-
-
 @register("lsh_postings_append", f"""
 WITH {_lsh_clean_ctes()}
 {_lsh_digest_sql('osigs', 'obanded', 'base')}
@@ -1838,149 +1563,6 @@ def lsh_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_digest(spark, scomp, bcomp)
 
 
-def _simhash_sims_cte() -> str:
-    """DuckDB CTE chain rebuilding the exact (doc_id, sim_hi, sim_lo)
-    SimHash relation — shared by the pair oracle and the bucket-stats
-    oracle."""
-    tok_norm = dd.NORMALIZE_SQL.format(expr="text")
-    vh = ", ".join(
-        f"sum(CASE WHEN (hi >> {i}) & 1 = 1 THEN w ELSE -w END) AS vh{i}"
-        for i in range(32))
-    vl = ", ".join(
-        f"sum(CASE WHEN (lo >> {i}) & 1 = 1 THEN w ELSE -w END) AS vl{i}"
-        for i in range(32))
-    hi_asm = " + ".join(f"(CASE WHEN vh{i} > 0 THEN {1 << i}::BIGINT ELSE 0 END)"
-                        for i in range(32))
-    lo_asm = " + ".join(f"(CASE WHEN vl{i} > 0 THEN {1 << i}::BIGINT ELSE 0 END)"
-                        for i in range(32))
-    return f"""tok AS (
-  SELECT doc_id, t, count(*) AS w FROM (
-    SELECT doc_id, unnest(list_filter(string_split({tok_norm}, ' '), x -> x != '')) AS t
-    FROM documents) GROUP BY doc_id, t
-),
-hashed AS (
-  SELECT doc_id, w,
-         CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT) AS hi,
-         CAST(concat('0x', substr(md5(t), 9, 8)) AS BIGINT) AS lo
-  FROM tok
-),
-votes AS (SELECT doc_id, {vh}, {vl} FROM hashed GROUP BY doc_id),
-sims AS (SELECT doc_id, {hi_asm} AS sim_hi, {lo_asm} AS sim_lo FROM votes)"""
-
-
-def _simhash_oracle_sql(max_hamming: int = 7) -> str:
-    return f"""
-WITH {_simhash_sims_cte()},
-chunked AS (
-  SELECT doc_id, sim_hi, sim_lo,
-         unnest([(sim_hi >> 0) & 255, (sim_hi >> 8) & 255,
-                 (sim_hi >> 16) & 255, (sim_hi >> 24) & 255,
-                 (sim_lo >> 0) & 255, (sim_lo >> 8) & 255,
-                 (sim_lo >> 16) & 255, (sim_lo >> 24) & 255]) AS chunk,
-         unnest(range(0, 8)) AS chunk_idx
-  FROM sims
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       bit_count(xor(a.sim_hi, b.sim_hi)) + bit_count(xor(a.sim_lo, b.sim_lo)) AS hamming
-FROM chunked a JOIN chunked b
-  ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sim_hi, b.sim_hi)) + bit_count(xor(a.sim_lo, b.sim_lo)) <= {max_hamming}
-"""
-
-
-@register("dedup_simhash_hamming", _simhash_oracle_sql())
-def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash(64-bit) near-dups: 16-bit pigeonhole chunk buckets with
-    Hamming-1 multiprobe (complete recall at Hamming <= 7, 65536 buckets
-    per chunk index so within-bucket joins stay subquadratic at corpus
-    scale) then exact Hamming via bit_count(xor).  The oracle keeps the
-    simpler 8-bit-chunk candidate SQL — both schemes are recall-complete
-    at Hamming <= 7, so outputs are provably identical."""
-    docs = _docs(spark, sf_dir)
-    sh = dd.simhash(docs, "doc_id", "text")
-    return dd.simhash_hamming_pairs(sh, "doc_id", max_hamming=7)
-
-
-@register("dedup_simhash_bucket_stats", f"""
-WITH {{sims_cte}},
-chunked16 AS (
-  SELECT doc_id,
-         unnest([(sim_hi >> 0) & 65535, (sim_hi >> 16) & 65535,
-                 (sim_lo >> 0) & 65535, (sim_lo >> 16) & 65535]) AS chunk,
-         unnest(range(0, 4)) AS chunk_idx
-  FROM sims
-),
-sizes AS (SELECT chunk_idx, chunk, count(*) AS occ
-          FROM chunked16 GROUP BY chunk_idx, chunk),
-ranked AS (
-  SELECT chunk_idx, chunk, occ,
-         row_number() OVER (PARTITION BY chunk_idx
-                            ORDER BY occ, chunk) AS rn,
-         count(*) OVER (PARTITION BY chunk_idx) AS nb
-  FROM sizes)
-SELECT CAST(chunk_idx AS INTEGER) AS chunk_idx,
-       CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(max(occ) AS BIGINT) AS max_occ,
-       CAST(max(CASE WHEN rn = CAST(ceil(0.99 * nb) AS BIGINT)
-                     THEN occ END) AS BIGINT) AS p99_occ,
-       CAST(sum(occ) AS BIGINT) AS n_rows
-FROM ranked GROUP BY chunk_idx
-""".format(sims_cte=_simhash_sims_cte()))
-def dedup_simhash_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-bucket telemetry for the SimHash candidate generator:
-    per chunk index, the occupancy distribution of
-    EXACTLY the 16-bit buckets ``simhash_hamming_pairs`` joins on —
-    bucket count, max occupancy, exact-discrete p99 occupancy, row
-    total.
-
-    At 100 TB this is the operational dial for the ``max_bucket`` cap:
-    within-bucket join work is quadratic in occupancy, so the cap is
-    set from measured p99/max (e.g. boilerplate corpora drive a few
-    buckets to 10^5 while p99 stays single-digit — cap at a small
-    multiple of p99, lose only the documented pairs).  The stats query
-    itself scales: one (chunk_idx, chunk) partial-agg shuffle — the
-    same keys the candidate join shuffles on — then a window over the
-    bounded (<= 4 x 2^16 rows) bucket-size relation."""
-    docs = _docs(spark, sf_dir)
-    sh = dd.simhash(docs, "doc_id", "text")
-    buckets = dd.simhash_chunk_buckets(sh, "doc_id")
-    return (dd.bucket_occupancy_stats(buckets)
-            .select(F.col("chunk_idx").cast("int").alias("chunk_idx"),
-                    "n_buckets", "max_occ", "p99_occ", "n_rows"))
-
-
-@register("dedup_lsh_bucket_stats", f"""
-{_minhash_candidates_cte()},
-sizes AS (SELECT band_idx, band_hash, count(*) AS occ
-          FROM banded GROUP BY band_idx, band_hash),
-ranked AS (
-  SELECT band_idx, band_hash, occ,
-         row_number() OVER (PARTITION BY band_idx
-                            ORDER BY occ, band_hash) AS rn,
-         count(*) OVER (PARTITION BY band_idx) AS nb
-  FROM sizes)
-SELECT CAST(band_idx AS INTEGER) AS band_idx,
-       CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(max(occ) AS BIGINT) AS max_occ,
-       CAST(max(CASE WHEN rn = CAST(ceil(0.99 * nb) AS BIGINT)
-                     THEN occ END) AS BIGINT) AS p99_occ,
-       CAST(sum(occ) AS BIGINT) AS n_rows
-FROM ranked GROUP BY band_idx
-""")
-def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-bucket telemetry for the MinHash banded-LSH candidate
-    generator — the same occupancy dial as
-    ``dedup_simhash_bucket_stats``, over the (band_idx, band_hash)
-    buckets ``lsh_candidate_pairs`` joins on (16 bands).  On a
-    boilerplate-heavy corpus the max column is the early warning: every
-    doc sharing a band hash joins quadratically within the bucket."""
-    sigs, _ = _minhash_shared(spark, sf_dir)
-    buckets = dd.minhash_band_buckets(sigs, "doc_id")
-    return (dd.bucket_occupancy_stats(buckets, "band_idx", "band_hash")
-            .select(F.col("band_idx").cast("int").alias("band_idx"),
-                    "n_buckets", "max_occ", "p99_occ", "n_rows"))
-
-
 @register("dedup_lsh_occupancy_capped", f"""
 {_minhash_candidates_cte()},
 sizes AS (SELECT band_idx, band_hash, count(*) AS occ
@@ -2020,9 +1602,9 @@ GROUP BY s.band_idx
 """)
 def dedup_lsh_occupancy_capped(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    """TELEMETRY -> ACTION for the banded-LSH candidate join (VERDICT
-    r12 item 7): ``dedup_lsh_bucket_stats`` measured hot buckets and
-    nothing consumed the measurement.  This entry derives the
+    """TELEMETRY -> ACTION for the banded-LSH candidate join: bucket
+    occupancy telemetry alone measures hot buckets without acting on
+    them.  This entry derives the
     hot-bucket cap FROM the join's own occupancy telemetry — cap =
     max(floor 16, 8 x the exact p99 occupancy, max over bands) — and
     runs the candidate join with buckets above the cap dropped from
@@ -2163,7 +1745,7 @@ from datafusion_monoid_spark.operators import similarity as sim
 
 
 def _lsh_proj_sql(vexpr: str, weights: list[float]) -> str:
-    """DuckDB twin of similarity._projection: the SAME literal plane
+    """DuckDB twin of similarity._projection_sql: the SAME literal plane
     weights (python-computed md5 constants) folded in the SAME sequential
     order as the Spark F.aggregate, so bucket bits are bit-identical."""
     w = "[" + ", ".join(repr(x) for x in weights) + "]"
@@ -2262,125 +1844,6 @@ FROM r WHERE rk <= 5
 """
 
 
-@register("sim_topk_bruteforce", """
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec
-           FROM embeddings WHERE vec_id < 20),
-c AS (SELECT vec_id AS cand_id, embedding::DOUBLE[] AS cvec FROM embeddings),
-p AS (SELECT query_id, cand_id,
-             list_inner_product(qvec, cvec)
-             / (sqrt(list_inner_product(qvec, qvec))
-                * sqrt(list_inner_product(cvec, cvec))) AS sim
-      FROM q JOIN c ON query_id != cand_id),
-r AS (SELECT query_id, cand_id, sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY sim DESC, cand_id) AS rk
-      FROM p)
-SELECT query_id, CAST(rk AS INTEGER) AS rank, cand_id, round(sim, 3) AS sim
-FROM r WHERE rk <= 5
-""")
-def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 for 20 query vectors — the ANN baseline."""
-    e = _emb(spark, sf_dir)
-    return sim.brute_force_topk(e, e.where(F.col("vec_id") < 20), k=5)
-
-
-@register("sim_topk_numpy", _BRUTE_TOPK_ORACLE)  # exact tier: same semantics
-def sim_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Throughput tier: NumPy matmul per Arrow batch, local top-k then
-    global window — exact, so the brute-force SQL is its oracle."""
-    e = _emb(spark, sf_dir)
-    return sim.brute_force_topk_np(e, e.where(F.col("vec_id") < 20), k=5)
-
-
-def _lsh_topk_oracle_sql(n_tables: int = 8, planes_per_table: int = 4,
-                         k: int = 5) -> str:
-    probe_list = "[bucket, " + ", ".join(
-        f"xor(bucket, {1 << p})" for p in range(planes_per_table)) + "]"
-    return f"""{_lsh_banded_cte()},
-qp AS (
-  SELECT vec_id AS query_id, table_idx, unnest({probe_list}) AS bucket
-  FROM banded WHERE vec_id < 20
-),
-cand AS (
-  SELECT DISTINCT qp.query_id, c.vec_id AS cand_id
-  FROM qp JOIN banded c USING (table_idx, bucket)
-  WHERE qp.query_id != c.vec_id
-),
-p AS (
-  SELECT query_id, cand_id, {_COS_SQL.format(a='q.v', b='c.v')} AS sim
-  FROM cand JOIN e q ON cand.query_id = q.vec_id
-            JOIN e c ON cand.cand_id = c.vec_id
-),
-r AS (SELECT query_id, cand_id, sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY sim DESC, cand_id) AS rk
-      FROM p)
-SELECT query_id, CAST(rk AS INTEGER) AS rank, cand_id, round(sim, 3) AS sim
-FROM r WHERE rk <= {k}
-"""
-
-
-@register("sim_topk_lsh", _lsh_topk_oracle_sql())
-def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN tier 1: banded random-hyperplane LSH (8 tables x 4 planes,
-    Hamming-1 multiprobe).  Fully deterministic (literal md5-derived
-    planes), so DuckDB rebuilds the identical tables as the oracle;
-    recall vs brute force is additionally measured in tests."""
-    e = _emb(spark, sf_dir)
-    return sim.lsh_bucket_topk(e, e.where(F.col("vec_id") < 20), k=5)
-
-
-def _ivf_topk_oracle_sql(n_centroids: int = 32, nprobe: int = 8,
-                         k: int = 5) -> str:
-    csim_cand = _COS_SQL.format(a="c.v", b="ct.cent")
-    csim_query = _COS_SQL.format(a="q.v", b="ct.cent")
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cent_id, v AS cent FROM e WHERE vec_id < {n_centroids}),
-asg AS (
-  SELECT cand_id, cent_id FROM (
-    SELECT c.vec_id AS cand_id, ct.cent_id,
-           row_number() OVER (PARTITION BY c.vec_id
-                              ORDER BY {csim_cand} DESC, ct.cent_id) AS rn
-    FROM e c CROSS JOIN cent ct)
-  WHERE rn = 1
-),
-probes AS (
-  SELECT query_id, cent_id FROM (
-    SELECT q.vec_id AS query_id, ct.cent_id,
-           row_number() OVER (PARTITION BY q.vec_id
-                              ORDER BY {csim_query} DESC, ct.cent_id) AS rn
-    FROM e q CROSS JOIN cent ct WHERE q.vec_id < 20)
-  WHERE rn <= {nprobe}
-),
-cand AS (
-  SELECT DISTINCT probes.query_id, asg.cand_id
-  FROM probes JOIN asg USING (cent_id)
-  WHERE probes.query_id != asg.cand_id
-),
-p AS (
-  SELECT query_id, cand_id, {_COS_SQL.format(a='q.v', b='c.v')} AS sim
-  FROM cand JOIN e q ON cand.query_id = q.vec_id
-            JOIN e c ON cand.cand_id = c.vec_id
-),
-r AS (SELECT query_id, cand_id, sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY sim DESC, cand_id) AS rk
-      FROM p)
-SELECT query_id, CAST(rk AS INTEGER) AS rank, cand_id, round(sim, 3) AS sim
-FROM r WHERE rk <= {k}
-"""
-
-
-@register("sim_topk_ivf", _ivf_topk_oracle_sql())
-def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN tier 2: IVF with deterministic centroids (lowest-32 ids),
-    nprobe=8/32.  Deterministic end-to-end, so the oracle replays the
-    full assign/probe/re-rank pipeline in DuckDB."""
-    e = _emb(spark, sf_dir)
-    return sim.ivf_topk(e, e.where(F.col("vec_id") < 20), k=5)
-
-
 # ---------------------------------------------------------------------------
 # Text analysis over the documents table
 # ---------------------------------------------------------------------------
@@ -2391,150 +1854,11 @@ _NORM = dd.NORMALIZE_SQL.format(expr="text")
 _TOKS = f"list_filter(string_split({_NORM}, ' '), t -> t != '')"
 
 
-def _langid_oracle_sql() -> str:
-    langs = sorted(tx.LANG_MARKERS)
-    score_exprs = {
-        lang: ("len(list_filter(toks, t -> list_contains("
-               + "[" + ", ".join(f"'{m}'" for m in tx.LANG_MARKERS[lang]) + "], t)))::DOUBLE"
-               + " / greatest(len(toks), 1)")
-        for lang in langs
-    }
-    scores_sel = ", ".join(f"{score_exprs[l]} AS s_{l}" for l in langs)
-    pred, best = f"'{langs[0]}'", f"s_{langs[0]}"
-    for lang in langs[1:]:
-        pred = f"CASE WHEN s_{lang} > {best} THEN '{lang}' ELSE {pred} END"
-        best = f"CASE WHEN s_{lang} > {best} THEN s_{lang} ELSE {best} END"
-    return f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-s AS (SELECT doc_id, {scores_sel} FROM t)
-SELECT doc_id, {pred} AS pred_lang, round({best}, 4) AS score FROM s
-"""
-
-
-@register("text_lang_id", _langid_oracle_sql())
-def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-stopword language ID with a deterministic argmax chain.
-    Tokens materialize once (a 5x win — no CSE across lambdas)."""
-    d = _docs(spark, sf_dir).withColumn("__toks", dd.tokens("text"))
-    pred, score = tx.lang_id("text", toks=F.col("__toks"))
-    return d.select("doc_id", pred.alias("pred_lang"), F.round(score, 4).alias("score"))
-
-
-@register("text_quality", f"""
-WITH t AS (
-  SELECT doc_id, text, {_NORM} AS norm, {_TOKS} AS toks FROM documents
-),
-f AS (
-  SELECT doc_id,
-         length(text) AS n_chars,
-         len(toks) AS n_tokens,
-         length(regexp_replace(norm, '[a-z0-9 ]', '', 'g'))
-           / greatest(length(text), 1)::DOUBLE AS punct_ratio,
-         len(list_filter(toks, t -> list_contains(
-             ['the','and','of','to','a','in','is','that'], t)))::DOUBLE
-           / greatest(len(toks), 1) AS stopword_ratio,
-         length(regexp_replace(norm, ' ', '', 'g'))
-           / greatest(len(toks), 1)::DOUBLE AS mean_token_len
-  FROM t
-)
-SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars, CAST(n_tokens AS BIGINT) AS n_tokens,
-       round(stopword_ratio, 4) AS stopword_ratio,
-       round(punct_ratio, 4) AS punct_ratio,
-       round(0.4 * (CASE WHEN n_tokens BETWEEN 5 AND 1000 THEN 1.0 ELSE 0.3 END)
-           + 0.3 * (CASE WHEN mean_token_len BETWEEN 2 AND 12 THEN 1.0 ELSE 0.4 END)
-           + 0.2 * least(stopword_ratio * 4, 1.0)
-           + 0.1 * (1.0 - least(punct_ratio * 5, 1.0)), 4) AS quality
-FROM f
-""")
-def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cheap quality pre-filter: length/stopword/punctuation signals."""
-    d = _docs(spark, sf_dir)
-    f = tx.quality_features("text")
-    return d.select(
-        "doc_id", f["n_chars"].alias("n_chars"), f["n_tokens"].alias("n_tokens"),
-        F.round(f["stopword_ratio"], 4).alias("stopword_ratio"),
-        F.round(f["punct_ratio"], 4).alias("punct_ratio"),
-        F.round(tx.quality_score("text"), 4).alias("quality"),
-    )
-
-
-@register("text_token_stats", f"""
-WITH t AS (SELECT doc_id, {_NORM} AS norm, {_TOKS} AS toks FROM documents)
-SELECT doc_id, CAST(len(toks) AS BIGINT) AS ws_tokens,
-       CAST(len(regexp_extract_all(norm, '[a-z0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS bpe_tokens
-FROM t
-""")
-def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget estimation: whitespace + BPE-ish segmentation."""
-    d = _docs(spark, sf_dir)
-    c = tx.token_counts("text")
-    return d.select("doc_id", c["ws_tokens"].alias("ws_tokens"),
-                    c["bpe_tokens"].alias("bpe_tokens"))
-
-
-@register("text_fingerprint", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
-SELECT doc_id,
-       list_reduce(
-         list_prepend(0::BIGINT,
-                      list_transform(toks, t -> {dd.md5_long_sql('t')})),
-         (acc, h) -> (acc * 31 + h) % {tx.FINGERPRINT_P}) AS fp
-FROM t
-""")
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-sensitive rolling-hash document fingerprint."""
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", tx.fingerprint("text").alias("fp"))
-
-
 # ---------------------------------------------------------------------------
 # Multimodal columns + streaming batch-twin
 # ---------------------------------------------------------------------------
 
 from datafusion_monoid_spark.operators import multimodal as mm
-
-
-@register("multimodal_meta", """
-SELECT doc_id, octet_length(unhex(md5(text))) AS n_bytes,
-       CAST(floor(octet_length(unhex(md5(text))) / 4) AS INTEGER) AS n_frames
-FROM documents
-""")
-def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only pass over the media column — no byte decoding, the
-    pruning/partitioning tier of the multimodal pipeline."""
-    docs = _docs(spark, sf_dir)
-    media = mm.attach_fake_media(docs)
-    return media.select(
-        "doc_id",
-        F.length("media").cast("int").alias("n_bytes"),
-        F.floor(F.length("media") / mm.FRAME_BYTES).cast("int").alias("n_frames"),
-    )
-
-
-@register("multimodal_features", """
-WITH hx AS (SELECT doc_id, md5(text) AS h FROM documents),
-nib AS (
-  SELECT doc_id, unnest(list_transform(range(0, 16),
-         i -> CAST(concat('0x', substr(h, CAST(2 * i + 1 AS INTEGER), 1)) AS INTEGER))) AS vbin
-  FROM hx
-),
-cnt AS (SELECT doc_id, vbin, count(*) AS c FROM nib GROUP BY doc_id, vbin),
-pos AS (SELECT doc_id, unnest(range(0, 16)) AS pos FROM hx)
-SELECT p.doc_id, CAST(p.pos AS INTEGER) AS pos,
-       round(coalesce(c.c, 0) / 16.0, 4) AS val
-FROM pos p LEFT JOIN cnt c ON p.doc_id = c.doc_id AND p.pos = c.vbin
-""")
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched (stub) decode -> 16-dim features, exploded to
-    (doc_id, pos, val) scalar rows.  The fake decoder is a 16-bin
-    high-nibble byte histogram of md5(text) bytes, L1-normalized —
-    deterministic md5 math, so DuckDB reproduces it from the hex digest
-    (high nibble of byte i = hex char 2i+1): a full hash-match oracle,
-    not a rows-only check."""
-    docs = _docs(spark, sf_dir)
-    feats = mm.decode_features(mm.attach_fake_media(docs))
-    return feats.select("doc_id", F.posexplode("features").alias("pos", "val")) \
-                .withColumn("val", F.round(F.col("val").cast("double"), 4))
 
 
 def _multimodal_neardup_oracle_sql() -> str:
@@ -2566,8 +1890,8 @@ FROM cand WHERE {agree} >= 0.5
 
 @register("multimodal_neardup_lsh", _multimodal_neardup_oracle_sql())
 def multimodal_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup detection on the BINARY media column itself (VERDICT
-    r7 item 6): distinct 4-byte shingles of the payload (pure
+    """Near-dup detection on the BINARY media column itself: distinct
+    4-byte shingles of the payload (pure
     expression — dynamic substring + hex, no decode, no Python) feed
     ``dd.minhash_from_shingles``, and the text tier's MinHash(64) +
     LSH(16x4) machinery applies verbatim — hashing, banding, the
@@ -2604,32 +1928,6 @@ def multimodal_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id_a", "id_b", F.round(est, 3).alias("est_jacc")))
 
 
-@register("events_vector_stats", """
-SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket, event_type, pos,
-       CAST(sum(elem) AS BIGINT) AS val
-FROM (
-  SELECT ts, event_type,
-         unnest([mv, mv * mv, 1::BIGINT]) AS elem,
-         unnest([0, 1, 2]) AS pos
-  FROM (SELECT ts, event_type, CAST(round(value * 1000) AS BIGINT) AS mv FROM events)
-) GROUP BY hour_bucket, event_type, pos
-""")
-def events_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming/monoid_stream.py: single-pass vector stats
-    [sum, sum_sq, count] per hour x type via the element-wise monoid sum.
-    Values are quantized to integer milli-units so the sums are exact in
-    any engine (float sums round-trip differently at the last ulp)."""
-    e = _events(spark, sf_dir)
-    mv = F.round(F.col("value") * 1000).cast("bigint")
-    vec = F.array(mv, mv * mv, F.lit(1).cast("bigint"))
-    return (
-        e.select(F.floor(F.col("sec") / 3600).cast("bigint").alias("hour_bucket"),
-                 "event_type", F.posexplode(vec).alias("pos", "elem"))
-        .groupBy("hour_bucket", "event_type", "pos")
-        .agg(F.sum("elem").alias("val"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # As-of and range joins (operators Spark lacks natively)
 # ---------------------------------------------------------------------------
@@ -2637,120 +1935,10 @@ def events_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 from datafusion_monoid_spark.operators import joins as jn
 
 
-@register("asof_purchase_click", """
-WITH l AS (
-  SELECT event_id, user_id, epoch_ns(ts) AS ns, value
-  FROM events WHERE event_type = 'purchase'
-),
-r0 AS (
-  SELECT user_id, epoch_ns(ts) AS ns, value, event_id,
-         row_number() OVER (PARTITION BY user_id, epoch_ns(ts)
-                            ORDER BY event_id DESC) AS rn
-  FROM events WHERE event_type = 'click'
-),
-r AS (SELECT user_id, ns, value, event_id FROM r0 WHERE rn = 1)
-SELECT l.event_id, l.user_id,
-       r.event_id AS matched_event_id,
-       CAST(round(coalesce(r.value, -1) * 1000) AS BIGINT) AS matched_value_mu
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ns >= r.ns
-""")
-def asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For every purchase, the user's most recent click at-or-before it —
-    the classic as-of join, via one shuffle + sorted window (no cross
-    product).  DuckDB's native ASOF JOIN is the oracle."""
-    e = _events(spark, sf_dir)
-    left = (e.where(F.col("event_type") == "purchase")
-            .select("event_id", "user_id", F.col("ts").alias("ns"), "value"))
-    w = Window.partitionBy("user_id", "ns").orderBy(F.col("event_id").desc())
-    right = (e.where(F.col("event_type") == "click")
-             .select("user_id", F.col("ts").alias("ns"), "value", "event_id")
-             .withColumn("rn", F.row_number().over(w)).where("rn = 1").drop("rn"))
-    j = jn.asof_join(left, right, on="ns", by="user_id",
-                     right_cols=["value", "event_id"])
-    return j.select(
-        "event_id", "user_id",
-        F.col("matched_event_id"),
-        F.round(F.coalesce(F.col("matched_value"), F.lit(-1.0)) * 1000)
-        .cast("bigint").alias("matched_value_mu"),
-    )
-
-
-@register("range_join_price_tiers", """
-WITH tiers AS (
-  SELECT * FROM (VALUES ('t1', 0.0, 50000.0), ('t2', 50000.0, 150000.0),
-                        ('t3', 150000.0, 300000.0), ('t4', 300000.0, 600000.0),
-                        ('t5', 600000.0, 100000000.0)) AS t(tier, lo, hi)
-)
-SELECT tier, count(*) AS n_orders, CAST(round(sum(o_totalprice)) AS BIGINT) AS revenue
-FROM orders JOIN tiers ON o_totalprice >= lo AND o_totalprice < hi
-GROUP BY tier
-""")
-def range_join_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join orders into price tiers via bucketed equi-join (the
-    scale path for interval joins — no nested loop)."""
-    o = _t(spark, sf_dir, "orders")
-    tiers = spark.createDataFrame(
-        [("t1", 0.0, 50000.0), ("t2", 50000.0, 150000.0),
-         ("t3", 150000.0, 300000.0), ("t4", 300000.0, 600000.0),
-         ("t5", 600000.0, 100000000.0)],
-        "tier string, lo double, hi double")
-    j = jn.range_join_bucketed(o, tiers, "o_totalprice", "lo", "hi",
-                               granularity=50000.0)
-    return j.groupBy("tier").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice")).cast("bigint").alias("revenue"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Host-surface depth: multi-way join + top-k, semi/anti joins, cube,
 # pivot, multi-granularity grouping-sets rollup
 # ---------------------------------------------------------------------------
-
-@register("q3_shipping_priority", """
-SELECT o_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       o_orderpriority
-FROM customer JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey, o_orderpriority
-ORDER BY revenue DESC, o_orderkey LIMIT 20
-""")
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective dimension filter -> fact join -> agg ->
-    global top-k.  customer broadcasts; lineitem only shuffles for the
-    aggregation."""
-    c = F.broadcast(_t(spark, sf_dir, "customer")
-                    .where(F.col("c_mktsegment") == "BUILDING"))
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-             .alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(20)
-        .select("o_orderkey", "revenue", "o_orderpriority")
-    )
-
-
-@register("q4_semi_join", """
-SELECT o_orderpriority, count(*) AS n
-FROM orders
-WHERE EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-GROUP BY o_orderpriority
-""")
-def q4_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS decorrelates to a LEFT SEMI join."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 45)
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 @register("q5_local_supplier_volume", """
@@ -2837,312 +2025,12 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("anti_join_silent_customers", """
-SELECT c_mktsegment, count(*) AS n
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-GROUP BY c_mktsegment
-""")
-def anti_join_silent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS -> LEFT ANTI join: customers with no pending order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@register("left_join_customer_orders", """
-SELECT c_custkey, c_mktsegment,
-       count(o_orderkey) AS n_orders,
-       CAST(coalesce(sum(CAST(round(o_totalprice * 100) AS BIGINT)), 0)
-            AS BIGINT) AS total_spend_cents
-FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-GROUP BY c_custkey, c_mktsegment
-""")
-def left_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain LEFT OUTER join with null-side aggregation: every customer
-    keeps a row; customers with no orders aggregate over the null side
-    (count(o_orderkey)=0, spend coalesced to 0).  Spend is summed in
-    exact integer cents — float sums land on .5 boundaries and round
-    differently per engine (order-dependent last ulp)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"))
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.count("o_orderkey").alias("n_orders"),
-             F.coalesce(F.sum("cents"), F.lit(0)).cast("bigint")
-              .alias("total_spend_cents"))
-    )
-
-
-@register("full_outer_join_activity", """
-WITH big_cust AS (
-  SELECT c_nationkey AS nation_key, count(*) AS n_cust
-  FROM customer WHERE c_acctbal > 9000 GROUP BY c_nationkey
-),
-poor_supp AS (
-  SELECT s_nationkey AS nation_key, count(*) AS n_supp
-  FROM supplier WHERE s_acctbal < 0 GROUP BY s_nationkey
-)
-SELECT coalesce(b.nation_key, p.nation_key) AS nation_key,
-       CAST(coalesce(b.n_cust, 0) AS BIGINT) AS n_cust,
-       CAST(coalesce(p.n_supp, 0) AS BIGINT) AS n_supp
-FROM big_cust b FULL OUTER JOIN poor_supp p ON b.nation_key = p.nation_key
-""")
-def full_outer_join_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join of two asymmetric per-nation aggregates (selective
-    filters guarantee each side misses some nations): null sides coalesce
-    to 0 so both unmatched directions are exercised."""
-    c = (_t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000)
-         .groupBy(F.col("c_nationkey").alias("nation_key"))
-         .agg(F.count(F.lit(1)).alias("n_cust")))
-    s = (_t(spark, sf_dir, "supplier").where(F.col("s_acctbal") < 0)
-         .groupBy(F.col("s_nationkey").alias("nation_key"))
-         .agg(F.count(F.lit(1)).alias("n_supp")))
-    return (
-        c.alias("b").join(s.alias("p"),
-                          F.col("b.nation_key") == F.col("p.nation_key"), "full")
-        .select(
-            F.coalesce(F.col("b.nation_key"), F.col("p.nation_key")).alias("nation_key"),
-            F.coalesce(F.col("b.n_cust"), F.lit(0)).cast("bigint").alias("n_cust"),
-            F.coalesce(F.col("p.n_supp"), F.lit(0)).cast("bigint").alias("n_supp"),
-        )
-    )
-
-
-@register("cube_order_stats", """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-       round(sum(o_totalprice), 2) AS revenue
-FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-""")
-def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE: all 2^2 grouping combinations in one pass."""
-    o = _t(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-
-
-@register("pivot_status_by_priority", """
-SELECT o_orderpriority,
-       count(*) FILTER (o_orderstatus = 'F') AS status_f,
-       count(*) FILTER (o_orderstatus = 'O') AS status_o,
-       count(*) FILTER (o_orderstatus = 'P') AS status_p
-FROM orders GROUP BY o_orderpriority
-""")
-def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot order status into columns (explicit value list — at scale
-    never let pivot() scan for distinct values)."""
-    o = _t(spark, sf_dir, "orders")
-    p = (o.groupBy("o_orderpriority")
-         .pivot("o_orderstatus", ["F", "O", "P"])
-         .agg(F.count(F.lit(1))))
-    return p.select(
-        "o_orderpriority",
-        F.coalesce("F", F.lit(0)).alias("status_f"),
-        F.coalesce("O", F.lit(0)).alias("status_o"),
-        F.coalesce("P", F.lit(0)).alias("status_p"),
-    )
-
-
-@register("events_multi_rollup", """
-SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket,
-       CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_bucket,
-       event_type, count(*) AS n,
-       CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT) AS total_mu
-FROM events
-GROUP BY GROUPING SETS ((hour_bucket, event_type), (day_bucket, event_type),
-                        (day_bucket), ())
-""")
-def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style continuous-aggregate shape: hourly, daily,
-    daily-total, and grand-total rollups in ONE pass via grouping sets —
-    at scale this feeds materialized rollup tables without re-scanning."""
-    e = _events(spark, sf_dir)
-    mv = F.round(F.col("value") * 1000).cast("bigint")
-    base = e.select(
-        F.floor(F.col("sec") / 3600).cast("bigint").alias("hour_bucket"),
-        F.floor(F.col("sec") / 86400).cast("bigint").alias("day_bucket"),
-        "event_type", mv.alias("mv"))
-    base.createOrReplaceTempView("__ev_rollup")
-    return spark.sql("""
-        SELECT hour_bucket, day_bucket, event_type,
-               count(*) AS n, CAST(sum(mv) AS BIGINT) AS total_mu
-        FROM __ev_rollup
-        GROUP BY GROUPING SETS ((hour_bucket, event_type),
-                                (day_bucket, event_type), (day_bucket), ())
-    """)
-
-
-# ---------------------------------------------------------------------------
-# SQL-UDAF entry-point parity + composite pipeline
-# ---------------------------------------------------------------------------
-
-@register("pipeline_clean_corpus", f"""
-WITH t AS (
-  SELECT doc_id, text, {_NORM} AS norm, {_TOKS} AS toks FROM documents
-),
-f AS (
-  SELECT doc_id, norm, toks,
-         len(list_filter(toks, x -> list_contains(
-             ['the','and','of','to','a','in','is','that'], x)))::DOUBLE
-           / greatest(len(toks), 1) AS stop_ratio,
-         len(toks) AS n_tokens
-  FROM t
-),
-q AS (SELECT * FROM f WHERE n_tokens >= 10 AND stop_ratio >= 0.02),
-d AS (SELECT md5(norm) AS k, min(doc_id) AS keep_id, min(len(toks)) AS toks_n
-      FROM q GROUP BY md5(norm))
-SELECT count(*) AS n_docs, CAST(sum(toks_n) AS BIGINT) AS total_tokens
-FROM d
-""")
-def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite training-data pipeline: quality gate -> exact dedup ->
-    token budget, in one declarative plan.
-
-    The quality columns are pinned (plans/fence.py): unpinned, the
-    quality predicate is rewritten to contain the tokenizer and pushed
-    to the scan, tokenizing every document TWICE (once in the filter,
-    once for n_tokens) with the filter copy on the scan's split count.
-    Measured at sf1: 1.74 -> 0.83 s steady-state.  The pin's shuffle
-    carries only the projected narrow columns + text, and the filter
-    kept nothing scan-prunable anyway (it needs the tokens)."""
-    from datafusion_monoid_spark.operators import dedup as ddp
-    from datafusion_monoid_spark.plans.fence import pin_columns
-    docs = _docs(spark, sf_dir)
-    toks = ddp.tokens("text")
-    en = tx.LANG_MARKERS["en"]
-    filtered = pin_columns(
-        docs.select("doc_id", "text", F.size(toks).alias("n_tokens"),
-                    (F.size(F.filter(toks, lambda x: x.isin(*en)))
-                     / F.greatest(F.size(toks), F.lit(1))).alias("stop_ratio")),
-        "doc_id"
-    ).where((F.col("n_tokens") >= 10) & (F.col("stop_ratio") >= 0.02))
-    deduped = (
-        ddp.exact_dedup_keys(filtered, "text")
-        .groupBy("dup_key")
-        .agg(F.min("doc_id").alias("keep_id"), F.min("n_tokens").alias("toks_n"))
-    )
-    return deduped.agg(F.count(F.lit(1)).alias("n_docs"),
-                       F.sum("toks_n").cast("bigint").alias("total_tokens"))
-
-
-# ---------------------------------------------------------------------------
-# Scalar function library coverage: exact percentiles, string/date/math
-# smoke, JSON extraction
-# ---------------------------------------------------------------------------
-
-@register("percentile_prices", """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.25), 2) AS p25,
-       round(quantile_cont(o_totalprice, 0.50), 2) AS p50,
-       round(quantile_cont(o_totalprice, 0.75), 2) AS p75,
-       round(quantile_cont(o_totalprice, 0.95), 2) AS p95
-FROM orders GROUP BY o_orderpriority
-""")
-def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT percentiles (linear interpolation — matches quantile_cont).
-    At 100 TB switch to percentile_approx and drop the oracle: exact
-    percentile needs a per-group sort."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(*[
-        F.round(F.percentile("o_totalprice", F.lit(q)), 2).alias(f"p{int(q*100)}")
-        for q in (0.25, 0.50, 0.75, 0.95)
-    ])
-
-
-@register("scalar_functions_smoke", """
-SELECT o_orderkey,
-       upper(substr(o_orderpriority, 1, 1)) AS pri_code,
-       length(o_orderstatus) AS status_len,
-       CAST(year(o_orderdate) AS INTEGER) AS yr,
-       CAST(month(o_orderdate) AS INTEGER) AS mo,
-       round(abs(o_totalprice - 100000.0), 2) AS dist_100k,
-       round(ln(greatest(o_totalprice, 1.0)), 4) AS log_price,
-       CASE WHEN o_totalprice > 200000 THEN 'high'
-            WHEN o_totalprice > 50000 THEN 'mid' ELSE 'low' END AS tier,
-       concat(o_orderstatus, '-', substr(o_orderpriority, 1, 1)) AS tag
-FROM orders WHERE o_orderkey % 10 = 0
-""")
-def scalar_functions_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar library breadth in one oracle-checked pass: string
-    (upper/substr/length/concat), date (year/month), math (abs/ln/
-    greatest/round), conditional (CASE)."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 10 == 0)
-    return o.select(
-        "o_orderkey",
-        F.upper(F.substring("o_orderpriority", 1, 1)).alias("pri_code"),
-        F.length("o_orderstatus").cast("bigint").alias("status_len"),
-        F.year("o_orderdate").cast("int").alias("yr"),
-        F.month("o_orderdate").cast("int").alias("mo"),
-        F.round(F.abs(F.col("o_totalprice") - 100000.0), 2).alias("dist_100k"),
-        F.round(F.log(F.greatest(F.col("o_totalprice"), F.lit(1.0))), 4).alias("log_price"),
-        F.when(F.col("o_totalprice") > 200000, "high")
-         .when(F.col("o_totalprice") > 50000, "mid").otherwise("low").alias("tier"),
-        F.concat("o_orderstatus", F.lit("-"),
-                 F.substring("o_orderpriority", 1, 1)).alias("tag"),
-    )
-
-
-@register("events_json_extract", """
-SELECT event_type,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_total,
-       count(*) FILTER (json_extract_string(props, '$.k') IS NOT NULL) AS k_present
-FROM events GROUP BY event_type
-""")
-def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured column processing: JSON path extraction + typed
-    aggregation over the events props payload."""
-    e = _events(spark, sf_dir)  # events needs the nanos-ts reader
-    k = F.get_json_object("props", "$.k")
-    return e.groupBy("event_type").agg(
-        F.sum(k.cast("bigint")).cast("bigint").alias("k_total"),
-        F.count(k).alias("k_present"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-Min Sketch (a sketch that IS a monoid), window breadth,
 # correlated subquery
 # ---------------------------------------------------------------------------
 
 from datafusion_monoid_spark.operators import sketch as sk
-
-
-def _cms_oracle_sql(depth: int = 4, width: int = 256) -> str:
-    hashes = ", ".join(
-        f"{sk.cms_hash_sql('t', i, width)} AS h{i}" for i in range(depth))
-    unn_h = "[" + ", ".join(f"h{i}" for i in range(depth)) + "]"
-    unn_d = "[" + ", ".join(str(i) for i in range(depth)) + "]"
-    return f"""
-WITH tok AS (
-  SELECT unnest({_TOKS}) AS t FROM documents
-),
-hashed AS (SELECT {hashes} FROM tok),
-ex AS (SELECT unnest({unn_h}) AS bucket, unnest({unn_d}) AS depth FROM hashed)
-SELECT CAST(depth AS INTEGER) AS depth, CAST(bucket AS BIGINT) AS bucket,
-       count(*) AS cnt
-FROM ex GROUP BY depth, bucket
-"""
-
-
-@register("cms_token_sketch", _cms_oracle_sql())
-def cms_token_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min Sketch of the document token stream — a sketch whose
-    merge IS the element-wise monoid sum (partial-agg/streaming safe by
-    the same algebra as the array_reduce core).  The sketch matrix is
-    deterministic, so DuckDB verifies it cell-for-cell; estimation
-    guarantees are pinned in tests/test_sketch.py."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(F.explode(dd.tokens("text")).alias("tok"))
-    return sk.cms_build(toks, "tok", depth=4, width=256) \
-             .withColumn("depth", F.col("depth").cast("int"))
 
 
 def _cms_hh_oracle_sql(depth: int = 4, width: int = 256, k: int = 25) -> str:
@@ -3195,169 +2083,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.col("estimate").desc(), F.col("tok"))
     return (top.withColumn("rk", F.row_number().over(w))
             .select("tok", F.col("estimate").cast("bigint").alias("estimate"), "rk"))
-
-
-def _hll_regs_oracle_sql() -> str:
-    idx, rho = sk.hll_idx_rho_sql("t")
-    return f"""
-WITH tokstream AS (SELECT unnest({_TOKS}) AS t FROM documents)
-SELECT {idx} AS idx, CAST(max({rho}) AS INTEGER) AS rho
-FROM tokstream GROUP BY 1
-"""
-
-
-@register("hll_registers", _hll_regs_oracle_sql())
-def hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog register table over the document token stream.
-
-    The sketch is a MAX-monoid (like the CMS is a SUM-monoid): registers
-    built per-partition merge by element-wise max, so the build is one
-    partial-agg shuffle of at most 256 rows per partition regardless of
-    corpus size.  Deterministic md5 ranks => DuckDB verifies the
-    registers cell-for-cell."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(F.explode(dd.tokens("text")).alias("tok"))
-    return sk.hll_build(toks, "tok")
-
-
-def _hll_est_oracle_sql() -> str:
-    idx, rho = sk.hll_idx_rho_sql("t")
-    w_bits1 = sk.HLL_W_BITS + 1
-    return f"""
-WITH tokstream AS (SELECT unnest({_TOKS}) AS t FROM documents),
-regs AS (SELECT {idx} AS idx, max({rho}) AS rho FROM tokstream GROUP BY 1),
-s AS (
-  SELECT count(*) AS nreg,
-         CAST(sum(CAST(pow(2, {w_bits1} - rho) AS BIGINT)) AS BIGINT) AS s_present
-  FROM regs
-)
-SELECT CAST(nreg AS BIGINT) AS nonzero_regs,
-       CAST(floor({sk.HLL_NUMER!r} /
-            CAST(s_present + ({sk.HLL_M} - nreg) * {2 ** w_bits1} AS DOUBLE))
-            AS BIGINT) AS hll_estimate,
-       (SELECT CAST(count(DISTINCT t) AS BIGINT) FROM tokstream) AS exact_distinct
-FROM s
-"""
-
-
-@register("hll_distinct_tokens", _hll_est_oracle_sql())
-def hll_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-token cardinality estimate from the HLL registers, next
-    to the exact count.  The harmonic sum is exact integer math and the
-    single float division uses one shared literal numerator, so even the
-    ESTIMATE hash-matches across engines (accuracy bound ~6.5% for
-    m=256 is pinned in tests/test_sketch.py)."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(F.explode(dd.tokens("text")).alias("tok"))
-    est = sk.hll_estimate(sk.hll_build(toks, "tok"))
-    exact = toks.agg(F.count_distinct("tok").cast("bigint")
-                     .alias("exact_distinct"))
-    return est.crossJoin(exact)
-
-
-def _bloom_cte() -> str:
-    k, m = sk.BLOOM_K, sk.BLOOM_M
-    hashes = "[" + ", ".join(sk.cms_hash_sql("t", i, m) for i in range(k)) + "]"
-    return f"""
-WITH tokstream AS (SELECT unnest({_TOKS}) AS t FROM documents),
-keys AS (SELECT DISTINCT t FROM tokstream),
-bloom AS (SELECT DISTINCT unnest({hashes}) AS bit FROM keys)"""
-
-
-@register("bloom_token_bits", f"{_bloom_cte()} SELECT bit FROM bloom")
-def bloom_token_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom filter bit set over the distinct document tokens — the
-    SET-UNION monoid sketch (merge = bit union), at most BLOOM_M rows
-    out of any corpus size.  DuckDB rebuilds the identical bits."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(F.explode(dd.tokens("text")).alias("tok")).distinct()
-    return sk.bloom_build(toks, "tok")
-
-
-def _bloom_probe_oracle_sql() -> str:
-    k, m = sk.BLOOM_K, sk.BLOOM_M
-    probe_hashes = "[" + ", ".join(
-        sk.cms_hash_sql("probe_key", i, m) for i in range(k)) + "]"
-    return f"""{_bloom_cte()},
-probes AS (
-  SELECT t AS probe_key FROM keys
-  UNION ALL
-  SELECT concat(t, '-absent') FROM keys
-),
-pb AS (SELECT probe_key, unnest({probe_hashes}) AS bit FROM probes),
-hit AS (
-  SELECT probe_key, count(bloom.bit) AS nhit
-  FROM pb LEFT JOIN bloom USING (bit) GROUP BY probe_key
-)
-SELECT probe_key, nhit = {k} AS maybe_present FROM hit
-"""
-
-
-@register("bloom_token_membership", _bloom_probe_oracle_sql())
-def bloom_token_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Membership probes against the token Bloom filter: every real
-    token (always present — no false negatives) plus a '-absent' twin
-    per token (false positives only at the documented rate, and
-    deterministically — same keys, same bits, same answer in DuckDB)."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(F.explode(dd.tokens("text")).alias("tok")).distinct()
-    bloom = sk.bloom_build(toks, "tok")
-    probes = (toks.select(F.col("tok").alias("probe_key"))
-              .unionByName(toks.select(
-                  F.concat(F.col("tok"), F.lit("-absent")).alias("probe_key"))))
-    return sk.bloom_probe(bloom, probes, "probe_key")
-
-
-@register("window_functions_smoke", """
-SELECT o_orderkey,
-       CAST(rank()       OVER w AS INTEGER) AS rnk,
-       CAST(dense_rank() OVER w AS INTEGER) AS drnk,
-       CAST(ntile(4)     OVER w AS INTEGER) AS quartile,
-       round(o_totalprice - lag(o_totalprice, 1, 0.0) OVER w, 2) AS delta_prev,
-       round(lead(o_totalprice, 1, 0.0) OVER w - o_totalprice, 2) AS delta_next,
-       round(sum(o_totalprice) OVER (PARTITION BY o_orderpriority
-                                     ORDER BY o_totalprice, o_orderkey
-                                     ROWS UNBOUNDED PRECEDING), 2) AS running
-FROM orders
-WHERE o_orderkey % 20 = 0
-WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-""")
-def window_functions_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window breadth in one oracle-checked pass: rank, dense_rank,
-    ntile, lag/lead with defaults, running sum."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 20 == 0)
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return o.select(
-        "o_orderkey",
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.col("o_totalprice") - F.lag("o_totalprice", 1, 0.0).over(w), 2)
-         .alias("delta_prev"),
-        F.round(F.lead("o_totalprice", 1, 0.0).over(w) - F.col("o_totalprice"), 2)
-         .alias("delta_next"),
-        F.round(F.sum("o_totalprice").over(wrun), 2).alias("running"),
-    )
-
-
-@register("q17_small_quantity_revenue", """
-SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-FROM lineitem l1
-WHERE l_quantity < (SELECT 0.5 * avg(l_quantity) FROM lineitem l2
-                    WHERE l2.l_partkey = l1.l_partkey)
-""")
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery — expressed as a
-    window average so Catalyst computes it in one pass instead of a
-    rejoin (the decorrelated plan)."""
-    li = _t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_partkey")
-    return (
-        li.withColumn("__avg_q", F.avg("l_quantity").over(w))
-        .where(F.col("l_quantity") < 0.5 * F.col("__avg_q"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3504,74 +2229,6 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 from datafusion_monoid_spark.operators import sampling as smp
 
 _BUCKET = ("(" + dd.md5_long_sql("CAST(doc_id AS VARCHAR)") + f" % {smp.SPLIT_MOD})")
-
-
-@register("sample_token_stats", f"""
-WITH s AS (SELECT doc_id, text FROM documents WHERE {_BUCKET} < 100),
-t AS (SELECT doc_id, len(list_filter(string_split({_NORM}, ' '), x -> x != ''))
-             AS n_toks
-      FROM s)
-SELECT count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS total_tokens
-FROM t
-""")
-def sample_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token budget of a deterministic 10% hash-sample — identical
-    membership on every run, partitioning, and engine."""
-    docs = _docs(spark, sf_dir)
-    s = smp.hash_sample(docs, "doc_id", 0.1)
-    c = tx.token_counts("text")
-    return (s.select(c["ws_tokens"].alias("n_toks"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_toks").cast("bigint").alias("total_tokens")))
-
-
-@register("train_test_split_sizes", f"""
-SELECT CASE WHEN {_BUCKET} < 100 THEN 'test' ELSE 'train' END AS side,
-       count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents GROUP BY side
-""")
-def train_test_split_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-free deterministic 90/10 split — the same key lands on
-    the same side forever."""
-    docs = _docs(spark, sf_dir)
-    train, test = smp.train_test_split(docs, "doc_id", 0.1)
-    return (
-        train.withColumn("side", F.lit("train"))
-        .unionByName(test.withColumn("side", F.lit("test")))
-        .groupBy("side")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.sum("n_chars").cast("bigint").alias("total_chars"))
-    )
-
-
-@register("pack_sequences_stats", f"""
-WITH sized AS (
-  SELECT doc_id,
-         len(list_filter(string_split({_NORM}, ' '), x -> x != '')) AS n_toks,
-         (({dd.md5_long_sql("CAST(doc_id AS VARCHAR)")}) % 8) AS shard
-  FROM documents
-),
-packed AS (
-  SELECT doc_id, n_toks, shard,
-         CAST(floor((sum(n_toks) OVER (PARTITION BY shard ORDER BY doc_id
-                                       ROWS UNBOUNDED PRECEDING) - n_toks)
-                    / 512) AS BIGINT) AS bin_id
-  FROM sized
-)
-SELECT CAST(shard AS BIGINT) AS shard, bin_id,
-       count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS bin_tokens
-FROM packed GROUP BY shard, bin_id
-""")
-def pack_sequences_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-sequence packing: shard-parallel deterministic first-fit
-    into ~512-token bins; per-bin document and token counts."""
-    docs = _docs(spark, sf_dir)
-    sized = docs.select("doc_id", tx.token_counts("text")["ws_tokens"].alias("n_toks"))
-    packed = smp.pack_sequences(sized, "doc_id", "n_toks",
-                                max_tokens=512, n_shards=8)
-    return (packed.groupBy(F.col("shard").cast("bigint").alias("shard"), "bin_id")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_toks").cast("bigint").alias("bin_tokens")))
 
 
 #: shard count for the training-shard export entry
@@ -3779,35 +2436,6 @@ def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n_sampled"))
 
 
-@register("doc_chunk_windows", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-starts AS (
-  SELECT doc_id, toks, unnest(range(0, len(toks), 56)) AS s
-  FROM t WHERE len(toks) > 0
-),
-ch AS (
-  SELECT doc_id, CAST(s / 56 AS INTEGER) AS chunk_idx,
-         list_slice(toks, s + 1, s + 64) AS chunk
-  FROM starts
-)
-SELECT doc_id, chunk_idx, CAST(len(chunk) AS INTEGER) AS chunk_len,
-       md5(array_to_string(chunk, ' ')) AS chunk_md5
-FROM ch
-""")
-def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping training windows (64 tokens, stride 56): one
-    generator expression per document, no shuffle — chunking rides the
-    scan stage.  Chunk content is pinned cross-engine by md5 of the
-    joined tokens."""
-    docs = _docs(spark, sf_dir).withColumn("__toks", dd.tokens("text"))
-    ch = smp.chunk_documents(docs, "doc_id", "__toks",
-                             chunk_tokens=64, overlap=8)
-    return ch.select(
-        "doc_id", F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.size("chunk").cast("int").alias("chunk_len"),
-        F.md5(F.concat_ws(" ", F.col("chunk"))).alias("chunk_md5"))
-
-
 # ---------------------------------------------------------------------------
 # Corpus curation: decontamination, repetition filters, TF-IDF, vocabulary
 # coverage (operators/curation.py).  All decision ratios are exact integer
@@ -3818,43 +2446,6 @@ from datafusion_monoid_spark.operators import curation as cu
 
 _SH4 = dd.shingles_sql("text", 4)
 _GH = dd.md5_long_sql("g")
-
-
-@register("decontam_ngram_overlap", f"""
-WITH ev AS (SELECT DISTINCT {_GH} AS gram_hash
-            FROM (SELECT unnest({_SH4}) AS g FROM documents
-                  WHERE doc_id % 97 = 0)),
-trg AS (SELECT doc_id, {_GH} AS gram_hash
-        FROM (SELECT doc_id, unnest({_SH4}) AS g FROM documents
-              WHERE doc_id % 97 <> 0)),
-hit AS (SELECT DISTINCT doc_id FROM trg JOIN ev USING (gram_hash)),
-tr AS (SELECT doc_id, source FROM documents WHERE doc_id % 97 <> 0)
-SELECT tr.source, count(*) AS n_train,
-       CAST(sum(CASE WHEN hit.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_contaminated
-FROM tr LEFT JOIN hit ON tr.doc_id = hit.doc_id
-GROUP BY tr.source
-""")
-def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: training docs sharing any word
-    4-gram with the held-out eval slice (doc_id % 97 == 0), reported
-    per source.  The eval n-gram hash set broadcasts (benchmarks are
-    MB-scale; the corpus is TB-scale), so the training side is a
-    map-only scan + broadcast semi-join — zero corpus shuffle at
-    100 TB."""
-    docs = _docs(spark, sf_dir)
-    ev = docs.where(F.col("doc_id") % 97 == 0)
-    tr = docs.where(F.col("doc_id") % 97 != 0)
-    hit = cu.contaminated_ids(cu.ngram_hashes(tr, "doc_id", "text", 4),
-                              cu.ngram_hashes(ev, "doc_id", "text", 4),
-                              "doc_id")
-    flagged = (tr.join(hit, "doc_id", "left_semi")
-               .groupBy("source").agg(F.count(F.lit(1)).alias("__n_hit")))
-    base = tr.groupBy("source").agg(F.count(F.lit(1)).alias("n_train"))
-    return (base.join(flagged, "source", "left")
-            .select("source", F.col("n_train").cast("bigint").alias("n_train"),
-                    F.coalesce(F.col("__n_hit"), F.lit(0)).cast("bigint")
-                     .alias("n_contaminated")))
 
 
 _SH13 = dd.shingles_sql("text", 13)
@@ -3932,79 +2523,6 @@ def decontam_prod_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_contaminated_13"))
 
 
-@register("curation_token_budget_mix", f"""
-WITH t AS (
-  SELECT doc_id, source, text, {_NORM} AS norm, {_TOKS} AS toks FROM documents
-),
-f AS (
-  SELECT doc_id, source, len(toks) AS n_tokens,
-         length(regexp_replace(norm, '[a-z0-9 ]', '', 'g'))
-           / greatest(length(text), 1)::DOUBLE AS punct_ratio,
-         len(list_filter(toks, t -> list_contains(
-             ['the','and','of','to','a','in','is','that'], t)))::DOUBLE
-           / greatest(len(toks), 1) AS stopword_ratio,
-         length(regexp_replace(norm, ' ', '', 'g'))
-           / greatest(len(toks), 1)::DOUBLE AS mean_token_len
-  FROM t
-),
-s AS (
-  SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
-         CAST(round((0.4 * (CASE WHEN n_tokens BETWEEN 5 AND 1000
-                                 THEN 1.0 ELSE 0.3 END)
-                   + 0.3 * (CASE WHEN mean_token_len BETWEEN 2 AND 12
-                                 THEN 1.0 ELSE 0.4 END)
-                   + 0.2 * least(stopword_ratio * 4, 1.0)
-                   + 0.1 * (1.0 - least(punct_ratio * 5, 1.0)))
-                   * 1000000) AS BIGINT) AS score_micro
-  FROM f
-),
-r AS (
-  SELECT *, sum(n_tokens) OVER (PARTITION BY source
-                                ORDER BY score_micro DESC, doc_id
-                                ROWS UNBOUNDED PRECEDING) AS cum
-  FROM s
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-       CAST(sum(n_tokens) AS BIGINT) AS tokens_kept,
-       CAST(min(score_micro) AS BIGINT) AS admission_micro
-FROM r WHERE cum <= 20000 GROUP BY source
-""")
-def curation_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget data mixing: each source contributes at most a
-    fixed token budget (20k here), admitting its highest-quality
-    documents first — the mixing step that turns a curated pool into a
-    training corpus with controlled source proportions.  Admission
-    order is (quality-score micro-units DESC, doc_id) — the score is
-    quantized to integers so the ordering (and therefore the kept set)
-    is bit-identical in any engine; output reports per-source kept
-    counts, kept tokens, and the admission threshold (min admitted
-    score — the number an operator watches to see how deep into the
-    quality tail the budget reaches).
-
-    Scale: the per-source ordered running sum is one shuffle on
-    ``source`` + an in-partition sort — exact-admission semantics.  At
-    100 TB-per-source, flip to the two-pass threshold form (per-source
-    token-weighted score histogram -> admission score at the budget
-    quantile -> stateless filter), which trades exact ties at the
-    threshold for a sort-free plan; the windowed form here IS the
-    oracle for that approximation."""
-    d = _docs(spark, sf_dir)
-    base = d.select(
-        "doc_id", "source",
-        F.size(dd.tokens("text")).cast("bigint").alias("n_tokens"),
-        F.round(tx.quality_score("text") * 1_000_000).cast("bigint")
-         .alias("score_micro"))
-    w = (Window.partitionBy("source")
-         .orderBy(F.col("score_micro").desc(), "doc_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    kept = base.withColumn("cum", F.sum("n_tokens").over(w)) \
-               .where(F.col("cum") <= 20000)
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-        F.sum("n_tokens").cast("bigint").alias("tokens_kept"),
-        F.min("score_micro").cast("bigint").alias("admission_micro"))
-
-
 @register("dedup_incremental_newbatch", f"""
 {_minhash_candidates_cte()},
 est AS (
@@ -4059,64 +2577,6 @@ def dedup_incremental_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (pairs.join(F.broadcast(sa), "new_id").join(sb, "old_id")
             .where(est >= 0.35)
             .select("new_id", "old_id", F.round(est, 3).alias("est_jacc")))
-
-
-@register("quality_repetition_filters", f"""
-WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
-uc AS (SELECT doc_id, term, count(*) AS c
-       FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-       GROUP BY doc_id, term),
-us AS (SELECT doc_id, max(c) AS tok_top, sum(c) AS tok_n,
-              count(*) AS tok_distinct
-       FROM uc GROUP BY doc_id),
-bc AS (SELECT doc_id, term, count(*) AS c
-       FROM (SELECT doc_id, unnest(
-               list_transform(range(0, greatest(len(toks) - 1, 0)),
-                              i -> array_to_string(toks[i + 1 : i + 2], ' ')))
-               AS term
-             FROM t)
-       GROUP BY doc_id, term),
-bs AS (SELECT doc_id, max(c) AS bg_top, sum(c) AS bg_n FROM bc GROUP BY doc_id),
-f AS (SELECT t.doc_id, t.source,
-             (coalesce(tok_top, 0) * 1000000)
-               // greatest(coalesce(tok_n, 0), 1) AS top_token_micro,
-             (coalesce(tok_distinct, 0) * 1000000)
-               // greatest(coalesce(tok_n, 0), 1) AS distinct_micro,
-             (coalesce(bg_top, 0) * 1000000)
-               // greatest(coalesce(bg_n, 0), 1) AS top_bigram_micro
-      FROM t LEFT JOIN us ON t.doc_id = us.doc_id
-             LEFT JOIN bs ON t.doc_id = bs.doc_id)
-SELECT source, count(*) AS n_docs,
-       CAST(sum(CASE WHEN top_token_micro >= {cu.TOP_TOKEN_FLAG_MICRO}
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_flag_top_token,
-       CAST(sum(CASE WHEN top_bigram_micro >= {cu.TOP_BIGRAM_FLAG_MICRO}
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_flag_top_bigram,
-       CAST(sum(CASE WHEN distinct_micro <= {cu.LOW_DIVERSITY_FLAG_MICRO}
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_flag_low_diversity,
-       CAST(sum(top_token_micro) AS BIGINT) AS sum_top_token_micro
-FROM f GROUP BY source
-""")
-def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition/diversity filters: per-source counts of
-    documents whose top token exceeds 12%, top bigram exceeds 6%, or
-    distinct-token ratio falls below 50%.  All ratios are exact
-    integer micro-units (integer division), so the flag decisions are
-    bit-identical in any engine — a float ratio would flake the gate
-    on documents sitting exactly at a threshold."""
-    docs = _docs(spark, sf_dir)
-    feats = cu.repetition_features(docs, "doc_id", "text",
-                                   keep_cols=("source",))
-    flag = lambda c: F.sum(c.cast("int")).cast("bigint")
-    return feats.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        flag(F.col("top_token_micro") >= cu.TOP_TOKEN_FLAG_MICRO)
-            .alias("n_flag_top_token"),
-        flag(F.col("top_bigram_micro") >= cu.TOP_BIGRAM_FLAG_MICRO)
-            .alias("n_flag_top_bigram"),
-        flag(F.col("distinct_micro") <= cu.LOW_DIVERSITY_FLAG_MICRO)
-            .alias("n_flag_low_diversity"),
-        F.sum("top_token_micro").cast("bigint").alias("sum_top_token_micro"),
-    )
 
 
 @register("tfidf_top_terms", f"""
@@ -4177,67 +2637,6 @@ def vocab_topk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TPC-H breadth: Q6 / Q14 / Q18 / Q19 shapes over the available columns.
 # ---------------------------------------------------------------------------
 
-@register("q6_forecast_revenue", """
-SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 100) AS BIGINT))
-            AS BIGINT) AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-""")
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter + ungrouped agg — the pushdown
-    showcase.  All three predicates reach the parquet scan
-    (PushedFilters), the projection prunes to 4 columns, and the agg
-    is a 1-row partial+final reduce: at 100 TB this is I/O-bound scan
-    speed, nothing else.  Revenue in exact integer cents."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24))
-    return li.agg(
-        F.sum(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100)
-              .cast("bigint")).cast("bigint").alias("revenue_cents"),
-        F.count(F.lit(1)).alias("n_items"))
-
-
-@register("q14_promo_revenue", """
-WITH j AS (
-  SELECT CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
-           AS cents,
-         p_type
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE l_shipdate >= '1996-03-01' AND l_shipdate < '1996-04-01'
-)
-SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END) AS BIGINT)
-         AS promo_cents,
-       CAST(sum(cents) AS BIGINT) AS total_cents,
-       CAST((sum(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END) * 1000000)
-            // sum(cents) AS BIGINT) AS promo_micro
-FROM j
-""")
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: promo-revenue share for one month.  The part
-    dimension broadcasts (lineitem never shuffles); the share is exact
-    integer micro-units of exact cent sums — a float percentage would
-    depend on engine-specific division rounding."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .where((F.col("l_shipdate") >= "1996-03-01")
-                 & (F.col("l_shipdate") < "1996-04-01"))
-          .select("l_partkey",
-                  F.round(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                          * 100).cast("bigint").alias("cents")))
-    p = F.broadcast(_t(spark, sf_dir, "part").select("p_partkey", "p_type"))
-    j = li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    promo = F.sum(F.when(F.col("p_type") == "PROMO", F.col("cents"))
-                  .otherwise(F.lit(0)))
-    total = F.sum("cents")
-    return j.agg(
-        promo.cast("bigint").alias("promo_cents"),
-        total.cast("bigint").alias("total_cents"),
-        cu.micro_ratio(promo, total).alias("promo_micro"))
-
 
 @register("q18_large_volume_customer", """
 WITH big AS (SELECT l_orderkey, CAST(sum(l_quantity) AS BIGINT) AS total_qty
@@ -4279,215 +2678,13 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20))
 
 
-@register("q19_disjunctive_revenue", """
-SELECT CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-            AS BIGINT) AS revenue_cents,
-       count(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#9'  AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#20' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
-""")
-def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: OR-of-ANDs across both join sides (adapted to
-    the available columns — the synthetic lineitem has no
-    shipmode/shipinstruct).  Catalyst pushes the single-side residuals
-    (brand/size disjunction to the part scan, quantity range to the
-    lineitem scan) and evaluates the cross-side disjunction post-join;
-    part broadcasts."""
-    def leg(brand: str, size_hi: int, q_lo: int, q_hi: int):
-        return ((F.col("p_brand") == brand)
-                & F.col("p_size").between(1, size_hi)
-                & F.col("l_quantity").between(q_lo, q_hi))
-
-    li = _t(spark, sf_dir, "lineitem")
-    p = F.broadcast(_t(spark, sf_dir, "part")
-                    .select("p_partkey", "p_brand", "p_size"))
-    j = li.join(p, F.col("l_partkey") == F.col("p_partkey")).where(
-        leg("Brand#3", 5, 1, 11) | leg("Brand#9", 10, 10, 20)
-        | leg("Brand#20", 15, 20, 30))
-    return j.agg(
-        F.sum(F.round(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                      * 100).cast("bigint")).cast("bigint")
-         .alias("revenue_cents"),
-        F.count(F.lit(1)).alias("n_items"))
-
-
-@register("embedding_quantize_int8", """
-WITH v AS (SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-                  unnest(range(0, len(embedding))) AS pos
-           FROM embeddings),
-st AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM v GROUP BY pos),
-q AS (SELECT v.pos,
-             CASE WHEN mx = mn THEN 0
-                  ELSE CAST(floor((x - mn) * 255.0 / (mx - mn)) AS BIGINT)
-             END AS qv
-      FROM v JOIN st ON v.pos = st.pos)
-SELECT CAST(pos AS INTEGER) AS pos,
-       CAST(min(qv) AS BIGINT) AS qmin, CAST(max(qv) AS BIGINT) AS qmax,
-       CAST(sum(qv) AS BIGINT) AS sum_q, count(*) AS n
-FROM q GROUP BY pos
-""")
-def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension int8 affine quantization of the embedding table —
-    the storage/ANN-recall trade every vector pipeline makes.  Two
-    passes: per-dim min/max (64-row result, broadcast back), then
-    quantize + per-dim stats.  The quantized code is
-    ``floor((x-mn)*255/(mx-mn))``: identical IEEE-754 expression tree
-    on both engines, and floor (not round) avoids half-tie semantics
-    differences.  Both aggregations are partial-agg friendly; nothing
-    ever materializes per-vector state."""
-    v = (_emb(spark, sf_dir)
-         .select("vec_id", F.posexplode(F.col("embedding").cast("array<double>"))
-                 .alias("pos", "x")))
-    st = v.groupBy("pos").agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-    q = (v.join(F.broadcast(st), "pos")
-         .select("pos",
-                 F.when(F.col("mx") == F.col("mn"), F.lit(0).cast("bigint"))
-                  .otherwise(F.floor((F.col("x") - F.col("mn")) * 255.0
-                                     / (F.col("mx") - F.col("mn"))))
-                  .alias("qv")))
-    return (q.groupBy(F.col("pos").cast("int").alias("pos"))
-            .agg(F.min("qv").cast("bigint").alias("qmin"),
-                 F.max("qv").cast("bigint").alias("qmax"),
-                 F.sum("qv").cast("bigint").alias("sum_q"),
-                 F.count(F.lit(1)).alias("n")))
-
-
 # ---------------------------------------------------------------------------
 # Data layout (Z-order zone maps) and entity resolution (deletion-
 # neighborhood fuzzy matching) — operators/layout.py, operators/linkage.py.
 # ---------------------------------------------------------------------------
 
-from datafusion_monoid_spark.operators import layout as ly
-from datafusion_monoid_spark.operators import linkage as lk
-
-_ZX = "(o_custkey % 1024)"
-_ZY = "(date_diff('day', DATE '1995-01-01', o_orderdate) % 1024)"
-
-
-@register("zorder_layout_stats", f"""
-WITH coded AS (
-  SELECT {ly.morton_code_sql(_ZX, _ZY)} AS z,
-         {_ZX} AS x, {_ZY} AS y
-  FROM orders
-)
-SELECT CAST(z >> 12 AS BIGINT) AS bucket, count(*) AS n_rows,
-       CAST(min(x) AS BIGINT) AS x_min, CAST(max(x) AS BIGINT) AS x_max,
-       CAST(min(y) AS BIGINT) AS y_min, CAST(max(y) AS BIGINT) AS y_max
-FROM coded GROUP BY bucket
-""")
-def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout quality: Morton-interleave (customer, order-day)
-    and report per-bucket zone maps (min/max of BOTH dimensions per
-    code-range bucket).  Tight ranges on both axes are what lets a
-    100 TB scan skip files on either predicate — the write-side twin
-    is ``layout.zorder_repartition`` + parquet.  The Morton code is
-    pure shift/mask integer math, bit-identical in any engine."""
-    o = _t(spark, sf_dir, "orders")
-    x = (F.col("o_custkey") % 1024).cast("bigint")
-    y = (F.datediff(F.col("o_orderdate"), F.lit("1995-01-01")) % 1024) \
-        .cast("bigint")
-    coded = o.select(ly.morton_code(x, y).alias("z"),
-                     x.alias("x"), y.alias("y"))
-    return ly.zone_map_stats(coded, F.col("z"), F.col("x"), F.col("y"),
-                             bucket_shift=12)
-
-
-_VAR_SQL = lk.DELETION_VARIANTS_SQL.format(s="c_name")
-
-
-@register("fuzzy_customer_matches", f"""
-WITH v AS (SELECT c_custkey, unnest({_VAR_SQL}) AS var FROM customer),
-k AS (SELECT c_custkey, {dd.md5_long_sql("var")} AS vkey FROM v),
-cand AS (SELECT DISTINCT a.c_custkey AS id_a, b.c_custkey AS id_b
-         FROM k a JOIN k b ON a.vkey = b.vkey AND a.c_custkey < b.c_custkey),
-p AS (SELECT id_a, id_b, levenshtein(ca.c_name, cb.c_name) AS dist
-      FROM cand
-      JOIN customer ca ON ca.c_custkey = id_a
-      JOIN customer cb ON cb.c_custkey = id_b),
-ok AS (SELECT id_a, id_b FROM p WHERE dist = 1),
-u AS (SELECT id_a AS c_custkey FROM ok
-      UNION ALL SELECT id_b FROM ok)
-SELECT c_custkey, count(*) AS n_neighbors FROM u GROUP BY c_custkey
-""")
-def fuzzy_customer_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution: customers whose names are one edit apart,
-    as per-customer neighbor counts.  Candidates come from the
-    deletion-neighborhood bucket join (complete for k=1, high-entropy
-    keys => no hot blocks, linear x(len+1) blow-up); exact Levenshtein
-    verifies candidates only.  The naive version of this query is an
-    all-pairs O(n^2) cross join."""
-    c = _t(spark, sf_dir, "customer")
-    pairs = lk.fuzzy_pairs(c, "c_custkey", "c_name", max_dist=1,
-                           ckpt=_ckpt)
-    both = (pairs.select(F.col("id_a").alias("c_custkey"))
-            .unionAll(pairs.select(F.col("id_b").alias("c_custkey"))))
-    return both.groupBy("c_custkey").agg(
-        F.count(F.lit(1)).alias("n_neighbors"))
-
-
-@register("per_group_sample", f"""
-WITH r AS (
-  SELECT source, doc_id,
-         CAST(row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-         AS INTEGER) AS rk
-  FROM documents
-)
-SELECT source, doc_id, rk FROM r WHERE rk <= 3
-""")
-def per_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-group sample: 3 docs per source, picked by
-    stable hash order — the reproducible 'show me examples from every
-    slice' primitive (eyeballing corpus slices, per-domain eval
-    subsets).  The window is PARTITIONED by source: per-group top-k,
-    no global sort, same members on every run and engine."""
-    docs = _docs(spark, sf_dir)
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
-    return (docs.select("source", "doc_id",
-                        F.row_number().over(w).cast("int").alias("rk"))
-            .where(F.col("rk") <= 3))
-
 
 from datafusion_monoid_spark.operators import sketch as sk
-
-_HQ_LO, _HQ_HI, _HQ_BINS = 0.0, 500000.0, 1024
-_HQ_QS = [500000, 900000, 990000, 999000]
-
-
-@register("hist_quantile_prices", f"""
-WITH h AS (SELECT {sk.hist_bin_sql("o_totalprice", _HQ_LO, _HQ_HI, _HQ_BINS)}
-                    AS bin, count(*) AS cnt
-           FROM orders WHERE o_totalprice IS NOT NULL GROUP BY bin),
-tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM h),
-c AS (SELECT bin, CAST(sum(cnt) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) AS cum FROM h),
-q AS (SELECT unnest({_HQ_QS}) AS q_micro),
-r AS (SELECT q_micro, bin FROM c, q, tot
-      WHERE cum >= greatest((total * q_micro) // 1000000, 1))
-SELECT CAST(q_micro AS BIGINT) AS q_micro, CAST(min(bin) AS BIGINT) AS bin,
-       round({_HQ_LO!r} + (min(bin) + 1) * {_HQ_HI - _HQ_LO!r} / {_HQ_BINS}, 2)
-         AS upper_edge
-FROM r GROUP BY q_micro
-""")
-def hist_quantile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """p50/p90/p99/p99.9 of order totals via a 1024-bin fixed-width
-    histogram — the MERGEABLE quantile sketch: the bin-count vector is
-    a monoid (zeros + elementwise add), so per-partition histograms
-    partial-aggregate map-side and the reduce sees O(bins) rows no
-    matter the data size.  t-digest gives tighter error but its merge
-    is order-sensitive — unacceptable for a cross-engine (or
-    cross-partitioning) deterministic gate.  Target ranks are exact
-    integer arithmetic; bin edges are identical IEEE-754 trees."""
-    o = _t(spark, sf_dir, "orders")
-    h = sk.hist_build(o, "o_totalprice", _HQ_LO, _HQ_HI, _HQ_BINS)
-    return sk.hist_quantiles(h, _HQ_QS, _HQ_LO, _HQ_HI, _HQ_BINS)
 
 
 @register("bpe_top_merges", f"""
@@ -4524,9 +2721,6 @@ def bpe_top_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Event analytics: ordered funnels and retention cohorts.
 # ---------------------------------------------------------------------------
-
-_EPOCH_2024 = 1704067200  # 2024-01-01 00:00:00 UTC, the events epoch
-_WEEK = 7 * 24 * 3600
 
 
 @register("funnel_view_click_purchase", """
@@ -4565,41 +2759,6 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                              .alias("users_clicked_after_view")))
             .crossJoin(p.agg(F.count(F.lit(1))
                              .alias("users_purchased_after_click"))))
-
-
-@register("retention_cohorts", f"""
-WITH e AS (SELECT user_id,
-                  CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM events),
-f AS (SELECT user_id, min(sec) AS first_sec FROM e GROUP BY user_id),
-a AS (SELECT DISTINCT e.user_id,
-             (first_sec - {_EPOCH_2024}) // {_WEEK} AS cohort_week,
-             (sec - {_EPOCH_2024}) // {_WEEK} AS active_week
-      FROM e JOIN f USING (user_id))
-SELECT CAST(cohort_week AS BIGINT) AS cohort_week,
-       CAST(active_week AS BIGINT) AS active_week,
-       count(*) AS n_users
-FROM a GROUP BY cohort_week, active_week
-""")
-def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention triangle: users bucketed by first-seen week,
-    counted in every week they stayed active.  Week indices are exact
-    integer division from a fixed epoch — cross-engine deterministic
-    (date_trunc week ANCHORS differ between engines: Spark weeks start
-    Monday, DuckDB ISO Monday, but the events epoch is a Monday only by
-    luck; a fixed epoch avoids the trap entirely)."""
-    e = _events(spark, sf_dir).select("user_id", "sec")
-    f = e.groupBy("user_id").agg(F.min("sec").alias("first_sec"))
-
-    def wk(c):
-        d = (c - F.lit(_EPOCH_2024)).cast("bigint")
-        return ((d - d % _WEEK) / _WEEK).cast("bigint")
-
-    a = (e.join(f, "user_id")
-         .select("user_id", wk(F.col("first_sec")).alias("cohort_week"),
-                 wk(F.col("sec")).alias("active_week"))
-         .distinct())
-    return a.groupBy("cohort_week", "active_week").agg(
-        F.count(F.lit(1)).alias("n_users"))
 
 
 @register("pipeline_curation_full", f"""
@@ -4812,31 +2971,6 @@ def skew_aqe_join_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .cast("bigint").alias("abs_dev_milli")))
 
 
-@register("unpivot_lineitem_measures", """
-SELECT l_returnflag, measure, round(sum(val), 2) AS total
-FROM (
-  SELECT l_returnflag, measure, val
-  FROM lineitem
-  UNPIVOT (val FOR measure IN (l_quantity, l_extendedprice, l_discount))
-)
-GROUP BY l_returnflag, measure
-""")
-def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT/melt — wide measures to long (measure, value) rows,
-    then a per-(flag, measure) rollup.  ``DataFrame.unpivot`` is a
-    generator expression riding the scan (no shuffle of its own, 3x
-    row blow-up only after column pruning); the one shuffle is the
-    final aggregation."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_quantity", "l_extendedprice", "l_discount")
-    melted = li.unpivot(
-        ids=["l_returnflag"],
-        values=["l_quantity", "l_extendedprice", "l_discount"],
-        variableColumnName="measure", valueColumnName="val")
-    return (melted.groupBy("l_returnflag", "measure")
-            .agg(F.round(F.sum("val"), 2).alias("total")))
-
-
 @register("q7_volume_shipping", """
 SELECT supp_nation, cust_nation, ship_year,
        CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
@@ -4959,70 +3093,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         cu.micro_ratio(nation7, total).alias("share_micro"))
 
 
-@register("boilerplate_spans", f"""
-WITH g AS (SELECT DISTINCT doc_id, g AS gram
-           FROM (SELECT doc_id, unnest({_SH4}) AS g FROM documents)),
-df AS (SELECT gram, count(*) AS n_docs FROM g GROUP BY gram),
-top AS (SELECT gram, n_docs FROM df WHERE n_docs >= 3
-        ORDER BY n_docs DESC, gram LIMIT 20)
-SELECT CAST(row_number() OVER (ORDER BY n_docs DESC, gram) AS INTEGER) AS rk,
-       gram, CAST(n_docs AS BIGINT) AS n_docs
-FROM top
-""")
-def boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style boilerplate detection: word 4-grams recurring across
-    >= 3 distinct documents, ranked by document frequency — the span
-    table a curation pipeline strips (headers, footers, license
-    blurbs).  Distinct-per-doc explode -> one count shuffle -> top-k
-    via TakeOrderedAndProject; the ranking window sees 20 rows."""
-    docs = _docs(spark, sf_dir)
-    g = docs.select("doc_id",
-                    F.explode(dd.word_shingles("text", 4)).alias("gram"))
-    dfreq = (g.groupBy("gram")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-             .where(F.col("n_docs") >= 3))
-    top = dfreq.orderBy(F.desc("n_docs"), F.asc("gram")).limit(20)
-    w = Window.orderBy(F.desc("n_docs"), F.asc("gram"))
-    return top.select(F.row_number().over(w).cast("int").alias("rk"),
-                      "gram", "n_docs")
-
-
-@register("group_quantile_tokens", f"""
-WITH t AS (SELECT source,
-                  len(list_filter(string_split({_NORM}, ' '), x -> x != ''))
-                    AS n_toks
-           FROM documents),
-h AS (SELECT source AS grp,
-             {sk.hist_bin_sql("n_toks", 0.0, 128.0, 128)} AS bin,
-             count(*) AS cnt
-      FROM t GROUP BY grp, bin),
-tot AS (SELECT grp, CAST(sum(cnt) AS BIGINT) AS total FROM h GROUP BY grp),
-c AS (SELECT h.grp, bin,
-             CAST(sum(cnt) OVER (PARTITION BY h.grp ORDER BY bin
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-             total
-      FROM h JOIN tot ON h.grp = tot.grp),
-q AS (SELECT unnest([500000, 900000]) AS q_micro),
-r AS (SELECT grp, q_micro, bin FROM c, q
-      WHERE cum >= greatest((total * q_micro) // 1000000, 1))
-SELECT grp, CAST(q_micro AS BIGINT) AS q_micro, CAST(min(bin) AS BIGINT) AS bin,
-       round(0.0 + (min(bin) + 1) * 128.0 / 128, 2) AS upper_edge
-FROM r GROUP BY grp, q_micro
-""")
-def group_quantile_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source p50/p90 document length (tokens) via GROUPED
-    histogram sketches: one keyed count-vector per source (unit-width
-    bins, so the sketch is exact here), cumulative windows PARTITIONED
-    by group.  The shape a corpus dashboard computes for every slice at
-    once — state O(groups x bins), never a per-group sort of the
-    data."""
-    docs = _docs(spark, sf_dir)
-    sized = docs.select("source",
-                        tx.token_counts("text")["ws_tokens"].alias("n_toks"))
-    h = sk.hist_build_grouped(sized, "source", "n_toks", 0.0, 128.0, 128)
-    return sk.hist_quantiles_grouped(h, [500000, 900000], 0.0, 128.0, 128)
-
-
 def _kmeans_ctes(k: int = 8, iters: int = 3, dim: int = 64,
                  vecs_cte: str | None = None) -> str:
     """Unrolled Lloyd iterations as chained CTEs (no WITH keyword, no
@@ -5070,24 +3140,6 @@ SELECT CAST(cid AS BIGINT) AS cid, CAST(pos AS INTEGER) AS pos,
        CAST(val AS BIGINT) AS val
 FROM (SELECT cid, unnest(cv) AS val, unnest(range(0, len(cv))) AS pos
       FROM cents{iters})"""
-
-
-@register("kmeans_quantized_centroids", _kmeans_oracle_sql())
-def kmeans_quantized_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three Lloyd rounds of k-means (k=8) over the embeddings in EXACT
-    integer arithmetic — the iterative algorithm made hash-matchable:
-    micro-unit quantization, BIGINT squared-L2, floor-division means,
-    argmin tie-broken on centroid id.  Float Lloyd's is
-    partitioning-dependent (sum order perturbs means, assignments flip
-    on the boundary); the quantized form is reproducible on any engine
-    and any cluster layout.  Per round the corpus only ever meets the
-    broadcast k x dim centroid table; the mean is a posexplode
-    partial-agg — the monoid two-phase shape."""
-    e = _emb(spark, sf_dir)
-    cents = sim.kmeans_lloyd_quantized(e, k=8, iters=3, ckpt=_ckpt)
-    return cents.select(F.col("cid").cast("bigint").alias("cid"),
-                        F.col("pos").cast("int").alias("pos"),
-                        F.col("val").cast("bigint").alias("val"))
 
 
 def _ivf_kmeans_oracle_sql(k_cent: int = 8, iters: int = 3,
@@ -5149,8 +3201,8 @@ def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     The recall floor is pinned in tests/test_similarity.py).  The whole
     composition — 3 Lloyd rounds AND the probing search — replays in
     the SQL oracle, because every clustering step is exact integer
-    math.  Same search plan as sim_topk_ivf: assignment via
-    partial-agg argmax against broadcast centroids, candidates only.
+    math.  The search plan: assignment via partial-agg argmax against
+    broadcast centroids, candidates only.
 
     The learned centroids are MATERIALIZED driver-side (one bounded
     collect of k x dim = 512 integers — the persisted-centroids
@@ -5249,8 +3301,8 @@ def sim_ivf_fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means and persist the centroids parquet.  The returned DataFrame
     is the READ-BACK of the persisted artifact (not the in-memory
     lineage), so the oracle hash-check verifies the on-disk state a
-    serve job would actually consume — same oracle as
-    kmeans_quantized_centroids because the fit is exact-replayable."""
+    serve job would actually consume — the oracle replays the fit,
+    because the fit is exact."""
     path = _fit_centroids_persisted(spark, sf_dir, overwrite=True)
     return spark.read.parquet(path).select(
         F.col("cid").cast("bigint").alias("cid"),
@@ -5308,41 +3360,6 @@ def _load_centroids_cached(spark: SparkSession, path: str,
             (int(cid), [conv(v) for _, v in sorted(pv)])
             for cid, pv in sorted(by_cid.items())])
     return _CENTROID_CACHE[key][1]
-
-
-@register("q12_late_shipments", """
-SELECT o_orderpriority,
-       CAST(sum(CASE WHEN date_diff('day', o_orderdate, l_shipdate) > 90
-                     THEN 1 ELSE 0 END) AS BIGINT) AS late_items,
-       count(*) AS total_items,
-       CAST((sum(CASE WHEN date_diff('day', o_orderdate, l_shipdate) > 90
-                      THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT)
-         AS late_micro
-FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
-GROUP BY o_orderpriority
-""")
-def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 flavor adapted to the available columns (the synthetic
-    lineitem has no shipmode/commitdate): items shipped more than 90
-    days after order date, by order priority — the
-    late-shipment-by-class report.  Day difference is exact integer
-    date arithmetic; the late share is exact micro-units.  One
-    co-keyed join + one agg."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate",
-                                           "o_orderpriority")
-    li = (_t(spark, sf_dir, "lineitem")
-          .where((F.col("l_shipdate") >= "1996-01-01")
-                 & (F.col("l_shipdate") < "1997-01-01"))
-          .select("l_orderkey", "l_shipdate"))
-    late = F.sum(F.when(F.datediff("l_shipdate", "o_orderdate") > 90, 1)
-                 .otherwise(0))
-    total = F.count(F.lit(1))
-    return (o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("o_orderpriority")
-            .agg(late.cast("bigint").alias("late_items"),
-                 total.alias("total_items"),
-                 cu.micro_ratio(late, total).alias("late_micro")))
 
 
 # ---------------------------------------------------------------------------
@@ -5503,45 +3520,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q11_important_stock", """
-WITH val AS (
-  SELECT l_partkey AS partkey,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-           AS value_cents
-  FROM lineitem
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  WHERE n_name = 'NATION_7'
-  GROUP BY l_partkey
-),
-tot AS (SELECT sum(value_cents) AS total_cents FROM val)
-SELECT partkey, value_cents FROM val, tot
-WHERE value_cents * 1000 > total_cents
-""")
-def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: per-part inventory value for one nation's
-    suppliers, kept when above a fraction of the nation total — the
-    scalar-subquery threshold as an exact integer cross-compare
-    (value * 1000 > total, no float division).  The one-row total
-    broadcasts; the fact aggregates once."""
-    s = F.broadcast(_t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"))
-    n = F.broadcast(_t(spark, sf_dir, "nation")
-                    .where(F.col("n_name") == "NATION_7"))
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"))
-    val = (
-        li.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(n, F.col("n_nationkey") == F.col("s_nationkey"))
-        .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(F.sum("cents").cast("bigint").alias("value_cents"))
-    )
-    tot = val.agg(F.sum("value_cents").alias("total_cents"))
-    return (val.crossJoin(F.broadcast(tot))
-            .where(F.col("value_cents") * 1000 > F.col("total_cents"))
-            .select("partkey", "value_cents"))
-
-
 @register("q13_customer_distribution", """
 WITH co AS (
   SELECT c_custkey, count(o_orderkey) AS c_count
@@ -5569,133 +3547,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (co.groupBy(F.col("c_count").cast("bigint").alias("c_count"))
             .agg(F.count(F.lit(1)).alias("custdist")))
-
-
-@register("q15_top_supplier", """
-WITH rev AS (
-  SELECT l_suppkey AS supplier_no,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                       AS BIGINT)) AS BIGINT) AS total_cents
-  FROM lineitem
-  WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-04-01'
-  GROUP BY l_suppkey
-),
-mx AS (SELECT max(total_cents) AS m FROM rev)
-SELECT s_suppkey, s_name, total_cents
-FROM supplier JOIN rev ON s_suppkey = supplier_no JOIN mx ON total_cents = m
-""")
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: the supplier(s) with the maximum quarterly
-    revenue — the view + scalar-max subquery as one aggregation and a
-    broadcast one-row max joined back (ties kept, like the spec).
-    Exact cents make the max unambiguous cross-engine."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .where((F.col("l_shipdate") >= "1996-01-01")
-                 & (F.col("l_shipdate") < "1996-04-01")))
-    rev = (li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-           .agg(F.sum(F.round(F.col("l_extendedprice")
-                              * (1 - F.col("l_discount")) * 100)
-                      .cast("bigint")).cast("bigint").alias("total_cents")))
-    mx = rev.agg(F.max("total_cents").alias("m"))
-    s = F.broadcast(_t(spark, sf_dir, "supplier").select("s_suppkey", "s_name"))
-    return (rev.join(F.broadcast(mx), F.col("total_cents") == F.col("m"))
-            .join(s, F.col("s_suppkey") == F.col("supplier_no"))
-            .select("s_suppkey", "s_name", "total_cents"))
-
-
-@register("q16_supplier_part_counts", """
-WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
-            FROM lineitem)
-SELECT p_brand, p_type, CAST(p_size AS INTEGER) AS p_size,
-       count(DISTINCT ps_suppkey) AS supplier_cnt
-FROM ps JOIN part ON p_partkey = ps_partkey
-WHERE p_brand <> 'Brand#1' AND p_type NOT LIKE 'MED%'
-  AND p_size IN (1, 4, 7, 10, 15, 23, 45, 50)
-  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-""")
-def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: distinct-supplier counts per (brand, type,
-    size) over the derived part-supplier pairs, excluding an unwanted
-    supplier set (negative balance = the complaints stand-in) via a
-    broadcast ANTI join — the NOT IN rewrite that scales (NOT IN as a
-    non-broadcast subquery nulls-safe check would shuffle everything).
-    The part predicate and the supplier exclusion both semi/anti-filter
-    (broadcast, map-only) BELOW the distinct, so the dedup shuffle
-    carries only qualifying pairs."""
-    p = F.broadcast(
-        _t(spark, sf_dir, "part")
-        .where((F.col("p_brand") != "Brand#1")
-               & ~F.col("p_type").like("MED%")
-               & F.col("p_size").isin(1, 4, 7, 10, 15, 23, 45, 50)))
-    bad = F.broadcast(_t(spark, sf_dir, "supplier")
-                      .where(F.col("s_acctbal") < 0).select("s_suppkey"))
-    ps = (_t(spark, sf_dir, "lineitem")
-          .select(F.col("l_partkey").alias("ps_partkey"),
-                  F.col("l_suppkey").alias("ps_suppkey"))
-          .join(p.select("p_partkey"),
-                F.col("p_partkey") == F.col("ps_partkey"), "leftsemi")
-          .join(bad, F.col("ps_suppkey") == F.col("s_suppkey"), "left_anti")
-          .distinct())
-    return (
-        ps.join(p, F.col("p_partkey") == F.col("ps_partkey"))
-        .groupBy("p_brand", "p_type", F.col("p_size").cast("int").alias("p_size"))
-        .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
-    )
-
-
-@register("q20_excess_supply", """
-WITH pq AS (
-  SELECT l_partkey, l_suppkey,
-         CAST(sum(CASE WHEN l_shipdate >= '1996-01-01'
-                        AND l_shipdate < '1997-01-01'
-                       THEN CAST(l_quantity AS BIGINT) ELSE 0 END) AS BIGINT)
-           AS qty_1996,
-         CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty_all
-  FROM lineitem GROUP BY l_partkey, l_suppkey
-),
-hot AS (
-  SELECT DISTINCT l_suppkey AS suppkey
-  FROM pq JOIN part ON p_partkey = l_partkey
-  WHERE p_name LIKE 'small%' AND qty_1996 * 2 > qty_all
-)
-SELECT s_name, n_name
-FROM supplier
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'EUROPE' AND s_suppkey IN (SELECT suppkey FROM hot)
-""")
-def q20_excess_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: suppliers whose 1996 shipments of pattern-named
-    parts exceed half their all-time volume (the availqty-threshold
-    stand-in, exact integer compare), restricted to one region — the
-    nested IN-chain as aggregate + semi joins.  The part-name filter
-    is per-partkey, so it semi-joins (broadcast) BELOW the
-    (partkey, suppkey) aggregation: the agg shuffle carries only the
-    pattern-matching fraction of the fact, with per-group sums
-    unchanged."""
-    li = _t(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("bigint")
-    in96 = ((F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01"))
-    p = F.broadcast(_t(spark, sf_dir, "part")
-                    .where(F.col("p_name").like("small%"))
-                    .select("p_partkey"))
-    pq = (li.join(p, F.col("p_partkey") == F.col("l_partkey"), "leftsemi")
-          .groupBy("l_partkey", "l_suppkey")
-          .agg(F.sum(F.when(in96, qty).otherwise(0)).cast("bigint")
-               .alias("qty_1996"),
-               F.sum(qty).cast("bigint").alias("qty_all")))
-    hot = (pq.where(F.col("qty_1996") * 2 > F.col("qty_all"))
-           .select(F.col("l_suppkey").alias("suppkey")).distinct())
-    s = (_t(spark, sf_dir, "supplier")
-         .join(F.broadcast(_t(spark, sf_dir, "nation")),
-               F.col("s_nationkey") == F.col("n_nationkey"))
-         .join(F.broadcast(_t(spark, sf_dir, "region")
-                           .where(F.col("r_name") == "EUROPE")),
-               F.col("n_regionkey") == F.col("r_regionkey")))
-    return (s.join(hot, F.col("s_suppkey") == F.col("suppkey"), "left_semi")
-            .select("s_name", "n_name"))
 
 
 @register("q21_waiting_suppliers", """
@@ -5814,79 +3665,6 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from datafusion_monoid_spark.streaming import stream_queries as sq
 
-register("streaming_sessionize", """
-WITH f AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec, event_id, value
-  FROM events
-),
-flagged AS (
-  SELECT user_id, sec, event_id, value,
-         CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w >= 1800
-              THEN 1 ELSE 0 END AS new_s
-  FROM f WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
-),
-sess AS (
-  SELECT user_id, sec, value,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-)
-SELECT user_id, CAST(min(sec) AS BIGINT) AS ss_sec,
-       count(*) AS n_events,
-       CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT) AS total_milli
-FROM sess GROUP BY user_id, sid
-""")(sq.streaming_sessionize)
-
-
-def _streaming_cms_oracle_sql(depth: int = 4, width: int = 256) -> str:
-    hashes = ", ".join(
-        f"{sk.cms_hash_sql('event_type', i, width)} AS h{i}"
-        for i in range(depth))
-    unn_h = "[" + ", ".join(f"h{i}" for i in range(depth)) + "]"
-    unn_d = "[" + ", ".join(str(i) for i in range(depth)) + "]"
-    return f"""
-WITH hashed AS (
-  SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS ws_sec, {hashes}
-  FROM events
-),
-ex AS (SELECT ws_sec, unnest({unn_h}) AS bucket, unnest({unn_d}) AS depth
-       FROM hashed)
-SELECT ws_sec, CAST(depth AS INTEGER) AS depth, CAST(bucket AS BIGINT) AS bucket,
-       count(*) AS cnt
-FROM ex GROUP BY ws_sec, depth, bucket
-"""
-
-
-register("streaming_cms_cells", _streaming_cms_oracle_sql())(
-    sq.streaming_cms_cells)
-
-register("streaming_dedup_redelivery", """
-SELECT event_type, count(DISTINCT event_id) AS n_events,
-       count(DISTINCT event_id) AS n_unique
-FROM events GROUP BY event_type
-""")(sq.streaming_dedup_redelivery)
-
-register("streaming_purchase_click_join", """
-WITH e AS (SELECT event_id, user_id, event_type,
-                  CAST(floor(epoch(ts)) AS BIGINT) AS sec
-           FROM events)
-SELECT p.user_id AS user_id, p.event_id AS purchase_id,
-       c.event_id AS click_id
-FROM e p JOIN e c
-  ON p.user_id = c.user_id
- AND p.event_type = 'purchase' AND c.event_type = 'click'
- AND c.sec BETWEEN p.sec - 86400 AND p.sec
-""")(sq.streaming_purchase_click_join)
-
-register("streaming_decontam_alerts", f"""
-WITH ev AS (SELECT DISTINCT {_GH} AS gram_hash
-            FROM (SELECT unnest({_SH4}) AS g FROM documents
-                  WHERE doc_id % 97 = 0)),
-trg AS (SELECT doc_id, {_GH} AS gram_hash
-        FROM (SELECT doc_id, unnest({_SH4}) AS g FROM documents
-              WHERE doc_id % 97 <> 0))
-SELECT DISTINCT doc_id FROM trg JOIN ev USING (gram_hash)
-""")(sq.streaming_decontam_alerts)
 
 # streaming ANN serve: per-micro-batch inference against the prebuilt
 # IVF index; each query is answered in exactly one batch, so the stream
@@ -6237,40 +4015,6 @@ def _bm25_postings_cte(t_cte: str, p_cte: str) -> str:
             f"CAST(count(*) AS BIGINT) AS tf FROM "
             f"(SELECT doc_id, unnest(toks) AS token FROM {t_cte}) "
             f"GROUP BY token, doc_id)")
-
-
-def _bm25_append_oracle_sql() -> str:
-    return f"""
-WITH tb AS (SELECT doc_id, {_TOKS} AS toks FROM documents
-            WHERE doc_id % 11 <> 0),
-tn AS (SELECT doc_id, {_TOKS} AS toks FROM documents
-       WHERE doc_id % 11 = 0),
-{_bm25_postings_cte('tb', 'pb')},
-{_bm25_postings_cte('tn', 'pn')}
-{_bm25_digest_sql('pb', 'tb', 'base')}
-UNION ALL
-{_bm25_digest_sql('pn', 'tn', 'appended')}
-"""
-
-
-@register("bm25_postings_append", _bm25_append_oracle_sql())
-def bm25_postings_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """APPEND to the BM25 inverted index without a rebuild: the
-    arriving batch's (token, doc_id, tf) postings + (doc_id, dl)
-    lengths land as their own artifact generation, so the next serve's
-    compaction (or a generation-aware reader) sees today's documents
-    without re-tokenizing the corpus.  Returns both layers' digests —
-    the occupancy report for compaction scheduling.
-
-    Scale: per-ingest work is O(|batch| tokens) — the batch tokenizes
-    and shuffles on (token, doc_id); the base index is only ever READ.
-    Corpus-stat terms a scorer needs (N, total_dl, df) are all
-    layer-additive monoids, which is exactly why generations can serve
-    before compaction."""
-    ppath, lpath = _build_bm25_index(spark, sf_dir, overwrite=False)
-    pnew, lnew = _append_bm25_postings(spark, sf_dir, overwrite=True)
-    return (_bm25_digest(spark, ppath, lpath, "base")
-            .unionByName(_bm25_digest(spark, pnew, lnew, "appended")))
 
 
 def _bm25_compact_oracle_sql() -> str:
@@ -7247,31 +4991,6 @@ def _pagerank_from_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
                     F.col("pr").alias("pr_scaled")))
 
 
-@register("pagerank_dedup_survivors", _pagerank_oracle_sql("survivors"))
-def pagerank_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank AFTER the exact-dedup cascade — the composition that
-    survives a duplication-heavy corpus.  On the adversarial x100 tier
-    (100 exact copies per document), the RAW candidate graph is
-    c(c-1)/2-quadratic in copy count: ~50M edges at sf10, where the
-    direct entry (`pagerank_neardup_graph`) exhausts executor memory —
-    the same root cause measured for the direct near-dup pair entries
-    (see `pipeline_dedup_cascade`).  Collapsing exact duplicates to
-    their min-id representative FIRST (one hash shuffle) shrinks the
-    graph by the duplication factor before any banding, and centrality
-    is computed where it is meaningful — between genuinely distinct
-    documents.  Same integer power iteration, same bit-exact oracle
-    replay, candidate generation identical to the cascade's."""
-    # the iteration loop references the pair relation ~8x (deg, the
-    # node count, 3 join rounds, the final join); the shared persisted
-    # cascade artifact (see _cascade_edges) cuts the
-    # dedup->minhash->banding lineage to one build per corpus snapshot
-    # — the canonical (a < b) edges are the same undirected graph
-    # (the loop symmetrizes), so PageRank is unchanged
-    pairs = _cascade_edges(spark, sf_dir).select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b"))
-    return _pagerank_from_pairs(spark, pairs)
-
-
 _INCR_ROLLUP_ORACLE = """
 SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket,
        count(*) AS n,
@@ -7361,69 +5080,6 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # full-recompute oracle — associativity makes stream == batch
 register("streaming_rollup_maintenance", _INCR_ROLLUP_ORACLE)(
     sq.streaming_rollup_maintenance)
-
-
-_SCHEMA_EVO_ORACLE = """
-WITH unified AS (
-  SELECT o_orderkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-         CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END
-           AS o_orderpriority
-  FROM orders)
-SELECT coalesce(o_orderpriority, '<pre-evolution>') AS priority,
-       count(*) AS n,
-       CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_missing,
-       CAST(sum(price_cents) AS BIGINT) AS price_cents_sum
-FROM unified GROUP BY priority
-"""
-
-
-@register("schema_evolution_read", _SCHEMA_EVO_ORACLE)
-def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution across parquet generations: an OLD-schema file
-    (orderkey, price) and a NEW-schema file (+ priority column) live in
-    the same table directory — the shape every long-lived lake table
-    reaches — and a ``mergeSchema`` read unifies them, with the added
-    column NULL for pre-evolution rows.  The report aggregates across
-    the schema boundary (per-priority counts, missing-column tally,
-    exact cent sums); the oracle replays the union from the base table
-    with a CASE simulating the missing column.
-
-    Scale: ``mergeSchema`` is a FOOTER-ONLY operation (schema union
-    over file footers at planning time; per-file readers project into
-    the unified schema with constant-NULL columns), so the read cost
-    is identical to a homogeneous table — no rewrite of old files, the
-    property that makes additive evolution free at 100 TB.  The
-    generation split here is deterministic (orderkey parity) so the
-    artifact is reproducible per sf_dir."""
-    path = _artifact_path(sf_dir, "schema_evo")
-    # completion = BOTH generations' _SUCCESS markers, each newer than
-    # the source (a bare isdir() guard would wedge the entry forever
-    # after an interrupted first build, and a stale artifact after a
-    # tier regeneration would mismatch the live-reading oracle)
-    if not all(_artifact_fresh(_os_mod.path.join(path, f"gen={g}"),
-                               f"{sf_dir}/orders.parquet")
-               for g in ("old", "new")):
-        orders = _t(spark, sf_dir, "orders")
-        cents = F.round(F.col("o_totalprice") * 100).cast("bigint") \
-                 .alias("price_cents")
-        (orders.where(F.col("o_orderkey") % 2 == 0)
-         .select("o_orderkey", cents)
-         .coalesce(1).write.mode("overwrite").parquet(f"{path}/gen=old"))
-        (orders.where(F.col("o_orderkey") % 2 == 1)
-         .select("o_orderkey", cents, "o_orderpriority")
-         .coalesce(1).write.mode("overwrite").parquet(f"{path}/gen=new"))
-    unified = spark.read.option("mergeSchema", "true") \
-                   .option("recursiveFileLookup", "true").parquet(path)
-    return (unified.groupBy(
-        F.coalesce("o_orderpriority", F.lit("<pre-evolution>"))
-        .alias("priority"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.when(F.col("o_orderpriority").isNull(), 1)
-                   .otherwise(0)).cast("bigint").alias("n_missing"),
-             F.sum("price_cents").cast("bigint")
-             .alias("price_cents_sum")))
 
 
 _BASKET_ORACLE = """
@@ -7557,71 +5213,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("cnt"),
                     F.expr("(cnt * 1000000) div total").cast("bigint")
                     .alias("p_micro")))
-
-
-_RFM_ORACLE = """
-WITH mx AS (SELECT CAST(max(floor(epoch(o_orderdate) / 86400)) AS BIGINT)
-              AS now_day FROM orders),
-per_cust AS (
-  SELECT o_custkey AS k,
-         (SELECT now_day FROM mx)
-           - CAST(max(floor(epoch(o_orderdate) / 86400)) AS BIGINT)
-           AS recency_days,
-         count(*) AS frequency,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS monetary_cents
-  FROM orders GROUP BY o_custkey),
-scored AS (
-  SELECT k,
-         CASE WHEN recency_days <= 30 THEN 3
-              WHEN recency_days <= 90 THEN 2 ELSE 1 END AS r,
-         CASE WHEN frequency >= 20 THEN 3
-              WHEN frequency >= 10 THEN 2 ELSE 1 END AS f,
-         CASE WHEN monetary_cents >= 300000000 THEN 3
-              WHEN monetary_cents >= 150000000 THEN 2 ELSE 1 END AS m
-  FROM per_cust)
-SELECT CAST(r AS INT) AS r, CAST(f AS INT) AS f, CAST(m AS INT) AS m,
-       count(*) AS n_customers
-FROM scored GROUP BY r, f, m
-"""
-
-
-@register("orders_rfm_segments", _RFM_ORACLE)
-def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation: recency (days since last order,
-    relative to the corpus's latest order day), frequency (order
-    count) and monetary (exact cent-integer lifetime value), each
-    bucketed into fixed 1-3 tiers, reported as segment sizes — the
-    27-cell RFM cube every warehouse team maintains.
-
-    Scale: one partial-agg pass over the fact table (max-day, count,
-    exact integer sum are all monoids), the corpus-wide "now" anchor
-    is a one-row broadcast, and the segment roll-up aggregates a
-    per-customer relation that is orders of magnitude smaller than the
-    fact table.  Fixed thresholds (not in-data quantiles) keep the
-    scoring a pure projection — the quantile-tier variant would reuse
-    the `group_quantile_tokens` machinery."""
-    orders = _t(spark, sf_dir, "orders")
-    day = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("bigint")
-    per_cust = (orders.groupBy(F.col("o_custkey").alias("k"))
-                .agg(F.max(day).alias("last_day"),
-                     F.count(F.lit(1)).alias("frequency"),
-                     F.sum(F.round(F.col("o_totalprice") * 100)
-                           .cast("bigint")).alias("monetary_cents")))
-    mx = orders.agg(F.max(day).alias("now_day"))
-    scored = (per_cust.crossJoin(F.broadcast(mx))
-              .select(
-                  F.when(F.col("now_day") - F.col("last_day") <= 30, 3)
-                  .when(F.col("now_day") - F.col("last_day") <= 90, 2)
-                  .otherwise(1).cast("int").alias("r"),
-                  F.when(F.col("frequency") >= 20, 3)
-                  .when(F.col("frequency") >= 10, 2)
-                  .otherwise(1).cast("int").alias("f"),
-                  F.when(F.col("monetary_cents") >= 300000000, 3)
-                  .when(F.col("monetary_cents") >= 150000000, 2)
-                  .otherwise(1).cast("int").alias("m")))
-    return scored.groupBy("r", "f", "m").agg(
-        F.count(F.lit(1)).alias("n_customers"))
 
 
 _DRIFT_ORACLE = """
@@ -7855,57 +5446,6 @@ def dpp_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_orders"),
                  F.sum(F.round(F.col("o_totalprice") * 100)
                        .cast("bigint")).alias("revenue_cents")))
-
-
-_USER_GAP_ORACLE = """
-WITH active AS (
-  SELECT DISTINCT user_id,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hb
-  FROM events),
-gaps AS (
-  SELECT user_id, hb,
-         hb - lag(hb) OVER (PARTITION BY user_id ORDER BY hb) - 1 AS gap
-  FROM active)
-SELECT user_id, count(*) AS active_hours,
-       CAST(max(hb) - min(hb) + 1 AS BIGINT) AS span_hours,
-       CAST(coalesce(sum(gap), 0) AS BIGINT) AS missing_hours,
-       CAST(coalesce(max(gap), 0) AS BIGINT) AS longest_gap
-FROM gaps GROUP BY user_id
-"""
-
-
-@register("events_user_gap_stats", _USER_GAP_ORACLE)
-def events_user_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series gap statistics WITHOUT materializing the dense grid
-    — the per-user companion to ``events_gapfill_ffill``.  The global
-    gap-fill's grid is schema-bounded, but a per-USER grid is
-    users x hours and explodes with the corpus; the gap *statistics*
-    (missing hours, longest outage, active/span ratio) need only the
-    ACTIVE hour set: distinct (user, hour), one ordered ``lag`` per
-    user, and the gaps fall out as differences — O(active hours)
-    state, never O(grid).
-
-    Scale: dedup-to-active is a partial-agg shuffle on (user, hour);
-    the lag window and final roll-up reuse the same user partitioning.
-    When a series' active set is itself huge, this is the shape that
-    range-partitions by (user, time-chunk) with one boundary row
-    carried per chunk — the two-pass variant the gap-fill docstring
-    sketches, here unnecessary because state is already sub-linear."""
-    e = _events(spark, sf_dir)
-    active = e.select(
-        "user_id",
-        F.floor(F.col("sec") / 3600).cast("bigint").alias("hb")).distinct()
-    w = Window.partitionBy("user_id").orderBy("hb")
-    gaps = active.withColumn(
-        "gap", F.col("hb") - F.lag("hb").over(w) - 1)
-    return (gaps.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("active_hours"),
-                 (F.max("hb") - F.min("hb") + 1).cast("bigint")
-                 .alias("span_hours"),
-                 F.coalesce(F.sum("gap"), F.lit(0)).cast("bigint")
-                 .alias("missing_hours"),
-                 F.coalesce(F.max("gap"), F.lit(0)).cast("bigint")
-                 .alias("longest_gap")))
 
 
 # ---------------------------------------------------------------------------
@@ -8284,15 +5824,6 @@ m AS (SELECT token,
       FROM qtok GROUP BY token)"""
 
 
-def _qc_fit_oracle_sql() -> str:
-    return f"""
-WITH {_qc_model_cte()}
-SELECT token, c_pos, c_neg,
-       CAST(((c_pos + 1) * 1000000) // (c_neg + 1) AS BIGINT) AS w_micro
-FROM m
-"""
-
-
 def _qc_doc_scores_ctes() -> str:
     """Extends the model CTEs with ``stats`` (the neutral decision
     constant), the corpus token stream, and the per-doc score relation
@@ -8382,31 +5913,6 @@ def _qc_score_docs(docs: DataFrame, model: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
                  _idiv(F.sum("w"), F.count(F.lit(1)))
                  .alias("score_micro")))
-
-
-@register("quality_clf_fit", _qc_fit_oracle_sql())
-def quality_clf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FIT the curated-vs-raw quality classifier (Brown et al. 2020
-    appendix A's quality filter, fastText-style linear-over-token-
-    weights): one tokenize + partial-agg pass over the two LABELED
-    source strata counts every token's occurrences per class; the
-    model is the per-token add-one-smoothed rational likelihood ratio
-    ``w = (c_pos+1)·1e6 // (c_neg+1)`` — the true NB ratio times a
-    single global constant ``(N_pos+V)/(N_neg+V)``, which a linear
-    decision rule absorbs into its threshold (see
-    ``quality_clf_score``), so no big cross products ever form and
-    every intermediate stays an exact BIGINT.  Persists the model as
-    a parquet artifact and returns the READ-BACK, so the oracle
-    verifies the on-disk state the serve entries consume.
-
-    Scale: the fit touches only the labeled strata (a fixed sample in
-    production); the model relation is VOCABULARY-bounded — the
-    broadcast side of every downstream serve, never corpus-sized."""
-    path = _fit_qc_persisted(spark, sf_dir, overwrite=True)
-    return spark.read.parquet(path).select(
-        "token", F.col("c_pos").cast("bigint").alias("c_pos"),
-        F.col("c_neg").cast("bigint").alias("c_neg"),
-        F.col("w_micro").cast("bigint").alias("w_micro"))
 
 
 @register("quality_clf_score", _qc_score_oracle_sql())
@@ -8607,16 +6113,6 @@ def _pq_lloyd_ctes(p: str, subdim: int, iters: int) -> str:
     return "".join(parts)
 
 
-def _pq_fit_oracle_sql() -> str:
-    it = pqm.PQ_ITERS
-    return f"""
-WITH {_pq_ctes()}
-SELECT CAST(s AS INTEGER) AS s, CAST(cid AS BIGINT) AS cid,
-       CAST(pos AS INTEGER) AS pos, CAST(val AS BIGINT) AS val
-FROM (SELECT s, cid, unnest(cv) AS val, unnest(range(0, len(cv))) AS pos
-      FROM pcents{it})"""
-
-
 def _pq_adc_oracle_sql(k: int = 5) -> str:
     it = pqm.PQ_ITERS
     subdim = pqm.PQ_SUBDIM
@@ -8680,7 +6176,7 @@ def _fit_pq_persisted(spark: SparkSession, sf_dir: str,
 #: codebook artifact once per serve process, invalidated on re-fit.
 #: Keyed by PATH with the mtime stored alongside: keying
 #: on (path, mtime) never evicted superseded generations, so a
-#: long-lived serve process that re-runs ``pq_fit_codebooks``
+#: long-lived serve process that re-fits the codebooks
 #: accumulated stale entries indefinitely.
 _PQ_CODEBOOK_CACHE: dict[str, tuple[float, dict]] = {}
 
@@ -8699,30 +6195,6 @@ def _load_pq_codebooks_cached(spark: SparkSession, path: str) -> dict:
                 (int(cid), [int(v) for _, v in sorted(pv)]))
         _PQ_CODEBOOK_CACHE[path] = (mtime, books)
     return _PQ_CODEBOOK_CACHE[path][1]
-
-
-@register("pq_fit_codebooks", _pq_fit_oracle_sql())
-def pq_fit_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization codebook training: 16 independent k-means
-    problems (one per 4-dim subspace, 16 centroids each) run as ONE
-    grouped Lloyd chain — the subspace id is a group column, so all
-    16 codebooks cost the same shuffles as a single k-means, and the
-    whole codebook is an m x k x subdim = 1024-integer relation that
-    broadcasts everywhere downstream.  Exact-integer arithmetic start
-    to finish (micro-units, BIGINT squared-L2, floor-division means,
-    ties to the lower cid): the oracle replays all three rounds
-    bit-for-bit.  This is the compression half of Jegou et al.'s PQ —
-    a 32x smaller corpus representation (16 x 4-bit codes here;
-    production k=256 gives 1 byte/subspace).  Like
-    ``sim_ivf_fit_centroids``, the codebooks PERSIST as a parquet
-    artifact and the entry returns the READ-BACK, so the oracle
-    verifies the on-disk state the serve entry consumes."""
-    path = _fit_pq_persisted(spark, sf_dir, overwrite=True)
-    return spark.read.parquet(path).select(
-        F.col("s").cast("int").alias("s"),
-        F.col("cid").cast("bigint").alias("cid"),
-        F.col("pos").cast("int").alias("pos"),
-        F.col("val").cast("bigint").alias("val"))
 
 
 @register("pq_adc_topk", _pq_adc_oracle_sql())
@@ -8752,7 +6224,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly why the re-rank stage is the shipped shape.
 
     The codebook comes from the SHARED persisted artifact
-    (fit-if-absent — ``pq_fit_codebooks`` owns the overwrite), not an
+    (fit-if-absent — only an explicit re-fit overwrites it), not an
     in-plan refit: the quantized fit is deterministic so the result is
     bit-identical, and the refit's Lloyd-round jobs were pure exposure
     to ambient load (22.2 s in the r8 driver sweep
@@ -8809,61 +6281,10 @@ def pq_adc_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from datafusion_monoid_spark.operators import graph as gr
 
-_TRIANGLE_ORACLE = f"""
-WITH reps AS (
-  SELECT min(doc_id) AS doc_id
-  FROM documents GROUP BY md5({dd.NORMALIZE_SQL.format(expr='text')})
-),
-survivors AS (
-  SELECT d.* FROM documents d JOIN reps USING (doc_id)
-),{_minhash_candidates_cte('survivors').replace('WITH msh AS', 'msh AS', 1)},
-e AS (SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
-      FROM cand WHERE {_CASCADE_EST} >= 0.35),
-deg AS (SELECT v, count(*) AS d FROM (
-          SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
-        GROUP BY v),
-tri AS (SELECT count(*) AS t
-        FROM e e1 JOIN e e2 ON e1.b = e2.a
-                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-wed AS (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) AS w FROM deg)
-SELECT (SELECT count(*) FROM deg) AS n_nodes,
-       (SELECT count(*) FROM e) AS n_edges,
-       (SELECT w FROM wed) AS n_wedges,
-       (SELECT t FROM tri) AS n_triangles,
-       CAST((3 * (SELECT t FROM tri) * 1000000)
-            // greatest((SELECT w FROM wed), 1) AS BIGINT) AS cc_micro
-"""
-
-
-@register("graph_triangle_stats", _TRIANGLE_ORACLE)
-def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle census + global clustering coefficient of the
-    near-dup candidate graph (over exact-dedup survivors — the
-    cascade composition, same edge set as `pagerank_dedup_survivors`).
-    Clustering coefficient separates TRANSITIVE duplicate clusters
-    (cliquey communities — template families, mirror sites) from
-    chain-like false-positive paths; it is the graph-health number an
-    operator reads before trusting connected components to define
-    dedup groups.
-
-    Scale shape — Suri & Vassilvitskii's degree-ordered orientation:
-    every edge points from its lower-(degree, id) endpoint to the
-    higher, so each triangle is generated by exactly ONE wedge at its
-    lowest-ranked vertex, and per-vertex wedge fan-out is bounded by
-    ORIENTED out-degree (O(sqrt(edges)) for any graph) instead of raw
-    degree — the hot node of a star topology generates zero wedges
-    rather than deg^2.  Three shuffles beyond the edge build: degree
-    count, wedge self-join on the apex, closing-edge join.  The
-    oracle counts the same triangles via the simpler a<b<c id-order
-    join (orientation choice does not change the census)."""
-    return gr.triangle_stats(_cascade_edges(spark, sf_dir))
-
 
 def _cascade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (a < b, distinct) near-dup candidate edges over
-    exact-dedup survivors — the shared edge set of the graph tier
-    (`graph_triangle_stats`, `graph_kcore_sizes`,
-    `pagerank_dedup_survivors`).
+    exact-dedup survivors — the edge set `graph_kcore_sizes` peels.
 
     Persisted as a per-corpus artifact (the fit/serve pattern — same
     contract as the IVF centroids): the dedup -> minhash -> banding
@@ -9260,7 +6681,7 @@ def _opq_rotated(e: DataFrame) -> DataFrame:
     The 64 signed folds run as ONE int64 NumPy matmul per Arrow batch
     (``npkernels.rotate_signs_np``, guide §4.2) instead of 64
     interpreted ``aggregate(zip_with(...))`` expressions per row —
-    the leg that kept this tier flat in r13 (VERDICT item 4).
+    the leg that kept this tier's wall time flat.
     Quantization stays the Spark expression (round-half-up exactly
     Spark's); integer addition is associative, so the matmul is
     bit-identical to the expression fold (pinned in
@@ -9524,105 +6945,6 @@ def pq_ivfadc_residual_pretrained(spark: SparkSession,
                                       queries, k=5, nprobe=6)
 
 
-def _dsir_oracle_sql() -> str:
-    return f"""
-WITH t AS (SELECT doc_id, source, lang, {_TOKS} AS toks FROM documents),
-b AS (SELECT doc_id, source, lang,
-             unnest(list_transform(range(0, greatest(len(toks) - 1, 0)),
-                    i -> toks[i + 1])) AS w1,
-             unnest(list_transform(range(0, greatest(len(toks) - 1, 0)),
-                    i -> toks[i + 1] || ' ' || toks[i + 2])) AS bg
-      FROM t),
-cbg AS (SELECT bg, count(*) AS c_bg FROM b GROUP BY bg),
-cctx AS (SELECT w1, count(*) AS c_ctx FROM b GROUP BY w1),
-tbg AS (SELECT bg, count(*) AS t_bg FROM b WHERE lang = 'en' GROUP BY bg),
-tctx AS (SELECT w1, count(*) AS t_ctx FROM b WHERE lang = 'en'
-         GROUP BY w1),
-p AS (SELECT doc_id, source,
-             (c_bg * 1000000) // c_ctx AS p_c,
-             CASE WHEN t_ctx IS NULL OR t_bg IS NULL THEN 0
-                  ELSE (t_bg * 1000000) // t_ctx END AS p_t
-      FROM b JOIN cbg USING (bg) JOIN cctx USING (w1)
-             LEFT JOIN tbg USING (bg) LEFT JOIN tctx USING (w1)),
-d AS (SELECT doc_id, source,
-             CAST(sum(p_t) // count(*) AS BIGINT)
-               - CAST(sum(p_c) // count(*) AS BIGINT) AS w_micro
-      FROM p GROUP BY doc_id, source)
-SELECT source, count(*) AS n_docs,
-       CAST((sum(w_micro) - sum(w_micro) % count(*)) / count(*)
-            AS BIGINT) AS avg_weight_micro,
-       CAST(sum(CASE WHEN w_micro >= 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_selected
-FROM d GROUP BY source
-"""
-
-
-@register("curation_dsir_weights", _dsir_oracle_sql())
-def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-shaped importance weighting (Xie et al. 2023, "Data
-    Selection for Language Models via Importance Resampling"): score
-    every document under a TARGET-distribution n-gram LM (here the
-    English-labeled slice — the 'domain we want more of') and under
-    the full-corpus LM; the importance weight is the difference of
-    mean bigram probabilities in exact micro-units (the raw-probability
-    proxy for DSIR's log-ratio — same selection direction, no libm in
-    the gate), and documents with non-negative weight are the
-    importance-selected set.  Bigrams unseen in the target model score
-    zero (no smoothing — deterministic, and exactly what pushes
-    out-of-domain text below the threshold).
-
-    Scale: all four count relations are MODEL-sized (vocab-bounded
-    broadcast sides); the corpus relation through the shuffles is the
-    narrow (doc_id, w1, bg) occurrence table, built ONCE and reused by
-    both models — the target model is a filtered partial-agg over the
-    same pass, not a second tokenization."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "lang", "text")
-    # zip_with over shifted slices, not transform(sequence, element_at):
-    # the latter re-tokenizes per bigram position (the _lm_doc_bigrams
-    # lesson, optimization round r13)
-    toks = dd.tokens("text")
-    nt = F.size(toks)
-    pairs = F.when(
-        nt >= 2,
-        F.zip_with(
-            F.slice(toks, 1, nt - 1), F.slice(toks, 2, nt - 1),
-            lambda a, b: F.struct(
-                a.alias("w1"),
-                F.concat_ws(" ", a, b).alias("bg"))),
-    ).otherwise(F.array().cast("array<struct<w1:string,bg:string>>"))
-    b = (docs.select("doc_id", "source", "lang",
-                     F.explode(pairs).alias("p"))
-         .select("doc_id", "source", "lang",
-                 F.col("p.w1").alias("w1"), F.col("p.bg").alias("bg")))
-    b = _track_ckpt(b.localCheckpoint(eager=True))  # one pass, 4 models
-    cbg = b.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg"))
-    cctx = b.groupBy("w1").agg(F.count(F.lit(1)).alias("c_ctx"))
-    tb = b.where(F.col("lang") == "en")
-    tbg = tb.groupBy("bg").agg(F.count(F.lit(1)).alias("t_bg"))
-    tctx = tb.groupBy("w1").agg(F.count(F.lit(1)).alias("t_ctx"))
-    p = (b.join(F.broadcast(cbg), "bg").join(F.broadcast(cctx), "w1")
-         .join(F.broadcast(tbg), "bg", "left")
-         .join(F.broadcast(tctx), "w1", "left")
-         .select("doc_id", "source",
-                 cu.micro_ratio(F.col("c_bg"), F.col("c_ctx"))
-                 .alias("p_c"),
-                 F.when(F.col("t_ctx").isNull() | F.col("t_bg").isNull(),
-                        F.lit(0).cast("bigint"))
-                 .otherwise(cu.micro_ratio(F.col("t_bg"),
-                                           F.col("t_ctx")))
-                 .alias("p_t")))
-    d = (p.groupBy("doc_id", "source")
-         .agg((_idiv(F.sum("p_t"), F.count(F.lit(1)))
-               - _idiv(F.sum("p_c"), F.count(F.lit(1))))
-              .alias("w_micro")))
-    return (d.groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 _idiv(F.sum("w_micro"), F.count(F.lit(1)))
-                 .alias("avg_weight_micro"),
-                 F.sum((F.col("w_micro") >= 0).cast("int")).cast("bigint")
-                 .alias("n_selected")))
-
-
 # ---------------------------------------------------------------------------
 # Round 6: dominant principal direction via exact-integer power iteration
 # ---------------------------------------------------------------------------
@@ -9655,75 +6977,6 @@ b{t + 1} AS (SELECT i, {_pca_trunc_div_sql('mv * 1000000',
                       AS bv
              FROM m{t})""")
     return "".join(parts)
-
-
-def _pca_oracle_sql() -> str:
-    dim, iters = _PCA_DIM, _PCA_ITERS
-    return f"""
-WITH v AS (SELECT vec_id,
-                  list_transform(embedding::DOUBLE[],
-                    x -> CAST(round(x * 1000) AS BIGINT)) AS v
-           FROM embeddings),
-el AS (SELECT vec_id, unnest(v) AS x,
-              unnest(range(0, len(v))) AS i FROM v),
-graw AS (SELECT a.i AS i, b.i AS j,
-                CAST(sum(a.x * b.x) AS BIGINT) AS gs
-         FROM el a JOIN el b USING (vec_id) GROUP BY a.i, b.i),
-g AS (SELECT i, j, {_pca_trunc_div_sql('gs', '1000')} AS gv FROM graw),
-b0 AS (SELECT i, CAST(1000000 AS BIGINT) AS bv
-       FROM (SELECT unnest(range(0, {dim})) AS i) t)\
-{_power_iter_sql_ctes(iters)}
-SELECT CAST(i AS INTEGER) AS pos, bv AS comp_micro FROM b{iters}"""
-
-
-@register("embedding_pca_power", _pca_oracle_sql())
-def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dominant principal direction of the embedding corpus — the
-    spectral health check behind PCA whitening, anisotropy diagnosis
-    ("is one direction eating the cosine?"), and dimensionality
-    decisions — as a distributed computation with the aggregation
-    doing ALL the corpus-sized work:
-
-    * the 64 x 64 second-moment (Gram) matrix is ONE partial-agg pass:
-      per row, the 4096 coordinate products posexplode out and
-      map-side-combine; the shuffle carries dim^2 groups regardless of
-      corpus size — the monoid two-phase shape on an outer product;
-    * power iteration then runs on dim-bounded relations (64 rows),
-      every multiply a broadcast-scale join; 3 fixed rounds from the
-      all-ones seed, renormalized each round to max |component| = 1e6.
-
-    Exact integers throughout: milli-unit vectors keep
-    ``sum(x_i * x_j)`` and the 64-term matrix-vector products inside
-    BIGINT at any corpus size that fits a count (bounds documented
-    inline), and the renormalizing division uses the engine-portable
-    TRUNCATED form ``(a - a % b) / b`` — plain ``//`` floors in DuckDB
-    but truncates in Spark, which would diverge on negative
-    components.  The oracle replays the Gram build and all three
-    iterations bit-for-bit."""
-    e = _emb(spark, sf_dir)
-    v = e.select(
-        "vec_id",
-        F.transform(F.col("embedding").cast("array<double>"),
-                    lambda x: F.round(x * 1000).cast("bigint")).alias("v"))
-    el = v.select("vec_id", F.posexplode("v").alias("i", "x"))
-
-    def trunc_div(a, d):
-        return ((a - a % d) / d).cast("bigint")
-
-    # Gram reduced to kilo-units: keeps the 64-term matrix-vector
-    # products inside BIGINT up to ~1e9 vectors (gv <= N*4e3; mv <=
-    # 64*gv*1e6); raise the reduction for a larger corpus
-    g = (el.alias("a").join(el.alias("b"), "vec_id")
-         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-         .agg(F.sum(F.col("a.x") * F.col("b.x")).cast("bigint")
-              .alias("gs"))
-         .select("i", "j", trunc_div(F.col("gs"), F.lit(1000))
-                 .alias("gv")))
-    # dim^2 = 4096 rows: everything below is broadcast-sized
-    g = _track_ckpt(g.localCheckpoint(eager=True))
-    b = _power_iteration(spark, g, _PCA_ITERS)
-    return b.select(F.col("i").cast("int").alias("pos"),
-                    F.col("bv").alias("comp_micro"))
 
 
 def _power_iteration(spark: SparkSession, g: DataFrame,
@@ -9929,31 +7182,6 @@ mr AS (SELECT sa, sb, h, row_number() OVER (PARTITION BY sa, sb
 msk AS (SELECT sa, sb, h FROM mr WHERE rk <= {k})"""
 
 
-def _kmv_oracle_sql() -> str:
-    k, ks = _KMV_K, _KMV_KS
-    td = _pca_trunc_div_sql
-    return f"""
-WITH {_kmv_pairs_prologue()},
-magg AS (SELECT sa, sb, count(*) AS ku, max(h) AS h_ku
-         FROM msk GROUP BY sa, sb),
-ov AS (SELECT msk.sa, msk.sb, count(*) AS ov_k
-       FROM msk JOIN skt pa ON pa.source = msk.sa AND pa.h = msk.h
-                JOIN skt pb ON pb.source = msk.sb AND pb.h = msk.h
-       GROUP BY msk.sa, msk.sb),
-j AS (SELECT magg.sa, magg.sb, ku, h_ku, coalesce(ov_k, 0) AS ov_k,
-             CASE WHEN ku < {k} THEN ku
-                  ELSE {td(str(ks), 'h_ku')} END AS est_u
-      FROM magg LEFT JOIN ov ON magg.sa = ov.sa AND magg.sb = ov.sb)
-SELECT j.sa AS source_a, j.sb AS source_b,
-       ea.est_d AS est_distinct_a, eb.est_d AS est_distinct_b,
-       est_u AS est_union, CAST(ov_k AS BIGINT) AS overlap_k,
-       {td('ov_k * 1000000', 'ku')} AS jaccard_micro,
-       {td('ov_k * est_u', 'ku')} AS est_intersect
-FROM j JOIN est ea ON ea.source = j.sa
-       JOIN est eb ON eb.source = j.sb
-"""
-
-
 def _kmv_pair_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source_a, source_b, sk_a, sk_b, u, ku): per-source KMV
     sketches (built in ONE corpus aggregation, checkpointed — ~20
@@ -9974,271 +7202,6 @@ def _kmv_pair_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("u", sk.kmv_merge(F.col("sk_a"), F.col("sk_b"),
                                           k=_KMV_K))
             .withColumn("ku", F.size("u").cast("bigint")))
-
-
-@register("kmv_source_overlap", _kmv_oracle_sql())
-def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise set-overlap report across sources from KMV
-    (k-minimum-values) distinct sketches over 3-gram shingles: per
-    source pair, the estimated distinct-shingle counts, union estimate
-    from the MERGED sketch (the monoid combine — k smallest distinct of
-    both), the sketch-overlap count, the Jaccard estimate
-    |K(A∪B) ∩ K(A) ∩ K(B)| / |K(A∪B)| in exact micro-units, and the
-    intersection estimate jaccard x union — the standard KMV set
-    algebra (Beyer et al. 2007).
-
-    Scale: the ONLY corpus-sized work is the sketch build, which is
-    partial/final with no exact-distinct shuffle (duplicates die in the
-    map-side dedup; <= k values per group cross the wire — see
-    ``sketch.kmv_sketch``).  Everything pairwise runs on the 20-row
-    sketch relation: the < self-join is a broadcast nested loop over
-    kilobytes, and checkpointing the sketches means the corpus is
-    scanned ONCE, not once per join side.  At 100 TB this is the
-    "which crawl snapshots overlap and by how much" report priced at
-    one aggregation pass."""
-    p = (_kmv_pair_sketches(spark, sf_dir)
-         .withColumn("ov_k",
-                     F.size(F.array_intersect(
-                         F.array_intersect(F.col("u"), F.col("sk_a")),
-                         F.col("sk_b"))).cast("bigint"))
-         .withColumn("est_union", sk.kmv_estimate(F.col("u"), k=_KMV_K)))
-    return p.select(
-        "source_a", "source_b",
-        sk.kmv_estimate(F.col("sk_a"), k=_KMV_K).alias("est_distinct_a"),
-        sk.kmv_estimate(F.col("sk_b"), k=_KMV_K).alias("est_distinct_b"),
-        "est_union", F.col("ov_k").alias("overlap_k"),
-        sk._trunc_div(F.col("ov_k") * 1_000_000,
-                      F.col("ku")).alias("jaccard_micro"),
-        sk._trunc_div(F.col("ov_k") * F.col("est_union"),
-                      F.col("ku")).alias("est_intersect"))
-
-
-def _kmv_sketch_persisted(spark: SparkSession, sf_dir: str) -> str:
-    """Build the per-source KMV sketch of the EXISTING corpus
-    (doc_id % 11 != 0 — everything but today's batch) and persist it
-    as parquet; returns the path.  A <= sources x (k+1)-value table —
-    always broadcast-sized.  Reused when fresh, mirroring a production
-    sketch index maintained at ingest."""
-    path = _artifact_path(sf_dir, "kmv_source_sketch")
-    if _artifact_fresh(path, f"{sf_dir}/documents.parquet"):
-        return path
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") % 11 != 0)
-    el = docs.select("source",
-                     F.explode(dd.word_shingles("text")).alias("sh"))
-    (sk.kmv_sketch(el, "source", "sh", k=_KMV_K)
-     .write.mode("overwrite").parquet(path))
-    return path
-
-
-def _kmv_inc_oracle_sql() -> str:
-    k, ks = _KMV_K, _KMV_KS
-    td = _pca_trunc_div_sql
-
-    def est(n, h):
-        return f"CASE WHEN {n} < {k} THEN {n} ELSE {td(str(ks), h)} END"
-
-    return f"""
-WITH s AS (SELECT source, doc_id, unnest({dd.shingles_sql('text')}) AS sh
-           FROM documents),
-h AS (SELECT DISTINCT source, doc_id % 11 = 0 AS is_new,
-             {dd.md5_long_sql('sh')} % {1 << 40} AS h FROM s),
-r AS (SELECT source, is_new, h,
-             row_number() OVER (PARTITION BY source, is_new
-                                ORDER BY h) AS rk FROM h),
-skt AS (SELECT source, is_new, h FROM r WHERE rk <= {k}),
-agg AS (SELECT source, is_new, count(*) AS n_k, max(h) AS h_k
-        FROM skt GROUP BY source, is_new),
-m AS (SELECT DISTINCT source, h FROM skt),
-mr AS (SELECT source, h, row_number() OVER (PARTITION BY source
-                                            ORDER BY h) AS rk FROM m),
-mak AS (SELECT source, count(*) AS n_k, max(h) AS h_k
-        FROM mr WHERE rk <= {k} GROUP BY source),
-o AS (SELECT source, {est('n_k', 'h_k')} AS est_before
-      FROM agg WHERE NOT is_new),
-nn AS (SELECT source, {est('n_k', 'h_k')} AS est_batch
-       FROM agg WHERE is_new),
-a AS (SELECT source, {est('n_k', 'h_k')} AS est_after FROM mak)
-SELECT a.source AS source,
-       coalesce(est_before, 0) AS est_before,
-       coalesce(est_batch, 0) AS est_batch,
-       est_after,
-       est_after - coalesce(est_before, 0) AS est_new_content
-FROM a LEFT JOIN o ON a.source = o.source
-       LEFT JOIN nn ON a.source = nn.source
-"""
-
-
-@register("kmv_incremental_merge", _kmv_inc_oracle_sql())
-def kmv_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental distinct-content accounting — the daily-ingest twin
-    of `kmv_source_overlap`, answering "how much genuinely NEW content
-    did today's batch add per source?" without touching the existing
-    corpus: the corpus's per-source KMV sketches live as a PERSISTED
-    broadcast-sized artifact (built once, reused while fresh — the
-    production sketch index), today's batch (doc_id % 11 = 0, the
-    `dedup_incremental_newbatch` convention) is sketched in one
-    aggregation pass over the BATCH ONLY, and the sketches combine
-    with the monoid merge.  est_new_content = est(merged) -
-    est(corpus) estimates the batch's novel distinct shingles — near
-    zero for a re-crawl, ~batch-distinct for fresh content; estimator
-    noise can make it slightly negative, which is itself the signal
-    that the batch added nothing.
-
-    This is WHY the sketch being a monoid matters at 100 TB: per-ingest
-    cost is O(batch) + a sources-sized merge, never a corpus rescan;
-    the same merge runs hierarchically (hourly -> daily -> total).
-    The oracle replays both sketch builds and the merge from the raw
-    table."""
-    path = _kmv_sketch_persisted(spark, sf_dir)
-    old = spark.read.parquet(path).select(
-        "source", F.col("sketch").alias("sk_old"))
-    batch = _docs(spark, sf_dir).where(F.col("doc_id") % 11 == 0)
-    el = batch.select("source",
-                      F.explode(dd.word_shingles("text")).alias("sh"))
-    new = (sk.kmv_sketch(el, "source", "sh", k=_KMV_K)
-           .select("source", F.col("sketch").alias("sk_new")))
-    empty = F.array().cast("array<bigint>")
-    j = (old.join(new, "source", "full_outer")
-         .select("source",
-                 F.coalesce(F.col("sk_old"), empty).alias("sk_old"),
-                 F.coalesce(F.col("sk_new"), empty).alias("sk_new")))
-    j = j.withColumn("sk_merged",
-                     sk.kmv_merge(F.col("sk_old"), F.col("sk_new"),
-                                  k=_KMV_K))
-    return (j.select(
-        "source",
-        sk.kmv_estimate(F.col("sk_old"), k=_KMV_K).alias("est_before"),
-        sk.kmv_estimate(F.col("sk_new"), k=_KMV_K).alias("est_batch"),
-        sk.kmv_estimate(F.col("sk_merged"), k=_KMV_K).alias("est_after"))
-        .withColumn("est_new_content",
-                    F.col("est_after") - F.col("est_before")))
-
-
-def _streaming_kmv_oracle_sql() -> str:
-    """Full batch recompute of the per-source KMV sketch — the
-    stream==batch contract for the micro-batched partial merge."""
-    k, ks = _KMV_K, _KMV_KS
-    td = _pca_trunc_div_sql
-    return f"""
-WITH s AS (SELECT source, unnest({dd.shingles_sql('text')}) AS sh
-           FROM documents),
-h AS (SELECT DISTINCT source,
-             {dd.md5_long_sql('sh')} % {1 << 40} AS h FROM s),
-r AS (SELECT source, h, row_number() OVER (PARTITION BY source
-                                           ORDER BY h) AS rk FROM h),
-agg AS (SELECT source, count(*) AS n_k, max(h) AS h_k
-        FROM r WHERE rk <= {k} GROUP BY source)
-SELECT source, CAST(n_k AS BIGINT) AS n_in_sketch,
-       CASE WHEN n_k < {k} THEN n_k
-            ELSE {td(str(ks), 'h_k')} END AS est_distinct
-FROM agg
-"""
-
-
-register("streaming_kmv_distinct", _streaming_kmv_oracle_sql())(
-    sq.streaming_kmv_distinct)
-
-
-# ---------------------------------------------------------------------------
-# Round 6: one-pass column profiling
-# ---------------------------------------------------------------------------
-
-
-@register("dq_column_profile", """
-WITH ex AS (
-  SELECT 'o_custkey' AS column_name, CAST(o_custkey AS VARCHAR) AS val
-  FROM orders
-  UNION ALL SELECT 'o_orderstatus', o_orderstatus FROM orders
-  UNION ALL SELECT 'o_orderpriority', o_orderpriority FROM orders
-  UNION ALL SELECT 'o_totalprice_cents',
-                   CAST(CAST(round(o_totalprice * 100) AS BIGINT)
-                        AS VARCHAR) FROM orders
-  UNION ALL SELECT 'o_orderdate_day',
-                   CAST(CAST(o_orderdate AS DATE) AS VARCHAR) FROM orders),
-pv AS (SELECT column_name, val, count(*) AS cnt
-       FROM ex GROUP BY column_name, val),
-st AS (SELECT column_name,
-              CAST(sum(cnt) AS BIGINT) AS n_rows,
-              CAST(coalesce(sum(CASE WHEN val IS NULL THEN cnt END), 0)
-                   AS BIGINT) AS n_null,
-              CAST(count(CASE WHEN val IS NOT NULL THEN 1 END)
-                   AS BIGINT) AS n_distinct,
-              min(val) AS min_val, max(val) AS max_val
-       FROM pv GROUP BY column_name),
-tp AS (SELECT column_name, val AS top_val, CAST(cnt AS BIGINT) AS top_cnt
-       FROM (SELECT column_name, val, cnt,
-                    row_number() OVER (PARTITION BY column_name
-                                       ORDER BY cnt DESC, val) AS rk
-             FROM pv WHERE val IS NOT NULL) WHERE rk = 1)
-SELECT st.column_name AS column_name, n_rows, n_null, n_distinct,
-       min_val, max_val, top_val, top_cnt
-FROM st LEFT JOIN tp USING (column_name)
-""")
-def dq_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass column profiling of the orders table — the warehouse
-    onboarding report (per column: row/null/distinct counts, min/max,
-    modal value) computed from a SINGLE scan: every profiled column is
-    projected to a cross-engine-stable string normal form (ints as
-    digits, money as cents, timestamps as ISO days), stacked with
-    posexplode, and reduced to the per-(column, value) count relation —
-    all downstream stats (including the deterministic top value,
-    tie-broken lexicographically) derive from that narrow relation.
-
-    Scale: the stack multiplies rows by the profiled-column count, but
-    map-side partial aggregation collapses it to distinct (column,
-    value) pairs before the shuffle — value-cardinality bound, not row
-    bound, for every low-cardinality column.  A key-like column
-    (o_custkey) makes the per-value relation row-sized; that is what
-    EXACT distinct costs by definition — swap the KMV sketch
-    (`kmv_source_overlap`) into the same stacked pass when estimates
-    suffice at 100 TB.  The min/max/mode over the string normal form
-    are order-stable across engines, which is the point of normalizing
-    first."""
-    o = _t(spark, sf_dir, "orders")
-    cols = [
-        ("o_custkey", F.col("o_custkey").cast("string")),
-        ("o_orderstatus", F.col("o_orderstatus")),
-        ("o_orderpriority", F.col("o_orderpriority")),
-        ("o_totalprice_cents",
-         F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string")),
-        ("o_orderdate_day",
-         F.col("o_orderdate").cast("date").cast("string")),
-    ]
-    # the stacked rows carry a TINYINT column INDEX, not the column-name
-    # string — the heavy (column, value) shuffle hashes/compares 1 byte
-    # instead of a 15-char name per row (measured ~35% off the entry);
-    # names come back via one literal element_at on the 5-row result
-    ex = o.select(F.posexplode(F.array(*[
-        c.alias("v") for _, c in cols])).alias("ci", "val"))
-    pv = (ex.groupBy("ci", "val")
-          .agg(F.count(F.lit(1)).alias("cnt")))
-    # ALL downstream stats fold in ONE aggregation over pv — no
-    # checkpoint, no window, no self-join (the round-7 shape cost a
-    # materialization job plus two extra shuffles and ran 20x its
-    # oracle in the driver bench).  The modal value is an argmax:
-    # min(struct(-cnt, val)) is lexicographic struct ordering = highest
-    # count, then lexicographically smallest value — the window's
-    # (cnt DESC, val ASC) row_number()=1 tie-break exactly.
-    top = F.min(F.when(F.col("val").isNotNull(),
-                       F.struct((-F.col("cnt")).alias("nc"),
-                                F.col("val").alias("v"))))
-    return (pv.groupBy("ci")
-            .agg(F.sum("cnt").cast("bigint").alias("n_rows"),
-                 F.coalesce(F.sum(F.when(F.col("val").isNull(),
-                                         F.col("cnt"))),
-                            F.lit(0).cast("bigint")).cast("bigint")
-                 .alias("n_null"),
-                 F.count(F.when(F.col("val").isNotNull(), F.lit(1)))
-                 .cast("bigint").alias("n_distinct"),
-                 F.min("val").alias("min_val"),
-                 F.max("val").alias("max_val"),
-                 top.alias("__top"))
-            .select(F.element_at(F.array(*[F.lit(n) for n, _ in cols]),
-                                 F.col("ci") + 1).alias("column_name"),
-                    "n_rows", "n_null", "n_distinct",
-                    "min_val", "max_val",
-                    F.col("__top.v").alias("top_val"),
-                    (-F.col("__top.nc")).cast("bigint").alias("top_cnt")))
 
 
 # ---------------------------------------------------------------------------
@@ -10371,8 +7334,8 @@ def embedding_abtt_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABTT post-processing (Mu & Viswanath 2018, "All-but-the-Top"):
     mean-center the embedding corpus, find the dominant principal
     direction of the CENTERED data (power iteration on the centered
-    Gram — the covariance direction, unlike `embedding_pca_power`'s
-    raw second moment), remove each vector's projection onto it, and
+    Gram — the covariance direction, not the raw second moment),
+    remove each vector's projection onto it, and
     report the per-label anisotropy reduction: mean squared norm
     before/after removal and the mean |projection| — the standard fix
     for the "one dominant direction eats the cosine" pathology of
@@ -10668,8 +7631,8 @@ def bpe_encode_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast left join against the persisted trained vocabulary, and
     the batch token stream joins the resulting per-token model
     broadcast — one partial agg, no retrain, no corpus access at all
-    (mirrors `kmv_incremental_merge` and `dedup_incremental_newbatch`:
-    ingest work is batch-sized)."""
+    (mirrors `dedup_incremental_newbatch`: ingest work is
+    batch-sized)."""
     mpath, vpath = _fit_bpe_persisted(spark, sf_dir, holdout=True)
     marr = (spark.read.parquet(mpath)
             .agg(F.array_sort(F.collect_list(
@@ -10815,59 +7778,6 @@ FROM uocc JOIN uts USING (tok) GROUP BY source
 """
 
 
-def _unigram_viterbi_ctes(rounds: int = ugm.ROUNDS) -> str:
-    """The exact-Viterbi forward DP as unrolled CTEs — the SQL twin of
-    ``unigram.viterbi_dp_expr``: ``vd{j}`` holds, for every vocabulary
-    token of length >= j, the best (score, piece count) over exact
-    segmentations of its first ``j`` characters; candidates are the
-    MAXP last-piece lengths unioned from the right prior positions,
-    the winner picked by (score DESC, l DESC) — the longer-last-piece
-    tie-break the Spark fold applies.  Ends with ``vfin`` (tok, cnt,
-    n, score): each token's full-length DP entry."""
-    w, maxp = ugm.MAX_TOK, ugm.MAXP
-    parts = [f""",
-vp AS MATERIALIZED (
-  SELECT piece, greatest((p_micro * 64) // 1000000, 1) AS p64
-  FROM up{rounds}),
-vd0 AS (SELECT tok, cnt, CAST({ugm.VIT_BASE} AS BIGINT) AS score,
-               0 AS n FROM uvoc)"""]
-    for j in range(1, w + 1):
-        cands = "\n          UNION ALL ".join(
-            f"SELECT tok, cnt, score AS pscore, n AS pn, {l} AS l, "
-            f"substr(tok, {j - l + 1}, {l}) AS cand "
-            f"FROM vd{j - l} WHERE length(tok) >= {j}"
-            for l in range(1, min(maxp, j) + 1))
-        parts.append(f""",
-vd{j} AS MATERIALIZED (
-  SELECT tok, cnt, score, n FROM (
-    SELECT c.tok, c.cnt, (c.pscore // 64) * p.p64 AS score,
-           c.pn + 1 AS n,
-           row_number() OVER (PARTITION BY c.tok
-                              ORDER BY (c.pscore // 64) * p.p64 DESC,
-                                       c.l DESC) AS rn
-    FROM ({cands}) c JOIN vp p ON c.cand = p.piece)
-  WHERE rn = 1)""")
-    fins = "\nUNION ALL ".join(
-        f"SELECT tok, cnt, n, score FROM vd{j} WHERE length(tok) = {j}"
-        for j in range(1, w + 1))
-    parts.append(f""",
-vfin AS ({fins})""")
-    return "".join(parts)
-
-
-def _unigram_viterbi_oracle_sql(rounds: int = ugm.ROUNDS) -> str:
-    return f"""
-WITH {_unigram_ctes(rounds)}{_unigram_viterbi_ctes(rounds)},{_unigram_seg_ctes("uf", f"up{rounds}")},
-ug AS (SELECT tok, CAST(count(*) AS BIGINT) AS greedy_n_pieces
-       FROM ufch GROUP BY tok)
-SELECT v.tok, CAST(v.cnt AS BIGINT) AS cnt,
-       CAST(v.n AS BIGINT) AS n_pieces,
-       CAST(v.score AS BIGINT) AS score_q6,
-       g.greedy_n_pieces
-FROM vfin v JOIN ug g ON v.tok = g.tok
-"""
-
-
 def _fit_unigram_persisted(spark: SparkSession, sf_dir: str,
                            overwrite: bool) -> str:
     """Train the unigram-LM piece table and persist it as the model
@@ -10952,45 +7862,6 @@ def unigram_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("pieces_per_token_micro"),
                  _idiv(F.sum("sum_p_micro"), F.sum("n_pieces"))
                  .alias("avg_piece_p_micro")))
-
-
-@register("unigram_encode_viterbi", _unigram_viterbi_oracle_sql())
-def unigram_encode_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT Viterbi segmentation under the persisted unigram-LM piece
-    table (Kudo 2018 §3: the max-likelihood segmentation the greedy
-    longest-match tier approximates — closing that entry's documented
-    deviation).  Log-free exact-integer restatement:
-    likelihoods quantize to 6 bits and the normalized product
-    ``prod(p_i/64)`` is carried as ``prod(p64_i) * 64^(10 - n)`` — a
-    common-denominator BIGINT, so cross-length comparisons, the DP max
-    and the tie-break (longer last piece) replay bit-for-bit in any
-    engine; the DuckDB oracle runs the same forward DP as MAX_TOK
-    unrolled CTEs.  Per token: piece count and the 2^60-scale Viterbi
-    score, next to the greedy tier's piece count — where the columns
-    disagree, greedy left likelihood on the table
-    (tests/test_unigram.py pins a constructed divergence case and
-    cross-checks the DP against a pure-Python reference).
-
-    Scale: identical economics to the greedy tier — the corpus
-    contributes nothing here (segmentation runs on the DISTINCT token
-    vocabulary); the DP is one map-only literal-table fold (MAX_TOK
-    steps x MAXP candidate lookups, no joins), so the entry is
-    vocabulary-bounded end to end and a serve job would broadcast-join
-    these per-token stats against the corpus stream exactly like
-    ``unigram_encode_stats``."""
-    path = _fit_unigram_persisted(spark, sf_dir, overwrite=False)
-    table = [(r["piece"], int(r["cnt"]), int(r["p_micro"]))
-             for r in spark.read.parquet(path).collect()]  # model-sized
-    # vocab is model-sized (distinct tokens) but DERIVING it tokenizes
-    # the corpus — checkpoint so the bound-assert job and the DP
-    # projection don't each pay that pass
-    vocab = _track_ckpt(ugm.token_vocab(_docs(spark, sf_dir))
-                        .localCheckpoint(eager=True))
-    # compose the operator (it asserts encodability itself) — the DP
-    # extraction lives in ONE place, unigram.viterbi_token_stats
-    return (ugm.viterbi_token_stats(vocab, table)
-            .withColumn("greedy_n_pieces",
-                        F.size(ugm.segment_expr(table)).cast("bigint")))
 
 
 def _bpe_doc_oracle_sql(rounds: int = bpem.BPE_ROUNDS) -> str:
@@ -11183,8 +8054,8 @@ LIMIT 20
 
 def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based (30 min) sessions as closed [s_start, s_end] epoch-second
-    intervals — the shared input of the interval-overlap tier.  Same
-    lag + running-sum shape as `events_sessionize`; the groupBy key
+    intervals — the shared input of the interval-overlap tier.  A lag +
+    running-sum sessionization; the groupBy key
     (user_id, sid) is a superset of the window's partition key, so
     Catalyst satisfies it with the SAME hash distribution — one
     shuffle for sessionize + interval build."""
@@ -11360,41 +8231,6 @@ def exact_percentiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _t(spark, sf_dir, "lineitem") \
         .select(F.col("l_extendedprice").alias("val"))
     return exact_percentiles_2pass(v, spark)
-
-
-# ---------------------------------------------------------------------------
-# Round 6: skyline / Pareto frontier
-# ---------------------------------------------------------------------------
-
-from datafusion_monoid_spark.operators.skyline import skyline_2d
-
-_PARETO_ORACLE = """
-WITH pts AS (SELECT DISTINCT p_retailprice, p_size FROM part)
-SELECT p_retailprice, p_size FROM pts a
-WHERE NOT EXISTS (
-  SELECT 1 FROM pts b
-  WHERE b.p_retailprice <= a.p_retailprice AND b.p_size >= a.p_size
-    AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size))
-"""
-
-
-@register("pareto_parts_frontier", _PARETO_ORACLE)
-def pareto_parts_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Pareto frontier of parts — cheapest price vs largest size
-    (no part on the frontier is beaten on both axes).  The oracle is
-    the quadratic NOT EXISTS dominance anti-join; the Spark path is
-    :func:`skyline_2d`'s local-skyline-then-global-skyline
-    decomposition (skyline is an idempotent order-free reduce, so it
-    splits like a partial aggregation: each partition prunes to its
-    ~O(log n)-point local frontier map-side with ZERO shuffle, and
-    only survivors reach the small global pass).  Size is maximized
-    by negation in and back out."""
-    p = _t(spark, sf_dir, "part").select(
-        F.col("p_retailprice").alias("price"),
-        (-F.col("p_size")).alias("negsize"))
-    front = skyline_2d(p, "price", "negsize")
-    return front.select(F.col("price").alias("p_retailprice"),
-                        (-F.col("negsize")).alias("p_size"))
 
 
 # ---------------------------------------------------------------------------
@@ -11602,8 +8438,7 @@ FROM e
 @register("kmv_anotb_novelty", _kmv_anotb_oracle_sql())
 def kmv_anotb_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch SET DIFFERENCE across sources — the theta-sketch A-not-B
-    operation (the DataSketches companion of union/intersection,
-    completing the KMV set algebra next to ``kmv_source_overlap``):
+    operation (the DataSketches companion of union/intersection):
     per source pair, how much of A's distinct-shingle space B does NOT
     cover, and vice versa.  Method: within the merged sketch's window
     (the union's k smallest hashes — every union entry that belongs to

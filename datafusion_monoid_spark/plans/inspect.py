@@ -26,17 +26,13 @@ def codegen_stages(df: DataFrame) -> int:
     return len(re.findall(r"WholeStageCodegen", explain_str(df, "simple")))
 
 
-def broadcast_joins(df: DataFrame) -> int:
-    return len(re.findall(r"BroadcastHashJoin", explain_str(df, "simple")))
-
-
 def is_checkpoint_scan(df: DataFrame) -> bool:
     """True when ``df`` is a bare scan of a materialized checkpoint
     (its analyzed plan is a LogicalRDD) — the EAGER contract iterative
     fits assert before releasing a predecessor's blocks: a lazy
     ``ckpt`` hook would hand back a plan that still references the
     predecessor, and releasing it would force silent recomputation
-    through freed lineage (ADVICE r7)."""
+    through freed lineage."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         return bool(plan.getClass().getName().endswith("LogicalRDD"))
@@ -50,7 +46,7 @@ def release_local_checkpoint(df: DataFrame) -> bool:
     ``localCheckpoint`` persists an internal RDD (MEMORY_AND_DISK) that
     ``DataFrame.unpersist`` does NOT reach — without an explicit release
     the blocks sit on executors until the ContextCleaner happens to GC
-    the LogicalRDD (ADVICE r4).  Long-lived sessions running many
+    the LogicalRDD.  Long-lived sessions running many
     checkpointing queries (bench loops, iterative algorithms) should
     release eagerly.  Returns False when ``df`` is not a bare
     checkpoint scan (nothing to release).  The DataFrame is NOT usable

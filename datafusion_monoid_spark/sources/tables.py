@@ -11,16 +11,12 @@ the loaders stay the same (``spark.read.parquet`` on a directory).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -147,11 +147,10 @@ def _chunks16(hi, lo):
 
 
 def test_bucket_cap_drops_exactly_documented_pairs(spark):
-    """The max_bucket recall contract, asserted EXACTLY (VERDICT r4
-    item 6): with the cap, a pair survives iff SOME chunk index has
-    their chunks within Hamming 1 AND both buckets kept.  Recomputed
-    from first principles in Python over the real sf0.001 corpus and
-    compared pair-for-pair."""
+    """The max_bucket recall contract, asserted EXACTLY: with the cap, a
+    pair survives iff SOME chunk index has their chunks within Hamming 1
+    AND both buckets kept.  Recomputed from first principles in Python
+    over the real sf0.001 corpus and compared pair-for-pair."""
     from collections import Counter
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -238,9 +237,9 @@ def test_containment_flags_what_jaccard_misses(spark):
 def test_containment_entry_invariants(spark):
     """Entry-level: results are candidate pairs with both directions in
     [0, 1e6], n_common bounded by both sides, and the >= 0.6 gate
-    applied to the max direction (value equality vs DuckDB is the
-    driver's gate)."""
-    from datafusion_monoid_spark import queries as qcat
+    applied to the max direction (value equality vs DuckDB is
+    tools/check_oracles.py)."""
+    from datafusion_monoid_spark import pipeline_queries as qcat
 
     SF = "/root/testdata/sf0.01"
     rows = qcat.catalog()["dedup_containment_pairs"][0](spark, SF).collect()

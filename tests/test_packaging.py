@@ -32,6 +32,25 @@ def test_bench_module_entry_importable():
     assert callable(mod.main)
 
 
+def test_bench_duckdb_column_records_a_failing_oracle(monkeypatch, tmp_path):
+    """One oracle that DuckDB cannot run (a scale tier's OOM, say) is
+    recorded under its name and the others are still timed, so the
+    bench still writes its result."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mod = importlib.import_module("datafusion_monoid_spark.bench")
+    from datafusion_monoid_spark import queries
+    for t in queries.TABLES:
+        pq.write_table(pa.table({"x": [1, 2]}), tmp_path / f"{t}.parquet")
+    monkeypatch.setattr(mod, "SF_DIR", str(tmp_path))
+    times, errors = mod._duckdb_times(
+        {"bad": (None, "SELECT * FROM no_such_table"),
+         "good": (None, "SELECT sum(x) AS s FROM lineitem")})
+    assert list(times) == ["good"] and times["good"] >= 0
+    assert "no_such_table" in errors["bad"]
+
+
 def test_package_import_roundtrip_in_clean_interpreter():
     """`import datafusion_monoid_spark` + the public names, in a fresh
     interpreter with only the repo on sys.path — what an installed

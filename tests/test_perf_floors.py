@@ -27,12 +27,7 @@ SF = "/root/testdata/sf0.01"
 
 #: name -> ceiling sec (~4x quiet sf0.01 medians on local[8])
 CEILINGS = {
-    "cms_token_sketch": 4.0,
     "cms_heavy_hitters": 5.0,
-    "hll_registers": 5.0,
-    "hll_distinct_tokens": 4.0,
-    "group_quantile_tokens": 4.0,
-    "quality_repetition_filters": 5.0,
     "dedup_clusters": 14.0,
     "text_pii_scan": 3.0,
     "bm25_rank_topk": 5.0,
@@ -47,8 +42,6 @@ CEILINGS = {
     # r5 additions (~4x quiet sf0.01 best-of-3 on local[8])
     "streaming_ann_serve": 16.0,
     "pipeline_dedup_cascade": 12.0,
-    "dedup_simhash_bucket_stats": 4.0,
-    "dedup_lsh_bucket_stats": 3.0,
     "dedup_cluster_keep_best": 12.0,
     "dedup_incremental_newbatch": 12.0,
     # serve half of the SemDeDup split: map-only literal-centroid
@@ -65,18 +58,13 @@ CEILINGS = {
     "incremental_rollup_merge": 3.0,
     "basket_pair_lift": 5.0,
     "events_transition_matrix": 3.0,
-    "pagerank_dedup_survivors": 14.0,
-    "orders_rfm_segments": 3.0,
     "streaming_rollup_maintenance": 10.0,
-    "schema_evolution_read": 3.0,
     "embedding_drift_by_label": 4.0,
     "dpp_partition_pruning": 4.0,
-    "events_user_gap_stats": 3.0,
     # round-6 entries (~4x quiet sf0.01 best-of-3, local[8])
     "dedup_substring_spans": 5.0,
     "lm_bigram_score": 6.0,
     "bloom_join_prefilter": 7.0,
-    "pq_fit_codebooks": 12.0,
     "pq_adc_topk": 18.0,
     # serve half: literal-codebook map-only encode — a blown ceiling
     # means the Lloyd chain came back into the serve plan, or the
@@ -84,14 +72,10 @@ CEILINGS = {
     # (measured: MINUTES of optimizer churn when the posexplode sat
     # directly on the expression)
     "pq_adc_pretrained": 16.0,
-    "graph_triangle_stats": 20.0,
     "streaming_lm_score_serve": 15.0,
     "bucketed_join_zero_shuffle": 6.0,
     # IVFADC composition: coarse k-means + PQ chains fused in-plan
     "pq_ivfadc_topk": 30.0,
-    # Gram build is the only corpus-sized stage; 4096-group partial agg
-    "embedding_pca_power": 8.0,
-    "curation_dsir_weights": 8.0,
     # third-session round-6 entries (~4x quiet sf0.01 best-of-3).
     # k-core and the BPE serves read persisted artifacts (cascade /
     # merge table) — best-of-3 measures the serve path; a blown
@@ -102,18 +86,12 @@ CEILINGS = {
     "bpe_encode_newbatch": 6.0,
     "streaming_bpe_encode_serve": 16.0,
     # round-8 pins for the r7 driver-bench outliers (~4x quiet sf0.01
-    # best-of-3 on local[8]).  dq_column_profile is one stacked scan +
-    # two agg shuffles, NO checkpoint — a blown ceiling means a
-    # materialization job or the window/self-join came back.
-    "dq_column_profile": 3.5,
+    # best-of-3 on local[8]).
     # driver-literal Lloyd fits (one job per round, tiny HOF argmin
     # trees): a blown ceiling means per-round checkpoint jobs or a
     # per-round giant-projection recompile (~4.5 s/plan) came back
     "pq_ivfadc_residual_topk": 20.0,
     "pq_ivfadc_residual_pretrained": 16.0,
-    # exact NumPy recall baseline: Arrow-batched matmul over one corpus
-    # scan — a blown ceiling means a per-row path or a second scan
-    "sim_topk_numpy": 3.0,
     # OPQ-rotated residual IVFADC: rotation is one map-only projection
     # + the literal-Lloyd fits — a blown ceiling means the rotation
     # got re-evaluated per fit round instead of materialized once
@@ -139,28 +117,12 @@ SF01 = "/root/testdata/sf0.1"
 #: sf0.1 ceilings (~4x quiet sf0.1 best-of-3 on local[8]) for the
 #: entries whose r8 DRIVER numbers ran far above their quiet-host
 #: numbers.  The sf0.01 table above cannot see
-#: a regression that only materializes with a 10x corpus (the
-#: ``sim_topk_numpy`` lesson: its 3.0 s sf0.01 ceiling said nothing
+#: a regression that only materializes with a 10x corpus (the lesson
+#: of an exact-NumPy recall entry: its 3.0 s sf0.01 ceiling said nothing
 #: about its 4.8 s sf0.1 driver time — which, re-measured quiet, is
 #: 0.6 s: ambient load, not a plan change); this table pins the same
 #: plans at the scale the driver's bench actually runs.
 SF01_CEILINGS = {
-    # fused deterministic-centroid IVF: the assignment crossJoin must
-    # stay against the 32-row centroid relation with probe/re-rank
-    # candidates-only — a blown ceiling means a corpus x corpus pair
-    # expansion or a per-reference re-fit came back (quiet 1.5 s)
-    "sim_topk_ivf": 6.0,
-    # broadcast range-bucket join — a blown ceiling means the tier
-    # lookup degraded to a nested-loop over full lineitem (quiet 0.6 s)
-    "range_join_price_tiers": 2.5,
-    # Arrow-batched mapInPandas over the media column — a blown
-    # ceiling means a per-row Python path or a second corpus scan
-    # (quiet 0.5 s)
-    "multimodal_features": 2.0,
-    # exact NumPy recall baseline, O(corpus) matmul from ONE scan —
-    # a blown ceiling AT THIS SCALE means a second scan or per-row
-    # path that sf0.01 is too small to surface (quiet 0.6 s)
-    "sim_topk_numpy": 2.5,
     # shared-artifact ADC serve (r9): fit-if-absent + broadcast-join
     # encode — a blown ceiling means the in-plan Lloyd refit came back
     # (quiet 1.8 s warm-artifact)
@@ -258,7 +220,6 @@ SF01_CEILINGS = {
     # the regression the ceiling watches) while passing in isolation —
     # the pq_ivfadc_topk precedent: margin for the context the test
     # actually runs in, still well under a 2x plan change on top of it
-    "lsh_postings_build": 16.0,            # (3.7)
     "lsh_postings_append": 18.0,           # (5.3)
     "lsh_postings_compact": 18.0,          # (4.7)
     # streaming admit loop: 4 micro-batches x (exact-key anti-join
@@ -292,7 +253,6 @@ SF01_CEILINGS = {
     # per-batch hyperplane-bucket probe vs persisted postings — a
     # blown ceiling means a per-batch refit or a lost broadcast
     "streaming_containment_screen_serve": 20.0,  # (10.7)
-    "streaming_kmv_distinct": 14.0,              # (7.1)
     "streaming_ann_serve": 10.0,                 # (4.3)
     # r13 new entries (quiet local[8] sf0.1 best-of-2 in parens).
     # refit trigger: one drift partial-agg pass + the bounded Lloyd
@@ -318,7 +278,6 @@ SF01_CEILINGS = {
     # stopped pruning or a corpus tokenize crept onto the query path
     # (serve measures ~2 s FLAT at sf1 and sf10: index-read-bound by
     # design)
-    "bm25_postings_append": 5.0,                 # (1.6)
     "bm25_postings_compact": 3.0,                # (0.6)
     "bm25_serve_from_postings": 3.5,             # (1.0)
 }

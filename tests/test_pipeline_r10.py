@@ -2,12 +2,12 @@
 (one-sided MinHash probes), RRF hybrid retrieval fusion, and the
 quality-classifier fit/serve tier.  Operator-level math on constructed
 inputs + recall pins vs exact recomputes (full value equality vs DuckDB
-is the driver's gate / tools/check_oracles.py)."""
+is tools/check_oracles.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.operators import dedup as dd
 
 SF001 = "/root/testdata/sf0.001"
@@ -45,7 +45,7 @@ def _banded_candidates(spark, rows):
 def _quoted_corpus():
     """Doc 1 is SHORT; doc 2 quotes ALL of doc 1 inside ~20x unrelated
     filler — containment(1 in 2) = 1.0 but Jaccard ~ 0.05, the exact
-    construction VERDICT r9 names as invisible to banded MinHash.
+    construction that is invisible to banded MinHash.
     Docs 3+ are unrelated background."""
     quote = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(5))
     filler = " ".join(f"noise{i} word{i} pad{i}" for i in range(100))

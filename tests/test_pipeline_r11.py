@@ -1,14 +1,13 @@
-"""Round-11 operators: the probe-index document-frequency cap
-(VERDICT r10 missing-item 1), the exact-dedup-first containment screen
-composition, IVF postings compaction, and the end-to-end curation
-capstone.  Operator-level math on constructed inputs + equivalence pins
-vs exact recomputes (full value equality vs DuckDB is the driver's gate
-/ tools/check_oracles.py)."""
+"""Round-11 operators: the probe-index document-frequency cap, the
+exact-dedup-first containment screen composition, IVF postings
+compaction, and the end-to-end curation capstone.  Operator-level math
+on constructed inputs + equivalence pins vs exact recomputes (full value
+equality vs DuckDB is tools/check_oracles.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.operators import dedup as dd
 
 SF001 = "/root/testdata/sf0.001"

@@ -1,13 +1,13 @@
 """Round-12 operators: the containment-index lifecycle (append /
-compact — VERDICT r11 item 4).  Operator-level behavior on constructed
+compact).  Operator-level behavior on constructed
 corpora plus the compaction == build-from-scratch hash identity (full
-value equality vs DuckDB is the driver's gate / tools/check_oracles.py).
+value equality vs DuckDB is tools/check_oracles.py).
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.operators import dedup as dd
 
 SF001 = "/root/testdata/sf0.001"
@@ -154,7 +154,7 @@ def test_streaming_capstone_equals_batch(spark, cat):
 
 
 # ---------------------------------------------------------------------------
-# shard export follow-through (VERDICT r11 item 7)
+# shard export follow-through
 # ---------------------------------------------------------------------------
 
 def test_export_read_plan_prunes_shard_partitions(spark, cat):

@@ -1,14 +1,13 @@
 """Round-13 operators: the duplication pre-probe on the capped
-containment entry (VERDICT r12 item 1) and the exact-key index
+containment entry and the exact-key index
 lifecycle (item 2).  Operator-level behavior on constructed corpora;
-full value equality vs DuckDB is the driver's gate /
-tools/check_oracles.py.
+full value equality vs DuckDB is tools/check_oracles.py.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.operators import dedup as dd
 
 SF001 = "/root/testdata/sf0.001"
@@ -20,7 +19,7 @@ def cat():
 
 
 # ---------------------------------------------------------------------------
-# duplication pre-probe (VERDICT r12 item 1)
+# duplication pre-probe
 # ---------------------------------------------------------------------------
 
 def test_candidate_guard_math():
@@ -97,7 +96,7 @@ def test_exactkey_compact_equals_from_scratch(spark, cat):
 
 
 # ---------------------------------------------------------------------------
-# within-stream exact-clone admit gate (VERDICT r12 item 2)
+# within-stream exact-clone admit gate
 # ---------------------------------------------------------------------------
 
 def test_within_stream_exact_clone_admitted_once(spark, tmp_path, cat):
@@ -247,7 +246,7 @@ def test_bm25_serve_scan_pushes_term_filter(spark, cat):
 
 
 # ---------------------------------------------------------------------------
-# drift-triggered refit (VERDICT r12 item 6)
+# drift-triggered refit
 # ---------------------------------------------------------------------------
 
 def _write_emb(spark, tmp_path, shift: float) -> str:

@@ -1,14 +1,14 @@
 """Round-4 pipeline additions: PII scan/redaction, BM25 ranking,
 SemDeDup semantic pruning.  Known-answer unit tests for the operator
 helpers plus structural invariants of the catalog queries (the
-value-level gate is the DuckDB oracle, mirrored by
+value-level check is the DuckDB oracle, run by
 tools/check_oracles.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from datafusion_monoid_spark.operators import text as tx
-from datafusion_monoid_spark.queries import catalog
+from datafusion_monoid_spark.pipeline_queries import catalog
 
 SF = "/root/testdata/sf0.001"
 
@@ -79,7 +79,7 @@ def test_bm25_topk_shape_and_order(spark):
 def test_bm25_saturation_monotone_in_tf(spark):
     """More occurrences of a query term never DECREASE the score, and
     the k1 saturation keeps the marginal gain shrinking."""
-    from datafusion_monoid_spark.queries import _idiv
+    from datafusion_monoid_spark.pipeline_queries import _idiv
     n, total_dl, df, dl = 100, 3000, 10, 30
     df_ = spark.createDataFrame([(tf,) for tf in (1, 2, 4, 8)], "tf bigint")
     part = _idiv(F.col("tf") * 22 * total_dl * 10000,

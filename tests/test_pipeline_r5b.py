@@ -1,15 +1,15 @@
 """Round-5 second-session additions: SemDeDup serve half, DQ
 expectations report, time-series gap-fill, CDC/SCD2 merge, MAD
 anomalies, GDPR cascade, integer PageRank.  Structural invariants and
-semantic spot-checks; the value-level gate is the DuckDB oracle
-(tools/check_oracles.py / the driver's CORRECTNESS run)."""
+semantic spot-checks; the value-level check is the DuckDB oracle
+(tools/check_oracles.py)."""
 
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark.queries import (
+from datafusion_monoid_spark.pipeline_queries import (
     _PAGERANK_SCALE,
     catalog,
 )
@@ -149,7 +149,7 @@ def test_gdpr_cascade_counts_and_broadcast_semi_plan(spark, cat):
 def test_incremental_merge_equals_full_recompute(spark, cat):
     """Monoid merge of persisted history partials + new-tail partials
     must equal the full recompute — the associativity contract."""
-    from datafusion_monoid_spark.queries import (
+    from datafusion_monoid_spark.pipeline_queries import (
         _events,
         _hourly_partials,
     )
@@ -229,7 +229,7 @@ def test_incremental_rollup_survives_table_growth(spark, tmp_path, cat):
 
     import shutil
 
-    from datafusion_monoid_spark.queries import _artifact_path
+    from datafusion_monoid_spark.pipeline_queries import _artifact_path
 
     src = pd.read_parquet(f"{SF}/events.parquet").sort_values("ts")
     cut = int(len(src) * 0.9)

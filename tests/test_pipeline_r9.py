@@ -1,13 +1,13 @@
 """Round-9 stretch operators: KMV A-not-B set difference, the corpus
 novelty curve, and the BPE/unigram tokenizer agreement report.
 Operator-level math on constructed inputs + catalog-entry invariants at
-sf0.01 (full value equality vs DuckDB is the driver's gate /
+sf0.01 (full value equality vs DuckDB is
 tools/check_oracles.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 from datafusion_monoid_spark.operators import sketch as sk
 
 SF = "/root/testdata/sf0.01"

@@ -465,7 +465,7 @@ def test_opq_serve_has_no_fit_stages(spark, catalog):
 
 
 def test_opq_serve_rotates_queries_only(spark, catalog):
-    """Round-9 (VERDICT item 5): the re-rank fetches PRE-ROTATED corpus
+    """The re-rank fetches PRE-ROTATED corpus
     rows from the published rvecs/ artifact, so the 64-lambda rotation
     projection must appear only over the query-batch scan — the plan
     reads the rvecs parquet, and the sole embeddings scan it rotates
@@ -484,7 +484,7 @@ def test_opq_serve_rotates_queries_only(spark, catalog):
 
 
 def test_pq_adc_topk_serves_shared_artifact(spark, catalog):
-    """Round-9 (VERDICT item 1): pq_adc_topk reads the persisted
+    """pq_adc_topk reads the persisted
     codebook (a local relation after the cached collect) — no Lloyd
     fit stages in the plan: no centroid-update aggregate feeding a
     join back into an assignment, and every join broadcast (the codes

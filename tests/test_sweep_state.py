@@ -1,6 +1,6 @@
 """Sweep-state hygiene: catalog entries must not leak storage blocks.
 
-VERDICT r6 item 2/3: the driver's bench sweep runs every catalog entry
+The bench sweep runs every catalog entry
 in one session, and the round-6 run showed a tail entry
 (pipeline_curation_full) 5x slower under the accumulated storage/GC
 pressure of earlier entries' leaked localCheckpoint blocks (6 BPE
@@ -11,9 +11,10 @@ by LISTING the JVM's persistent RDDs after each checkpoint-heavy entry
 runs, exactly the driver's between-entries vantage point.
 
 The one allowed standing block set is the documented app-lifetime
-minhash signature/candidate pair (``queries._MINHASH_SHARED`` — three
-entries share it by design, like a production pipeline materializing
-its cascade once per snapshot); the baseline snapshot absorbs it.
+minhash signature/candidate pair (``pipeline_queries._MINHASH_SHARED``
+— several entries share it by design, like a production pipeline
+materializing its cascade once per snapshot); the baseline snapshot
+absorbs it.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import time
 
 import pytest
 
-from datafusion_monoid_spark import queries as qcat
+from datafusion_monoid_spark import pipeline_queries as qcat
 
 SF = "/root/testdata/sf0.001"
 

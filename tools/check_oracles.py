@@ -1,6 +1,10 @@
-"""Run every queries() entry on Spark AND its oracle_sql() on DuckDB
-(sf0.01 by default), and compare row count + column names +
-order-insensitive value hash.
+"""Run catalog entries on Spark AND their DuckDB oracle SQL (sf0.01 by
+default), and compare row count + column names + order-insensitive
+value hash.
+
+The catalog checked is ``pipeline_queries.catalog()``: the 10 monoid
+entries ``__spark_entry__`` serves, then the pipeline tier's entries.
+With no names given every entry runs.
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
 """
@@ -16,10 +20,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datafusion_monoid_spark.queries import TABLES
 from datafusion_monoid_spark.session import get_spark
-
-import __spark_entry__ as entrymod
 
 
 def canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
@@ -39,14 +40,16 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    from datafusion_monoid_spark.pipeline_queries import catalog
+    from datafusion_monoid_spark.sources import TABLES
+
     spark = get_spark("check-oracles")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed = []
-    for name, fn in qs.items():
+    for name, (fn, oracle) in catalog().items():
         if only and name not in only:
             continue
         try:
@@ -55,11 +58,11 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             failed.append(name)
             continue
-        if name not in oracles:
+        if oracle is None:
             print(f"weak  {name}: rows={len(sdf)} (no oracle, rows-only check)")
             continue
         try:
-            ddf = con.sql(oracles[name]).df()
+            ddf = con.sql(oracle).df()
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             failed.append(name)
