@@ -1,6 +1,6 @@
 """Pipeline catalog — the training-data pipeline and host-engine entries
-(TPC-H, dedup, similarity search, sketches, text, curation, streaming
-serves), as (Spark callable, DuckDB oracle SQL) pairs.
+(TPC-H, dedup, similarity search, sketches, text, curation), as (Spark
+callable, DuckDB oracle SQL) pairs.
 
 This tier sits outside the driver's catalog: ``__spark_entry__`` and
 ``bench.py`` serve only the monoid entries of ``queries.py``, and
@@ -533,12 +533,12 @@ def _probe_hashes_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _PROBE_HASH_SHARED[key]
 
 
-# -- containment-index triple (build / screen / streaming screen):
+# -- containment-index pair (build / screen):
 # the probe index as a PERSISTED ingest-time artifact plus the
 # incremental new-batch screen — the containment analogue of
 # ``dedup_incremental_newbatch``'s Jaccard screen, completing the
-# round's headline operator into the catalog's fit/serve/streaming
-# discipline (the LM / BPE / quality-classifier pattern).  New batch =
+# round's headline operator into the catalog's fit/serve discipline
+# (the LM / BPE / quality-classifier pattern).  New batch =
 # doc_id % 11 == 0 (the incremental-screen convention); the index
 # covers everything else.
 
@@ -594,8 +594,7 @@ GROUP BY idx.doc_id
 def _contain_screen_chain_sql(newh_sql: str) -> str:
     """CTE chain ``newh -> ... -> screen`` over a GIVEN new-side
     (doc_id, h) DISTINCT-set subquery — the screen's per-pair relation,
-    shared by the incremental screen, its streaming twin, and the
-    cascade-composed pipeline (which feeds exact-dedup SURVIVORS as the
+    shared by the incremental screen and the cascade-composed pipeline (which feeds exact-dedup SURVIVORS as the
     new side)."""
     return f"""newh AS ({newh_sql}),
 idx AS ({_cidx_set_sql('old')}),
@@ -629,10 +628,9 @@ screen AS (
 
 
 def _contain_screen_pairs_sql() -> str:
-    """The screen's per-pair relation — shared by the batch entry and
-    the streaming twin's oracle (stream == batch by per-doc
-    independence: a pair's hits and verify depend only on the new
-    doc's own hashes plus the static index)."""
+    """The screen's per-pair relation (per-doc independent: a pair's
+    hits and verify depend only on the new doc's own hashes plus the
+    static index)."""
     return f"""
 WITH {_contain_screen_chain_sql(_cidx_set_sql('new'))}
 SELECT new_id, old_id, n_common, n_new, n_old,
@@ -975,8 +973,7 @@ def _append_containment_postings(spark: SparkSession,
         nh, spark.read.parquet(ipath), spark.read.parquet(ppath))
     # the postings write IS the materialization of the clean relation
     # (previously a localCheckpoint job AND a write); the probe agg
-    # derives from the just-written parquet (optimization round r13,
-    # the streaming admit loop's shape)
+    # derives from the just-written parquet (optimization round r13)
     (nh.join(flagged.select(F.col("new_id").alias("doc_id"))
              .distinct(), "doc_id", "left_anti")
      .write.mode("overwrite").parquet(inew))
@@ -1052,10 +1049,10 @@ def containment_postings_compact(spark: SparkSession,
 
 
 def _contain_admit_clean_ctes() -> str:
-    """CTE chain ``oldk -> nb -> screen -> cleanh``: the STREAMING
-    admit loop's per-doc generation relation (exact-key screen, then
-    containment screen vs the base index) — shared by the streaming
-    admit oracle and the compact-cascade oracle."""
+    """CTE chain ``oldk -> nb -> screen -> cleanh``: the admitted
+    per-doc generation relation (exact-key screen, then containment
+    screen vs the base index) that the compact-cascade oracle
+    self-screens."""
     norm = dd.NORMALIZE_SQL.format(expr="text")
     nb_newh = ("SELECT DISTINCT doc_id, {mdl} % 4294967296 AS h FROM "
                "(SELECT doc_id, unnest({shg}) AS s FROM nb)").format(
@@ -1132,28 +1129,24 @@ def _containment_self_screen_drop(hashed: DataFrame) -> DataFrame:
 @register("containment_compact_cascade", _compact_cascade_oracle_sql())
 def containment_compact_cascade(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    """COMPACT-TIME CASCADE — the within-stream dup gap the streaming
-    admit loop documents, closed as an operator: the admitted
-    generation (the admit loop's per-doc screens are against STATIC
-    artifacts, so two novel near-identical docs arriving in different
-    micro-batches are BOTH admitted) is self-screened at compaction —
-    probe candidates among the admitted docs only, exact micro-integer
-    containment verify, drop the greater id of every >= 0.6 pair
-    (keep-min, the family convention) — and only then folded into the
-    base layout.  The always-on loop is thereby eventually-consistent:
-    duplicate admissions survive at most one compaction cadence.
+    """COMPACT-TIME CASCADE: the admitted generation (its per-doc
+    screens are against STATIC artifacts, so two novel near-identical
+    docs of the same generation are BOTH admitted) is self-screened at
+    compaction — probe candidates among the admitted docs only, exact
+    micro-integer containment verify, drop the greater id of every
+    >= 0.6 pair (keep-min, the family convention) — and only then
+    folded into the base layout, so duplicate admissions survive at
+    most one compaction cadence.
 
     Scale: the self-screen is O(generation), never O(index) — probes,
     candidate join, and verify all run over the admitted relation
-    (micro-batch-bounded x cadence); the fold is the standard compact
+    (batch-bounded x cadence); the fold is the standard compact
     (union + one h exchange).  Returns the per-doc digest of the
     cascaded compacted artifact pair; the oracle replays admit ->
     self-screen -> fold in one chain."""
     ipath, ppath = _build_containment_index(spark, sf_dir,
                                             overwrite=False)
-    # the admitted generation, recomputed per call (idempotent —
-    # the streaming admit loop's batch-union equals this by per-doc
-    # independence)
+    # the admitted generation, recomputed per call (idempotent)
     old_keys = spark.read.parquet(_build_exact_key_index(spark, sf_dir))
     nb = (_docs(spark, sf_dir).where(F.col("doc_id") % 11 == 0)
           .select("doc_id", "text"))
@@ -1192,11 +1185,9 @@ def containment_compact_cascade(spark: SparkSession,
 
 
 # -- exact-key index lifecycle: the FOURTH index
-# family to get the build / append / compact discipline — the
-# exact-dup key index both capstones' cheap first gate consumes
-# (``_build_exact_key_index``) was build-only, so a doc admitted in
-# batch N was invisible to batch N+1's exact-key gate until the
-# compact-time cascade caught its clones one cadence later.  Keys are
+# family to get the build / append / compact discipline — without an
+# append, the exact-dup key index (``_build_exact_key_index``) cannot
+# see a doc admitted in batch N at batch N+1's exact-key gate.  Keys are
 # per-doc deterministic (md5 of normalized text), so the family's
 # identity is the strongest of the four: compact(base ∪ generations)
 # == DISTINCT keys over the union corpus, row-for-row.
@@ -1533,7 +1524,7 @@ def lsh_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent driver threads (guide §2.6, the containment-compact
     # pattern; optimization round r13).  NOT safe to run concurrently
     # with a streaming entry: the folds read the session-global
-    # spark.sql.shuffle.partitions, which the streaming loops mutate
+    # spark.sql.shuffle.partitions, which a drained stream sets
     # to STREAM_SHUFFLE for their own duration — the
     # bench and the catalog run entries sequentially, which is the
     # assumption documented here.
@@ -1855,7 +1846,7 @@ _TOKS = f"list_filter(string_split({_NORM}, ' '), t -> t != '')"
 
 
 # ---------------------------------------------------------------------------
-# Multimodal columns + streaming batch-twin
+# Multimodal columns
 # ---------------------------------------------------------------------------
 
 from datafusion_monoid_spark.operators import multimodal as mm
@@ -3656,24 +3647,6 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming tier (streaming/stream_queries.py): each entry EXECUTES a real
-# Structured Streaming query (file source -> watermarked stateful agg ->
-# memory sink) and the oracle is the batch twin of the same semantics —
-# stream == batch on finite input is the streaming-correctness contract
-# (the monoid merge-safety argument, reference src/monoid.rs:13-21).
-# ---------------------------------------------------------------------------
-
-from datafusion_monoid_spark.streaming import stream_queries as sq
-
-
-# streaming ANN serve: per-micro-batch inference against the prebuilt
-# IVF index; each query is answered in exactly one batch, so the stream
-# output equals the batch search and the fused entry's oracle replays it
-register("streaming_ann_serve", _ivf_kmeans_oracle_sql())(
-    sq.streaming_ann_serve)
-
-
-# ---------------------------------------------------------------------------
 # Round-4 pipeline additions: PII scan/redaction, BM25 ranking, SemDeDup
 # ---------------------------------------------------------------------------
 
@@ -5075,13 +5048,6 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("v_milli").cast("bigint").alias("v_milli")))
 
 
-# the streaming twin (foreachBatch appends per-batch partials to the
-# durable artifact; merged read == full recompute) shares the SAME
-# full-recompute oracle — associativity makes stream == batch
-register("streaming_rollup_maintenance", _INCR_ROLLUP_ORACLE)(
-    sq.streaming_rollup_maintenance)
-
-
 _BASKET_ORACLE = """
 WITH baskets AS (
   SELECT DISTINCT l_orderkey AS ok, p_brand AS item
@@ -5723,8 +5689,8 @@ def _fit_lm_persisted(spark: SparkSession, sf_dir: str,
 
 
 def _lm_doc_oracle_sql() -> str:
-    """Per-document LM scores — the batch twin of the streaming serve
-    (and the ``d`` stage of the per-source roll-up oracle)."""
+    """Per-document LM scores (the ``d`` stage of the per-source
+    roll-up oracle)."""
     return f"""
 WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
 b AS (SELECT doc_id, source,
@@ -5827,8 +5793,7 @@ m AS (SELECT token,
 def _qc_doc_scores_ctes() -> str:
     """Extends the model CTEs with ``stats`` (the neutral decision
     constant), the corpus token stream, and the per-doc score relation
-    ``d`` — shared by the roll-up oracle and the streaming twin's
-    per-doc oracle."""
+    ``d`` for the roll-up oracle."""
     return f"""{_qc_model_cte()},
 model AS (SELECT token,
                  ((c_pos + 1) * 1000000) // (c_neg + 1) AS w_micro
@@ -5852,15 +5817,6 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs_scored,
        CAST(sum(CASE WHEN score_micro >= k_micro THEN 1 ELSE 0 END)
             AS BIGINT) AS n_pos_class
 FROM d CROSS JOIN stats GROUP BY source
-"""
-
-
-def _qc_doc_oracle_sql() -> str:
-    """Per-document classifier scores — the batch twin of the
-    streaming serve."""
-    return f"""
-WITH {_qc_doc_scores_ctes()}
-SELECT doc_id, source, n_tokens, score_micro FROM d
 """
 
 
@@ -6377,15 +6333,6 @@ def graph_kcore_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``graph.kcore_stats``."""
     return gr.kcore_stats(_cascade_edges(spark, sf_dir), ks=(2, 3),
                           rounds=2)
-
-
-register("streaming_lm_score_serve", _lm_doc_oracle_sql())(
-    sq.streaming_lm_score_serve)
-register("streaming_quality_clf_serve", _qc_doc_oracle_sql())(
-    sq.streaming_quality_clf_serve)
-register("streaming_containment_screen_serve",
-         _contain_screen_pairs_sql())(
-    sq.streaming_containment_screen_serve)
 
 
 def _pq_ivfadc_oracle_sql(k: int = 5, nprobe: int = 7) -> str:
@@ -7864,26 +7811,6 @@ def unigram_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("avg_piece_p_micro")))
 
 
-def _bpe_doc_oracle_sql(rounds: int = bpem.BPE_ROUNDS) -> str:
-    """Per-document encode accounting — the batch twin of the
-    streaming BPE serve (documents with zero tokens produce no rows,
-    matching the stream's inner join)."""
-    return f"""
-WITH {_bpe_ctes(rounds)},
-model AS (SELECT tok, len(string_split(trim(seg), '  ')) AS n_sym
-          FROM bv{rounds}),
-corpus AS (SELECT doc_id, source, unnest({_TOKS}) AS tok
-           FROM documents)
-SELECT doc_id, source, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(n_sym) AS BIGINT) AS n_symbols
-FROM corpus JOIN model USING (tok) GROUP BY doc_id, source
-"""
-
-
-register("streaming_bpe_encode_serve", _bpe_doc_oracle_sql())(
-    sq.streaming_bpe_encode_serve)
-
-
 # ---------------------------------------------------------------------------
 # Round 6: curation filter funnel + vocabulary drift
 # ---------------------------------------------------------------------------
@@ -8853,8 +8780,8 @@ _LM_CUT_SENTINEL = 1_000_001
 def _lm_doc_scores_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_bigrams, score_micro) computed FROM the
     persisted bigram-model artifacts (fit-if-absent): the two count
-    relations fold into one model-sized (bg, p_micro) table (the
-    streaming serve's hoist), then one broadcast join over the corpus
+    relations fold into one model-sized (bg, p_micro) table, then one
+    broadcast join over the corpus
     bigram stream + a per-doc partial agg.  The serve-side twin of
     ``lm_bigram_score``'s in-plan fit."""
     bg_path, ctx_path = _fit_lm_persisted(spark, sf_dir, overwrite=False)
@@ -9416,7 +9343,7 @@ def pipeline_curation_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # stage 1+2 artifacts: the QC model and the LM threshold chain are
     # independent — build them as two concurrent driver threads
-    # (guide §2.6; the streaming capstone-gates pattern)
+    # (guide §2.6)
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_qc = pool.submit(_fit_qc_persisted, spark, sf_dir,
@@ -9520,130 +9447,6 @@ def pipeline_curation_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("n_corpus", "n_quality", "n_fluent", "n_exact_unique",
                     "n_screened", "n_train", "n_test", "train_seqs",
                     "test_seqs", "train_fill_micro", "test_fill_micro"))
-
-
-register("streaming_bucket_route_serve", f"""
-WITH {_lm_thresholds_oracle_ctes()}
-SELECT doc_id, source, n_bigrams, score_micro,
-       CASE WHEN score_micro >= cut3_micro THEN 3
-            WHEN score_micro >= cut2_micro THEN 2 ELSE 1 END AS bucket
-FROM d CROSS JOIN cuts
-""")(sq.streaming_bucket_route_serve)
-
-
-def _streaming_capstone_oracle_sql() -> str:
-    """The streaming curation capstone's batch twin: per-doc stages
-    replay against static artifacts, and the within-stream exact-key
-    gate replays as min-arrival-batch-per-novel-key (ntile-by-doc_id
-    batching, the admit-loop oracle's form).  The min-g here is over
-    ALL base-novel holders of a key, not only quality-passing ones —
-    equivalent to the stream (which appends only post-gate survivors'
-    keys) because exact clones share every per-doc gate outcome: a
-    uniformly-failing family admits nobody under either form, and a
-    uniformly-passing family's min-g sets coincide.  Expensive shared
-    CTEs are MATERIALIZED (the capstone-oracle lesson: DuckDB
-    otherwise inlines the tokenize-heavy chain once per reference)."""
-    norm = dd.NORMALIZE_SQL.format(expr="text")
-    side = ("CASE WHEN (" + dd.md5_long_sql("CAST(s3.doc_id AS VARCHAR)")
-            + f" % {smp.SPLIT_MOD}) < 100 THEN 'test' ELSE 'train' END")
-    s3_newh = ("SELECT DISTINCT doc_id, {mdl} % 4294967296 AS h FROM "
-               "(SELECT doc_id, unnest({shg}) AS s FROM s3)").format(
-        mdl=dd.md5_long_sql("s"), shg=dd.shingles_sql("text"))
-    chain = _contain_screen_chain_sql(s3_newh).replace(
-        "newh AS (", "newh AS MATERIALIZED (", 1)
-    return f"""
-WITH {_qc_model_cte()},
-qmodel AS (SELECT token,
-                  ((c_pos + 1) * 1000000) // (c_neg + 1) AS w_micro
-           FROM m),
-qstats AS (SELECT ((sum(c_pos) + count(*)) * 1000000)
-                  // (sum(c_neg) + count(*)) AS k_micro FROM m),
-qtok2 AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents
-          WHERE doc_id % 11 = 0),
-qd AS MATERIALIZED (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-         CAST(sum(coalesce(w_micro, 1000000)) // count(*) AS BIGINT)
-           AS q_micro
-  FROM qtok2 LEFT JOIN qmodel USING (token) GROUP BY doc_id),
-qpass AS (SELECT doc_id, n_toks, q_micro FROM qd CROSS JOIN qstats
-          WHERE q_micro >= k_micro),
-lmd AS MATERIALIZED ({_lm_doc_oracle_sql()}),
-lhist AS (SELECT score_micro, CAST(count(*) AS BIGINT) AS cnt
-          FROM lmd GROUP BY score_micro),
-ltot AS (SELECT CAST(sum(cnt) AS BIGINT) AS w FROM lhist),
-lbk AS (SELECT score_micro, w,
-               1 + (3 * coalesce(sum(cnt) OVER (ORDER BY score_micro
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0)) // w AS bucket
-        FROM lhist CROSS JOIN ltot),
-lcuts AS (SELECT CAST(coalesce(min(CASE WHEN bucket >= 2
-                                        THEN score_micro END),
-                               {_LM_CUT_SENTINEL}) AS BIGINT)
-            AS cut2_micro FROM lbk),
-ppass AS (SELECT lmd.doc_id, CAST(lmd.score_micro AS BIGINT) AS lm_micro
-          FROM lmd CROSS JOIN lcuts
-          WHERE lmd.score_micro >= cut2_micro AND lmd.doc_id % 11 = 0),
-s2 AS MATERIALIZED (
-  SELECT d.doc_id, d.text, qpass.n_toks, qpass.q_micro, ppass.lm_micro
-  FROM documents d JOIN qpass USING (doc_id) JOIN ppass USING (doc_id)),
-oldk AS MATERIALIZED (SELECT DISTINCT md5({norm}) AS k FROM documents
-                      WHERE doc_id % 11 <> 0),
-nbg AS (SELECT doc_id, md5({norm}) AS kk,
-               ntile(4) OVER (ORDER BY doc_id) AS g
-        FROM documents WHERE doc_id % 11 = 0),
-novelg AS (SELECT * FROM nbg WHERE kk NOT IN (SELECT k FROM oldk)),
-firstg AS (SELECT kk, min(g) AS mg FROM novelg GROUP BY kk),
-keepg AS (SELECT novelg.doc_id FROM novelg
-          JOIN firstg ON novelg.kk = firstg.kk
-                     AND novelg.g = firstg.mg),
-s3 AS MATERIALIZED (SELECT s2.* FROM s2 JOIN keepg USING (doc_id)),
-{chain}
-SELECT s3.doc_id, n_toks, q_micro, lm_micro, {side} AS side
-FROM s3
-WHERE s3.doc_id NOT IN (SELECT DISTINCT new_id FROM screen)
-"""
-
-
-register("streaming_curation_capstone",
-         _streaming_capstone_oracle_sql())(sq.streaming_curation_capstone)
-
-
-def _streaming_admit_oracle_sql() -> str:
-    """Batch twin of the streaming admit loop: arriving docs pass the
-    exact-key screen — vs the old-corpus key index AND the keys
-    appended by strictly earlier micro-batches (batching is the
-    deterministic ntile-by-doc_id order ``_stage_ordered_batches``
-    replays, so "earlier" is SQL: each novel key admits only its
-    min-arrival-batch holders) — then the containment screen (vs the
-    base probe index); the result is the per-doc digest of the
-    admitted postings generations.  Exact clones share the per-doc
-    containment outcome, so gating at the md5 stage composes exactly."""
-    norm = dd.NORMALIZE_SQL.format(expr="text")
-    nb_newh = ("SELECT DISTINCT doc_id, {mdl} % 4294967296 AS h FROM "
-               "(SELECT doc_id, unnest({shg}) AS s FROM nb)").format(
-        mdl=dd.md5_long_sql("s"), shg=dd.shingles_sql("text"))
-    return f"""
-WITH oldk AS (SELECT DISTINCT md5({norm}) AS k FROM documents
-              WHERE doc_id % 11 <> 0),
-nbk AS (SELECT doc_id, text, md5({norm}) AS k,
-               ntile(4) OVER (ORDER BY doc_id) AS g
-        FROM documents WHERE doc_id % 11 = 0),
-novel AS (SELECT * FROM nbk WHERE k NOT IN (SELECT k FROM oldk)),
-firstg AS (SELECT k, min(g) AS mg FROM novel GROUP BY k),
-nb AS (SELECT novel.doc_id, novel.text FROM novel
-       JOIN firstg ON novel.k = firstg.k AND novel.g = firstg.mg),
-{_contain_screen_chain_sql(nb_newh)},
-cleanh AS (SELECT doc_id, h FROM newh WHERE doc_id NOT IN
-           (SELECT DISTINCT new_id FROM screen)),
-np AS (SELECT doc_id, count(*) AS np
-       FROM {_cidx_probes_sql('cleanh')} GROUP BY doc_id)
-{_cidx_digest_sql('cleanh', 'np')}
-"""
-
-
-register("streaming_containment_admit_serve",
-         _streaming_admit_oracle_sql())(
-    sq.streaming_containment_admit_serve)
 
 
 def catalog() -> dict[str, tuple[QueryFn, str | None]]:

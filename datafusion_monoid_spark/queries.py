@@ -263,16 +263,20 @@ def monoid_sql_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded group by the ``monoid_sql_routed_hugegroup`` entry below."""
     register_all(spark)
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("__li_udaf")
-    df = spark.sql("""
-        WITH arrs AS (
-          SELECT l_orderkey,
-                 transform(array_sort(collect_list(struct(l_linenumber, l_quantity))),
-                           s -> CAST(s.l_quantity AS INT)) AS arr
-          FROM __li_udaf GROUP BY l_orderkey
-        ),
-        g AS (SELECT CAST(least(size(arr), 3) AS INT) AS grp, arr FROM arrs)
-        SELECT grp, array_reduce_sum(arr) AS result FROM g GROUP BY grp
-    """)
+    try:
+        df = spark.sql("""
+            WITH arrs AS (
+              SELECT l_orderkey,
+                     transform(array_sort(collect_list(struct(l_linenumber, l_quantity))),
+                               s -> CAST(s.l_quantity AS INT)) AS arr
+              FROM __li_udaf GROUP BY l_orderkey
+            ),
+            g AS (SELECT CAST(least(size(arr), 3) AS INT) AS grp, arr FROM arrs)
+            SELECT grp, array_reduce_sum(arr) AS result FROM g GROUP BY grp
+        """)
+    finally:
+        # the query is analyzed: its plan no longer needs the view
+        spark.catalog.dropTempView("__li_udaf")
     return df.select("grp", F.posexplode("result").alias("pos", "val"))
 
 
@@ -311,7 +315,10 @@ def monoid_sql_routed_hugegroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same query is O(1) memory per task at 60M rows (plan and wall time
     checked at scale/sf1 in ``tests/test_sql_route.py``)."""
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("__li_routed")
-    red = route_monoid_sql(spark, _ROUTED_HUGEGROUP_SQL)
+    try:
+        red = route_monoid_sql(spark, _ROUTED_HUGEGROUP_SQL)
+    finally:
+        spark.catalog.dropTempView("__li_routed")
     return red.select(F.posexplode("result").alias("pos", "val"))
 
 

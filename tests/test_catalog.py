@@ -60,12 +60,18 @@ def test_flagship_entry_is_monoid_sum_double(spark):
     assert len(got) > 0 and sorted(got) == sorted(want)
 
 
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.mark.parametrize("name", sorted(MONOID_ENTRIES))
 def test_entry_matches_its_duckdb_oracle(spark, duck, canon, name):
+    views = _temp_views(spark)
     got = canon(entrymod.queries()[name](spark, SF).toPandas())
     want = canon(duck.sql(entrymod.oracle_sql()[name]).df())
     assert got[0] > 0
     assert got == want
+    assert _temp_views(spark) == views
 
 
 def _shm() -> set:

@@ -11,6 +11,7 @@ bench`` resolves to a callable ``main``.
 import ast
 import importlib
 import os
+import pkgutil
 import subprocess
 import sys
 import tomllib
@@ -146,3 +147,20 @@ def test_core_imports_only_core_modules():
                   - set(CORE_MODULES)) == []
     assert sorted(_loaded_by_clean_import(ON_TOP_OF_CORE)
                   - set(CORE_MODULES) - set(ON_TOP_OF_CORE)) == []
+
+
+def test_streaming_package_is_the_monoid_stream():
+    """The streaming package holds the monoid stream and nothing else,
+    and a clean import of the pipeline catalog loads no other streaming
+    module and no module without a source file in the package."""
+    import datafusion_monoid_spark.streaming as streaming
+
+    assert [m.name for m in pkgutil.iter_modules(streaming.__path__)] == [
+        "monoid_stream"]
+    loaded = _loaded_by_clean_import(
+        ["datafusion_monoid_spark.pipeline_queries"])
+    assert sorted(m for m in loaded if m.startswith(streaming.__name__)) == [
+        "datafusion_monoid_spark.streaming",
+        "datafusion_monoid_spark.streaming.monoid_stream"]
+    assert sorted(m for m in loaded
+                  if not os.path.exists(_module_source(m))) == []

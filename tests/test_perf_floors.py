@@ -40,7 +40,6 @@ CEILINGS = {
     # shuffle (or the per-call artifact re-read) came back
     "sim_topk_ivf_pretrained": 5.0,
     # r5 additions (~4x quiet sf0.01 best-of-3 on local[8])
-    "streaming_ann_serve": 16.0,
     "pipeline_dedup_cascade": 12.0,
     "dedup_cluster_keep_best": 12.0,
     "dedup_incremental_newbatch": 12.0,
@@ -58,7 +57,6 @@ CEILINGS = {
     "incremental_rollup_merge": 3.0,
     "basket_pair_lift": 5.0,
     "events_transition_matrix": 3.0,
-    "streaming_rollup_maintenance": 10.0,
     "embedding_drift_by_label": 4.0,
     "dpp_partition_pruning": 4.0,
     # round-6 entries (~4x quiet sf0.01 best-of-3, local[8])
@@ -72,7 +70,6 @@ CEILINGS = {
     # (measured: MINUTES of optimizer churn when the posexplode sat
     # directly on the expression)
     "pq_adc_pretrained": 16.0,
-    "streaming_lm_score_serve": 15.0,
     "bucketed_join_zero_shuffle": 6.0,
     # IVFADC composition: coarse k-means + PQ chains fused in-plan
     "pq_ivfadc_topk": 30.0,
@@ -84,7 +81,6 @@ CEILINGS = {
     "bpe_train_merges": 4.0,
     "bpe_encode_stats": 5.0,
     "bpe_encode_newbatch": 6.0,
-    "streaming_bpe_encode_serve": 16.0,
     # round-8 pins for the r7 driver-bench outliers (~4x quiet sf0.01
     # best-of-3 on local[8]).
     # driver-literal Lloyd fits (one job per round, tiny HOF argmin
@@ -127,31 +123,12 @@ SF01_CEILINGS = {
     # encode — a blown ceiling means the in-plan Lloyd refit came back
     # (quiet 1.8 s warm-artifact)
     "pq_adc_topk": 7.0,
-    # 4-micro-batch LM scoring loop — a blown ceiling means the sink
-    # commits left tmpfs (fsync) or the per-batch model join went back
-    # to re-reading/re-joining the artifacts per batch.  Tightened
-    # 16 -> 10 (3.3x slack let a 2x plan
-    # regression through): quiet warm-artifact best-of-3 is 5.5 s, of
-    # which the declared per-trigger floor (BASELINE.md round 10) is
-    # ~3.4 s of commits + ~1 s stream start/stop — data-invariant
-    # constants, so 10 s only admits ambient noise, not a plan change.
-    "streaming_lm_score_serve": 10.0,
-    # 4-micro-batch classifier scoring loop (r10): one broadcast join
-    # vs the persisted vocab-bounded model — a blown ceiling means a
-    # per-batch model re-read/re-fit or a lost broadcast (quiet 2.9 s
-    # warm-artifact, commit floor ~1.2 s)
-    "streaming_quality_clf_serve": 6.0,
     # near-dup-group split (r10): CC over the NARROW (id_a, id_b,
     # n_agree) candidate relation — a blown ceiling means the
     # signature arrays came back into the persisted pairs (the sf10
     # heap-OOM shape) or the CC rounds stopped releasing checkpoints
     # (cold-sweep 3.1 s, 0.17x its DuckDB oracle)
     "leakage_safe_split": 9.0,
-    # 4-micro-batch tertile router (r10): both artifacts load once
-    # pre-stream, bucket CASE is literal — a blown ceiling means a
-    # per-batch threshold/model re-read or a corpus re-histogram
-    # (cold-sweep 4.2 s, commit floor ~2.6 s of 3.4 s engine)
-    "streaming_bucket_route_serve": 9.0,
     # persisted-threshold fit (r10): score histogram + 1-row write
     # from the persisted model — a blown ceiling means the corpus
     # re-sorts instead of the histogram window, or the LM fit's
@@ -201,11 +178,6 @@ SF01_CEILINGS = {
     # not O(index))
     "containment_postings_append": 12.0,   # (5.6)
     "containment_postings_compact": 12.0,  # (5.5)
-    # streaming capstone: 4 micro-batches x five persisted-artifact
-    # gates; artifacts hoist ONCE pre-stream — a blown ceiling means
-    # a per-batch artifact re-read/re-fit or a corpus-sized stage
-    # inside the loop
-    "streaming_curation_capstone": 45.0,   # (24.2)
     # balanced export: map + micro digest + broadcast + one exchange
     # — a blown ceiling means the balancer saw a corpus-sized sort
     "export_training_shards_balanced": 4.0,  # (1.5)
@@ -222,38 +194,11 @@ SF01_CEILINGS = {
     # actually runs in, still well under a 2x plan change on top of it
     "lsh_postings_append": 18.0,           # (5.3)
     "lsh_postings_compact": 18.0,          # (4.7)
-    # streaming admit loop: 4 micro-batches x (exact-key anti-join
-    # incl. the within-stream key-generation gate + screen kernel +
-    # THREE narrow writes) against hoisted artifacts — a blown ceiling
-    # means a per-batch artifact re-read or a corpus-sized stage
-    # inside the loop.  24 -> 30 (r13): the within-stream exact-key
-    # gate added one keys write per batch + the cumulative generation
-    # read + deterministic ntile staging (checkpointed once, ~1 s);
-    # quiet best-of-3 moved 12.2 -> 16.9, decomposed as ~1.5-2 s of
-    # extra per-batch write commits + ~1 s gate reads + ~1 s staging —
-    # all O(batch)/O(admitted-keys) constants, not corpus terms
-    "streaming_containment_admit_serve": 30.0,  # (16.9)
     # compact-time cascade: generation-local self-screen + the
     # standard fold — a blown ceiling means the self-screen's verify
     # joined the base index (O(index) crept into the O(generation)
     # stage)
     "containment_compact_cascade": 15.0,        # (7.1)
-    # r13 serve-family pins (the recurring
-    # driver-vs-quiet gap was attributed to ambience but nothing was
-    # pinned, so a blown driver reading could not be classified from
-    # artifacts alone).  Quiet local[8] sf0.1 warm-artifact best-of-3
-    # in parens; the closing cold sweep reads lower still (6.2/3.1/
-    # 2.7) because the sweep's earlier entries pre-build the shared
-    # artifacts.  Decompositions: screen serve = 4 micro-batches x
-    # (broadcast batch-bands join vs the persisted probe index + one
-    # narrow verify join) — a blown ceiling means a per-batch index
-    # re-read or the candidate join shuffling the index side; kmv =
-    # per-batch KMV merge against bounded k-row state — a blown
-    # ceiling means state stopped being bounded by k; ann serve =
-    # per-batch hyperplane-bucket probe vs persisted postings — a
-    # blown ceiling means a per-batch refit or a lost broadcast
-    "streaming_containment_screen_serve": 20.0,  # (10.7)
-    "streaming_ann_serve": 10.0,                 # (4.3)
     # r13 new entries (quiet local[8] sf0.1 best-of-2 in parens).
     # refit trigger: one drift partial-agg pass + the bounded Lloyd
     # refit + the 2 x 20 x 5-row eval join — a blown ceiling means the

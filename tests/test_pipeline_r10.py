@@ -176,21 +176,6 @@ def test_quality_clf_separates_training_strata(spark, cat):
     assert sum(pos) / len(pos) > sum(neg) / len(neg)
 
 
-def test_streaming_qc_serve_equals_batch(spark, cat):
-    """stream == batch: the union of per-micro-batch classifier scores
-    must equal the one-shot batch scoring of the same corpus against
-    the same persisted model."""
-    got = {(r["doc_id"], r["source"], r["n_tokens"], r["score_micro"])
-           for r in cat["streaming_quality_clf_serve"][0](
-               spark, SF001).collect()}
-    path = qcat._fit_qc_persisted(spark, SF001, overwrite=False)
-    model = spark.read.parquet(path)
-    docs = spark.read.parquet(f"{SF001}/documents.parquet")
-    want = {(r["doc_id"], r["source"], r["n_tokens"], r["score_micro"])
-            for r in qcat._qc_score_docs(docs, model).collect()}
-    assert got == want
-
-
 def test_containment_lsh_superset_of_banded_entry(spark, cat):
     """On the real corpus the probe-indexed entry must dominate the
     Jaccard-banded entry — same exact verify, strictly better-or-equal
@@ -203,7 +188,7 @@ def test_containment_lsh_superset_of_banded_entry(spark, cat):
 
 
 # ---------------------------------------------------------------------------
-# containment-index triple (build / screen / streaming screen)
+# containment-index pair (build / screen)
 # ---------------------------------------------------------------------------
 
 def _screen(spark, old_rows, new_rows):
@@ -271,20 +256,6 @@ def test_screen_recall_vs_exact_cross_split(spark, cat):
     assert exact, "fixture corpus lost its cross-split containment pairs"
     assert len(exact & got) / len(exact) >= 0.98
     assert got <= exact  # never a pair the exact criterion rejects
-
-
-def test_streaming_screen_equals_batch(spark, cat):
-    """stream == batch: the union of per-micro-batch screen results
-    must equal the one-shot batch screen against the same persisted
-    index."""
-    key = ("new_id", "old_id", "n_common", "n_new", "n_old",
-           "cont_new_in_old_micro", "cont_old_in_new_micro")
-    got = {tuple(r[c] for c in key) for r in
-           cat["streaming_containment_screen_serve"][0](
-               spark, SF001).collect()}
-    want = {tuple(r[c] for c in key) for r in
-            cat["dedup_containment_screen"][0](spark, SF001).collect()}
-    assert got == want
 
 
 def test_containment_index_serves_without_refit(spark, cat):

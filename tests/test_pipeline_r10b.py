@@ -22,8 +22,7 @@ SF = "/root/testdata/sf0.01"
 NEW_ENTRIES = ("leakage_safe_split", "ann_eval_recall_mrr",
                "lm_perplexity_buckets", "lm_bucket_thresholds",
                "lm_bucket_screen_newbatch", "bucket_temperature_mix",
-               "streaming_bucket_route_serve", "ivf_postings_build",
-               "ivf_postings_append")
+               "ivf_postings_build", "ivf_postings_append")
 
 
 def _run(spark, name, sf=SF):
@@ -184,12 +183,22 @@ def test_thresholds_sentinel_on_degenerate_corpus(spark, tmp_path):
               "n_chars bigint")
     df.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
 
-    cuts = _run(spark, "lm_bucket_thresholds", str(tmp_path)).collect()[0]
-    assert cuts["cut2_micro"] == qcat._LM_CUT_SENTINEL
-    assert cuts["cut3_micro"] == qcat._LM_CUT_SENTINEL
-    assert cuts["n_docs"] == 12
+    try:
+        cuts = _run(spark, "lm_bucket_thresholds",
+                    str(tmp_path)).collect()[0]
+        assert cuts["cut2_micro"] == qcat._LM_CUT_SENTINEL
+        assert cuts["cut3_micro"] == qcat._LM_CUT_SENTINEL
+        assert cuts["n_docs"] == 12
 
-    screened = _run(spark, "lm_bucket_screen_newbatch",
-                    str(tmp_path)).collect()
-    assert [r["bucket"] for r in screened] == [1]
-    assert screened[0]["n_docs"] == 2  # doc_ids 0 and 11 arrive
+        screened = _run(spark, "lm_bucket_screen_newbatch",
+                        str(tmp_path)).collect()
+        assert [r["bucket"] for r in screened] == [1]
+        assert screened[0]["n_docs"] == 2  # doc_ids 0 and 11 arrive
+    finally:
+        # the artifacts are keyed by the pytest tmp path: remove them
+        # so runs leave no dirs under .artifacts/
+        import shutil
+        for name in ("lm_bigram_counts", "lm_context_counts",
+                     "lm_bucket_thresholds"):
+            shutil.rmtree(qcat._artifact_path(str(tmp_path), name),
+                          ignore_errors=True)

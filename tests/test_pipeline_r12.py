@@ -118,41 +118,6 @@ def test_append_generations_partition_the_index(spark, cat):
     assert len(app) == screen["n_clean_docs"]
 
 
-def test_streaming_capstone_equals_batch(spark, cat):
-    """Stream == batch for the curation capstone serve: the SAME gate
-    chain (shared _capstone_gates closure) applied per micro-batch
-    through the streaming loop must union to its one-shot application
-    over the min-arrival-batch-filtered arriving set (the r13
-    within-stream exact-key gate: a key's later-batch clones never
-    reach the gates)."""
-    from datafusion_monoid_spark.streaming import stream_queries as sq
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F  # noqa: F811
-
-    got = {tuple(r) for r in
-           cat["streaming_curation_capstone"][0](spark, SF001).collect()}
-    gates, release = sq._capstone_gates(spark, SF001)
-    try:
-        whole = (spark.read.parquet(f"{SF001}/documents.parquet")
-                 .where(F.col("doc_id") % 11 == 0)
-                 .select("doc_id", "source", "text"))
-        old_keys = spark.read.parquet(
-            qcat._build_exact_key_index(spark, SF001))
-        tiled = whole.withColumn(
-            "g", F.ntile(4).over(Window.orderBy("doc_id")))
-        novel = (dd.exact_dedup_keys(tiled, "text")
-                 .join(old_keys, "dup_key", "left_anti"))
-        firstg = novel.groupBy("dup_key").agg(F.min("g").alias("mg"))
-        keep = (novel.join(firstg, "dup_key")
-                .where(F.col("g") == F.col("mg")).select("doc_id"))
-        want = {tuple(r) for r in
-                gates(whole.join(keep, "doc_id", "left_semi"))
-                .collect()}
-    finally:
-        release()
-    assert got == want and got
-
-
 # ---------------------------------------------------------------------------
 # shard export follow-through
 # ---------------------------------------------------------------------------
@@ -240,55 +205,12 @@ def test_lsh_append_admits_only_unflagged(spark, cat):
     assert app == batch - flagged
 
 
-def test_streaming_admit_equals_batch(spark, cat):
-    """Stream == batch for the admit loop: the union of per-batch
-    admitted generations must equal the one-shot recompute of the same
-    chain (exact-key screen incl. the within-stream min-arrival-batch
-    gate -> containment screen -> digest) against the same persisted
-    artifacts."""
-    from pyspark.sql import Window
-
-    got = sorted(tuple(r) for r in
-                 cat["streaming_containment_admit_serve"][0](
-                     spark, SF001).collect())
-    ipath, ppath = qcat._build_containment_index(spark, SF001,
-                                                 overwrite=False)
-    old_keys = spark.read.parquet(
-        qcat._build_exact_key_index(spark, SF001))
-    nb = (qcat._docs(spark, SF001).where(F.col("doc_id") % 11 == 0)
-          .select("doc_id", "text")
-          .withColumn("g", F.ntile(4).over(Window.orderBy("doc_id"))))
-    novel = (dd.exact_dedup_keys(nb, "text")
-             .join(old_keys, "dup_key", "left_anti"))
-    firstg = novel.groupBy("dup_key").agg(F.min("g").alias("mg"))
-    keep = (novel.join(firstg, "dup_key")
-            .where(F.col("g") == F.col("mg"))
-            .select("doc_id", "text"))
-    nh = (dd.shingle_hashes(keep, "doc_id", dd.word_shingles("text"))
-          .distinct().localCheckpoint(eager=True))
-    flagged = qcat._containment_screen_from_hashes(
-        nh, spark.read.parquet(ipath), spark.read.parquet(ppath))
-    cleanh = nh.join(flagged.select(F.col("new_id").alias("doc_id"))
-                     .distinct(), "doc_id", "left_anti") \
-               .localCheckpoint(eager=True)
-    np_ = (dd.probe_argmins_long(cleanh, "doc_id").groupBy("doc_id")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_probes")))
-    want = sorted(tuple(r) for r in
-                  (cleanh.groupBy("doc_id")
-                   .agg(F.count(F.lit(1)).cast("bigint").alias("n_hashes"),
-                        F.min("h").cast("bigint").alias("min_h"),
-                        F.max("h").cast("bigint").alias("max_h"),
-                        F.sum("h").cast("bigint").alias("sum_h"))
-                   .join(np_, "doc_id")).collect())
-    assert got == want and got
-
-
 def test_compact_cascade_self_screen_keep_min(spark):
     """The compact-time cascade's self-screen: among an admitted
     generation containing a quote pair (containment >= 0.6) and an
     unrelated doc, exactly the GREATER id of the pair drops — the
-    within-stream duplicate admissions the streaming admit loop
-    documents are collapsed at compaction."""
+    duplicate admissions of one generation are collapsed at
+    compaction."""
     quote = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(6))
     rows = [(100, quote),
             (101, quote + " " + " ".join(f"pad{i} x{i}"
@@ -304,14 +226,19 @@ def test_compact_cascade_self_screen_keep_min(spark):
 def test_compact_cascade_superset_of_plain_compact_base(spark, cat):
     """The cascaded artifact's base side must equal the plain build's
     digest (folding never touches base rows), and its admitted side is
-    a subset of the admit loop's generation (the self-screen only ever
-    removes)."""
+    a subset of the admitted generation before the self-screen (the
+    batch twin's ``cleanh`` relation, which the cascade's oracle also
+    starts from: the self-screen only ever removes)."""
+    import duckdb
+
     casc = cat["containment_compact_cascade"][0](spark, SF001).collect()
     base = {r["doc_id"]: tuple(r) for r in
             cat["containment_index_build"][0](spark, SF001).collect()}
-    adm = {r["doc_id"] for r in
-           cat["streaming_containment_admit_serve"][0](
-               spark, SF001).collect()}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS FROM '{SF001}/documents.parquet'")
+    adm = {r[0] for r in con.sql(
+        f"WITH {qcat._contain_admit_clean_ctes()} "
+        "SELECT DISTINCT doc_id FROM cleanh").fetchall()}
     casc_ids = {r["doc_id"] for r in casc}
     assert set(base) <= casc_ids
     for r in casc:

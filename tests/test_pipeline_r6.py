@@ -1,5 +1,5 @@
 """Round-6 operator tests: substring spans, bloom prefilter, triangle
-census, LM scoring, PQ fit/serve equivalence, streaming LM serve."""
+census, LM scoring, PQ fit/serve equivalence."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,23 +156,6 @@ def test_pq_codes_literal_matches_dataframe_assign(spark):
         (r.vec_id, s, cid)
         for r in pqm.pq_encode_pretrained(e, books).collect()
         for s, cid in enumerate(r.codes))
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# streaming LM serve: stream == batch on the same finite input
-# ---------------------------------------------------------------------------
-
-def test_streaming_lm_serve_equals_batch(spark):
-    got = sorted(map(tuple,
-                     _run(spark, "streaming_lm_score_serve").collect()))
-    docs = q._docs(spark, SF)
-    b = q._lm_doc_bigrams(docs)
-    bgc = b.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg"))
-    ctx = b.groupBy("w1").agg(F.count(F.lit(1)).alias("c_ctx"))
-    want = sorted(map(tuple, q._lm_score_docs(b, bgc, ctx)
-                      .select("doc_id", "source", "n_bigrams",
-                              "score_micro").collect()))
     assert got == want
 
 

@@ -125,31 +125,39 @@ def test_bpe_oracle_survives_pair_exhaustion(spark, tmp_path):
               "n_chars bigint")
     df.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
 
-    spark_rows = sorted(map(tuple,
-                            _run(spark, "bpe_train_merges",
-                                 str(tmp_path)).collect()))
-    con = duckdb.connect()
-    # Spark writes the table as a directory of part files
-    con.sql(f"CREATE VIEW documents AS "
-            f"FROM '{tmp_path}/documents.parquet/*.parquet'")
-    _, oracle = qcat.catalog()["bpe_train_merges"]
-    duck_rows = sorted(map(tuple, con.sql(oracle).fetchall()))
+    try:
+        spark_rows = sorted(map(tuple,
+                                _run(spark, "bpe_train_merges",
+                                     str(tmp_path)).collect()))
+        con = duckdb.connect()
+        # Spark writes the table as a directory of part files
+        con.sql(f"CREATE VIEW documents AS "
+                f"FROM '{tmp_path}/documents.parquet/*.parquet'")
+        _, oracle = qcat.catalog()["bpe_train_merges"]
+        duck_rows = sorted(map(tuple, con.sql(oracle).fetchall()))
 
-    assert spark_rows == duck_rows
-    # only the realizable merges appear (ab x3 beats cd x2), none of
-    # the post-exhaustion rounds fabricate rows
-    assert [r[0] for r in spark_rows] == [1, 2]
-    assert spark_rows[0][1:] == ("a", "b", 3)
-    assert spark_rows[1][1:] == ("c", "d", 2)
+        assert spark_rows == duck_rows
+        # only the realizable merges appear (ab x3 beats cd x2), none of
+        # the post-exhaustion rounds fabricate rows
+        assert [r[0] for r in spark_rows] == [1, 2]
+        assert spark_rows[0][1:] == ("a", "b", 3)
+        assert spark_rows[1][1:] == ("c", "d", 2)
 
-    # the encode serve path still sees the fixed-point vocabulary —
-    # every token segments to ONE merged symbol, not an empty model —
-    # and both engines agree on the encoded stats
-    spark_enc = sorted(map(tuple, _run(spark, "bpe_encode_stats",
-                                       str(tmp_path)).collect()))
-    duck_enc = sorted(map(tuple, con.sql(
-        qcat.catalog()["bpe_encode_stats"][1]).fetchall()))
-    assert spark_enc == duck_enc and spark_enc
+        # the encode serve path still sees the fixed-point vocabulary —
+        # every token segments to ONE merged symbol, not an empty model —
+        # and both engines agree on the encoded stats
+        spark_enc = sorted(map(tuple, _run(spark, "bpe_encode_stats",
+                                           str(tmp_path)).collect()))
+        duck_enc = sorted(map(tuple, con.sql(
+            qcat.catalog()["bpe_encode_stats"][1]).fetchall()))
+        assert spark_enc == duck_enc and spark_enc
+    finally:
+        # the artifacts are keyed by the pytest tmp path: remove them
+        # so runs leave no dirs under .artifacts/
+        import shutil
+        for name in ("bpe_merges", "bpe_vocab_seg"):
+            shutil.rmtree(qcat._artifact_path(str(tmp_path), name),
+                          ignore_errors=True)
 
 
 def test_opq_pretrained_matches_fused(spark):

@@ -57,30 +57,6 @@ def test_stream_matches_batch(spark, events_dir, tmp_path):
     assert len(got) > 100  # real coverage: many windows x types x 3 positions
 
 
-def test_session_windows_match_batch(spark, events_dir, tmp_path):
-    from datafusion_monoid_spark.streaming.stream_queries import (
-        streaming_session_windows)
-    stream = read_events_stream(spark, events_dir)
-    agg = streaming_session_windows(stream, gap="30 minutes")
-    q = run_stream_to_memory(agg, "sessions", str(tmp_path / "ckpt_s"))
-    try:
-        got = {(r["user_id"], r["session_start"]): (r["n_events"], r["total_milli"])
-               for r in spark.sql("SELECT * FROM sessions").collect()}
-    finally:
-        q.stop()
-
-    mv = F.round(F.col("value") * 1000).cast("bigint")
-    batch = (
-        read_events_batch(spark, events_dir)
-        .groupBy(F.session_window("event_time", "30 minutes"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(mv).alias("t"))
-        .select(F.col("session_window").start.alias("ss"), "user_id", "n", "t")
-    )
-    want = {(r["user_id"], r["ss"]): (r["n"], round(r["t"], 4))
-            for r in batch.collect()}
-    assert got == want and len(got) > 50
-
-
 def test_stream_is_incremental(spark, events_dir, tmp_path):
     """Feeding the same data as TWO files must produce the doubled sums —
     i.e. state actually merges across micro-batches (monoid property)."""
@@ -137,205 +113,6 @@ def test_foreach_batch_upsert_matches_batch(spark, tmp_path):
     want = {(r["ws"], r["event_type"], r["pos"]): round(r["val"], 6)
             for r in batch.collect()}
     assert got == want
-
-
-def test_streaming_dedup_drops_redelivery(spark, tmp_path):
-    """The same events file delivered twice (at-least-once) dedups back
-    to exactly the distinct event_ids, with watermark-bounded state."""
-    from datafusion_monoid_spark.streaming.stream_queries import (
-        streaming_dedup)
-
-    d = tmp_path / "events_dup"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "part-0.parquet")
-    shutil.copy(f"{SF}/events.parquet", d / "part-1.parquet")
-
-    stream = streaming_dedup(read_events_stream(spark, str(d)))
-    q = (stream.writeStream.outputMode("append")
-         .format("memory").queryName("dedup_stream")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .start())
-    q.processAllAvailable()
-    try:
-        got = spark.sql(
-            "SELECT count(*) AS n, count(DISTINCT event_id) AS d "
-            "FROM dedup_stream").collect()[0]
-    finally:
-        q.stop()
-    want = (read_events_batch(spark, str(d))
-            .select("event_id").distinct().count())
-    assert got["n"] == got["d"] == want
-
-
-def test_stream_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
-    """Purchase><click interval join streamed == the identical batch
-    join (state-bounded by watermark + time-bound predicate)."""
-    from datafusion_monoid_spark.streaming.stream_queries import (
-        streaming_interval_join)
-
-    stream = read_events_stream(spark, events_dir)
-    p = stream.where(F.col("event_type") == "purchase")
-    c = stream.where(F.col("event_type") == "click")
-    j = streaming_interval_join(p, c, within="24 hours",
-                                watermark="48 hours")
-    q = (j.writeStream.outputMode("append")
-         .format("memory").queryName("ssj_stream")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .start())
-    q.processAllAvailable()
-    try:
-        got = {(r["purchase_id"], r["click_id"]) for r in
-               spark.sql("SELECT * FROM ssj_stream").collect()}
-    finally:
-        q.stop()
-
-    ev = read_events_batch(spark, events_dir)
-    bp = ev.where(F.col("event_type") == "purchase").alias("p")
-    bc = ev.where(F.col("event_type") == "click").alias("c")
-    want = {(r["pid"], r["cid"]) for r in
-            bp.join(bc, F.expr("""
-                p.user_id = c.user_id AND
-                c.event_time BETWEEN p.event_time - INTERVAL 24 hours
-                                 AND p.event_time"""))
-            .select(F.col("p.event_id").alias("pid"),
-                    F.col("c.event_id").alias("cid")).collect()}
-    assert got == want
-    assert len(got) > 50
-
-
-def test_streaming_contamination_matches_batch(spark, tmp_path):
-    """Stream-static semi join: the contaminated-id stream equals the
-    batch decontamination verdict on the same corpus file."""
-    import shutil
-    from datafusion_monoid_spark.operators import curation as cu
-    from datafusion_monoid_spark.streaming.stream_queries import (
-        streaming_contamination_alerts)
-
-    d = tmp_path / "docs_stream"
-    d.mkdir()
-    shutil.copy(f"{SF}/documents.parquet", d / "part-0.parquet")
-
-    batch_docs = spark.read.parquet(str(d))
-    ev = batch_docs.where(F.col("doc_id") % 97 == 0)
-    tr_stream = (spark.readStream
-                 .schema(batch_docs.schema).parquet(str(d))
-                 .where(F.col("doc_id") % 97 != 0))
-    alerts = streaming_contamination_alerts(
-        tr_stream, cu.ngram_hashes(ev, "doc_id", "text", 4))
-    q = (alerts.writeStream.outputMode("append")
-         .format("memory").queryName("contam")
-         .option("checkpointLocation", str(tmp_path / "ckpt_c"))
-         .start())
-    try:
-        q.processAllAvailable()
-        got = {r.doc_id for r in spark.sql("SELECT * FROM contam").collect()}
-    finally:
-        q.stop()
-
-    tr = batch_docs.where(F.col("doc_id") % 97 != 0)
-    want = {r.doc_id for r in cu.contaminated_ids(
-        cu.ngram_hashes(tr, "doc_id", "text", 4),
-        cu.ngram_hashes(ev, "doc_id", "text", 4), "doc_id").collect()}
-    assert got == want and len(want) > 0
-
-
-def test_streaming_cms_matches_batch_sketch(spark, events_dir, tmp_path):
-    """Per-window streamed CMS cells equal the batch sketch built on
-    each window's slice — the count-matrix monoid streaming contract."""
-    from datafusion_monoid_spark.operators import sketch as sk
-    from datafusion_monoid_spark.streaming.stream_queries import (
-        streaming_cms)
-
-    stream = read_events_stream(spark, events_dir)
-    agg = streaming_cms(stream, "event_type", window="1 hour")
-    q = run_stream_to_memory(agg, "cmsstream", str(tmp_path / "ckpt_cms"))
-    try:
-        got = {(r["window_start"], r["depth"], r["bucket"]): r["cnt"]
-               for r in spark.sql("SELECT * FROM cmsstream").collect()}
-    finally:
-        q.stop()
-
-    batch = (read_events_batch(spark, events_dir)
-             .withColumn("ws", F.window("event_time", "1 hour").start))
-    cells = (batch.select(
-        "ws", F.posexplode(F.array(*[
-            sk._cms_hash(F.col("event_type"), i, 256) for i in range(4)
-        ])).alias("depth", "bucket"))
-        .groupBy("ws", "depth", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt")))
-    want = {(r["ws"], r["depth"], r["bucket"]): r["cnt"]
-            for r in cells.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_streaming_ann_serve_equals_batch_search(spark):
-    """The streamed serve loop (per-micro-batch inference against the
-    prebuilt IVF index) must return EXACTLY the batch search over the
-    same query set — the stream==batch contract for a stateless serve —
-    and must actually stream (multiple micro-batches)."""
-    from datafusion_monoid_spark import pipeline_queries as qcat
-    from datafusion_monoid_spark.streaming import stream_queries as sq
-
-    cat = qcat.catalog()
-    cat["sim_ivf_fit_centroids"][0](spark, SF).collect()   # persist index
-    served = cat["streaming_ann_serve"][0](spark, SF).collect()
-    met = sq.LAST_STREAM_METRICS["streaming_ann_serve"]
-    assert met["batches"] >= 2, met     # several triggers, not one gulp
-    batch = cat["sim_topk_ivf_pretrained"][0](spark, SF).collect()
-    key = lambda rows: sorted(
-        (r["query_id"], r["rank"], r["cand_id"], r["sim"]) for r in rows)
-    assert key(served) == key(batch)
-
-
-def test_streaming_bpe_serve_equals_batch_encode(spark):
-    """The streamed tokenizer serve (per-micro-batch encode against
-    the persisted merge model) must equal the batch encode per
-    document — stream==batch for a stateless serve — and must actually
-    stream (multiple micro-batches)."""
-    from pyspark.sql import functions as F
-
-    from datafusion_monoid_spark import pipeline_queries as qcat
-    from datafusion_monoid_spark.operators import bpe, dedup as dd
-    from datafusion_monoid_spark.streaming import stream_queries as sq
-
-    cat = qcat.catalog()
-    served = cat["streaming_bpe_encode_serve"][0](spark, SF).collect()
-    met = sq.LAST_STREAM_METRICS["streaming_bpe_encode_serve"]
-    assert met["batches"] >= 2, met
-    _, vpath = qcat._fit_bpe_persisted(spark, SF)
-    model = (spark.read.parquet(vpath)
-             .select("tok", F.size(bpe.seg_symbols(F.col("seg")))
-                     .alias("n_sym")))
-    batch = (qcat._docs(spark, SF)
-             .select("doc_id", "source",
-                     F.explode(dd.tokens("text")).alias("tok"))
-             .join(F.broadcast(model), "tok")
-             .groupBy("doc_id", "source")
-             .agg(F.count(F.lit(1)).alias("n_tokens"),
-                  F.sum("n_sym").alias("n_symbols"))).collect()
-    key = lambda rows: sorted(
-        (r["doc_id"], r["source"], r["n_tokens"], r["n_symbols"])
-        for r in rows)
-    assert key(served) == key(batch)
-
-
-def test_streaming_rollup_maintenance_equals_batch_recompute(spark):
-    """The streamed materialized view (per-batch partials appended,
-    merged on read) must equal the full batch recompute row-for-row,
-    and must actually stream (multiple micro-batches)."""
-    from datafusion_monoid_spark import pipeline_queries as qcat
-    from datafusion_monoid_spark.streaming import stream_queries as sq
-
-    cat = qcat.catalog()
-    streamed = cat["streaming_rollup_maintenance"][0](spark, SF).collect()
-    met = sq.LAST_STREAM_METRICS["streaming_rollup_maintenance"]
-    assert met["batches"] >= 2, met
-    full = (qcat._hourly_partials(qcat._events(spark, SF))
-            .withColumnRenamed("v_milli", "v_milli").collect())
-    key = lambda rows: sorted(
-        (r["event_type"], r["hour_bucket"], r["n"], r["v_milli"])
-        for r in rows)
-    assert key(streamed) == key(full)
 
 
 def test_stream_integer_product_renders_the_cell_text(spark):
