@@ -24,8 +24,7 @@ nothing else from the package):
 The pipeline tier sits outside the core and the catalog, and nothing
 above imports it: pipeline_queries.py (its catalog: the monoid entries
 plus the pipeline entries), the other operators/ modules (dedup,
-similarity, pq, sketch, text, curation, ...), functions/, plans/ and
-sources/.
+similarity, pq, sketch, text, curation, ...), functions/ and plans/.
 """
 
 from datafusion_monoid_spark.monoid import (

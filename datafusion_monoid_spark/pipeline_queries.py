@@ -34,6 +34,14 @@ from datafusion_monoid_spark import queries as _core
 from datafusion_monoid_spark.queries import QueryFn, _emb, _row_groups, _t
 from datafusion_monoid_spark.streaming.monoid_stream import _ts_dtype
 
+#: every table the pipeline entries read, one parquet file each under
+#: the scale-factor directory (TESTDATA.md); ``queries.TABLES`` holds
+#: the monoid entries' three
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
 #: name -> (spark_fn, oracle_sql | None); the monoid entries first
 _CATALOG: dict[str, tuple[QueryFn, str | None]] = _core.catalog()
 
@@ -245,17 +253,13 @@ def _lsh_sql_exprs() -> tuple[str, str, str, str]:
     return mins, sig, bands, band_list
 
 
-def _minhash_candidates_cte(src: str = "documents",
-                            shingles: str | None = None) -> str:
+def _minhash_candidates_cte(src: str = "documents") -> str:
     """Shared DuckDB CTE chain: shingles -> minhash sigs -> bands ->
-    candidate pairs (named ``cand``), over the ``src`` relation.
-    ``shingles`` overrides the word-shingle expression (the multimodal
-    byte-shingle twin passes its hex-substring form)."""
+    candidate pairs (named ``cand``), over the ``src`` relation."""
     mins, sig, bands, band_list = _lsh_sql_exprs()
-    sh_expr = shingles if shingles is not None else dd.shingles_sql("text")
     return f"""
 WITH msh AS (
-  SELECT doc_id, unnest({sh_expr}) AS s FROM {src}
+  SELECT doc_id, unnest({dd.shingles_sql('text')}) AS s FROM {src}
 ),
 hashed AS (SELECT doc_id, {dd.md5_long_sql('s')} % 4294967296 AS h FROM msh),
 sigs AS (
@@ -1846,87 +1850,6 @@ _TOKS = f"list_filter(string_split({_NORM}, ' '), t -> t != '')"
 
 
 # ---------------------------------------------------------------------------
-# Multimodal columns
-# ---------------------------------------------------------------------------
-
-from datafusion_monoid_spark.operators import multimodal as mm
-
-
-def _multimodal_neardup_oracle_sql() -> str:
-    from datafusion_monoid_spark.operators import multimodal as _mm
-
-    # the frame-structured payload's hex twin: md5 per 8-token chunk,
-    # concatenated in chunk order (empty-text docs -> empty payload)
-    toks = "list_filter(string_split(" + dd.NORMALIZE_SQL.format(
-        expr="text") + ", ' '), t -> t != '')"
-    src = f"""(
-  SELECT doc_id, coalesce(string_agg(md5(c), '' ORDER BY i), '') AS hx
-  FROM (
-    SELECT doc_id, i,
-           array_to_string(toks[i * 8 + 1 : i * 8 + 8], ' ') AS c
-    FROM (SELECT doc_id, {toks} AS toks FROM documents),
-         unnest(range(0, CAST(ceil(len(toks) / 8.0) AS BIGINT))) AS u(i)
-    WHERE len(toks) > 0)
-  GROUP BY doc_id) mmsrc"""
-    cand = _minhash_candidates_cte(src,
-                                   shingles=_mm.byte_shingles_sql("hx", 4))
-    agree = (f"len(list_filter(range(1, {dd.MINHASH_NUM + 1}), "
-             f"i -> sig_a[i] = sig_b[i]))::DOUBLE / {dd.MINHASH_NUM}")
-    return f"""
-{cand}
-SELECT id_a, id_b, round({agree}, 3) AS est_jacc
-FROM cand WHERE {agree} >= 0.5
-"""
-
-
-@register("multimodal_neardup_lsh", _multimodal_neardup_oracle_sql())
-def multimodal_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup detection on the BINARY media column itself: distinct
-    4-byte shingles of the payload (pure
-    expression — dynamic substring + hex, no decode, no Python) feed
-    ``dd.minhash_from_shingles``, and the text tier's MinHash(64) +
-    LSH(16x4) machinery applies verbatim — hashing, banding, the
-    bucket join and the Jaccard estimate are modality-blind.  Byte
-    shingles catch bit-identical and containment/offset/concatenation
-    variants of the same payload; RE-ENCODED media (different bytes,
-    same picture) needs the codec-gated perceptual tier
-    (multimodal.py's decode gate) — this entry is the codec-FREE story
-    and says so.
-
-    Scale: the media bytes never shuffle — the payload is consumed
-    map-side by the shingle expression, and only (doc_id, 8-byte hash)
-    pairs enter the signature shuffle; downstream is the narrow
-    (id, band, hash) relation, identical to the text tier's 100 TB
-    posture.  The fake payload is FRAME-STRUCTURED (one md5 digest per
-    8-token chunk, concatenated) so near-dup texts share most payload
-    regions, as re-used frames/regions would in real media; the DuckDB
-    oracle replays byte shingles as hex-substring shingles of the
-    concatenated digests — full hash-match, not rows-only."""
-    docs = _docs(spark, sf_dir)
-    # materialize the payload once (production reads bytes from
-    # parquet; the fake builder is an expression the shingle transform
-    # would otherwise re-evaluate) and the signature relation once —
-    # the LSH candidate join references sigs FOUR times (both banded
-    # aliases + both signature re-attach joins; the text tier
-    # amortizes the same relation across three entries via
-    # _MINHASH_SHARED)
-    media = _ckpt(mm.attach_fake_media_frames(docs))
-    sigs = _ckpt(dd.minhash_from_shingles(media, "doc_id",
-                                          mm.byte_shingles("media", 4)))
-    cand = dd.lsh_candidate_pairs(sigs, "doc_id")
-    est = dd.estimated_jaccard_count("n_agree")
-    return (cand.where(est >= 0.5)
-            .select("id_a", "id_b", F.round(est, 3).alias("est_jacc")))
-
-
-# ---------------------------------------------------------------------------
-# As-of and range joins (operators Spark lacks natively)
-# ---------------------------------------------------------------------------
-
-from datafusion_monoid_spark.operators import joins as jn
-
-
-# ---------------------------------------------------------------------------
 # Host-surface depth: multi-way join + top-k, semi/anti joins, cube,
 # pivot, multi-granularity grouping-sets rollup
 # ---------------------------------------------------------------------------
@@ -2214,13 +2137,8 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic sampling / splits / sequence packing
+# Training-shard export
 # ---------------------------------------------------------------------------
-
-from datafusion_monoid_spark.operators import sampling as smp
-
-_BUCKET = ("(" + dd.md5_long_sql("CAST(doc_id AS VARCHAR)") + f" % {smp.SPLIT_MOD})")
-
 
 #: shard count for the training-shard export entry
 _EXPORT_SHARDS = 16
@@ -2315,8 +2233,8 @@ def export_training_shards_balanced(spark: SparkSession,
     shards carry near-equal TOKEN budgets — what a trainer's step time
     actually depends on — while membership stays a pure function of
     the data, no RNG state.  Two-level composition of the plain
-    export's hash sharding with ``pack_sequences``' bin logic lifted
-    to shard granularity:
+    export's hash sharding with a token-balancing deal at shard
+    granularity:
 
     1. every doc hashes into one of {_EXPORT_MICRO} MICRO-shards
        (map-only, the plain export's skey);
@@ -2370,61 +2288,6 @@ def export_training_shards_balanced(spark: SparkSession,
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
                  F.sum("n_toks").cast("bigint").alias("shard_tokens"),
                  F.countDistinct("micro").cast("bigint").alias("n_micro")))
-
-
-_STRATA_FRACTIONS = {"en": 1.0, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.1}
-
-
-def _stratified_oracle_sql() -> str:
-    langs = sorted(tx.LANG_MARKERS)
-    score_exprs = {
-        lang: ("len(list_filter(toks, t -> list_contains("
-               + "[" + ", ".join(f"'{m}'" for m in tx.LANG_MARKERS[lang]) + "], t)))::DOUBLE"
-               + " / greatest(len(toks), 1)")
-        for lang in langs
-    }
-    scores_sel = ", ".join(f"{score_exprs[l]} AS s_{l}" for l in langs)
-    pred = f"'{langs[0]}'"
-    best = f"s_{langs[0]}"
-    for lang in langs[1:]:
-        pred = f"CASE WHEN s_{lang} > {best} THEN '{lang}' ELSE {pred} END"
-        best = f"CASE WHEN s_{lang} > {best} THEN s_{lang} ELSE {best} END"
-    cuts = " ".join(
-        f"WHEN '{s}' THEN {int(f * smp.SPLIT_MOD)}"
-        for s, f in sorted(_STRATA_FRACTIONS.items()))
-    return f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-s AS (SELECT doc_id, {scores_sel} FROM t),
-p AS (SELECT doc_id, {pred} AS lang FROM s)
-SELECT lang, count(*) AS n_sampled
-FROM p WHERE {_BUCKET} < (CASE lang {cuts} ELSE 0 END)
-GROUP BY lang
-"""
-
-
-@register("stratified_sample_mix", _stratified_oracle_sql())
-def stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus mixing: per-language sampling rates (keep all English,
-    half de/es/fr, 10% zh) decided by the SAME stable hash as the plain
-    sample — a pure filter, no shuffle, reproducible row-for-row in any
-    engine.  The up/down-weighting primitive of training-corpus
-    curation.
-
-    The language column is pinned behind :func:`pin_columns`: without
-    the barrier, predicate pushdown inlines the whole tokenize+lang-id
-    chain into the sampling filter and sinks it below the repartition
-    to the single-file scan — 19-24 s on one core at sf1 vs ~1.1 s
-    pinned (measured; see plans/fence.py for the full mechanism and
-    the non-solutions)."""
-    from datafusion_monoid_spark.plans.fence import pin_columns
-
-    docs = _docs(spark, sf_dir).withColumn("__toks", dd.tokens("text"))
-    pred, _ = tx.lang_id("text", toks=F.col("__toks"))
-    with_lang = pin_columns(
-        docs.select("doc_id", pred.alias("lang")), "doc_id")
-    sampled = smp.stratified_hash_sample(
-        with_lang, "doc_id", "lang", _STRATA_FRACTIONS)
-    return sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n_sampled"))
 
 
 # ---------------------------------------------------------------------------
@@ -2669,15 +2532,6 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20))
 
 
-# ---------------------------------------------------------------------------
-# Data layout (Z-order zone maps) and entity resolution (deletion-
-# neighborhood fuzzy matching) — operators/layout.py, operators/linkage.py.
-# ---------------------------------------------------------------------------
-
-
-from datafusion_monoid_spark.operators import sketch as sk
-
-
 @register("bpe_top_merges", f"""
 WITH t AS (SELECT unnest({_TOKS}) AS tok FROM documents),
 p AS (SELECT unnest(list_transform(range(1, len(tok)),
@@ -2810,74 +2664,6 @@ def pipeline_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_toks").cast("bigint").alias("total_tokens"))
 
 
-from datafusion_monoid_spark.operators import skew as sw
-
-
-@register("skew_salted_event_stats", """
-SELECT event_type,
-       round(sum(value), 2) AS value_sum,
-       count(value) AS value_count,
-       round(max(value), 2) AS value_max
-FROM events GROUP BY event_type
-""")
-def skew_salted_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase SALTED aggregation over a worst-case key distribution
-    (5 event types, 32 reducers: every key is hot).  Phase 1 spreads
-    each key over 16 salts, phase 2 merges partials — the final values
-    are EXACTLY the plain aggregate (sum/count/max partials merge
-    losslessly; that algebra is the monoid discipline again), which is
-    why a plain GROUP BY is a valid oracle even though the salt
-    assignment is random per run."""
-    e = _events(spark, sf_dir).select("event_type", "value")
-    out = sw.salted_aggregate(
-        e, ["event_type"],
-        {"value_sum": ("value", "sum"),
-         "value_count": ("value", "count"),
-         "value_max": ("value", "max")},
-        n_salts=16)
-    return out.select(
-        "event_type",
-        F.round(F.col("value_sum"), 2).alias("value_sum"),
-        "value_count",
-        F.round(F.col("value_max"), 2).alias("value_max"))
-
-
-@register("skew_salted_join_deviation", """
-WITH dim AS (
-  SELECT event_type,
-         CAST(sum(CAST(round(value * 1000) AS BIGINT)) // count(*) AS BIGINT)
-           AS avg_milli
-  FROM events GROUP BY event_type
-)
-SELECT e.event_type, count(*) AS n,
-       CAST(sum(abs(CAST(round(e.value * 1000) AS BIGINT) - d.avg_milli))
-            AS BIGINT) AS abs_dev_milli
-FROM events e JOIN dim d USING (event_type)
-GROUP BY e.event_type
-""")
-def skew_salted_join_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SALTED JOIN over a worst-case join-key distribution (5 event
-    types, 32 reducers: every key is hot).  The per-type mean table
-    joins back to the full fact via :func:`skew.salted_join`: fact rows
-    salt by hash(event_id) mod 16, the dim replicates 16x, the join
-    keys are (event_type, salt) — so no reducer owns a whole hot key
-    (plan-asserted in tests/test_skew.py).  Join output equals the
-    plain join, so the oracle is the unsalted SQL.  Mean is exact
-    integer milli-units (floor div), deviation sums are exact ints."""
-    e = _events(spark, sf_dir).select("event_id", "event_type", "value")
-    mv = F.round(F.col("value") * 1000).cast("bigint")
-    dim = (e.groupBy("event_type")
-           .agg(F.expr("CAST(sum(CAST(round(value * 1000) AS BIGINT)) AS BIGINT)"
-                       " DIV count(*)").alias("avg_milli")))
-    joined = sw.salted_join(e.withColumn("mv", mv).drop("value"), dim,
-                            "event_type", n_salts=16,
-                            salt_src=F.col("event_id"))
-    return (joined.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.abs(F.col("mv") - F.col("avg_milli")))
-                  .cast("bigint").alias("abs_dev_milli")))
-
-
 @register("skew_aqe_join_deviation", """
 WITH fact AS (
   SELECT event_type,
@@ -2903,8 +2689,8 @@ def skew_aqe_join_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the fact.  No salt: at scale Spark's AQE skew-join is the
     default cure — the runtime observes the oversized shuffle partition
     and splits it across reducers (``skew=true`` on the SMJ node),
-    replicating the matching dim rows, which is what the manual salt
-    (``skew_salted_join_deviation``) does statically.
+    replicating the matching dim rows, which is what a manual salted
+    join (the dim replicated once per salt) does statically.
     ``tests/test_skew.py`` executes THIS entry with byte thresholds
     scaled to the test corpus (plus ``forceOptimizeSkewedJoin`` — the
     downstream aggregation otherwise makes AQE decline the split to
@@ -7152,83 +6938,6 @@ def _kmv_pair_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 6: priority sampling (Duffield-Lund-Thorup)
-# ---------------------------------------------------------------------------
-
-_PRIO_N = 200
-
-
-def _priority_sample_oracle_sql() -> str:
-    n = _PRIO_N
-    space = 1 << 40
-    td = _pca_trunc_div_sql
-    return f"""
-WITH t AS (SELECT doc_id, source, len({_TOKS}) AS w FROM documents),
-p AS (SELECT doc_id, source, w,
-             {dd.md5_long_sql('CAST(doc_id AS VARCHAR)')} % {space} + 1 AS u
-      FROM t WHERE w > 0),
-q AS (SELECT doc_id, source, w, {td(f'w * {space}', 'u')} AS q FROM p),
-r AS (SELECT doc_id, source, w, q,
-             row_number() OVER (ORDER BY q DESC, doc_id) AS rk FROM q),
-tau AS (SELECT coalesce(max(CASE WHEN rk = {n + 1} THEN q END),
-                        CAST(0 AS BIGINT)) AS tau FROM r),
-s AS (SELECT source, w FROM r WHERE rk <= {n}),
-est AS (SELECT source, count(*) AS n_sampled,
-               CAST(sum(greatest(w, tau)) AS BIGINT) AS est_total_tokens
-        FROM s CROSS JOIN tau GROUP BY source),
-ex AS (SELECT source, CAST(sum(w) AS BIGINT) AS exact_total_tokens
-       FROM t GROUP BY source)
-SELECT ex.source AS source,
-       CAST(coalesce(n_sampled, 0) AS BIGINT) AS n_sampled,
-       coalesce(est_total_tokens, 0) AS est_total_tokens,
-       exact_total_tokens
-FROM ex LEFT JOIN est ON ex.source = est.source
-"""
-
-
-@register("priority_sample_tokens", _priority_sample_oracle_sql())
-def priority_sample_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Priority sampling (Duffield, Lund & Thorup, JACM 2007) of
-    documents weighted by token count — the one-pass weighted sample
-    with UNBIASED subset-sum estimation that a 100 TB pipeline uses to
-    answer per-stratum budget questions ("how many training tokens does
-    each source contribute?") from a fixed-size sample: each doc's
-    priority is w * 2^40 / u for a deterministic md5-derived u, the top
-    n = 200 priorities are the sample, the (n+1)-th is the threshold
-    tau, and the Horvitz-Thompson weight of a sampled doc is
-    greatest(w, tau) — per-source sums of that quantity estimate the
-    true per-source token totals (reported side-by-side with the exact
-    totals, so the estimator's realized error is visible).  When the
-    population is <= n, tau = 0 and the estimate is EXACT — pinned in
-    pytest at sf0.001.
-
-    Scale: selection is a global top-(n+1) — TakeOrderedAndProject
-    (per-partition top-k, driver merge of n+1-row heaps), never a
-    global sort or window over the corpus; only the n+1 survivors meet
-    a window.  Deterministic hash-derived priorities make the sample
-    identical across runs, partitionings, and engines — the oracle
-    replays membership exactly."""
-    docs = _docs(spark, sf_dir)
-    t = docs.select("doc_id", "source",
-                    F.size(dd.tokens("text")).cast("bigint").alias("w"))
-    samp, tau_df = smp.priority_sample(t, "w", _PRIO_N, "doc_id")
-    est = (samp.crossJoin(F.broadcast(tau_df))
-           .groupBy("source")
-           .agg(F.count(F.lit(1)).alias("n_sampled"),
-                F.sum(F.greatest(F.col("w"), F.col("__tau")))
-                .cast("bigint").alias("est_total_tokens")))
-    ex = t.groupBy("source").agg(F.sum("w").cast("bigint")
-                                 .alias("exact_total_tokens"))
-    zero = F.lit(0).cast("bigint")
-    return (ex.join(est, "source", "left")
-            .select("source",
-                    F.coalesce(F.col("n_sampled"), zero).alias("n_sampled"),
-                    F.coalesce(F.col("est_total_tokens"), zero)
-                    .alias("est_total_tokens"),
-                    "exact_total_tokens"))
-
-
-# ---------------------------------------------------------------------------
 # Round 6: ABTT embedding post-processing (all-but-the-top)
 # ---------------------------------------------------------------------------
 
@@ -7941,100 +7650,6 @@ def vocab_drift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 6: interval-overlap join (session concurrency)
-# ---------------------------------------------------------------------------
-
-_SESS_CTES = """
-flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
-                   - CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT)
-                   > 1800 OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-),
-sess0 AS (
-  SELECT user_id,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec
-  FROM flagged
-),
-sess AS (
-  SELECT user_id, sid, min(sec) AS s_start, max(sec) AS s_end
-  FROM sess0 GROUP BY user_id, sid
-)"""
-
-_SESS_OVERLAP_ORACLE = f"""
-WITH {_SESS_CTES}
-SELECT a.user_id AS u_lo, b.user_id AS u_hi,
-       CAST(count(*) AS BIGINT) AS n_overlaps,
-       CAST(sum(least(a.s_end, b.s_end) - greatest(a.s_start, b.s_start))
-            AS BIGINT) AS overlap_s
-FROM sess a JOIN sess b
-  ON a.user_id < b.user_id AND a.s_start <= b.s_end AND b.s_start <= a.s_end
-GROUP BY u_lo, u_hi
-ORDER BY overlap_s DESC, n_overlaps DESC, u_lo, u_hi
-LIMIT 20
-"""
-
-
-def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based (30 min) sessions as closed [s_start, s_end] epoch-second
-    intervals — the shared input of the interval-overlap tier.  A lag +
-    running-sum sessionization; the groupBy key
-    (user_id, sid) is a superset of the window's partition key, so
-    Catalyst satisfies it with the SAME hash distribution — one
-    shuffle for sessionize + interval build."""
-    e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("sec").over(w)
-    new_s = F.when(prev.isNull() | ((F.col("sec") - prev) > 1800), 1) \
-        .otherwise(0)
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (e.select("user_id", "ts", "event_id", "sec",
-                     new_s.alias("new_s"))
-            .select("user_id",
-                    F.sum("new_s").over(wsum).cast("bigint").alias("sid"),
-                    "sec")
-            .groupBy("user_id", "sid")
-            .agg(F.min("sec").alias("s_start"), F.max("sec").alias("s_end")))
-
-
-@register("session_overlap_topk", _SESS_OVERLAP_ORACLE)
-def session_overlap_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concurrent-session analysis: for every pair of users whose
-    sessions overlap in time, the number of overlapping session pairs
-    and the total overlapped seconds — top 20 pairs.  The interval x
-    interval OVERLAP join is the relation Spark has no native operator
-    for (as-of and range joins cover point-vs-interval only); the
-    oracle states it as the declarative inequality join DuckDB's
-    IEJoin executes directly.
-
-    Scale: `jn.interval_overlap_join` buckets time into 600 s cells
-    (~ the mean session length, so per-interval fan-out ~1), equi-joins
-    on the cell — co-temporal candidates only, never all-pairs — and
-    dedups pair multiplicity with the first-shared-bucket rule instead
-    of a distinct, so the pair relation shuffles ONCE into the final
-    aggregation.  Worst-case per-bucket cost is concurrency^2: at
-    higher density shrink the width (more, smaller cells) — the knob
-    trades fan-out rows for candidate precision, exactly like the
-    range join's granularity."""
-    s = _sessions(spark, sf_dir)
-    pairs = jn.interval_overlap_join(s, s, "s_start", "s_end", width=600)
-    return (pairs.where(F.col("user_id") < F.col("r_user_id"))
-            .groupBy(F.col("user_id").alias("u_lo"),
-                     F.col("r_user_id").alias("u_hi"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlaps"),
-                 F.sum(F.least("s_end", F.col("r_s_end"))
-                       - F.greatest("s_start", F.col("r_s_start")))
-                 .cast("bigint").alias("overlap_s"))
-            .orderBy(F.desc("overlap_s"), F.desc("n_overlaps"),
-                     "u_lo", "u_hi")
-            .limit(20))
-
-
-# ---------------------------------------------------------------------------
 # Round 6: Misra-Gries exact heavy hitters
 # ---------------------------------------------------------------------------
 
@@ -8564,97 +8179,11 @@ def tokenizer_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Curation tail: near-dup-aware split, retrieval quality evaluation,
-# perplexity-bucket curation.  Each is pinned against its DuckDB oracle
-# at sf0.01 with the oracle checker's hash protocol
+# Curation tail: retrieval quality evaluation, perplexity-bucket
+# curation.  Each is pinned against its DuckDB oracle at sf0.01
+# with the oracle checker's hash protocol
 # (tests/test_pipeline_r10b.py).
 # ---------------------------------------------------------------------------
-
-
-def _leakage_safe_split_oracle_sql() -> str:
-    grp_bucket = "(" + dd.md5_long_sql("CAST(grp AS VARCHAR)") \
-        + f" % {smp.SPLIT_MOD})"
-    return f"""
-{_minhash_candidates_cte()},
-strong AS (
-  SELECT id_a, id_b FROM cand
-  WHERE len(list_filter(range(1, {dd.MINHASH_NUM + 1}),
-                        i -> sig_a[i] = sig_b[i]))::DOUBLE / {dd.MINHASH_NUM} >= 0.5
-),
-bidir AS (SELECT id_a AS u, id_b AS v FROM strong
-          UNION SELECT id_b, id_a FROM strong),
-nodes AS (SELECT DISTINCT u AS node FROM bidir),
-reach AS (
-  WITH RECURSIVE r(src, dst) AS (
-    SELECT u, v FROM bidir
-    UNION
-    SELECT r.src, b.v FROM r JOIN bidir b ON r.dst = b.u
-  ) SELECT * FROM r
-),
-comp AS (
-  SELECT n.node AS doc_id,
-         least(n.node, min(coalesce(r.dst, n.node))) AS component
-  FROM nodes n LEFT JOIN reach r ON r.src = n.node
-  GROUP BY n.node
-),
-d AS (
-  SELECT documents.doc_id, n_chars,
-         coalesce(comp.component, documents.doc_id) AS grp
-  FROM documents LEFT JOIN comp ON documents.doc_id = comp.doc_id
-),
-s AS (
-  SELECT doc_id, n_chars, grp,
-         CASE WHEN {grp_bucket} < 100 THEN 'test' ELSE 'train' END AS side,
-         CASE WHEN {_BUCKET} < 100 THEN 'test' ELSE 'train' END AS side_naive
-  FROM d
-)
-SELECT side, count(*) AS n_docs,
-       CAST(count(DISTINCT grp) AS BIGINT) AS n_groups,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum(CASE WHEN side != side_naive THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_moved
-FROM s GROUP BY side
-"""
-
-
-@register("leakage_safe_split", _leakage_safe_split_oracle_sql())
-def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAR-DUP-AWARE train/test split — the decontamination story told
-    end-to-end: a plain per-document hash split lets two near-duplicate
-    documents land on opposite sides (the test set then contains
-    near-copies of training documents — benchmark leakage, Lee et al.
-    2022 §6).  Here the split key is the near-dup GROUP: connected
-    components over strong MinHash candidates (the ``dedup_clusters``
-    machinery), singleton docs keying on their own id, so every member
-    of a near-dup cluster lands on the SAME side by construction.
-    Report per side: docs, distinct groups, chars, and ``n_moved`` —
-    docs whose group-aware side differs from their naive per-doc side,
-    i.e. the leakage the group key actually prevented.
-
-    Scale: the CC label relation is bounded by CLUSTERED docs (a small
-    fraction of the corpus); the split itself is a map-side hash of the
-    group key — no extra shuffle beyond the CC rounds the dedup family
-    already pays, and the final report is one partial agg.  Oracle:
-    recursive-CTE transitive closure + the identical md5 bucket."""
-    _, cand = _minhash_shared(spark, sf_dir)
-    strong = cand.where(dd.estimated_jaccard_count("n_agree") >= 0.5) \
-                 .select("id_a", "id_b")
-    cc = connected_components(strong, track=_track_ckpt)
-    docs = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    d = (docs.join(cc, docs.doc_id == cc.node, "left")
-         .select("doc_id", "n_chars",
-                 F.coalesce("component", "doc_id").alias("grp")))
-    side = lambda key: F.when(smp.hash_bucket(key) < 100,
-                              F.lit("test")).otherwise(F.lit("train"))
-    s = d.select("n_chars", "grp",
-                 side(F.col("grp")).alias("side"),
-                 side(F.col("doc_id")).alias("side_naive"))
-    return (s.groupBy("side")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.countDistinct("grp").cast("bigint").alias("n_groups"),
-                 F.sum("n_chars").cast("bigint").alias("total_chars"),
-                 F.sum((F.col("side") != F.col("side_naive")).cast("int"))
-                 .cast("bigint").alias("n_moved")))
 
 
 def _ann_eval_oracle_sql() -> str:
@@ -8942,71 +8471,6 @@ def lm_bucket_screen_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max("score_micro").cast("bigint").alias("max_score_micro")))
 
 
-#: per-tertile keep rates (per-mille): head (most fluent) kept whole,
-#: middle halved, tail decimated — the CCNet "keep head, downsample
-#: tail" sampling plan as deterministic hash gates
-_MIX_RATES = {1: 100, 2: 500, 3: 1000}
-
-
-@register("bucket_temperature_mix", f"""
-WITH {_lm_thresholds_oracle_ctes()},
-db AS (SELECT doc_id, n_bigrams, score_micro,
-              CASE WHEN score_micro >= cut3_micro THEN 3
-                   WHEN score_micro >= cut2_micro THEN 2 ELSE 1 END AS bucket
-       FROM d CROSS JOIN cuts),
-k AS (SELECT bucket, n_bigrams,
-             CASE WHEN ({dd.md5_long_sql("CAST(doc_id AS VARCHAR)")}
-                        % {smp.SPLIT_MOD})
-                  < (CASE bucket WHEN 1 THEN {_MIX_RATES[1]}
-                                 WHEN 2 THEN {_MIX_RATES[2]}
-                                 ELSE {_MIX_RATES[3]} END)
-                  THEN 1 ELSE 0 END AS kept
-      FROM db)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_total,
-       CAST(sum(kept) AS BIGINT) AS n_kept,
-       CAST(sum(n_bigrams) AS BIGINT) AS tokens_total,
-       CAST(sum(CASE WHEN kept = 1 THEN n_bigrams ELSE 0 END) AS BIGINT)
-         AS tokens_kept,
-       CAST((sum(kept) * 1000000) // count(*) AS BIGINT) AS kept_micro
-FROM k GROUP BY bucket
-""")
-def bucket_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEMPERATURE-MIX SAMPLING PLAN over the perplexity tertiles —
-    the curation step CCNet runs after bucketing: keep the head
-    (bucket 3, most fluent) whole, halve the middle, decimate the tail
-    (``_MIX_RATES``: 1000/500/100 per-mille), with membership decided by the
-    catalog's deterministic md5 split hash so the sample is identical
-    on every run, partitioning, and engine.  Reports per bucket the
-    planned-vs-achieved mix: doc and token (bigram-mass) totals, kept
-    counts, and the achieved keep rate in micro-units.
-
-    Scale: per-doc scores come from the persisted model (one broadcast
-    join over the bigram stream); tertile assignment is a literal CASE
-    against the persisted cuts; the keep gate is a map-side hash — the
-    whole plan adds ZERO shuffles beyond the per-doc partial agg the
-    scoring already pays."""
-    tpath = _fit_lm_thresholds_persisted(spark, sf_dir, overwrite=False)
-    cuts = spark.read.parquet(tpath).collect()[0]  # 1-row artifact
-    d = _lm_doc_scores_served(spark, sf_dir)
-    bucket = (F.when(F.col("score_micro") >= int(cuts["cut3_micro"]), 3)
-              .when(F.col("score_micro") >= int(cuts["cut2_micro"]), 2)
-              .otherwise(1)).cast("int")
-    rate = (F.when(F.col("bucket") == 1, _MIX_RATES[1])
-            .when(F.col("bucket") == 2, _MIX_RATES[2])
-            .otherwise(_MIX_RATES[3]))
-    k = (d.select(bucket.alias("bucket"), "n_bigrams", "doc_id")
-         .withColumn("kept", (smp.hash_bucket("doc_id") < rate)
-                     .cast("int")))
-    return (k.groupBy("bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_total"),
-                 F.sum("kept").cast("bigint").alias("n_kept"),
-                 F.sum("n_bigrams").cast("bigint").alias("tokens_total"),
-                 F.sum(F.col("kept") * F.col("n_bigrams")).cast("bigint")
-                 .alias("tokens_kept"),
-                 _idiv(F.sum("kept") * 1_000_000, F.count(F.lit(1)))
-                 .alias("kept_micro")))
-
-
 def _ivf_assign_oracle_ctes(pred: str = "TRUE") -> str:
     """CTE chain ending in ``asg(cand_id, cent_id)`` — the learned-
     centroid assignment replay (cosine argmax, ties to the lowest
@@ -9178,275 +8642,6 @@ def ivf_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.min("cand_id").cast("bigint").alias("min_vec_id"),
                  F.max("cand_id").cast("bigint").alias("max_vec_id"),
                  F.sum("cand_id").cast("bigint").alias("sum_vec_id")))
-
-
-def _capstone_sql() -> str:
-    """One CTE chain replaying the whole curation pipeline: classifier
-    gate -> perplexity filter -> exact dedup -> containment screen ->
-    leakage-safe split -> sequence packing.  CTE names are prefixed
-    (q/l/c/p) because the component oracles' chains each define ``d``/
-    ``hashed``/``cand`` locally."""
-    norm = dd.NORMALIZE_SQL.format(expr="text")
-    bucket_grp = ("(" + dd.md5_long_sql("CAST(grp AS VARCHAR)")
-                  + f" % {smp.SPLIT_MOD})")
-    shard = "(" + dd.md5_long_sql("CAST(sided.doc_id AS VARCHAR)") + " % 8)"
-    s3_hashed = ("SELECT DISTINCT doc_id, {mdl} % 4294967296 AS h FROM "
-                 "(SELECT doc_id, unnest({shg}) AS s FROM s3)").format(
-        mdl=dd.md5_long_sql("s"), shg=dd.shingles_sql("text"))
-    minhash = (_minhash_candidates_cte()
-               .replace("WITH msh AS", "msh AS", 1)
-               .replace("cand AS (", "cand AS MATERIALIZED (", 1))
-    agree = (f"len(list_filter(range(1, {dd.MINHASH_NUM + 1}), "
-             f"i -> sig_a[i] = sig_b[i]))::DOUBLE / {dd.MINHASH_NUM}")
-    inter = "len(list_intersect(a.shg, b.shg))"
-    return f"""
-WITH {_qc_model_cte()},
-qmodel AS (SELECT token,
-                  ((c_pos + 1) * 1000000) // (c_neg + 1) AS w_micro
-           FROM m),
-qstats AS (SELECT ((sum(c_pos) + count(*)) * 1000000)
-                  // (sum(c_neg) + count(*)) AS k_micro FROM m),
-qtok2 AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
-qd AS MATERIALIZED (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-              CAST(sum(coalesce(w_micro, 1000000)) // count(*) AS BIGINT)
-                AS qscore
-       FROM qtok2 LEFT JOIN qmodel USING (token) GROUP BY doc_id),
-qpass AS MATERIALIZED (SELECT qd.doc_id FROM qd CROSS JOIN qstats
-          WHERE qscore >= k_micro),
-lmd AS MATERIALIZED ({_lm_doc_oracle_sql()}),
-lhist AS (SELECT score_micro, CAST(count(*) AS BIGINT) AS cnt
-          FROM lmd GROUP BY score_micro),
-ltot AS (SELECT CAST(sum(cnt) AS BIGINT) AS w FROM lhist),
-lbk AS (SELECT score_micro, w,
-               1 + (3 * coalesce(sum(cnt) OVER (ORDER BY score_micro
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0)) // w AS bucket
-        FROM lhist CROSS JOIN ltot),
-lcuts AS MATERIALIZED (SELECT CAST(coalesce(min(CASE WHEN bucket >= 2
-                                        THEN score_micro END),
-                               {_LM_CUT_SENTINEL}) AS BIGINT)
-                   AS cut2_micro FROM lbk),
-ppass AS MATERIALIZED (SELECT lmd.doc_id FROM lmd CROSS JOIN lcuts
-          WHERE lmd.score_micro >= cut2_micro),
-s2 AS MATERIALIZED (SELECT d.doc_id, d.text FROM documents d
-       JOIN qpass USING (doc_id) JOIN ppass USING (doc_id)),
-reps AS MATERIALIZED (SELECT min(doc_id) AS doc_id FROM s2 GROUP BY md5({norm})),
-s3 AS MATERIALIZED (SELECT s2.doc_id, s2.text FROM s2 JOIN reps USING (doc_id)),
-chashed AS MATERIALIZED ({s3_hashed}),
-ccand AS MATERIALIZED (SELECT id_a, id_b FROM (
-            SELECT least(q.doc_id, t.doc_id) AS id_a,
-                   greatest(q.doc_id, t.doc_id) AS id_b
-            FROM {_cidx_probes_sql('chashed')} q JOIN chashed t USING (h)
-            WHERE q.doc_id != t.doc_id)
-          GROUP BY id_a, id_b
-          HAVING count(*) >= {dd.CONTAIN_MIN_HITS}),
-csh AS MATERIALIZED (SELECT doc_id, list_distinct({dd.shingles_sql('text')}) AS shg
-        FROM s3),
-cver AS MATERIALIZED (SELECT c.id_a, c.id_b FROM ccand c
-         JOIN csh a ON c.id_a = a.doc_id JOIN csh b ON c.id_b = b.doc_id
-         WHERE len(a.shg) > 0 AND len(b.shg) > 0
-           AND greatest(({inter} * 1000000) // len(a.shg),
-                        ({inter} * 1000000) // len(b.shg)) >= 600000),
-cdrop AS MATERIALIZED (SELECT DISTINCT id_b AS doc_id FROM cver),
-s4 AS MATERIALIZED (SELECT s3.doc_id FROM s3
-       WHERE s3.doc_id NOT IN (SELECT doc_id FROM cdrop)),
-{minhash},
-strong AS MATERIALIZED (SELECT id_a, id_b FROM cand
-           WHERE {agree} >= 0.5
-             AND id_a IN (SELECT doc_id FROM s4)
-             AND id_b IN (SELECT doc_id FROM s4)),
-bidir AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM strong
-          UNION SELECT id_b, id_a FROM strong),
-nodes AS (SELECT DISTINCT u AS node FROM bidir),
-reach AS (
-  WITH RECURSIVE r(src, dst) AS (
-    SELECT u, v FROM bidir
-    UNION
-    SELECT r.src, b.v FROM r JOIN bidir b ON r.dst = b.u
-  ) SELECT * FROM r
-),
-comp AS MATERIALIZED (SELECT n.node AS doc_id,
-                least(n.node, min(coalesce(r.dst, n.node))) AS component
-         FROM nodes n LEFT JOIN reach r ON r.src = n.node
-         GROUP BY n.node),
-grps AS MATERIALIZED (SELECT s4.doc_id, coalesce(comp.component, s4.doc_id) AS grp
-         FROM s4 LEFT JOIN comp USING (doc_id)),
-sided AS MATERIALIZED (SELECT doc_id, CASE WHEN {bucket_grp} < 100
-                              THEN 'test' ELSE 'train' END AS side
-          FROM grps),
-psized AS MATERIALIZED (SELECT sided.doc_id, side, qd.n_toks, {shard} AS shard
-           FROM sided JOIN qd ON sided.doc_id = qd.doc_id),
-ppacked AS MATERIALIZED (SELECT side, shard, n_toks,
-                   CAST(floor((sum(n_toks) OVER (
-                          PARTITION BY side, shard ORDER BY doc_id
-                          ROWS UNBOUNDED PRECEDING) - n_toks)
-                        / 512) AS BIGINT) AS bin_id
-            FROM psized),
-pstats AS MATERIALIZED (SELECT side,
-                  CAST(count(DISTINCT (shard, bin_id)) AS BIGINT) AS n_seqs,
-                  CAST(sum(n_toks) AS BIGINT) AS toks
-           FROM ppacked GROUP BY side)
-SELECT
-  CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_corpus,
-  CAST((SELECT count(*) FROM qpass) AS BIGINT) AS n_quality,
-  CAST((SELECT count(*) FROM s2) AS BIGINT) AS n_fluent,
-  CAST((SELECT count(*) FROM s3) AS BIGINT) AS n_exact_unique,
-  CAST((SELECT count(*) FROM s4) AS BIGINT) AS n_screened,
-  CAST((SELECT count(*) FROM sided WHERE side = 'train') AS BIGINT)
-    AS n_train,
-  CAST((SELECT count(*) FROM sided WHERE side = 'test') AS BIGINT)
-    AS n_test,
-  CAST(coalesce((SELECT n_seqs FROM pstats WHERE side = 'train'), 0)
-       AS BIGINT) AS train_seqs,
-  CAST(coalesce((SELECT n_seqs FROM pstats WHERE side = 'test'), 0)
-       AS BIGINT) AS test_seqs,
-  CAST(coalesce((SELECT (toks * 1000000) // (n_seqs * 512)
-                 FROM pstats WHERE side = 'train'), 0) AS BIGINT)
-    AS train_fill_micro,
-  CAST(coalesce((SELECT (toks * 1000000) // (n_seqs * 512)
-                 FROM pstats WHERE side = 'test'), 0) AS BIGINT)
-    AS test_fill_micro
-"""
-
-
-@register("pipeline_curation_capstone", _capstone_sql())
-def pipeline_curation_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END CURATION CAPSTONE: the round's
-    operators composed in production order as ONE declarative pipeline
-    — quality-classifier gate (persisted NB model, keep curated-like)
-    -> perplexity-bucket filter (persisted LM + threshold cuts, drop
-    the tail tertile) -> exact dedup (min-id representative) ->
-    containment screen among survivors (probe index, drop the greater
-    id of every >= 0.6 pair) -> leakage-safe split (near-dup-group CC
-    key, clusters never straddle) -> sequence packing (512-token
-    shard-parallel bins per side).  Reports per-stage survivor counts
-    plus per-side packed-sequence counts and fill rates — the corpus
-    accounting a training run starts from.
-
-    Plan shape: the corpus tokenizes ONCE per representation (tokens
-    for the classifier gate + packing lengths, bigrams for the LM
-    score, shingle hashes for the screen — each stage reuses the
-    shared persisted artifacts and the session's shared LSH
-    candidates); the two gates are left-semi joins on doc_id, the
-    dedup representative is one content-hash partial agg, the screen
-    touches candidates only, the CC label relation is bounded by
-    CLUSTERED survivors, and packing is a shard-partitioned window —
-    no stage re-shuffles another's output, and each stage's input is
-    the previous stage's (checkpointed) survivor relation, never a
-    corpus copy.
-
-    Scale: every stage is the catalog's own scale-proven shape; the
-    composition adds only the semi-joins between them.  At 100 TB the
-    fits stay one-time artifacts, the gates are map-only broadcasts,
-    and the only corpus-sized shuffles are the dedup hash and the
-    per-doc score partial aggs the component entries already pay."""
-    docs = _docs(spark, sf_dir)
-    # stage 1+2 artifacts: the QC model and the LM threshold chain are
-    # independent — build them as two concurrent driver threads
-    # (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_qc = pool.submit(_fit_qc_persisted, spark, sf_dir,
-                           overwrite=False)
-        f_t = pool.submit(_fit_lm_thresholds_persisted, spark, sf_dir,
-                          overwrite=False)
-        qc_path, tpath = f_qc.result(), f_t.result()
-    model = spark.read.parquet(qc_path)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_k = pool.submit(lambda: int(model.agg(
-            _idiv((F.sum("c_pos") + F.count(F.lit(1))) * 1_000_000,
-                  F.sum("c_neg") + F.count(F.lit(1))).alias("k"))
-            .collect()[0]["k"]))
-        f_cuts = pool.submit(
-            lambda: spark.read.parquet(tpath).collect()[0])
-        k_micro, cuts = f_k.result(), f_cuts.result()
-    qd = _track_ckpt(
-        _qc_score_docs(docs, model)
-        .select("doc_id", F.col("n_tokens").alias("n_toks"),
-                "score_micro")
-        .localCheckpoint(eager=True))  # reused by the packing stage
-    qpass = qd.where(F.col("score_micro") >= k_micro).select("doc_id")
-    ppass = (_lm_doc_scores_served(spark, sf_dir)
-             .where(F.col("score_micro") >= int(cuts["cut2_micro"]))
-             .select("doc_id"))
-    s2 = _track_ckpt(
-        docs.select("doc_id", "text")
-        .join(qpass, "doc_id", "left_semi")
-        .join(ppass, "doc_id", "left_semi")
-        .localCheckpoint(eager=True))
-    # stage 3: exact dedup
-    reps = (dd.exact_dedup_keys(s2, "text")
-            .groupBy("dup_key").agg(F.min("doc_id").alias("doc_id")))
-    s3 = _track_ckpt(
-        s2.join(reps.select("doc_id"), "doc_id", "left_semi")
-        .localCheckpoint(eager=True))
-    # stage 4: containment screen among survivors, keep-min policy.
-    # The survivor shingle-hash relation is the session-shared corpus
-    # index semi-joined to survivors — the corpus tokenizes into
-    # shingles ONCE per session, not once per consumer (word_shingles
-    # is per-doc distinct, so the slice equals a fresh build)
-    hashed = (_probe_hashes_shared(spark, sf_dir)
-              .join(s3.select("doc_id"), "doc_id", "left_semi"))
-    flagged = _containment_exact_verify(
-        s3, dd.containment_probe_candidates(hashed, "doc_id"))
-    drop = flagged.select(F.col("id_b").alias("doc_id")).distinct()
-    s4 = _track_ckpt(
-        s3.select("doc_id").join(drop, "doc_id", "left_anti")
-        .localCheckpoint(eager=True))
-    # stage 5: leakage-safe split by near-dup group
-    _, cand = _minhash_shared(spark, sf_dir)
-    strong = (cand.where(dd.estimated_jaccard_count("n_agree") >= 0.5)
-              .select("id_a", "id_b")
-              .join(s4.withColumnRenamed("doc_id", "id_a"), "id_a",
-                    "left_semi")
-              .join(s4.withColumnRenamed("doc_id", "id_b"), "id_b",
-                    "left_semi"))
-    cc = connected_components(strong, track=_track_ckpt)
-    sided = _track_ckpt(
-        s4.join(cc, s4.doc_id == cc.node, "left")
-        .select("doc_id", F.coalesce("component", "doc_id").alias("grp"))
-        .select("doc_id",
-                F.when(smp.hash_bucket("grp") < 100, F.lit("test"))
-                .otherwise(F.lit("train")).alias("side"))
-        .localCheckpoint(eager=True))
-    # stage 6: pack sequences per side
-    sized = sided.join(qd.select("doc_id", "n_toks"), "doc_id")
-
-    def pack_stats(s: str) -> DataFrame:
-        p = smp.pack_sequences(sized.where(F.col("side") == s),
-                               "doc_id", "n_toks",
-                               max_tokens=512, n_shards=8)
-        return (p.agg(F.countDistinct("shard", "bin_id").cast("bigint")
-                      .alias("n_seqs"),
-                      F.coalesce(F.sum("n_toks"), F.lit(0)).cast("bigint")
-                      .alias("toks"))
-                .select("n_seqs",
-                        F.when(F.col("n_seqs") > 0,
-                               _idiv(F.col("toks") * 1_000_000,
-                                     F.col("n_seqs") * 512))
-                        .otherwise(F.lit(0)).cast("bigint").alias("fill")))
-
-    tr, te = pack_stats("train"), pack_stats("test")
-    cnt = lambda df, name: df.agg(
-        F.count(F.lit(1)).cast("bigint").alias(name))
-    # 1-row aggregates compose broadcast (the cascade-entry shape)
-    return (cnt(docs, "n_corpus")
-            .crossJoin(cnt(qpass, "n_quality"))
-            .crossJoin(cnt(s2, "n_fluent"))
-            .crossJoin(cnt(s3, "n_exact_unique"))
-            .crossJoin(cnt(s4, "n_screened"))
-            .crossJoin(sided.agg(
-                F.coalesce(F.sum((F.col("side") == "train").cast("int")),
-                           F.lit(0)).cast("bigint").alias("n_train"),
-                F.coalesce(F.sum((F.col("side") == "test").cast("int")),
-                           F.lit(0)).cast("bigint").alias("n_test")))
-            .crossJoin(tr.select(F.col("n_seqs").alias("train_seqs"),
-                                 F.col("fill").alias("train_fill_micro")))
-            .crossJoin(te.select(F.col("n_seqs").alias("test_seqs"),
-                                 F.col("fill").alias("test_fill_micro")))
-            .select("n_corpus", "n_quality", "n_fluent", "n_exact_unique",
-                    "n_screened", "n_train", "n_test", "train_seqs",
-                    "test_seqs", "train_fill_micro", "test_fill_micro"))
 
 
 def catalog() -> dict[str, tuple[QueryFn, str | None]]:

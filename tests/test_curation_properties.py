@@ -1,4 +1,4 @@
-"""Randomized property tests for the curation/layout/linkage
+"""Randomized property tests for the curation and sketch
 primitives, in the repo's one-job style: generate hundreds of seeded
 random cases, run ONE Spark job, compare against a pure-Python spec."""
 
@@ -7,8 +7,6 @@ import random
 from pyspark.sql import functions as F
 
 from datafusion_monoid_spark.operators import curation as cu
-from datafusion_monoid_spark.operators import layout as ly
-from datafusion_monoid_spark.operators import linkage as lk
 from datafusion_monoid_spark.operators.sketch import hist_bin
 
 RNG = random.Random(0xC0FFEE)
@@ -24,27 +22,6 @@ def test_micro_ratio_equals_integer_spec(spark):
     assert got == [a * 1_000_000 // b for a, b in cases]
 
 
-def test_morton_spec_full_16bit_range(spark):
-    def spec(x, y):
-        out = 0
-        for bit in range(16):
-            out |= ((x >> bit) & 1) << (2 * bit)
-            out |= ((y >> bit) & 1) << (2 * bit + 1)
-        return out
-
-    pts = [(i, RNG.randint(0, 0xFFFF), RNG.randint(0, 0xFFFF))
-           for i in range(500)]
-    df = spark.createDataFrame(pts, "i long, x long, y long")
-    got = {r.i: r.m for r in
-           df.select("i", ly.morton_code(F.col("x"), F.col("y")).alias("m"))
-             .collect()}
-    for i, x, y in pts:
-        assert got[i] == spec(x, y)
-    # locality sanity: codes of (x,y) and (x+1,y) differ only in x-bits
-    assert all((spec(x, y) ^ spec((x + 1) & 0xFFFF, y)) & 0xAAAAAAAA == 0
-               for _, x, y in pts[:50])
-
-
 def test_hist_bin_clamp_spec(spark):
     lo, hi, bins = -50.0, 150.0, 32
     vals = [RNG.uniform(-200, 300) for _ in range(400)] + [lo, hi, -1e9, 1e9]
@@ -55,70 +32,3 @@ def test_hist_bin_clamp_spec(spark):
     want = [min(max(math.floor((v - lo) * bins / (hi - lo)), 0), bins - 1)
             for v in vals]
     assert got == want
-
-
-def _random_edit(s: str) -> str:
-    alphabet = "abcdef"
-    i = RNG.randrange(len(s) + 1)
-    op = RNG.choice(["sub", "ins", "del"] if s else ["ins"])
-    if op == "sub" and i < len(s):
-        return s[:i] + RNG.choice(alphabet) + s[i + 1:]
-    if op == "del" and i < len(s):
-        return s[:i] + s[i + 1:]
-    return s[:i] + RNG.choice(alphabet) + s[i:]
-
-
-def test_deletion_neighborhood_complete_for_random_k1_edits(spark):
-    """For 150 random (s, edit(s)) pairs the candidate generator must
-    recover every pair with true distance exactly 1 — pigeonhole
-    completeness, including collisions from a 6-letter alphabet."""
-    base = ["".join(RNG.choice("abcdef") for _ in range(RNG.randint(1, 12)))
-            for _ in range(150)]
-    rows = []
-    expect = set()
-    for j, s in enumerate(base):
-        t = _random_edit(s)
-        ia, ib = 2 * j, 2 * j + 1
-        rows += [(ia, s), (ib, t)]
-        if s != t:
-            expect.add((ia, ib))
-    df = spark.createDataFrame(rows, "id long, name string")
-    found = {(r.id_a, r.id_b): r.dist
-             for r in lk.fuzzy_pairs(df, "id", "name", 1).collect()}
-    for pair in expect:
-        assert pair in found and found[pair] == 1
-
-
-def test_deletion_neighborhood_complete_for_random_k2_edits(spark):
-    """Depth-2 neighborhoods must recover every pair within edit
-    distance 2 (SymSpell pigeonhole at k=2), verified over random
-    double edits; the exact-distance filter keeps dist in {1, 2}."""
-    base = ["".join(RNG.choice("abcde") for _ in range(RNG.randint(2, 10)))
-            for _ in range(80)]
-    rows, expect = [], {}
-    for j, s in enumerate(base):
-        t = _random_edit(_random_edit(s))
-        ia, ib = 2 * j, 2 * j + 1
-        rows += [(ia, s), (ib, t)]
-        expect[(ia, ib)] = (s, t)
-    df = spark.createDataFrame(rows, "id long, name string")
-    found = {(r.id_a, r.id_b): r.dist
-             for r in lk.fuzzy_pairs(df, "id", "name", 2).collect()}
-
-    def lev(a, b):
-        # tiny exact DP spec
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[-1] + 1,
-                               prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    for pair, (s, t) in expect.items():
-        d = lev(s, t)
-        if 1 <= d <= 2:
-            assert pair in found and found[pair] == d, (pair, s, t, d)
-    # nothing beyond the radius sneaks through
-    assert all(1 <= d <= 2 for d in found.values())

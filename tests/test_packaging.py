@@ -164,3 +164,37 @@ def test_streaming_package_is_the_monoid_stream():
         "datafusion_monoid_spark.streaming.monoid_stream"]
     assert sorted(m for m in loaded
                   if not os.path.exists(_module_source(m))) == []
+
+
+#: where the import walk starts: the package, the driver's catalog, the
+#: bench and the pipeline tier's catalog
+ENTRY_MODULES = (
+    "datafusion_monoid_spark",
+    "datafusion_monoid_spark.queries",
+    "datafusion_monoid_spark.bench",
+    "datafusion_monoid_spark.pipeline_queries",
+)
+
+
+def test_every_package_module_is_reached_from_the_package():
+    """Every ``.py`` under the package is imported, directly or through
+    other package modules (function-level imports included), from the
+    package, its catalogs or the bench: no module serves only tests."""
+    modules = set()
+    for dirpath, _, files in os.walk(os.path.join(ROOT,
+                                                  "datafusion_monoid_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                parts = os.path.relpath(os.path.join(dirpath, f[:-3]),
+                                        ROOT).split(os.sep)
+                modules.add(".".join(parts[:-1] if parts[-1] == "__init__"
+                                     else parts))
+    reached, todo = set(), list(ENTRY_MODULES)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            parts = name.split(".")
+            todo += [".".join(parts[:i]) for i in range(1, len(parts))]
+            todo += _package_imports(name)
+    assert sorted(modules - reached) == []

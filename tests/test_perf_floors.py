@@ -100,10 +100,6 @@ CEILINGS = {
     # the train entry
     "unigram_train_pieces": 8.0,
     "unigram_encode_stats": 4.0,
-    # byte-shingle MinHash over the media column: payload + signature
-    # relations checkpoint once — a blown ceiling means the LSH join's
-    # four signature references re-evaluate the 64-agg pass
-    "multimodal_neardup_lsh": 11.0,
     # 4+13-gram decontamination from one tokenize/scan
     "decontam_prod_13gram": 6.5,
 }
@@ -123,12 +119,6 @@ SF01_CEILINGS = {
     # encode — a blown ceiling means the in-plan Lloyd refit came back
     # (quiet 1.8 s warm-artifact)
     "pq_adc_topk": 7.0,
-    # near-dup-group split (r10): CC over the NARROW (id_a, id_b,
-    # n_agree) candidate relation — a blown ceiling means the
-    # signature arrays came back into the persisted pairs (the sf10
-    # heap-OOM shape) or the CC rounds stopped releasing checkpoints
-    # (cold-sweep 3.1 s, 0.17x its DuckDB oracle)
-    "leakage_safe_split": 9.0,
     # persisted-threshold fit (r10): score histogram + 1-row write
     # from the persisted model — a blown ceiling means the corpus
     # re-sorts instead of the histogram window, or the LM fit's
@@ -139,14 +129,12 @@ SF01_CEILINGS = {
     # in-suite ambient margin
     "lm_bucket_thresholds": 6.0,
     # round-11 entries (quiet local[8] sf0.1 best-of-2 in parens;
-    # ceilings ~2x with in-suite ambient margin).  A blown capstone
-    # ceiling means a stage re-shuffled another's output or a gate
-    # lost its broadcast; a blown capped-probe ceiling means the df
-    # relation stopped semi-joining (index exploded); a blown screen
-    # ceiling means the batch stopped exact-deduping before the probe
-    # join; export/compact ceilings mean the exchange+sort write grew
-    # a global sort or a second corpus scan
-    "pipeline_curation_capstone": 40.0,   # (22.0)
+    # ceilings ~2x with in-suite ambient margin).  A blown capped-probe
+    # ceiling means the df relation stopped semi-joining (index
+    # exploded); a blown screen ceiling means the batch stopped
+    # exact-deduping before the probe join; export/compact ceilings
+    # mean the exchange+sort write grew a global sort or a second
+    # corpus scan
     "dedup_containment_lsh_capped": 14.0,  # (7.5)
     "pipeline_containment_screen": 8.0,   # (3.8)
     "export_training_shards": 4.0,        # (1.3)

@@ -1,5 +1,5 @@
-"""Curation tail entries: leakage_safe_split, ann_eval_recall_mrr,
-lm_perplexity_buckets and the bucket/postings entries built on them.
+"""Curation tail entries: ann_eval_recall_mrr, lm_perplexity_buckets
+and the bucket/postings entries built on them.
 
 Each is pinned against its DuckDB oracle at sf0.01 with the oracle
 checker's protocol (row count + column names + sorted value hash), and
@@ -7,21 +7,19 @@ its semantics are checked on constructed corpora.
 """
 
 import hashlib
-from hashlib import md5
 
 import duckdb
 import pandas as pd
 import pytest
 
 from datafusion_monoid_spark import pipeline_queries as qcat
-from datafusion_monoid_spark.sources import TABLES
+from datafusion_monoid_spark.pipeline_queries import TABLES
 
-SF001 = "/root/testdata/sf0.001"
 SF = "/root/testdata/sf0.01"
 
-NEW_ENTRIES = ("leakage_safe_split", "ann_eval_recall_mrr",
+NEW_ENTRIES = ("ann_eval_recall_mrr",
                "lm_perplexity_buckets", "lm_bucket_thresholds",
-               "lm_bucket_screen_newbatch", "bucket_temperature_mix",
+               "lm_bucket_screen_newbatch",
                "ivf_postings_build", "ivf_postings_append")
 
 
@@ -52,50 +50,6 @@ def test_tail_entry_hash_matches_duckdb(spark, name):
     got = _canon(fn(spark, SF).toPandas())
     want = _canon(con.sql(oracle).df())
     assert got == want and got[0] > 0
-
-
-# ---------------------------------------------------------------------------
-# leakage_safe_split semantics on a constructed corpus
-# ---------------------------------------------------------------------------
-
-def _bucket(key: int) -> int:
-    """Python twin of dedup.md5_long % SPLIT_MOD (verified bit-identical
-    to both engines by the catalog's split entries)."""
-    return int(md5(str(key).encode()).hexdigest()[:15], 16) % 1000
-
-
-def test_leakage_split_keeps_neardups_together(spark, tmp_path):
-    # find a doc-id pair whose NAIVE sides differ (one <100 = test)
-    a = next(i for i in range(1000) if _bucket(i) < 100)
-    b = next(i for i in range(1000) if _bucket(i) >= 100)
-    shared = " ".join(f"tok{j} word{j} item{j}" for j in range(40))
-    rows = [(a, shared, "en", "srcA", len(shared)),
-            (b, shared + " tail", "en", "srcA", len(shared) + 5)]
-    # unrelated background docs, all on the naive-train side so the
-    # only possible mover is the constructed pair
-    bg = [i for i in range(1000, 3000) if _bucket(i) >= 100][:30]
-    for i in bg:
-        t = f"background {i} " + " ".join(f"u{i}x{j}" for j in range(25))
-        rows.append((i, t, "en", "srcB", len(t)))
-    df = spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string, "
-              "n_chars bigint")
-    df.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
-    # fresh corpus -> bypass the session-shared minhash cache
-    qcat._MINHASH_SHARED.pop((spark.sparkContext.applicationId,
-                              str(tmp_path)), None)
-
-    out = {r["side"]: r for r in _run(spark, "leakage_safe_split",
-                                      str(tmp_path)).collect()}
-    grp_side = "test" if _bucket(min(a, b)) < 100 else "train"
-    moved_side = grp_side  # the doc whose naive side differed moved INTO grp
-    assert out[moved_side]["n_moved"] == 1
-    other = "train" if moved_side == "test" else "test"
-    assert out.get(other) is None or out[other]["n_moved"] == 0
-    # group counting: the pair is ONE group on its (shared) side
-    n_docs_on_grp_side = out[grp_side]["n_docs"]
-    n_groups_on_grp_side = out[grp_side]["n_groups"]
-    assert n_docs_on_grp_side == n_groups_on_grp_side + 1  # pair shares one
 
 
 # ---------------------------------------------------------------------------
@@ -136,25 +90,6 @@ def test_lm_buckets_partition_and_order(spark):
     # no single bucket holds the whole corpus
     total = sum(r["n_docs"] for r in rows)
     assert all(r["n_docs"] < total for r in rows)
-
-
-# ---------------------------------------------------------------------------
-# threshold-artifact serve tier: CASE-against-cuts must replay the
-# batch cum-count-before bucketing exactly for seen scores
-# ---------------------------------------------------------------------------
-
-def test_serve_buckets_equal_batch_buckets(spark):
-    batch = {r["bucket"]: r for r in
-             _run(spark, "lm_perplexity_buckets", SF001).collect()}
-    mix = {r["bucket"]: r for r in
-           _run(spark, "bucket_temperature_mix", SF001).collect()}
-    assert set(batch) == set(mix)
-    for b in batch:
-        assert mix[b]["n_total"] == batch[b]["n_docs"]
-        assert mix[b]["tokens_total"] == batch[b]["n_bigrams"]
-        # every kept count is a true subset of its bucket
-        assert 0 <= mix[b]["n_kept"] <= mix[b]["n_total"]
-        assert 0 <= mix[b]["tokens_kept"] <= mix[b]["tokens_total"]
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Round-11 operators: the probe-index document-frequency cap, the
 exact-dedup-first containment screen composition, IVF postings
-compaction, and the end-to-end curation capstone.  Operator-level math
+compaction and the training-shard export.  Operator-level math
 on constructed inputs + equivalence pins vs exact recomputes (full value
 equality vs DuckDB is tools/check_oracles.py)."""
 
@@ -146,31 +146,6 @@ def test_pipeline_containment_screen_dedups_clone_batch(spark):
     direct = qcat._containment_screen_kernel(nb, oh, iprobes).collect()
     assert {(r["new_id"], r["old_id"]) for r in direct} == {
         (100, 1), (101, 1), (102, 1), (103, 1)}
-
-
-# ---------------------------------------------------------------------------
-# end-to-end curation capstone (pipeline_curation_capstone)
-# ---------------------------------------------------------------------------
-
-def test_curation_capstone_stage_accounting(spark, cat):
-    """Stage survivor counts must be monotone non-increasing through
-    the funnel, the split must partition the screened survivors, and
-    the packed-sequence stats must be internally consistent with the
-    fill-rate definition.  The quality stage must agree exactly with
-    the standalone classifier entry's positive-class census."""
-    row = cat["pipeline_curation_capstone"][0](spark, SF).collect()[0]
-    assert (row["n_corpus"] >= row["n_quality"] >= row["n_fluent"]
-            >= row["n_exact_unique"] >= row["n_screened"] > 0)
-    assert row["n_train"] + row["n_test"] == row["n_screened"]
-    assert row["n_train"] > 0 and row["n_test"] > 0
-    assert row["train_seqs"] > 0 and row["test_seqs"] > 0
-    assert 0 < row["train_fill_micro"] and 0 < row["test_fill_micro"]
-    qrows = cat["quality_clf_score"][0](spark, SF).collect()
-    assert row["n_quality"] == sum(r["n_pos_class"] for r in qrows)
-    # the perplexity gate keeps buckets 2+3 of the standalone tertiles
-    brows = {r["bucket"]: r["n_docs"] for r in
-             cat["lm_perplexity_buckets"][0](spark, SF).collect()}
-    assert row["n_fluent"] <= brows.get(2, 0) + brows.get(3, 0)
 
 
 # ---------------------------------------------------------------------------

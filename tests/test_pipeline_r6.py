@@ -222,73 +222,6 @@ def test_vocab_drift_zero_for_identical_share(spark):
 
 
 # ---------------------------------------------------------------------------
-# interval-overlap join (fourth session)
-# ---------------------------------------------------------------------------
-
-def _overlap(spark, left, right, width=10):
-    from datafusion_monoid_spark.operators.joins import interval_overlap_join
-    l = spark.createDataFrame(left, "lid bigint, s_start bigint, s_end bigint")
-    r = spark.createDataFrame(right, "rid bigint, s_start bigint, s_end bigint")
-    return sorted((row["lid"], row["r_rid"])
-                  for row in interval_overlap_join(
-                      l, r, "s_start", "s_end", width).collect())
-
-
-def test_overlap_pair_unique_across_shared_buckets(spark):
-    """Two long intervals sharing MANY buckets must pair exactly once
-    (the first-shared-bucket rule replaces a distinct)."""
-    assert _overlap(spark, [(1, 0, 95)], [(2, 5, 90)], width=10) == [(1, 2)]
-
-
-def test_overlap_boundary_semantics(spark):
-    """Closed intervals: touching endpoints overlap; disjoint intervals
-    in the SAME bucket are bucket-collision false positives and must
-    be filtered; disjoint intervals in different buckets never meet."""
-    got = _overlap(spark,
-                   [(1, 0, 5), (2, 20, 25)],
-                   [(10, 5, 8),    # touches 1 at t=5
-                    (11, 7, 9),    # same bucket as 1, disjoint
-                    (12, 40, 50)], # different bucket
-                   width=10)
-    assert got == [(1, 10)]
-
-
-def test_overlap_matches_naive_cross(spark):
-    """Randomized check vs the O(n*m) definition."""
-    import random
-    rng = random.Random(6)
-    left = [(i, s, s + rng.randrange(0, 30))
-            for i, s in ((i, rng.randrange(0, 200)) for i in range(40))]
-    right = [(i, s, s + rng.randrange(0, 30))
-             for i, s in ((i, rng.randrange(0, 200)) for i in range(40))]
-    want = sorted((l[0], r[0]) for l in left for r in right
-                  if l[1] <= r[2] and r[1] <= l[2])
-    assert _overlap(spark, left, right, width=7) == want
-
-
-def test_session_overlap_topk_invariants(spark):
-    """Pairs are ordered user pairs with positive counts, overlap
-    seconds are non-negative (touching sessions score 0), ranking is
-    descending."""
-    rows = _run(spark, "session_overlap_topk").collect()
-    assert 0 < len(rows) <= 20
-    for r in rows:
-        assert r["u_lo"] < r["u_hi"]
-        assert r["n_overlaps"] >= 1 and r["overlap_s"] >= 0
-    key = [(r["overlap_s"], r["n_overlaps"]) for r in rows]
-    assert key == sorted(key, reverse=True)
-
-
-def test_session_overlap_plan_no_nested_loop(spark):
-    """The overlap join must be a bucketed equi-join — no cartesian or
-    broadcast nested loop in the physical plan."""
-    plan = _run(spark, "session_overlap_topk", sf=SF) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-# ---------------------------------------------------------------------------
 # Misra-Gries heavy hitters (fourth session)
 # ---------------------------------------------------------------------------
 
@@ -379,47 +312,6 @@ def test_pctl_extreme_quantiles(spark):
     vals = list(range(100))
     got = _pctl(spark, vals, qs=(1, 1000000))
     assert got[1] == 0.0 and got[1000000] == 99.0
-
-
-# ---------------------------------------------------------------------------
-# 2D skyline (fourth session)
-# ---------------------------------------------------------------------------
-
-def _sky(spark, pts, parts=4):
-    from datafusion_monoid_spark.operators.skyline import skyline_2d
-    df = spark.createDataFrame([(float(a), float(b)) for a, b in pts],
-                               "x double, y double").repartition(parts)
-    return sorted(map(tuple, skyline_2d(df, "x", "y").collect()))
-
-
-def _naive_sky(pts):
-    s = set(pts)
-    return sorted({a for a in s
-                   if not any(b[0] <= a[0] and b[1] <= a[1] and b != a
-                              for b in s)})
-
-
-def test_skyline_hand_case(spark):
-    """Staircase + interior points; duplicates collapse."""
-    pts = [(1, 9), (2, 7), (3, 8), (4, 4), (5, 5), (4, 4), (9, 1)]
-    assert _sky(spark, pts) == [(1.0, 9.0), (2.0, 7.0), (4.0, 4.0),
-                                (9.0, 1.0)]
-
-
-def test_skyline_matches_naive_randomized(spark):
-    import random
-    rng = random.Random(13)
-    pts = [(rng.randrange(0, 40), rng.randrange(0, 40))
-           for _ in range(300)]
-    want = [(float(a), float(b)) for a, b in _naive_sky(pts)]
-    assert _sky(spark, pts, parts=7) == want
-
-
-def test_skyline_equal_coordinate_ties(spark):
-    """Equal x keeps only min y; equal y keeps only min x; a single
-    point is its own frontier."""
-    assert _sky(spark, [(1, 5), (1, 3), (2, 3)]) == [(1.0, 3.0)]
-    assert _sky(spark, [(7, 7)]) == [(7.0, 7.0)]
 
 
 # ---------------------------------------------------------------------------

@@ -1,49 +1,11 @@
-"""Skew/layout helpers: salted agg correctness, bucketed exchange-free join."""
+"""Runtime skew handling: AQE splits a hot join partition, on a
+synthetic join and on the ``skew_aqe_join_deviation`` catalog entry."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_monoid_spark.operators import skew
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_salted_aggregate_matches_plain(spark):
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    plain = {r["l_returnflag"]: (round(r["s"], 2), r["c"]) for r in
-             li.groupBy("l_returnflag")
-             .agg(F.sum("l_quantity").alias("s"), F.count("l_quantity").alias("c"))
-             .collect()}
-    salted = {r["l_returnflag"]: (round(r["l_quantity_sum"], 2), r["l_quantity_count"]) for r in
-              skew.salted_aggregate(li, ["l_returnflag"],
-                                    {"l_quantity": "sum"}, n_salts=8)
-              .join(
-                  skew.salted_aggregate(li, ["l_returnflag"],
-                                        {"l_quantity": "count"}, n_salts=8),
-                  "l_returnflag")
-              .collect()}
-    assert salted == plain
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force the issue
-    try:
-        o = spark.read.parquet(f"{SF}/orders.parquet")
-        c = spark.read.parquet(f"{SF}/customer.parquet") \
-            .withColumnRenamed("c_custkey", "o_custkey")
-        skew.write_bucketed(o, "b_orders", "o_custkey", 4)
-        skew.write_bucketed(c, "b_customer", "o_custkey", 4)
-        j = skew.bucketed_join(spark, "b_orders", "b_customer", "o_custkey")
-        plan = j._sc._jvm.PythonSQLUtils.explainString(
-            j._jdf.queryExecution(), "simple")
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan      # co-located: no shuffle at all
-        # and it still returns the right rows
-        assert j.count() == o.join(c, "o_custkey").count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
 def test_aqe_splits_skewed_join_at_runtime(spark):
@@ -85,44 +47,6 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_salted_join_matches_plain_and_spreads_hot_keys(spark):
-    """salted_join == plain join row-for-row, AND the physical join keys
-    include the salt — so a key owning 97% of the fact spreads over
-    n_salts reducers instead of one (the no-single-partition-reducer
-    contract)."""
-    fact = spark.range(100_000).select(
-        F.when(F.col("id") < 97_000, F.lit(0)).otherwise(F.col("id") % 7)
-         .alias("k"),
-        F.col("id").alias("v"))
-    dim = spark.range(7).select(F.col("id").alias("k"),
-                                (F.col("id") * 10).alias("w"))
-
-    j = skew.salted_join(fact, dim, "k", n_salts=8, salt_src=F.col("v"))
-    plain = fact.join(dim, "k")
-    assert j.count() == plain.count() == 100_000
-    got = j.groupBy("k").agg(F.sum("w").alias("sw")).collect()
-    want = plain.groupBy("k").agg(F.sum("w").alias("sw")).collect()
-    assert {(r["k"], r["sw"]) for r in got} == \
-        {(r["k"], r["sw"]) for r in want}
-
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    # the join operates on (k, __salt): the salt must be a join key and
-    # the chosen strategy must not be broadcast (broadcast would erase
-    # the demo) — ShuffledHashJoin per the hint
-    assert "__salt" in plan
-    assert "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-
-
-def test_salted_join_catalog_plan(spark):
-    """The catalog entry's executed plan joins on (event_type, salt) via
-    ShuffledHashJoin — every hot event_type spreads over 16 reducers."""
-    from datafusion_monoid_spark import pipeline_queries as qcat
-    df = qcat.catalog()["skew_salted_join_deviation"][0](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan and "ShuffledHashJoin" in plan
 
 
 def test_aqe_skew_catalog_entry_splits_and_matches_salted(spark):

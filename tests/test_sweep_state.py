@@ -49,7 +49,6 @@ CHECKPOINT_HEAVY = [
     "pq_opq_ivfadc_pretrained",
     "unigram_train_pieces",
     "unigram_encode_stats",
-    "multimodal_neardup_lsh",  # payload + signature ckpts
 ]
 
 

@@ -133,7 +133,6 @@ def test_viterbi_matches_python_reference_on_real_vocab(spark):
     the pure-Python DP for EVERY token of the sf0.01 trained model —
     the same cross-impl discipline the oracle applies, but pinned at
     the operator level with full segmentations."""
-    from datafusion_monoid_spark.sources import TABLES  # noqa: F401
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     voc = ugm.token_vocab(docs).localCheckpoint(eager=True)
     table = ugm.train_literal(voc)

@@ -40,8 +40,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from datafusion_monoid_spark.pipeline_queries import catalog
-    from datafusion_monoid_spark.sources import TABLES
+    from datafusion_monoid_spark.pipeline_queries import TABLES, catalog
 
     spark = get_spark("check-oracles")
     con = duckdb.connect()
