@@ -222,6 +222,73 @@ def test_vocab_drift_zero_for_identical_share(spark):
 
 
 # ---------------------------------------------------------------------------
+# interval-overlap join (fourth session)
+# ---------------------------------------------------------------------------
+
+def _overlap(spark, left, right, width=10):
+    from datafusion_monoid_spark.operators.joins import interval_overlap_join
+    l = spark.createDataFrame(left, "lid bigint, s_start bigint, s_end bigint")
+    r = spark.createDataFrame(right, "rid bigint, s_start bigint, s_end bigint")
+    return sorted((row["lid"], row["r_rid"])
+                  for row in interval_overlap_join(
+                      l, r, "s_start", "s_end", width).collect())
+
+
+def test_overlap_pair_unique_across_shared_buckets(spark):
+    """Two long intervals sharing MANY buckets must pair exactly once
+    (the first-shared-bucket rule replaces a distinct)."""
+    assert _overlap(spark, [(1, 0, 95)], [(2, 5, 90)], width=10) == [(1, 2)]
+
+
+def test_overlap_boundary_semantics(spark):
+    """Closed intervals: touching endpoints overlap; disjoint intervals
+    in the SAME bucket are bucket-collision false positives and must
+    be filtered; disjoint intervals in different buckets never meet."""
+    got = _overlap(spark,
+                   [(1, 0, 5), (2, 20, 25)],
+                   [(10, 5, 8),    # touches 1 at t=5
+                    (11, 7, 9),    # same bucket as 1, disjoint
+                    (12, 40, 50)], # different bucket
+                   width=10)
+    assert got == [(1, 10)]
+
+
+def test_overlap_matches_naive_cross(spark):
+    """Randomized check vs the O(n*m) definition."""
+    import random
+    rng = random.Random(6)
+    left = [(i, s, s + rng.randrange(0, 30))
+            for i, s in ((i, rng.randrange(0, 200)) for i in range(40))]
+    right = [(i, s, s + rng.randrange(0, 30))
+             for i, s in ((i, rng.randrange(0, 200)) for i in range(40))]
+    want = sorted((l[0], r[0]) for l in left for r in right
+                  if l[1] <= r[2] and r[1] <= l[2])
+    assert _overlap(spark, left, right, width=7) == want
+
+
+def test_session_overlap_topk_invariants(spark):
+    """Pairs are ordered user pairs with positive counts, overlap
+    seconds are non-negative (touching sessions score 0), ranking is
+    descending."""
+    rows = _run(spark, "session_overlap_topk").collect()
+    assert 0 < len(rows) <= 20
+    for r in rows:
+        assert r["u_lo"] < r["u_hi"]
+        assert r["n_overlaps"] >= 1 and r["overlap_s"] >= 0
+    key = [(r["overlap_s"], r["n_overlaps"]) for r in rows]
+    assert key == sorted(key, reverse=True)
+
+
+def test_session_overlap_plan_no_nested_loop(spark):
+    """The overlap join must be a bucketed equi-join — no cartesian or
+    broadcast nested loop in the physical plan."""
+    plan = _run(spark, "session_overlap_topk", sf=SF) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+# ---------------------------------------------------------------------------
 # Misra-Gries heavy hitters (fourth session)
 # ---------------------------------------------------------------------------
 
