@@ -192,10 +192,10 @@ def sort_limit_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events table with a ``sec`` epoch-seconds column.
 
-    Some layouts store ``ts`` as TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; the streaming reader's probe then sets
-    ``nanosAsLong`` (and leaves the session alone otherwise), and the raw
-    int64 nanoseconds are normalized here to whole seconds — matching
+    Some layouts store ``ts`` as TIMESTAMP(NANOS), which Spark reads
+    only as LONG under ``nanosAsLong``; the streaming reader's probe
+    refuses such a layout unless the caller has set that conf, and the
+    raw int64 nanoseconds are normalized here to whole seconds — matching
     DuckDB's ``floor(epoch(ts))``.
     """
     ts = _ts_dtype(spark, f"{sf_dir}/events.parquet")

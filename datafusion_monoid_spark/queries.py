@@ -30,9 +30,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_monoid_spark.monoid import get_monoid
 from datafusion_monoid_spark.operators.array_reduce import (
     array_reduce_exploded,
-    register_all,
+    make_pandas_udaf,
 )
 from datafusion_monoid_spark.sql_route import route_monoid_sql
 from datafusion_monoid_spark.streaming.monoid_stream import (
@@ -260,8 +261,14 @@ def monoid_sql_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered names enforce a hard group-size guard (loud error, not
     an executor OOM) and ``sql_route.route_monoid_sql`` executes the
     SAME SQL text through the partial-agg form — exercised on an
-    unbounded group by the ``monoid_sql_routed_hugegroup`` entry below."""
-    register_all(spark)
+    unbounded group by the ``monoid_sql_routed_hugegroup`` entry below.
+
+    ``array_reduce_sum`` is registered (as ``register_all`` would) only
+    when the session has no function of that name; a caller's own
+    registration is used as it is."""
+    if not spark.catalog.functionExists("array_reduce_sum"):
+        spark.udf.register("array_reduce_sum",
+                           make_pandas_udaf(get_monoid("sum", "int")))
     _t(spark, sf_dir, "lineitem").createOrReplaceTempView("__li_udaf")
     try:
         df = spark.sql("""

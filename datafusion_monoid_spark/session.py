@@ -1,9 +1,9 @@
 """SparkSession factory tuned for this engine.
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: every CPU
-of the machine) with a driver heap of ``$SPARK_GRAFT_DRIVER_MEM``
-(default: half its physical memory); the other configs are what we would
-set on a real cluster:
+this process may run on, as ``nproc`` counts them) with a driver heap
+of ``$SPARK_GRAFT_DRIVER_MEM`` (default: half the machine's physical
+memory); the other configs are what we would set on a real cluster:
 
 * AQE on (runtime re-planning, skew-join handling, partition coalescing)
 * Arrow on (vectorized pandas-UDF exchange)
@@ -20,7 +20,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+def _usable_cpus() -> int:
+    """The CPUs this process may run on: its affinity mask where the
+    platform has one (a container or ``taskset`` narrows it), else every
+    CPU of the machine."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
 
 
 def _half_of_ram() -> str:

@@ -10,11 +10,11 @@ happen in a second aggregation, which Structured Streaming forbids), and
 the consumer reassembles arrays if needed.
 
 Events quirk: an events parquet file may store ``ts`` as
-TIMESTAMP(NANOS) (Spark's vectorized reader rejects it without
-``nanosAsLong``) or as TIMESTAMP(MICROS)/NTZ; the layout is probed from
-the batch-inferred schema and the event-time column (whole seconds, for
-watermarking) is derived the same way on the stream and batch sides so
-stream==batch comparisons are layout-proof.
+TIMESTAMP(NANOS) (Spark reads it only as LONG, and only when the caller
+has set ``nanosAsLong``) or as TIMESTAMP(MICROS)/NTZ; the layout is
+probed from the batch-inferred schema and the event-time column (whole
+seconds, for watermarking) is derived the same way on the stream and
+batch sides so stream==batch comparisons are layout-proof.
 """
 
 from __future__ import annotations
@@ -32,20 +32,26 @@ from datafusion_monoid_spark.monoid import Monoid, get_monoid
 _EVENTS_SCHEMA_TMPL = ("event_id long, ts {ts}, user_id long, "
                        "event_type string, value double, props string")
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
 
 def _ts_dtype(spark: SparkSession, events_dir: str) -> T.DataType:
     """Probe the stored ``ts`` type (LONG = legacy nanos-as-long layout,
     else a timestamp type) from one batch schema inference.
 
-    The session is left as it is unless ``ts`` is TIMESTAMP(NANOS), which
-    Spark reads only under ``nanosAsLong``; only then is that conf set."""
+    Spark reads a TIMESTAMP(NANOS) ``ts`` only as LONG under
+    ``nanosAsLong``, which has no per-read option; the conf belongs to
+    the caller, so without it such a layout is refused, not read."""
     try:
         return spark.read.parquet(events_dir).schema["ts"].dataType
     except AnalysisException as e:
         if e.getCondition() != "PARQUET_TYPE_ILLEGAL" or "NANOS" not in str(e):
             raise
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(events_dir).schema["ts"].dataType
+        raise ValueError(
+            f"{events_dir}: ts is stored as TIMESTAMP(NANOS), which Spark "
+            f"reads only as LONG; set {_NANOS_AS_LONG}=true on the session "
+            f"to read it") from e
 
 
 def event_time_col(ts_dtype: T.DataType) -> Column:
@@ -147,9 +153,13 @@ def foreach_batch_upsert(target_dir: str, key_cols: list[str]):
     * a crash at any step is recovered by the next epoch on entry (a
       missing target with a ``.__old`` beside it is renamed back, and a
       leftover ``.__old`` is deleted), so no step loses a row;
-    * an epoch with no rows (the no-data batch that follows a watermark
-      advance) runs only the micro-batch itself and writes nothing;
-    * a replayed epoch converges to the same table (idempotent upsert).
+    * an epoch with no rows (one whose rows are all late, or the no-data
+      batch that a query run with Spark's default
+      ``noDataMicroBatches.enabled`` starts after a watermark advance;
+      :func:`run_stream_foreach_batch` turns those off) runs only the
+      micro-batch itself and writes nothing;
+    * a replayed epoch converges to the same table (idempotent upsert);
+    * the epoch's local checkpoint is unpersisted when the handler returns.
 
     At cluster scale the swap becomes a Delta/Iceberg MERGE; the handler
     shape is identical."""
@@ -164,21 +174,28 @@ def foreach_batch_upsert(target_dir: str, key_cols: list[str]):
         obs = Observation()
         batch = (batch_df.observe(obs, F.count(F.lit(1)).alias("rows"))
                  .localCheckpoint(eager=True))
-        if obs.get["rows"] == 0:
-            return
-        merged = batch
-        if os.path.exists(target_dir):
-            cur = batch.sparkSession.read.schema(batch.schema).parquet(
-                target_dir)
-            merged = (cur.join(batch.select(*key_cols), key_cols, "left_anti")
-                      .unionByName(batch))
-        tmp = f"{target_dir}.__epoch{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target_dir):
-            os.rename(target_dir, old)
-        os.rename(tmp, target_dir)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        try:
+            if obs.get["rows"] == 0:
+                return
+            merged = batch
+            if os.path.exists(target_dir):
+                cur = batch.sparkSession.read.schema(batch.schema).parquet(
+                    target_dir)
+                merged = (cur.join(batch.select(*key_cols), key_cols,
+                                   "left_anti")
+                          .unionByName(batch))
+            tmp = f"{target_dir}.__epoch{epoch_id}"
+            merged.write.mode("overwrite").parquet(tmp)
+            if os.path.exists(target_dir):
+                os.rename(target_dir, old)
+            os.rename(tmp, target_dir)
+            if os.path.exists(old):
+                shutil.rmtree(old)
+        finally:
+            # the checkpoint's blocks serve this epoch only: free them now
+            # rather than whenever the driver's GC lets Spark's cleaner
+            # find the dropped RDD
+            batch._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     return handle
 
@@ -188,12 +205,32 @@ def run_stream_foreach_batch(agg: DataFrame, target_dir: str,
                              checkpoint_dir: str | None = None,
                              query_name: str = "monoid_stream_fb"):
     """Drive a streaming aggregation into a parquet target via
-    :func:`foreach_batch_upsert`; returns the query after it drains."""
+    :func:`foreach_batch_upsert`; returns the query after it drains.
+
+    The query runs without the no-data micro-batch that Spark schedules
+    after each watermark advance.  In update mode that batch emits no
+    row: it only evicts the state of windows behind the watermark, and
+    the next data batch does the same eviction under the same watermark.
+    So late-row dropping and every emitted row are unchanged, closed
+    windows stay in state one batch longer, and an advance costs one
+    trigger instead of two.  ``start()`` copies the session conf into
+    the query, so ``spark.sql.streaming.noDataMicroBatches.enabled`` is
+    set only around it and then restored to the caller's value (or
+    unset, if the caller had not set it)."""
     w = (agg.writeStream.outputMode("update")
          .queryName(query_name)
          .foreachBatch(foreach_batch_upsert(target_dir, key_cols)))
     if checkpoint_dir:
         w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
+    conf = agg.sparkSession.conf
+    caller = conf.getAll.get(_NO_DATA_BATCHES)
+    conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        q = w.start()
+    finally:
+        if caller is None:
+            conf.unset(_NO_DATA_BATCHES)
+        else:
+            conf.set(_NO_DATA_BATCHES, caller)
     q.processAllAvailable()
     return q

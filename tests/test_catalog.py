@@ -103,3 +103,27 @@ def test_streaming_entry_leaves_nothing_behind(spark, tmp_path, monkeypatch):
     assert list(tmp.iterdir()) == []
     assert _shm() - shm_before == set()
     assert not spark.catalog.tableExists("streaming_windowed_monoid")
+
+
+def test_sql_udaf_entry_keeps_the_callers_registration(spark):
+    """The entry registers ``array_reduce_sum`` only when the session has
+    none: a caller's own registration (here the bigint sum) is still the
+    one SQL resolves after the entry is built."""
+    from datafusion_monoid_spark.monoid import get_monoid
+    from datafusion_monoid_spark.operators.array_reduce import (
+        make_pandas_udaf)
+
+    def resolved():
+        return spark.sql("SELECT array_reduce_sum(array(1, 2)) AS r"
+                         ).schema["r"].dataType.simpleString()
+
+    spark.udf.register("array_reduce_sum",
+                       make_pandas_udaf(get_monoid("sum", "bigint")))
+    try:
+        assert resolved() == "array<bigint>"
+        qcat.catalog()["monoid_sql_udaf"][0](spark, SF)
+        assert resolved() == "array<bigint>"
+    finally:
+        spark.udf.register("array_reduce_sum",
+                           make_pandas_udaf(get_monoid("sum", "int")))
+    assert resolved() == "array<int>"

@@ -4,6 +4,7 @@ property the reference is named for, src/monoid.rs:13-21)."""
 
 import os
 import shutil
+from contextlib import contextmanager
 from datetime import timedelta
 from pathlib import Path
 
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from datafusion_monoid_spark.streaming.monoid_stream import (
     read_events_batch,
     read_events_stream,
+    run_stream_foreach_batch,
     run_stream_to_memory,
     streaming_monoid_reduce,
 )
@@ -138,32 +140,60 @@ def test_stream_integer_product_renders_the_cell_text(spark):
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-@pytest.mark.parametrize("unit, conf_after, ts_type", [
-    ("us", "false", "timestamp"),   # micros: the session is left alone
-    ("ns", "true", "bigint"),       # nanos: readable only as LONG
-])
-def test_events_reader_sets_nanos_conf_only_for_nanos(spark, tmp_path, unit,
-                                                      conf_after, ts_type):
+def _put_conf(spark, key, value):
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+@contextmanager
+def _caller_conf(spark, key, value):
+    """Run the block with ``key`` as a caller set it (None: unset), then
+    put back exactly what the session had."""
+    saved = spark.conf.getAll.get(key)
+    _put_conf(spark, key, value)
+    try:
+        yield
+    finally:
+        _put_conf(spark, key, saved)
+
+
+def _write_events(d, unit):
+    """Two events one second apart, with ``ts`` stored as TIMESTAMP(unit)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tmp_path / f"events_{unit}"
     d.mkdir()
     pq.write_table(pa.table({
         "event_id": [1, 2], "ts": pa.array([0, 1], pa.timestamp("s"))
                             .cast(pa.timestamp(unit, "UTC")),
         "user_id": [1, 1], "event_type": ["a", "a"], "value": [1.0, 2.0],
         "props": ["", ""]}), str(d / "part-0.parquet"), version="2.6")
-    before = spark.conf.get(_NANOS_AS_LONG)
-    spark.conf.set(_NANOS_AS_LONG, "false")
-    try:
-        ev = read_events_batch(spark, str(d))
-        assert spark.conf.get(_NANOS_AS_LONG) == conf_after
+    return str(d)
+
+
+@pytest.mark.parametrize("unit, needs, ts_type", [
+    ("us", "false", "timestamp"),   # micros: read under either setting
+    ("ns", "true", "bigint"),       # nanos: readable only as LONG
+])
+def test_events_reader_sets_nanos_conf_only_for_nanos(spark, tmp_path, unit,
+                                                      needs, ts_type):
+    """The reader never sets ``nanosAsLong``: a nanos layout is refused,
+    naming the conf, until the caller sets it, and then read as LONG.
+    The conf reads as the caller left it every time."""
+    d = _write_events(tmp_path / f"events_{unit}", unit)
+    with _caller_conf(spark, _NANOS_AS_LONG, "false"):
+        if needs == "true":
+            with pytest.raises(ValueError, match=_NANOS_AS_LONG):
+                read_events_batch(spark, d)
+            assert spark.conf.get(_NANOS_AS_LONG) == "false"
+        spark.conf.set(_NANOS_AS_LONG, needs)
+        ev = read_events_batch(spark, d)
+        assert spark.conf.get(_NANOS_AS_LONG) == needs
         assert ev.schema["ts"].dataType.simpleString() == ts_type
         assert [r["event_time"].second for r in ev.orderBy("event_id")
                 .collect()] == [0, 1]
-    finally:
-        spark.conf.set(_NANOS_AS_LONG, before)
 
 
 def test_catalog_events_leave_the_nanos_conf_alone_on_micros(spark):
@@ -337,3 +367,94 @@ def test_foreach_batch_upsert_writes_nothing_on_an_empty_epoch(
     assert seen[2][0] <= 3 and seen[2][1] is not None
     assert _upsert_target(spark, target) == _upsert_oracle(spark,
                                                            str(watched))
+
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@pytest.mark.parametrize("caller", [None, "true", "false"],
+                         ids=["unset", "true", "false"])
+def test_run_stream_foreach_batch_runs_no_empty_epoch(
+        spark, tmp_path, monkeypatch, two_epoch_events, caller):
+    """The driver skips the no-data batch after a watermark advance
+    (at Spark's default it is batch 1 here), the target still equals
+    the batch answer, and the session conf is the caller's afterwards,
+    whatever the caller had set and also when ``start()`` raises."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    watched, held = two_epoch_events
+    target, ckpt = str(tmp_path / "target"), str(tmp_path / "ckpt")
+    agg = streaming_monoid_reduce(
+        read_events_stream(spark, str(watched), maxFilesPerTrigger="1"),
+        "sum", window="1 hour")
+
+    def drain():
+        q = run_stream_foreach_batch(agg, target, _UPSERT_KEYS, ckpt)
+        try:
+            return q.recentProgress
+        finally:
+            q.stop()
+
+    def refuse(self):
+        raise RuntimeError("start refused")
+
+    with _caller_conf(spark, _NO_DATA_BATCHES, caller):
+        conf = dict(spark.conf.getAll)
+        progress = drain()
+        os.rename(held, watched / held.name)
+        progress += drain()
+        assert dict(spark.conf.getAll) == conf
+
+        assert [p["batchId"] for p in progress] == [0, 1]
+        assert all(p["numInputRows"] > 0 for p in progress)
+        assert _upsert_target(spark, target) == _upsert_oracle(spark,
+                                                               str(watched))
+
+        monkeypatch.setattr(DataStreamWriter, "start", refuse)
+        with pytest.raises(RuntimeError, match="start refused"):
+            run_stream_foreach_batch(agg, target, _UPSERT_KEYS, ckpt)
+        assert dict(spark.conf.getAll) == conf
+
+
+def _session_state(spark):
+    """What a public function must leave as it found it."""
+    return {
+        "conf": dict(spark.conf.getAll),
+        "temp_views": {t.name for t in spark.catalog.listTables()
+                       if t.isTemporary},
+        "functions": {f.name for f in spark.catalog.listFunctions()},
+        "persisted_rdds": spark.sparkContext._jsc.getPersistentRDDs().size(),
+        "active_streams": [q.id for q in spark.streams.active],
+    }
+
+
+def _drained_upsert(spark, d, tmp_path):
+    agg = streaming_monoid_reduce(read_events_stream(spark, d), "sum")
+    run_stream_foreach_batch(agg, str(tmp_path / "target"), _UPSERT_KEYS,
+                             str(tmp_path / "ckpt")).stop()
+
+
+#: (events layout, nanosAsLong as the caller set it, the call)
+_STREAM_SURFACE = {
+    "read_events_stream": ("us", "false", lambda spark, d, tmp_path:
+                           read_events_stream(spark, d)),
+    "read_events_batch_us": ("us", "false", lambda spark, d, tmp_path:
+                             read_events_batch(spark, d)),
+    "read_events_batch_ns": ("ns", "true", lambda spark, d, tmp_path:
+                             read_events_batch(spark, d)),
+    "streaming_monoid_reduce": ("us", "false", lambda spark, d, tmp_path:
+                                streaming_monoid_reduce(
+                                    read_events_stream(spark, d), "sum")),
+    "run_stream_foreach_batch": ("us", "false", _drained_upsert),
+}
+
+
+@pytest.mark.parametrize("name", list(_STREAM_SURFACE))
+def test_stream_surface_leaves_the_session_as_it_found_it(spark, tmp_path,
+                                                          name):
+    unit, nanos, call = _STREAM_SURFACE[name]
+    d = _write_events(tmp_path / "events", unit)
+    with _caller_conf(spark, _NANOS_AS_LONG, nanos):
+        before = _session_state(spark)
+        call(spark, d, tmp_path)
+        assert _session_state(spark) == before
