@@ -38,6 +38,7 @@ from datafusion_monoid_spark.operators.array_reduce import (
 from datafusion_monoid_spark.sql_route import route_monoid_sql
 from datafusion_monoid_spark.streaming.monoid_stream import (
     _EVENTS_SCHEMA_TMPL,
+    _start_query,
     _ts_dtype,
     event_time_col,
     streaming_monoid_reduce,
@@ -363,30 +364,32 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drain_to_df(agg: DataFrame, name: str) -> DataFrame:
     """Run the streaming query over all available input into a memory
-    sink and return the sink's table as a batch DataFrame
-    (localCheckpoint-ed, so it outlives the query).
+    sink and return the sink's table as a batch DataFrame over a copy
+    of its rows (the sink already holds them on the driver), so it
+    outlives the query and persists no RDD.
 
-    Leaves the session as it found it: the checkpoint lives in a
-    temporary directory (on tmpfs when there is one, so state-store and
-    offset-log writes skip disk fsyncs) that is removed afterwards, the
-    shuffle partitions are restored and the sink's temp view is
-    dropped."""
+    The query starts through the stream module's shared start helper,
+    with ``STREAM_SHUFFLE`` shuffle partitions and, its checkpoint being
+    local, the checkpoint manager whose renames fork no process; that,
+    not the checkpoint's place on tmpfs, is what saves most of the
+    checkpoint time.  Leaves the session as it found it: both confs are
+    set only around ``start()``, the temporary checkpoint directory (on
+    tmpfs when there is one) is removed afterwards and the sink's temp
+    view is dropped."""
     spark = agg.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE))
-    try:
-        with tempfile.TemporaryDirectory(prefix=f"{name}_", dir=_TMPFS,
-                                         ignore_cleanup_errors=True) as ckpt:
-            q = (agg.writeStream.outputMode("complete").format("memory")
-                 .queryName(name).option("checkpointLocation", ckpt).start())
-            try:
-                q.processAllAvailable()
-                return spark.table(name).localCheckpoint(eager=True)
-            finally:
-                q.stop()
-                spark.catalog.dropTempView(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with tempfile.TemporaryDirectory(prefix=f"{name}_", dir=_TMPFS,
+                                     ignore_cleanup_errors=True) as ckpt:
+        w = (agg.writeStream.outputMode("complete").format("memory")
+             .queryName(name))
+        q = _start_query(spark, w, ckpt,
+                         {"spark.sql.shuffle.partitions": str(STREAM_SHUFFLE)})
+        try:
+            q.processAllAvailable()
+            sink = spark.table(name)
+            return spark.createDataFrame(sink.toArrow(), sink.schema)
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(name)
 
 
 @register("streaming_windowed_monoid", """

@@ -12,12 +12,18 @@ memory); the other configs are what we would set on a real cluster:
   coalescing with a high initial value.
 * UTC session timezone so timestamps compare exactly against the DuckDB
   oracle (duckdb timestamps are UTC-naive).
+
+The master and the driver heap are fixed when the JVM starts: called
+while a session runs, ``get_spark`` returns that session and warns when
+either differs from what it would have set.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -39,14 +45,34 @@ def _half_of_ram() -> str:
     return f"{max(1, ram // 2**31)}g"
 
 
+def _warn_on_kept_static_confs(static: dict[str, str]) -> None:
+    """Warn for each of ``static`` that the running context, which
+    ``getOrCreate`` will return, has set otherwise."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return
+    running = sc.getConf()
+    for key, want in static.items():
+        have = running.get(key)
+        if have != want:
+            warnings.warn(
+                f"get_spark: a Spark session is already running, so {key} "
+                f"stays {have!r}, not the requested {want!r}; stop the "
+                f"session first to apply it", stacklevel=3)
+
+
 def get_spark(app_name: str = "datafusion-monoid-spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
+    master = f"local[{cpus}]"
+    driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_of_ram()
+    _warn_on_kept_static_confs({"spark.master": master,
+                                "spark.driver.memory": driver_memory})
     return (
         SparkSession.builder
-        .master(f"local[{cpus}]")
+        .master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -57,8 +83,7 @@ def get_spark(app_name: str = "datafusion-monoid-spark",
         # local mode = one JVM doing driver AND executor work: size the
         # heap to the box, leaving the rest to Python workers and the OS;
         # on a real cluster this is spark.executor.memory
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_of_ram())
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
         .getOrCreate()

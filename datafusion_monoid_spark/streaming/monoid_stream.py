@@ -15,17 +15,36 @@ has set ``nanosAsLong``) or as TIMESTAMP(MICROS)/NTZ; the layout is
 probed from the batch-inferred schema and the event-time column (whole
 seconds, for watermarking) is derived the same way on the stream and
 batch sides so stream==batch comparisons are layout-proof.
+
+Checkpoint files: every query of this module (and the catalog's drained
+stream) starts through :func:`_start_query`.  When the checkpoint is on
+the local filesystem, it starts the query under Spark's
+``FileSystemBasedCheckpointFileManager``.  Spark's default,
+``FileContextBasedCheckpointFileManager``, renames each state delta,
+offsets/commits log file and ``.crc`` beside them through Hadoop's
+``FileContext``, and on a machine without native libhadoop that forks a
+``readlink`` process per rename (``RawLocalFileSystem.getFileLinkStatus``)
+on the trigger's critical path.  The FileSystem-based manager renames
+with ``FileSystem.rename``, which on a local path is ``rename(2)`` and
+forks nothing.  Atomicity is the same: both managers check the
+destination and then rename, and one local filesystem replaces a file
+atomically, so a reader sees the old file or the new one.  Spark's
+checksum wrapper and Hadoop's ``.crc`` files are kept.  HDFS, S3 and any
+other store keep Spark's default, which they need for FileContext's
+overwrite-rename.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import urlsplit
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from datafusion_monoid_spark.monoid import Monoid, get_monoid
 
@@ -34,6 +53,47 @@ _EVENTS_SCHEMA_TMPL = ("event_id long, ts {ts}, user_id long, "
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_CHECKPOINT_ROOT = "spark.sql.streaming.checkpointLocation"
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                          "checkpointing.FileSystemBasedCheckpointFileManager")
+
+
+def _start_query(spark: SparkSession, writer: DataStreamWriter,
+                 checkpoint_dir: str | None = None,
+                 confs: dict[str, str] | None = None) -> StreamingQuery:
+    """Start ``writer``'s query with ``confs`` set on ``spark``.
+
+    ``start()`` copies the session conf into the query, so the confs are
+    set only around it and then put back exactly as the caller had them
+    (a key the caller had not set is unset again), also when ``start()``
+    raises.  A query whose checkpoint is on the local filesystem also
+    gets the FileSystem-based checkpoint manager (module docstring),
+    unless the caller chose a manager."""
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    conf = spark.conf
+    caller = conf.getAll
+    confs = dict(confs or {})
+    # the Hadoop conf the query's checkpoint files are written under; a
+    # path without a scheme (or Spark's temporary checkpoint, when no
+    # location is given) is on the default filesystem
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    location = checkpoint_dir or caller.get(_CHECKPOINT_ROOT) or ""
+    scheme = (urlsplit(location).scheme
+              or urlsplit(hconf.get("fs.defaultFS", "file:///")).scheme)
+    if scheme == "file" and hconf.get(_CHECKPOINT_MANAGER) is None:
+        confs[_CHECKPOINT_MANAGER] = _FS_CHECKPOINT_MANAGER
+    for k, v in confs.items():
+        conf.set(k, v)
+    try:
+        return writer.start()
+    finally:
+        for k in confs:
+            if k in caller:
+                conf.set(k, caller[k])
+            else:
+                conf.unset(k)
 
 
 def _ts_dtype(spark: SparkSession, events_dir: str) -> T.DataType:
@@ -127,9 +187,7 @@ def run_stream_to_memory(agg: DataFrame, query_name: str = "monoid_stream",
     harness); returns the started query after it drains."""
     w = (agg.writeStream.outputMode(output_mode)
          .format("memory").queryName(query_name))
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
+    q = _start_query(agg.sparkSession, w, checkpoint_dir)
     q.processAllAvailable()
     return q
 
@@ -213,24 +271,24 @@ def run_stream_foreach_batch(agg: DataFrame, target_dir: str,
     the next data batch does the same eviction under the same watermark.
     So late-row dropping and every emitted row are unchanged, closed
     windows stay in state one batch longer, and an advance costs one
-    trigger instead of two.  ``start()`` copies the session conf into
-    the query, so ``spark.sql.streaming.noDataMicroBatches.enabled`` is
-    set only around it and then restored to the caller's value (or
-    unset, if the caller had not set it)."""
+    trigger instead of two.
+
+    A checkpoint on the local filesystem is written through Spark's
+    ``FileSystemBasedCheckpointFileManager``: its renames are
+    ``rename(2)``, where Spark's default manager forks a ``readlink``
+    process for each of a trigger's state, offsets and commits files.
+    Each rename still replaces its file atomically.  Other stores (HDFS,
+    S3) keep Spark's default, and so does a caller who set
+    ``spark.sql.streaming.checkpointFileManagerClass``.
+
+    ``start()`` copies the session conf into the query, so
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` and the manager
+    are set only around it and then restored to the caller's values (or
+    unset, if the caller had not set them)."""
     w = (agg.writeStream.outputMode("update")
          .queryName(query_name)
          .foreachBatch(foreach_batch_upsert(target_dir, key_cols)))
-    if checkpoint_dir:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    conf = agg.sparkSession.conf
-    caller = conf.getAll.get(_NO_DATA_BATCHES)
-    conf.set(_NO_DATA_BATCHES, "false")
-    try:
-        q = w.start()
-    finally:
-        if caller is None:
-            conf.unset(_NO_DATA_BATCHES)
-        else:
-            conf.set(_NO_DATA_BATCHES, caller)
+    q = _start_query(agg.sparkSession, w, checkpoint_dir,
+                     {_NO_DATA_BATCHES: "false"})
     q.processAllAvailable()
     return q

@@ -3,7 +3,10 @@ equal the batch computation of the same monoid reduce (the merge-safety
 property the reference is named for, src/monoid.rs:13-21)."""
 
 import os
+import shlex
 import shutil
+import subprocess
+import sys
 from contextlib import contextmanager
 from datetime import timedelta
 from pathlib import Path
@@ -20,6 +23,7 @@ from datafusion_monoid_spark.streaming.monoid_stream import (
 )
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -434,6 +438,22 @@ def _drained_upsert(spark, d, tmp_path):
                              str(tmp_path / "ckpt")).stop()
 
 
+def _drained_memory(spark, d, tmp_path):
+    """The memory table is what the call returns: the caller drops it."""
+    agg = streaming_monoid_reduce(read_events_stream(spark, d), "sum")
+    run_stream_to_memory(agg, "surface_mem", str(tmp_path / "ckpt")).stop()
+    spark.catalog.dropTempView("surface_mem")
+
+
+def _streaming_catalog_entry(spark, d, tmp_path):
+    from datafusion_monoid_spark.queries import catalog
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(Path(d) / "part-0.parquet", sf / "events.parquet")
+    catalog()["streaming_windowed_monoid"][0](spark, str(sf)).collect()
+
+
 #: (events layout, nanosAsLong as the caller set it, the call)
 _STREAM_SURFACE = {
     "read_events_stream": ("us", "false", lambda spark, d, tmp_path:
@@ -446,6 +466,8 @@ _STREAM_SURFACE = {
                                 streaming_monoid_reduce(
                                     read_events_stream(spark, d), "sum")),
     "run_stream_foreach_batch": ("us", "false", _drained_upsert),
+    "run_stream_to_memory": ("us", "false", _drained_memory),
+    "streaming_windowed_monoid": ("us", "false", _streaming_catalog_entry),
 }
 
 
@@ -458,3 +480,139 @@ def test_stream_surface_leaves_the_session_as_it_found_it(spark, tmp_path,
         before = _session_state(spark)
         call(spark, d, tmp_path)
         assert _session_state(spark) == before
+
+
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+               "FileSystemBasedCheckpointFileManager")
+_CHECKPOINT_ROOT = "spark.sql.streaming.checkpointLocation"
+_HDFS = "hdfs://namenode:8020/ckpt"
+
+
+def _capture_start_conf(monkeypatch, spark):
+    """Patch ``start()`` to record the session conf it would copy into
+    the query, then refuse to start."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    seen = {}
+
+    def capture(self):
+        seen.update(spark.conf.getAll)
+        raise RuntimeError("start captured")
+
+    monkeypatch.setattr(DataStreamWriter, "start", capture)
+    return seen
+
+
+_DRIVERS = {
+    "run_stream_foreach_batch": lambda agg, ckpt, tmp_path:
+        run_stream_foreach_batch(agg, str(tmp_path / "target"), _UPSERT_KEYS,
+                                 ckpt),
+    "run_stream_to_memory": lambda agg, ckpt, tmp_path:
+        run_stream_to_memory(agg, "manager_probe", ckpt),
+}
+
+
+@pytest.mark.parametrize("driver", list(_DRIVERS))
+@pytest.mark.parametrize("where, root, caller, want", [
+    ("local", None, None, _FS_MANAGER),
+    ("hdfs", None, None, None),
+    (None, _HDFS, None, None),
+    ("local", None, "com.example.OwnManager", "com.example.OwnManager"),
+    ("hdfs", None, "com.example.OwnManager", "com.example.OwnManager"),
+], ids=["local", "hdfs", "hdfs_root", "local_own", "hdfs_own"])
+def test_start_picks_the_checkpoint_manager_by_scheme(
+        spark, tmp_path, monkeypatch, driver, where, root, caller, want):
+    """A local checkpoint starts under the FileSystem-based manager; an
+    HDFS one (given, or under an HDFS checkpoint root) and a caller's
+    own choice keep the key as the caller had it; the conf afterwards is
+    the conf before."""
+    ckpt = {"local": str(tmp_path / "ckpt"), "hdfs": _HDFS, None: None}[where]
+    d = _write_events(tmp_path / "events", "us")
+    agg = streaming_monoid_reduce(read_events_stream(spark, d), "sum")
+    seen = _capture_start_conf(monkeypatch, spark)
+    with _caller_conf(spark, _CHECKPOINT_ROOT, root), \
+            _caller_conf(spark, _MANAGER, caller):
+        before = dict(spark.conf.getAll)
+        with pytest.raises(RuntimeError, match="start captured"):
+            _DRIVERS[driver](agg, ckpt, tmp_path)
+        assert dict(spark.conf.getAll) == before
+    assert seen.get(_MANAGER) == want
+
+
+def test_drained_stream_sets_its_confs_only_around_start(spark, tmp_path,
+                                                         monkeypatch):
+    """The catalog's drained stream starts with 8 shuffle partitions and
+    the FileSystem-based manager, and leaves an unset shuffle-partition
+    key unset."""
+    from datafusion_monoid_spark.queries import STREAM_SHUFFLE, _drain_to_df
+
+    d = _write_events(tmp_path / "events", "us")
+    agg = streaming_monoid_reduce(read_events_stream(spark, d), "sum")
+    seen = _capture_start_conf(monkeypatch, spark)
+    with _caller_conf(spark, "spark.sql.shuffle.partitions", None):
+        before = dict(spark.conf.getAll)
+        with pytest.raises(RuntimeError, match="start captured"):
+            _drain_to_df(agg, "drain_probe")
+        assert dict(spark.conf.getAll) == before
+    assert seen["spark.sql.shuffle.partitions"] == str(STREAM_SHUFFLE)
+    assert seen[_MANAGER] == _FS_MANAGER
+
+
+_FORK_PROBE = """
+import sys
+from datafusion_monoid_spark.session import get_spark
+from datafusion_monoid_spark.streaming.monoid_stream import (
+    read_events_stream, run_stream_foreach_batch, streaming_monoid_reduce)
+
+events, target, ckpt, marker = sys.argv[1:]
+spark = get_spark("fork-probe", cpus=2)
+try:
+    agg = streaming_monoid_reduce(
+        read_events_stream(spark, events, maxFilesPerTrigger="1"), "sum")
+    run_stream_foreach_batch(agg, target, ["window_start", "event_type", "pos"],
+                             ckpt).stop()
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.hadoop.fs.FileUtil.readLink(jvm.java.io.File(marker))
+finally:
+    spark.stop()
+"""
+
+
+@pytest.mark.skipif(shutil.which("readlink") is None,
+                    reason="no readlink on this machine")
+def test_local_checkpoint_forks_no_readlink(tmp_path):
+    """Hadoop's FileContext rename on a local path (Spark's default
+    checkpoint manager) forks ``readlink`` for every checkpoint file when
+    native libhadoop is missing.  A two-file stream run in a JVM whose
+    ``readlink`` logs its arguments must fork none for the checkpoint's
+    state, offsets or commits files.  The marker proves that the JVM's
+    forks reach the logging ``readlink``."""
+    bin_dir, events = tmp_path / "bin", tmp_path / "events"
+    bin_dir.mkdir()
+    events.mkdir()
+    log, marker = tmp_path / "readlink.log", tmp_path / "marker"
+    marker.touch()
+    for i in range(2):
+        shutil.copy(f"{SF}/events.parquet", events / f"part-{i}.parquet")
+    wrapper = bin_dir / "readlink"
+    wrapper.write_text(
+        "#!/bin/sh\n"
+        f"printf '%s\\n' \"$*\" >> {shlex.quote(str(log))}\n"
+        f"exec {shlex.quote(shutil.which('readlink'))} \"$@\"\n")
+    wrapper.chmod(0o755)
+    ckpt = tmp_path / "ckpt"
+    env = dict(os.environ, PATH=f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+               PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE, str(events),
+         str(tmp_path / "target"), str(ckpt), str(marker)],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    logged = log.read_text().splitlines()
+    assert any(str(marker) in line for line in logged)
+    assert (ckpt / "commits").is_dir()
+    ckpt_files = [line for line in logged
+                  for sub in ("state", "offsets", "commits")
+                  if f"{ckpt}/{sub}/" in line]
+    assert ckpt_files == []
